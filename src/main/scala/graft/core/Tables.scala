@@ -77,20 +77,68 @@ object GraftSession {
     * AQE coalescing stays on top of this INITIAL width, so skew/byte
     * imbalance is still handled at runtime. Callers that know no data
     * directory (unit tests, ad-hoc sessions) keep the old
-    * width = cores behavior.
+    * width = cores behavior; a directory whose size cannot be measured
+    * falls back to width = cores too, with one stderr line saying why.
     */
   def shufflePartitionsFor(sfDir: String, cores: Int): Int = {
-    val targetBytes = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_TARGET_MB", "4")
-      .toLong * 1024L * 1024L
-    val cap = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MAX", "10000").toLong
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else f.length()
-    val bytes =
-      try walk(new java.io.File(sfDir)) catch { case _: Throwable => 0L }
-    if (bytes <= 0L) cores
-    else math.min(cap, math.max(1L, (bytes + targetBytes - 1L) / targetBytes)).toInt
+    val targetBytes =
+      positiveEnv("SPARK_GRAFT_SHUFFLE_TARGET_MB", 4L) * 1024L * 1024L
+    val cap = positiveEnv("SPARK_GRAFT_SHUFFLE_MAX", 10000L)
+    inputBytes(sfDir) match {
+      case Right(bytes) =>
+        math.min(cap, math.max(1L, (bytes + targetBytes - 1L) / targetBytes)).toInt
+      case Left(reason) =>
+        System.err.println(
+          s"[graft] shuffle width falls back to cores=$cores: $sfDir $reason")
+        cores
+    }
+  }
+
+  private def positiveEnv(name: String, default: Long): Long =
+    sys.env.get(name).fold(default) { v =>
+      v.trim.toLongOption.filter(_ > 0L).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
+
+  /** Total file bytes under a local dir or `file:` URI, following
+    * symlinks and skipping link cycles; Left(reason) when there is
+    * nothing to measure. Unreadable subtrees count as zero bytes.
+    */
+  private[core] def inputBytes(sfDir: String): Either[String, Long] = {
+    import java.nio.file._
+    import java.nio.file.attribute.BasicFileAttributes
+    val scheme = "^([A-Za-z][A-Za-z0-9+.-]*):/".r
+      .findFirstMatchIn(sfDir).map(_.group(1).toLowerCase)
+    if (scheme.exists(_ != "file"))
+      return Left(s"is a '${scheme.get}' URI; only local paths are measured")
+    try {
+      val root =
+        if (scheme.isDefined) Paths.get(new java.net.URI(sfDir))
+        else Paths.get(sfDir)
+      if (!Files.exists(root)) return Left("does not exist")
+      var bytes = 0L
+      var failure: Option[String] = None
+      def skip(e: java.io.IOException): FileVisitResult = {
+        if (e != null && !e.isInstanceOf[FileSystemLoopException] &&
+            failure.isEmpty) failure = Some(s"is unreadable ($e)")
+        FileVisitResult.CONTINUE
+      }
+      Files.walkFileTree(root,
+        java.util.EnumSet.of(FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+        new SimpleFileVisitor[Path] {
+          override def visitFile(f: Path, a: BasicFileAttributes) = {
+            // a dangling link reports its own attributes: zero bytes
+            if (!a.isSymbolicLink) bytes += a.size
+            FileVisitResult.CONTINUE
+          }
+          override def visitFileFailed(f: Path, e: java.io.IOException) =
+            skip(e)
+          override def postVisitDirectory(d: Path, e: java.io.IOException) =
+            skip(e)
+        })
+      if (bytes > 0L) Right(bytes) else Left(failure.getOrElse("holds no bytes"))
+    } catch { case scala.util.control.NonFatal(e) => Left(s"is unreadable ($e)") }
   }
 
   def local(cores: Int = 32, sfDir: Option[String] = None): SparkSession = {

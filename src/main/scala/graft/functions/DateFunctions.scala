@@ -22,15 +22,6 @@ object DateFunctions {
     concat(head, lit("0:00-"), head, lit("9:59"))
   }
 
-  /** date ± n days (CommonTool.getDaysBefore analog). */
-  def daysBefore(d: Column, n: Int): Column = date_sub(d, n)
-
-  /** Absolute seconds between two timestamps
-    * (CommonTool.getDateBetweenTime analog).
-    */
-  def secondsBetween(a: Column, b: Column): Column =
-    abs(unix_timestamp(a) - unix_timestamp(b))
-
   /** Last day of the timestamp's month (CommonTool.getMonthLastday). */
   def monthLastDay(ts: Column): Column = last_day(ts)
 

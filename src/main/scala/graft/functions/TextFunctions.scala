@@ -127,18 +127,12 @@ object TextFunctions {
       .otherwise(lit("und"))
   }
 
-  /** Document quality signals (length / punctuation / stopword ratios) —
+  /** Document quality signals (stopword ratio, mean token length) —
     * the standard pre-training quality filters. Ratios are scaled by 1e4
     * and floored to BIGINT so results hash identically across engines
     * (floor of an identical IEEE double is deterministic; `round` tie
     * behavior is not portable).
     */
-  def qualityPunctRatio(text: Column): Column = {
-    val n = greatest(length(text), lit(1))
-    floor(size(filter(split(text, ""), c => c.rlike("[\\p{Punct}]")))
-      .cast("double") / n.cast("double") * 10000).cast("long")
-  }
-
   def qualityStopwordRatio(text: Column): Column = {
     val toks = tokenize(lower(text))
     val n = greatest(size(toks), lit(1))

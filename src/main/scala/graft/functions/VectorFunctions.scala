@@ -29,14 +29,6 @@ object VectorFunctions {
     when(denom === 0.0, lit(0.0)).otherwise(d / denom)
   }
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0), (acc, v) => acc + v))
-
   /** Unit-normalize a vector (pre-normalizing once turns cosine top-k
     * into dot-product top-k — the standard trick for scale). The norm
     * rides in via array_repeat so the lambda never references an outer

@@ -20,23 +20,6 @@ import graft.ops.CacheScope.TrackedPersist
   */
 object Dedup {
 
-  /** Fan a narrow scan out to the session's parallel width before a
-    * row-amplifying explode (shingling multiplies rows ~300×, token
-    * explode ~50×). A small input file arrives as 1-2 scan partitions,
-    * so without this the amplified work runs on one core.
-    *
-    * Conf-gated rather than probed: the old `df.rdd.getNumPartitions`
-    * guard built (and discarded) a full RDD lineage per invocation just
-    * to read a count, and the count it read was the pre-AQE one anyway.
-    * At test scale the unconditional round-robin of the (tiny,
-    * pre-explode) corpus costs microseconds; at real scale the scan
-    * already arrives one-partition-per-file-split wide, so set
-    * `graft.dedup.fanOutScan=false` (or tune
-    * `spark.sql.files.maxPartitionBytes` at read time) and no reshuffle
-    * of the corpus ever happens.
-    */
-  private def fanOutScan(df: DataFrame): DataFrame = ScanFanOut(df)
-
   /** Parallel width for small-bytes/heavy-compute shuffle outputs
     * (candidate-pair verification: per-row array intersections). AQE's
     * coalescing targets bytes-per-partition (64 MB advisory), which
@@ -77,18 +60,6 @@ object Dedup {
       .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("dup_ct"))
       .select(col("rep_id"), col("dup_ct"))
 
-  /** MinHash signature of a shingle-set column: k independent hash
-    * functions h_i(s) = murmur3(s, i); signature[i] = min over shingles.
-    *
-    * Column-expression variant for small arrays only: higher-order
-    * functions are interpreted, and [[minhashLshPairs]] deliberately does
-    * NOT use this — it computes signatures with codegen'd row-level
-    * aggregates over exploded shingles instead.
-    */
-  def minhashSignature(shingleSet: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingleSet, s => hash(s, i).cast("long"))))
-
   /** MinHash + LSH near-duplicate pairs.
     *
     * Pipeline (everything codegen'd, no interpreted higher-order funcs in
@@ -126,7 +97,7 @@ object Dedup {
   private def shingleRows(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int, fanOut: Boolean = true): DataFrame = {
     val norm = TextFunctions.normalizeWs(col(textCol))
-    (if (fanOut) fanOutScan(df.select(col(idCol), col(textCol)))
+    (if (fanOut) ScanFanOut(df.select(col(idCol), col(textCol)))
      else df.select(col(idCol), col(textCol)))
       .select(col(idCol).as("id"), norm.as("norm"))
       // null/empty/whitespace-only text produces NO shingles (r10
@@ -474,7 +445,7 @@ object Dedup {
         pmod(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"),
           lit(SimhashP))
       else xxhash64(col("tok"))
-    val toks = fanOutScan(df.select(col(idCol), col(textCol)))
+    val toks = ScanFanOut(df.select(col(idCol), col(textCol)))
       .select(col(idCol).as("id"),
         explode(TextFunctions.tokenize(lower(col(textCol)))).as("tok"))
       .select(col("id"), tokHash.as("h"))
@@ -1141,7 +1112,7 @@ object Dedup {
     // exchange still runs at scan width — the whole point of the fan-out
     // is that the CPU-dense tokenize runs wide. The exchange carries the
     // raw text once either way.
-    val base = fanOutScan(df.select(
+    val base = ScanFanOut(df.select(
       (col(idCol).as("id") +: col(textCol).as("__txt") +:
         blockCols.zipWithIndex.map { case (c, i) => c.as(s"blk_$i") }): _*))
       .select(
@@ -1254,7 +1225,7 @@ object Dedup {
     // tokenize ABOVE the fan-out exchange (r20, the ngramJaccardPairs
     // rationale — measured on q56: a 1.5 s single-task tokenize stage
     // under the exchange)
-    val base = fanOutScan(df.select(
+    val base = ScanFanOut(df.select(
       (col(idCol).as("id") +: col(textCol).as("__txt") +:
         blockCols.zipWithIndex.map { case (c, i) => c.as(s"blk_$i") }): _*))
       .select(
@@ -1348,7 +1319,7 @@ object Dedup {
   def sharedWindowPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int, stride: Int): DataFrame = {
     require(k > 0 && stride > 0, s"k=$k stride=$stride must be positive")
-    val base = fanOutScan(df.select(col(idCol).as("id"), col(textCol).as("txt"))
+    val base = ScanFanOut(df.select(col(idCol).as("id"), col(textCol).as("txt"))
       .filter(length(col("txt")) >= k))
     val offs = base.select(col("id"), col("txt"),
       explode(sequence(lit(0), length(col("txt")) - k, lit(stride))).as("off"))
@@ -1409,7 +1380,7 @@ object Dedup {
     require(k > 0 && stride > 0, s"k=$k stride=$stride must be positive")
     require(weights.exists(_._1 == trainSplit) && weights.exists(_._1 == evalSplit),
       s"splits ($trainSplit, $evalSplit) must be in the weight spec")
-    val base = fanOutScan(df.select(col(idCol).as("id"), col(textCol).as("txt"))
+    val base = ScanFanOut(df.select(col(idCol).as("id"), col(textCol).as("txt"))
       .filter(length(col("txt")) >= k))
       .withColumn("__split", Sampling.splitExpr(col("id"), weights, portable))
       .filter(col("__split").isin(trainSplit, evalSplit))
@@ -1495,7 +1466,7 @@ object Dedup {
     // tokenize ABOVE the fan-out exchange (r20, the ngramJaccardPairs
     // rationale); the minSize filter rides above it too — a few extra
     // sub-minSize text rows in the exchange vs a serial tokenize pass
-    val base = fanOutScan(df.select(
+    val base = ScanFanOut(df.select(
       (col(idCol).as("id") +: col(textCol).as("__txt") +:
         blockCols.zipWithIndex.map { case (c, i) => c.as(s"blk_$i") }): _*))
       .select(

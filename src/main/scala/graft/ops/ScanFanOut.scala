@@ -26,24 +26,19 @@ import org.apache.spark.sql.DataFrame
   * chains AMPLIFY per-byte work (5-gram explosion, quadratic pair
   * scoring, container decode); it is the conf-exposed dial.
   *
-  * Config: `graft.fanOutScan` (operator-neutral) wins; the historical
-  * `graft.dedup.fanOutScan` is honored as a fallback so existing
-  * deployments keep their behavior — but it no longer silently changes
-  * the plan shape of NON-dedup operators once the neutral key is set
-  * (the r12 advice: a user disabling the dedup fan-out should not
-  * surprise-reshape a Quality operator).
+  * Config: `graft.fanOutScan` (default true) switches the fan-out for
+  * every operator that uses it.
   */
 object ScanFanOut {
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val enabled = spark.conf.getOption("graft.fanOutScan")
-      .getOrElse(spark.conf.get("graft.dedup.fanOutScan", "true"))
-    if (enabled == "true") df.repartition(width(df))
+    if (spark.conf.get("graft.fanOutScan", "true") == "true") df.repartition(width(df))
     else df
   }
 
-  /** Size-derived fan-out width for `df` (also used by the Dedup
-    * family's explicit verify repartitions). */
+  /** Size-derived fan-out width for `df`. The Dedup family's verify
+    * repartitions do NOT use it: they keep full session width (see
+    * `Dedup.verifyWidth`). */
   def width(df: DataFrame): Int = {
     val spark = df.sparkSession
     val bytesPerTask =

@@ -21,11 +21,11 @@ import org.apache.spark.{MapOutputTrackerMaster, SparkContext}
   * those out too. (Attribution note: the r14 record's 7x in-suite
   * inflation — q145 90.6 s in-suite vs 13.3 s isolated — turned out
   * to be DOMINATED by JIT code-cache flushing, fixed by
-  * ReservedCodeCacheSize=1g in build.sbt; the SEQ-mode task census
-  * that found it — identical 1535 tasks/107 stages per rep, 1.6x
-  * taskCpu and 5x executorDeserializeTime on slow reps — lives in
-  * Bench's SEQ mode. This drain remains as instrument hygiene: it
-  * keeps /tmp shuffle files flat across a 160-query suite.)
+  * ReservedCodeCacheSize=1g in build.sbt, found by a per-rep task
+  * census — identical 1535 tasks/107 stages per rep, 1.6x taskCpu and
+  * 5x executorDeserializeTime on slow reps. This drain remains as
+  * instrument hygiene: it keeps /tmp shuffle files flat across a
+  * 160-query suite.)
   *
   * SAFETY: callers invoke this between queries with no job running
   * and every cached frame already unpersisted. Exchange reuse never

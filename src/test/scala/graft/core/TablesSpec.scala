@@ -82,6 +82,49 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  // the size-derived shuffle width (default 4 MB per partition)
+  private val MB = 1024 * 1024
+  private def withDir(sizes: Int*)(body: java.nio.file.Path => Unit): Unit = {
+    val dir = Files.createTempDirectory("width-probe")
+    try {
+      sizes.zipWithIndex.foreach { case (n, i) =>
+        // sparse: the probe reads sizes, so no bytes need hit the disk
+        val f = new java.io.RandomAccessFile(dir.resolve(s"part-$i.bin").toFile, "rw")
+        try f.setLength(n.toLong) finally f.close()
+      }
+      body(dir)
+    } finally {
+      // Files.walk does not follow links, so a cycle deletes as a plain link
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    }
+  }
+
+  test("shuffle width is ceil(input bytes / 4 MB) over the dir's files") {
+    withDir(6 * MB, 3 * MB + 1) { dir =>
+      assert(GraftSession.shufflePartitionsFor(dir.toString, 7) === 3)
+      assert(GraftSession.shufflePartitionsFor(dir.toUri.toString, 7) === 3)
+    }
+  }
+
+  test("shuffle width walk terminates on a symlink cycle with the same width") {
+    withDir(6 * MB, 3 * MB + 1) { dir =>
+      Files.createDirectory(dir.resolve("sub"))
+      Files.createSymbolicLink(dir.resolve("sub").resolve("loop"), dir)
+      assert(GraftSession.inputBytes(dir.toString) === Right(9L * MB + 1))
+      assert(GraftSession.shufflePartitionsFor(dir.toString, 7) === 3)
+    }
+  }
+
+  test("shuffle width falls back to cores for a missing, empty or non-local dir") {
+    withDir() { dir =>
+      assert(GraftSession.shufflePartitionsFor(dir.resolve("absent").toString, 7) === 7)
+      assert(GraftSession.shufflePartitionsFor(dir.toString, 7) === 7)
+    }
+    assert(GraftSession.shufflePartitionsFor("hdfs://nn:8020/sf0.1", 7) === 7)
+    assert(GraftSession.inputBytes("hdfs://nn:8020/sf0.1").isLeft)
+  }
+
   test("the driver fixture itself loads with a TimestampType ts in a sane range") {
     val loaded = Tables.load(spark, "/root/testdata/sf0.001", "events")
     assert(loaded.schema("ts").dataType == TimestampType)
