@@ -170,12 +170,15 @@ object Pipelines {
         col("pay.event_ts") >= col("ow.event_ts") &&
         col("pay.event_ts") <= col("ow.event_ts") + expr("INTERVAL 30 MINUTES"))
 
-  /** ProvinceStatsSqlApp A3 — per-province windowed order count/amount. */
+  /** ProvinceStatsSqlApp A3 — per-province windowed order count/amount.
+    * Distinct orders as `size(collect_set)`, like [[productStats]]: the
+    * same count as `countDistinct`, which a stream rejects.
+    */
   def provinceStats(orderWide: DataFrame, windowLen: String = "10 seconds"): DataFrame =
     orderWide
       .groupBy(window(col("event_ts"), windowLen).as("w"),
         col("province_id"), col("province_name"))
-      .agg(countDistinct(col("order_id")).as("order_count"),
+      .agg(size(collect_set(col("order_id"))).cast("long").as("order_count"),
         sum(col("split_total_amount")).as("order_amount"))
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),

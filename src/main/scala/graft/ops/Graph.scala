@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics — the web-crawl quality signal family:
   * PageRank over the domain/page link graph is the classic
@@ -20,16 +24,13 @@ import org.apache.spark.sql.functions._
   * PageRank-lite convention) biases scores uniformly down — ranking,
   * the signal's use, is unaffected.
   *
-  * Scale shape (the CC-loop doctrine, [[Dedup.connectedComponents]]):
-  *  - edges are localCheckpoint'd ONCE, pre-partitioned by `src`, so
-  *    every iteration's rate⋈edges join reuses the static partitioning
-  *    and only the node-sized rate frame moves;
-  *  - per-iteration state is localCheckpoint'd — persist alone leaves
-  *    a logical plan growing per round (measured super-exponential
-  *    planning in the CC loop, same failure mode);
-  *  - the per-round shuffles are: rate (|V|), contributions grouped by
-  *    dst (|E|→|V|, map-side combined since the sum is integer).
-  *    Nothing vector- or text-sized ever enters an exchange.
+  * Every variant runs on one co-partitioned RDD kernel: adjacency and
+  * per-node teleport are hash-partitioned ONCE on the session's
+  * shuffle width; a round is state ⋈ adjacency (narrow) → rates →
+  * `reduceByKey` by dst (the one shuffle, map-side combined) →
+  * teleport ⋈ inflow (narrow), checkpointed and materialized by the
+  * action that sums it — one job per round. A null id is a node that
+  * neither gives nor receives (SQL equi-join semantics).
   */
 object Graph {
 
@@ -42,42 +43,15 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters=$iters out of [1,50]")
     require(dampingE2 >= 0L && dampingE2 <= 100L,
       s"dampingE2=$dampingE2 out of [0,100]")
-    val spark = edges.sparkSession
-    val (e, eRdds) = CacheScope.localCheckpointTracked(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .repartition(col("src")))
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val totals = nodes.agg(count(lit(1)).as("n"))
-    // n rides the state as a constant column so no per-iteration
-    // re-count; init mass 10¹² div n per node
-    var (state, stateRdds) = CacheScope.localCheckpointTracked(
-      nodes.crossJoin(broadcast(totals))
-        .select(col("id"), col("n"),
-          expr("1000000000000L div n").as("score_e12")))
-    var tracked = stateRdds
-    for (_ <- 1 to iters) {
-      // per-out-edge rate first (node-sized join), THEN the edge join:
-      // per-edge work is one lookup, and the damped division happens
-      // once per node, not once per edge
-      val rate = state.join(outdeg, state("id") === outdeg("src"))
-        .select(outdeg("src"),
-          expr(s"(score_e12 * ${dampingE2}L) div (100L * outdeg)").as("rate"))
-      val inflow = e.join(rate, "src")
-        .groupBy(col("dst")).agg(sum(col("rate")).as("inflow"))
-      val next = state.select(col("id"), col("n"))
-        .join(inflow, state("id") === inflow("dst"), "left")
-        .select(col("id"), col("n"),
-          (expr(s"(${100L - dampingE2}L * 1000000000000L) div (100L * n)") +
-            coalesce(col("inflow"), lit(0L))).as("score_e12"))
-      val (ck, r) = CacheScope.localCheckpointTracked(next)
-      state = ck
-      tracked = tracked ++ r
-    }
-    CacheScope.registerRdds(spark, eRdds ++ tracked)
-    state.select(col("id"), col("score_e12"))
+    val (e, part) = endpoints(edges, srcCol, dstCol)
+    val adj = adjacency(e, part)
+    // normalized: init 10¹² div n, teleport ((100−d)·10¹²) div (100·n)
+    val n = adj.count()
+    val (init, tele) = if (n == 0L) (0L, 0L)
+      else (1000000000000L / n, (100L - dampingE2) * 1000000000000L / (100L * n))
+    val (state, _, _) = iterate(adj, adj.mapValues(_ => tele),
+      adj.mapValues(_ => init), dampingE2, iters, untilFixed = false)
+    frame(e, state, "score_e12", scoreNullable = true)
   }
 
   /** A finished fixpoint PageRank run: the score frame, rounds
@@ -108,19 +82,14 @@ object Graph {
     *    bit equality, this does by construction.
     *  - Σ-based convergence (the CC loop's monotone-sum doctrine):
     *    pointwise-nondecreasing scores mean Σ strictly increases until
-    *    the fixpoint, so convergence is one DECIMAL(38,0) aggregate
-    *    per round, not a self-join.
+    *    the fixpoint, so convergence is the exact BigInt sum each round
+    *    computes anyway, not a self-join.
     *
     * `scaleUnit` trades precision for rounds: the from-below gap
     * closes by factor d per round, so rounds ≈ log(scaleUnit)/log(1/d)
     * (~190 at e12/0.85, ~14 at e4/0.50). Each round is one edge-scan
     * join — on a 10¹¹-edge graph that IS the cost, and the knob is the
     * operator's honest price list for bit-exactness.
-    *
-    * Same mechanics as [[pageRank]]: edges checkpointed once and
-    * pre-partitioned by src; per-round state localCheckpoint'd with
-    * the previous round's blocks dropped eagerly (a fixpoint loop can
-    * run tens of rounds — accreting blocks is the CC lesson).
     */
   def pageRankFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                        maxIters: Int = 300, dampingE2: Long = 85L,
@@ -145,15 +114,11 @@ object Graph {
     * (squeeze: T^k(tele) ≤ T^k(old) ≤ lfp). q177 gates the equality
     * anyway; GraphSpec carries the hand proofs.
     *
-    * What the warm start buys is ROUNDS: the remaining gap is the
-    * delta's perturbation, not the full score mass, so re-convergence
-    * costs ≈ log(perturbation)/log(1/d) instead of
-    * log(scaleUnit)/log(1/d) — a daily 10⁶-pair delta on a 10¹¹-edge
-    * graph at e12/0.85 re-converges in roughly a third of the cold
-    * rounds (each round = one full edge scan either way; rounds ARE
-    * the wall-clock). The precondition is CHECKED (one semi-join),
-    * failing loud — an overlapping delta means outdegrees changed and
-    * the caller must rebuild cold.
+    * The warm start buys ROUNDS (each one full edge scan): the gap is
+    * the delta's perturbation, so re-convergence costs
+    * ≈ log(perturbation)/log(1/d), not log(scaleUnit)/log(1/d). The
+    * precondition is CHECKED (one semi-join), failing loud — an
+    * overlapping delta changes out-degrees; rebuild cold instead.
     */
   def pageRankIncremental(oldScores: DataFrame, standingEdges: DataFrame,
                           deltaEdges: DataFrame,
@@ -180,15 +145,11 @@ object Graph {
     * topic-focused frontier prioritization. With seeds = all nodes
     * this IS [[pageRankFixpoint]] (q186 gates the equality).
     *
-    * Same from-below monotone iteration, same exactness argument —
-    * per-node teleport tele(v) = tele·[v ∈ seeds] changes nothing in
-    * the proof (T stays monotone, init = tele(·) is still ≤ the lfp).
-    * Nodes unreachable from the seed set sit at EXACTLY 0 forever —
-    * the integer form's clean "not connected to quality" verdict
-    * (floating-point PPR leaves them at denormal dust). Seed ids
-    * absent from the graph contribute nothing (inner-join semantics
-    * on the node set); an empty effective seed set converges to
-    * all-zeros in one round.
+    * Same exactness argument: tele(v) = tele·[v ∈ seeds] keeps T
+    * monotone and init = tele(·) ≤ the lfp. Nodes unreachable from
+    * the seeds sit at EXACTLY 0 (float PPR leaves denormal dust);
+    * seed ids absent from the graph contribute nothing; an empty
+    * effective seed set converges to all-zeros in one round.
     */
   def personalizedPageRankFixpoint(edges: DataFrame, srcCol: String,
                                    dstCol: String, seeds: DataFrame,
@@ -209,78 +170,116 @@ object Graph {
     require(dampingE2 >= 0L && dampingE2 <= 99L,
       s"dampingE2=$dampingE2 out of [0,99]") // d=1 has no fixed point here
     require(scaleUnit >= 100L, s"scaleUnit=$scaleUnit too coarse")
-    val spark = edges.sparkSession
     val tele = (100L - dampingE2) * scaleUnit / 100L
-    val (e, eRdds) = CacheScope.localCheckpointTracked(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .repartition(col("src")))
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val (e, part) = endpoints(edges, srcCol, dstCol)
+    val adj = adjacency(e, part)
     // per-node teleport: the constant tele (uniform PageRank) or
-    // tele·[id ∈ seeds] (personalized). Checkpointed once — `base`
-    // rides every round's join, node-sized
-    val teleNodes = seedIds match {
-      case Some(sd) => nodes
-        .join(sd.distinct().withColumn("__seed", lit(1L)), Seq("id"), "left")
-        .select(col("id"),
-          when(col("__seed").isNotNull, lit(tele)).otherwise(lit(0L))
-            .as("tele"))
-      case None => nodes.select(col("id"), lit(tele).as("tele"))
+    // tele·[id ∈ seeds] (personalized)
+    val teleOf = seedIds match {
+      case Some(sd) => adj.cogroup(keyed(sd.select(col("id"), lit(0L))), part)
+        .flatMapValues { case (a, s) => a.map(_ => if (s.isEmpty) 0L else tele) }
+      case None => adj.mapValues(_ => tele)
     }
-    val (base, baseRdds) = CacheScope.localCheckpointTracked(teleNodes)
-    // warm rows are clamped to ≥ tele(id) (a certified lower bound
-    // must stay one even if a caller hands scores from a different
-    // scaleUnit — the teleport floor is always sound); new nodes start
-    // at their teleport
-    val init0 = warmScores match {
-      case Some(s0) => base
-        .join(s0.select(col("id"), col("score").as("__warm")), Seq("id"), "left")
-        .select(col("id"),
-          greatest(coalesce(col("__warm"), col("tele")), col("tele"))
-            .as("score"))
-      case None => base.select(col("id"), col("tele").as("score"))
+    // warm rows are clamped to ≥ tele(id) (the teleport floor stays a
+    // certified lower bound even for scores of another scaleUnit); new
+    // nodes start at their teleport (a copy: the loop drops its init)
+    val init = warmScores.fold(teleOf.mapValues(t => t)) { s0 =>
+      teleOf.leftOuterJoin(keyed(s0.select(col("id").cast("long"),
+          col("score").cast("long"))), part)
+        .mapValues { case (t, w) => math.max(w.getOrElse(t), t) }
     }
-    // LAZY checkpoint (r20): scoreSum below is the materializing action
-    // — one pass per round instead of an eager count pass plus the sum
-    var (state, stateRdds) = CacheScope.localCheckpointLazyTracked(init0)
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def scoreSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("score").cast(dec38)), lit(0).cast(dec38)))
-        .head().getDecimal(0)
-    var prevSum = scoreSum(state)
-    var converged = state.isEmpty // an empty graph is already fixed
-    var i = 0
-    while (!converged && i < maxIters) {
-      val rate = state.join(outdeg, state("id") === outdeg("src"))
-        .select(outdeg("src"),
-          expr(s"(score * ${dampingE2}L) div (100L * outdeg)").as("rate"))
-      val inflow = e.join(rate, "src")
-        .groupBy(col("dst")).agg(sum(col("rate")).as("inflow"))
-      val next = base
-        .join(inflow, base("id") === inflow("dst"), "left")
-        .select(col("id"),
-          (col("tele") + coalesce(col("inflow"), lit(0L))).as("score"))
-      val (ck, r) = CacheScope.localCheckpointLazyTracked(next)
-      // materializes ck's blocks AND computes the convergence sum in
-      // one job; only then is the previous round's state dead
-      val nextSum = scoreSum(ck)
-      CacheScope.unpersistRdds(stateRdds)
-      state = ck
-      stateRdds = r
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
+    val (state, rounds, converged) =
+      iterate(adj, teleOf, init, dampingE2, maxIters, untilFixed = true)
+    if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"pageRankFixpoint did not converge in $maxIters rounds; scores are " +
+        "the last iterate, not the fixed point — raise maxIters or coarsen scaleUnit")
+    PrRun(frame(e, state, "score", scoreNullable = false), rounds, converged)
+  }
+
+  private type Id = java.lang.Long
+
+  /** (src, dst) as longs, and the session's shuffle width. */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String) =
+    (edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
+      new HashPartitioner(edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
+
+  /** Every endpoint → (out-degree, non-null targets), in ONE shuffle,
+    * persisted. A null src adds no out-edge; a null dst counts in its
+    * source's out-degree but receives nothing. */
+  private def adjacency(e: DataFrame,
+                        part: HashPartitioner): RDD[(Id, (Long, Array[Long]))] =
+    e.rdd.flatMap { r =>
+      val (src, dst) = (r.get(0).asInstanceOf[Id], r.get(1).asInstanceOf[Id])
+      // (0, null) only makes the id a node; (1, dst) is an out-edge
+      Iterator((dst, (0, null: Id)), (src, (if (src == null) 0 else 1, dst)))
+    }.groupByKey(part).mapValues { vs =>
+      (vs.count(_._1 == 1).toLong,
+        vs.collect { case (1, d) if d != null => d.longValue }.toArray)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** A two-column long frame as (id, value) pairs; rows with a null id
+    * (which never equi-joins) or a null value are dropped. */
+  private def keyed(df: DataFrame): RDD[(Id, Long)] =
+    df.rdd.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
+      else Some((Long.box(r.getLong(0)), r.getLong(1))))
+
+  /** One round, lazily. Exact and loud: an overflow throws, as Spark's
+    * ANSI `*` and `sum` do; `/` truncates like `div` (all ≥ 0). */
+  private def round(adj: RDD[(Id, (Long, Array[Long]))],
+                    teleOf: RDD[(Id, Long)], state: RDD[(Id, Long)],
+                    dampingE2: Long): RDD[(Id, Long)] = {
+    val part = adj.partitioner.get
+    val inflow = state.join(adj, part).flatMap { case (_, (score, (deg, dsts))) =>
+      if (deg == 0L) Iterator.empty
+      else {
+        val rate = Math.multiplyExact(score, dampingE2) / (100L * deg)
+        dsts.iterator.map(d => (Long.box(d), rate))
+      }
+    }.reduceByKey(part, (a: Long, b: Long) => Math.addExact(a, b))
+    teleOf.leftOuterJoin(inflow, part)
+      .mapValues { case (t, in) => in.fold(t)(Math.addExact(t, _)) }
+  }
+
+  /** Marks `state` for a lazy local checkpoint and runs the ONE action
+    * that computes every partition of it: (rows, Σ score). */
+  private def settle(state: RDD[(Id, Long)]): (Long, BigInt) = {
+    state.localCheckpoint()
+    state.aggregate((0L, BigInt(0)))((a, kv) => (a._1 + 1L, a._2 + kv._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+  }
+
+  /** `maxIters` rounds from `init`, or fewer once Σ stands still if
+    * `untilFixed` (monotone iterates: equal Σ is the fixed point); then
+    * drops `adj` and `teleOf`. Returns (last state, rounds, Σ stood still). */
+  private def iterate(adj: RDD[(Id, (Long, Array[Long]))],
+                      teleOf: RDD[(Id, Long)], init: RDD[(Id, Long)],
+                      dampingE2: Long, maxIters: Int,
+                      untilFixed: Boolean): (RDD[(Id, Long)], Int, Boolean) = {
+    teleOf.persist(StorageLevel.MEMORY_AND_DISK)
+    var state = init
+    val (rows, sum0) = settle(state)
+    var (prevSum, fixed, i) = (sum0, rows == 0L, 0) // an empty graph is fixed
+    while (i < maxIters && !(untilFixed && fixed)) {
+      val next = round(adj, teleOf, state, dampingE2)
+      val (_, sum) = settle(next) // next is complete: only now drop state
+      state.unpersist(blocking = false)
+      state = next
+      fixed = sum == prevSum
+      prevSum = sum
       i += 1
     }
-    CacheScope.unpersistRdds(eRdds)
-    CacheScope.unpersistRdds(baseRdds)
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"pageRankFixpoint did not converge in $maxIters rounds; " +
-          "scores are the last iterate, not the fixed point — raise " +
-          "maxIters or coarsen scaleUnit")
-    CacheScope.registerRdds(spark, stateRdds)
-    PrRun(state.select(col("id"), col("score")), i, converged)
+    adj.unpersist(blocking = false)
+    teleOf.unpersist(blocking = false)
+    (state, i, fixed)
+  }
+
+  /** The final state as (id, `scoreCol`), id nullable iff an endpoint
+    * column is; registered for [[CacheScope.release]]. */
+  private def frame(e: DataFrame, state: RDD[(Id, Long)], scoreCol: String,
+                    scoreNullable: Boolean): DataFrame = {
+    CacheScope.registerRdds(e.sparkSession, Seq(state))
+    e.sparkSession.createDataFrame(state.map { case (id, s) => Row(id, s) },
+      StructType(Seq(StructField("id", LongType, e.schema.exists(_.nullable)),
+        StructField(scoreCol, LongType, scoreNullable))))
   }
 }

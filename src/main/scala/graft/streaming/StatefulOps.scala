@@ -155,10 +155,12 @@ object StatefulOps {
       OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
       (mid: String, it: Iterator[PageEvent], state: GroupState[PageEvent]) => {
         if (state.hasTimedOut) {
-          // watermark passed entry+gap with no follow-up: emit bounce
-          val e = state.get
+          // watermark passed entry+gap with no follow-up: emit bounce.
+          // An entry followed up in its own batch leaves the timeout
+          // armed after remove() (Spark keeps it): nothing pending, no bounce
+          val pending = state.getOption
           state.remove()
-          Iterator.single(BounceRecord(mid, e.pageId, e.ts))
+          pending.iterator.map(e => BounceRecord(mid, e.pageId, e.ts))
         } else {
           val sorted = it.toSeq.sortBy(_.ts.getTime)
           val out = scala.collection.mutable.ArrayBuffer.empty[BounceRecord]

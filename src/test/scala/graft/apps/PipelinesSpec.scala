@@ -1,6 +1,9 @@
 package graft.apps
 
+import java.sql.Timestamp
+
 import graft.SparkSpec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class PipelinesSpec extends SparkSpec {
@@ -138,5 +141,34 @@ class PipelinesSpec extends SparkSpec {
     assert(r.getAs[Int]("order_ct") == 1)      // distinct order ids
     assert(r.getAs[Double]("order_amount") == 55.0)
     assert(r.getAs[Int]("paid_order_ct") == 1)
+  }
+
+  test("provinceStats runs on a stream in append mode and counts like batch") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def row(sec: Long, province: Long, orderId: Long, amount: Double) =
+      (new Timestamp(sec * 1000), province, s"p$province", orderId, amount)
+    val first = Seq(row(1, 1, 10, 5.0), row(2, 1, 10, 7.0), // two details, one order
+      row(3, 1, 11, 1.5), row(4, 2, 12, 2.0))
+    val input = MemoryStream[(Timestamp, Long, String, Long, Double)]
+    val stats = Pipelines.provinceStats(input.toDF()
+      .toDF("event_ts", "province_id", "province_name", "order_id", "split_total_amount")
+      .withWatermark("event_ts", "1 second"))
+    val q = stats.writeStream.format("memory").queryName("province_stats")
+      .outputMode("append").start()
+    try {
+      input.addData(first)
+      q.processAllAvailable()
+      input.addData(row(30, 1, 13, 9.0)) // watermark past the first window
+      q.processAllAvailable()
+      val streamed = spark.table("province_stats")
+      assert(streamed.schema("order_count").dataType.typeName === "long")
+      val got = streamed.select("province_id", "order_count", "order_amount")
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got === Set((1L, 2L, 13.5), (2L, 1L, 2.0)))
+      val batch = Pipelines.provinceStats(first.toDF("event_ts", "province_id",
+          "province_name", "order_id", "split_total_amount"))
+        .select("province_id", "order_count", "order_amount").as[(Long, Long, Double)]
+      assert(batch.collect().toSet === got)
+    } finally q.stop()
   }
 }

@@ -1,6 +1,11 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkSpec
 
 /** [[Graph.pageRank]] against hand-computed integer arithmetic: the
@@ -178,5 +183,103 @@ class GraphSpec extends SparkSpec {
         dampingE2 = D, scaleUnit = SCALE)
     }
     CacheScope.release(spark)
+  }
+
+  // ————— the RDD kernel's contracts —————
+
+  /** Jobs submitted by `body` on this thread. A fence job in a second
+    * job group follows it; the listener bus delivers in order, so once
+    * the fence is seen every job of `body` has been counted. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graph-spec-body", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("graph-spec-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("graph-spec-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("graph-spec-fence"), "listener never saw the fence job")
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.count(_ == "graph-spec-body")
+  }
+
+  test("fixpoint: one more round is exactly one more job") {
+    val e = arithEdges(40L).toDF("src", "dst")
+    def jobs(k: Int): Int = jobsIn {
+      val run = Graph.pageRankFixpoint(e, "src", "dst", maxIters = k,
+        dampingE2 = D, scaleUnit = SCALE)
+      assert(!run.converged && run.rounds === k, s"must not converge by $k: $run")
+    }
+    val (j3, j4) = (jobs(3), jobs(4))
+    CacheScope.release(spark)
+    info(s"jobs: maxIters=3 → $j3, maxIters=4 → $j4")
+    assert(j4 === j3 + 1)
+  }
+
+  // 1 → 2, 2 → null, null → 1: the null id is a node at its teleport
+  // that neither gives nor receives; node 2's share to it is dropped
+  private def nullEdges: DataFrame =
+    Seq(Option(1L) -> Option(2L), Option(2L) -> Option.empty[Long],
+      Option.empty[Long] -> Option(1L)).toDF("src", "dst")
+
+  private def byId(df: DataFrame): Map[Option[Long], Long] =
+    df.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).toMap
+
+  test("a null endpoint is a node at its teleport that neither gives nor receives") {
+    val fx = Graph.pageRankFixpoint(nullEdges, "src", "dst",
+      dampingE2 = D, scaleUnit = SCALE)
+    assert(fx.converged && fx.rounds === 2)
+    assert(byId(fx.scores) === Map(Some(1L) -> 5000L, Some(2L) -> 7500L, None -> 5000L))
+    val ppr = Graph.personalizedPageRankFixpoint(nullEdges, "src", "dst",
+      Seq(1L).toDF("id"), "id", dampingE2 = D, scaleUnit = SCALE)
+    assert(ppr.converged && ppr.rounds === 2)
+    assert(byId(ppr.scores) === Map(Some(1L) -> 5000L, Some(2L) -> 2500L, None -> 0L))
+    // normalized: n = 3 counts the null node; init 333333333333, tele
+    // 5·10¹⁰; round 2 gives node 2 tele + (5·10¹⁰·85) div 100
+    assert(byId(Graph.pageRank(nullEdges, "src", "dst", 2)) === Map(
+      Some(1L) -> 50000000000L, Some(2L) -> 92500000000L, None -> 50000000000L))
+    CacheScope.release(spark)
+  }
+
+  test("returned frames: (id, score) longs, id nullable iff an endpoint column is") {
+    def schema(idNullable: Boolean, score: String, scoreNullable: Boolean) =
+      StructType(Seq(StructField("id", LongType, idNullable),
+        StructField(score, LongType, scoreNullable)))
+    val plain = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L).toDF("src", "dst")
+    for ((e, nullable) <- Seq(plain -> false, nullEdges -> true)) {
+      assert(Graph.pageRank(e, "src", "dst", 2).schema ===
+        schema(nullable, "score_e12", scoreNullable = true))
+      val fx = Graph.pageRankFixpoint(e, "src", "dst", dampingE2 = D, scaleUnit = SCALE)
+      val ppr = Graph.personalizedPageRankFixpoint(e, "src", "dst",
+        Seq(1L).toDF("id"), "id", dampingE2 = D, scaleUnit = SCALE)
+      val inc = Graph.pageRankIncremental(fx.scores, e, Seq(9L -> 1L).toDF("src", "dst"),
+        "src", "dst", dampingE2 = D, scaleUnit = SCALE)
+      for (run <- Seq(fx, ppr, inc))
+        assert(run.scores.schema === schema(nullable, "score", scoreNullable = false))
+      CacheScope.release(spark)
+    }
+  }
+
+  test("the kernel keeps only the returned state persisted; release frees it") {
+    val sc = spark.sparkContext
+    graft.Bench.releaseAll(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
+    val run = Graph.pageRankFixpoint(arithEdges(40L).toDF("src", "dst"), "src", "dst",
+      maxIters = 5, dampingE2 = D, scaleUnit = SCALE)
+    assert(run.rounds === 5)
+    // adjacency, teleport and rounds 0-4 are gone: round 5 backs the frame
+    assert(sc.getPersistentRDDs.size === 1, sc.getPersistentRDDs.values.mkString(", "))
+    assert(run.scores.count() > 0L)
+    CacheScope.release(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
   }
 }

@@ -168,6 +168,30 @@ class StatefulOpsSpec extends SparkSpec {
       s"the pending entry's real bounce must survive: $rows")
   }
 
+  test("ST3: an entry followed up in its own batch leaves no armed timeout to crash on") {
+    val input = MemoryStream[PageEvent]
+    val events = input.toDS().withWatermark("ts", "0 seconds")
+    val out = StatefulOps.bounceDetect(events, gapSeconds = 10)
+    val q = out.writeStream.format("memory").queryName("st3same")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      // m1 enters and follows up within the gap, in one batch
+      input.addData(
+        PageEvent("m1", "home", None, "1", ts(10)),
+        PageEvent("m1", "good_list", Some("home"), "1", ts(12)))
+      q.processAllAvailable()
+      // moves the watermark past m1's entry + gap (20 s)
+      input.addData(PageEvent("m2", "home", None, "1", ts(40)))
+      q.processAllAvailable()
+      // the next batch is where m1's stale timeout fires
+      input.addData(PageEvent("m3", "home", None, "1", ts(41)))
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
+      val rows = spark.table("st3same").as[BounceRecord].collect().map(_.mid).toSet
+      assert(!rows.contains("m1"), s"a followed-up entry must not bounce: $rows")
+    } finally q.stop()
+  }
+
   test("ST2: a late previous-day entry emits but does not regress the state date (r10)") {
     val input = MemoryStream[PageEvent]
     val out = StatefulOps.dailyUvFilter(input.toDS(), ttl = None)
