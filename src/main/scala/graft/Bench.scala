@@ -35,7 +35,7 @@ object Bench {
     // are pure bookkeeping (every block is already gone; unpersist is
     // idempotent).
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+      .foreach(org.apache.spark.graft.Checkpoints.drop(_, blocking = true))
     spark.catalog.clearCache()
     ops.CacheScope.release(spark)
     // Drain shuffle cleanup SYNCHRONOUSLY before the GC (r15): the GC

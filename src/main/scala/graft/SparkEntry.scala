@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Tables
 import graft.functions.{DateFunctions => DF, TextFunctions => TF, VectorFunctions => VF}
@@ -88,32 +89,37 @@ object SparkEntry {
     * cannot evict it.
     */
   private val gateTwins =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, StructType)]()
 
-  private def twinArtifact(s: SparkSession, dir: String, tag: String)
-                          (build: => DataFrame): DataFrame = {
-    val p = gateTwins.computeIfAbsent((s, dir, tag), _ => {
-      val path = artifactPath(s, dir, s"twin-$tag")
-      build.write.mode("overwrite").parquet(path)
-      path
-    })
-    s.read.parquet(p)
+  /** Writes `df` as the twin `tag`; returns its path and the schema it
+    * reads back with, so later reads skip parquet schema inference. */
+  private def writeTwin(s: SparkSession, dir: String, tag: String,
+                        df: DataFrame): (String, StructType) = {
+    val path = artifactPath(s, dir, s"twin-$tag")
+    df.write.mode("overwrite").parquet(path)
+    (path, s.read.parquet(path).schema)
+  }
+
+  private[graft] def twinArtifact(s: SparkSession, dir: String, tag: String)
+                                 (build: => DataFrame): DataFrame = {
+    val (p, schema) = gateTwins.computeIfAbsent((s, dir, tag),
+      _ => writeTwin(s, dir, tag, build))
+    s.read.schema(schema).parquet(p)
   }
 
   /** [[twinArtifact]] for PageRank fixpoint runs: scores to parquet,
     * the (rounds, converged) scalars ride the memo. */
   private val prTwins =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, Int, Boolean)]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, StructType, Int, Boolean)]()
 
   private def prTwinArtifact(s: SparkSession, dir: String, tag: String)
                             (build: => ops.Graph.PrRun): ops.Graph.PrRun = {
-    val (p, rounds, conv) = prTwins.computeIfAbsent((s, dir, tag), _ => {
-      val path = artifactPath(s, dir, s"twin-$tag")
+    val (p, schema, rounds, conv) = prTwins.computeIfAbsent((s, dir, tag), _ => {
       val r = build
-      r.scores.write.mode("overwrite").parquet(path)
-      (path, r.rounds, r.converged)
+      val (path, schema) = writeTwin(s, dir, tag, r.scores)
+      (path, schema, r.rounds, r.converged)
     })
-    ops.Graph.PrRun(s.read.parquet(p), rounds, conv)
+    ops.Graph.PrRun(s.read.schema(schema).parquet(p), rounds, conv)
   }
 
   /** q174/q178's deterministic arithmetic CC-gate graph (the q158

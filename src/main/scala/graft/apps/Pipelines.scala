@@ -116,6 +116,13 @@ object Pipelines {
       .groupBy(col("mid"), col("dt"))
       .agg(min(col("ts")).as("first_ts"))
 
+  /** `pages` with its event time: the caller's `event_ts` when it has
+    * one (a watermark set on it must reach the window, or a stream
+    * cannot run in append mode), otherwise derived from `ts` millis. */
+  private def withEventTs(pages: DataFrame): DataFrame =
+    if (pages.columns.contains("event_ts")) pages
+    else pages.withColumn("event_ts", timestamp_millis(col("ts")))
+
   /** VisitorStatsApp A1/J5 — the reference's metric streams unioned and
     * window-aggregated: pv (page views), sv (session entries), uv
     * (distinct visitors), dur (dwell time). The reference's fifth
@@ -126,10 +133,8 @@ object Pipelines {
     * `VisitorStatsApp` does.
     */
   def visitorStats(pages: DataFrame, windowLen: String = "10 seconds"): DataFrame = {
-    val ts = timestamp_millis(col("ts"))
     val keys = Seq(col("vc"), col("ch"), col("ar"), col("is_new"))
-    pages
-      .withColumn("event_ts", ts)
+    withEventTs(pages)
       .groupBy(window(col("event_ts"), windowLen).as("w") +: keys: _*)
       .agg(
         count(lit(1)).as("pv_ct"),
@@ -190,8 +195,8 @@ object Pipelines {
     * per window.
     */
   def keywordStats(pages: DataFrame, windowLen: String = "10 seconds"): DataFrame =
-    pages.filter(col("page_id") === "good_list" && col("item").isNotNull)
-      .withColumn("event_ts", timestamp_millis(col("ts")))
+    withEventTs(pages)
+      .filter(col("page_id") === "good_list" && col("item").isNotNull)
       .select(col("event_ts"), explode(TextFunctions.tokenize(col("item"))).as("keyword"))
       .groupBy(window(col("event_ts"), windowLen).as("w"), col("keyword"))
       .agg(count(lit(1)).as("ct"))

@@ -1,6 +1,11 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central table loader for the driver-generated parquet fixtures.
   *
@@ -27,7 +32,7 @@ object Tables {
     // timezone the NTZ→LTZ cast is value-identical, matching how the
     // DuckDB oracle reads the same naive parquet values.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     val fixed = df.schema.fields.foldLeft(df) { (d, f) =>
       f.dataType match {
         case org.apache.spark.sql.types.LongType if name == "events" && f.name == "ts" =>
@@ -38,6 +43,37 @@ object Tables {
       }
     }
     fixed
+  }
+
+  /** The schema each table path was last inferred with, keyed by the
+    * path's file listing and the session's parquet settings. */
+  private val schemas =
+    new ConcurrentHashMap[String, (Seq[(String, Long, Long)], Map[String, String], StructType)]()
+
+  /** `spark.read.parquet(path)` without its schema-inference job when
+    * the path's files (name, length, modification time) and the parquet
+    * settings are the same as at the last inference: a rewrite of the
+    * table changes its listing, so it is never read with a stale schema. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path) // Spark's own not-found error
+    else {
+      val files = mutable.ArrayBuffer.empty[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val settings = spark.conf.getAll.filter(_._1.contains("parquet"))
+      schemas.get(path) match {
+        case (`files`, `settings`, schema) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          schemas.put(path, (files.toSeq, settings, df.schema))
+          df
+      }
+    }
   }
 
   /** Register every table as a temp view so `spark.sql` queries match the

@@ -2,6 +2,7 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.graft.Checkpoints
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -129,7 +130,7 @@ object CacheScope {
     * previous round's state, once the next round is materialized).
     */
   private[graft] def unpersistRdds(toDrop: Seq[RDD[_]]): Unit =
-    toDrop.foreach(_.unpersist(blocking = false))
+    toDrop.foreach(Checkpoints.drop(_))
 
   /** Release every intermediate registered against `spark`'s CONTEXT —
     * all sessions, all threads — since the last release. Call after
@@ -147,7 +148,7 @@ object CacheScope {
     }
     rdds.keySet.asScala.filter(_._1 eq ctx).toSeq.foreach { k =>
       Option(rdds.remove(k)).foreach { q =>
-        q.forEach(r => { r.unpersist(blocking = false); () })
+        q.forEach(r => Checkpoints.drop(r))
       }
     }
     stageNames.keySet.asScala.filter(_._1 eq ctx).toSeq
@@ -190,7 +191,7 @@ object CacheScope {
     }
     Option(rdds.get(keyOf(spark))).foreach { q =>
       while (q.size > m.nRdds) {
-        Option(q.pollLast()).foreach(r => { r.unpersist(blocking = false); () })
+        Option(q.pollLast()).foreach(r => Checkpoints.drop(r))
       }
     }
   }

@@ -1,11 +1,13 @@
 package graft.ops
 
 import org.apache.spark.HashPartitioner
+import org.apache.spark.graft.Checkpoints
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 /** Link-graph analytics — the web-crawl quality signal family:
   * PageRank over the domain/page link graph is the classic
@@ -43,14 +45,15 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters=$iters out of [1,50]")
     require(dampingE2 >= 0L && dampingE2 <= 100L,
       s"dampingE2=$dampingE2 out of [0,100]")
-    val (e, part) = endpoints(edges, srcCol, dstCol)
-    val adj = adjacency(e, part)
+    val e = endpoints(edges, srcCol, dstCol, Standing)
+    val mixedSources = e.sparkSession.sparkContext.longAccumulator
+    val adj = adjacency(e, mixedSources)
     // normalized: init 10¹² div n, teleport ((100−d)·10¹²) div (100·n)
     val n = adj.count()
     val (init, tele) = if (n == 0L) (0L, 0L)
       else (1000000000000L / n, (100L - dampingE2) * 1000000000000L / (100L * n))
     val (state, _, _) = iterate(adj, adj.mapValues(_ => tele),
-      adj.mapValues(_ => init), dampingE2, iters, untilFixed = false)
+      adj.mapValues(_ => init), dampingE2, iters, untilFixed = false, mixedSources)
     frame(e, state, "score_e12", scoreNullable = true)
   }
 
@@ -94,8 +97,8 @@ object Graph {
   def pageRankFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                        maxIters: Int = 300, dampingE2: Long = 85L,
                        scaleUnit: Long = 1000000000000L): PrRun =
-    fixpointFromBelow(edges, srcCol, dstCol, maxIters, dampingE2, scaleUnit,
-      warmScores = None)
+    fixpointFromBelow(endpoints(edges, srcCol, dstCol, Standing), maxIters,
+      dampingE2, scaleUnit, warmScores = None)
 
   /** INCREMENTAL PageRank (r17) — the graph family's q174: absorb a
     * SOURCE-ADDITIVE delta (every delta edge's src is a node with no
@@ -117,25 +120,20 @@ object Graph {
     * The warm start buys ROUNDS (each one full edge scan): the gap is
     * the delta's perturbation, so re-convergence costs
     * ≈ log(perturbation)/log(1/d), not log(scaleUnit)/log(1/d). The
-    * precondition is CHECKED (one semi-join), failing loud — an
-    * overlapping delta changes out-degrees; rebuild cold instead.
+    * precondition is CHECKED inside the kernel's adjacency shuffle, on
+    * the long ids it iterates over: standing and delta edges carry a
+    * side tag, and a node with out-edges on both sides fails the run
+    * loud before any round (an overlapping delta changes out-degrees;
+    * rebuild cold instead).
     */
   def pageRankIncremental(oldScores: DataFrame, standingEdges: DataFrame,
                           deltaEdges: DataFrame,
                           srcCol: String, dstCol: String,
                           maxIters: Int = 300, dampingE2: Long = 85L,
-                          scaleUnit: Long = 1000000000000L): PrRun = {
-    val overlapping = deltaEdges.select(col(srcCol)).distinct()
-      .join(standingEdges.select(col(srcCol)).distinct(), Seq(srcCol),
-        "left_semi")
-    require(overlapping.isEmpty,
-      "pageRankIncremental requires a source-additive delta: some delta " +
-        "sources already have out-edges in the standing graph — their " +
-        "out-degrees would change, the standing scores are no longer a " +
-        "certified lower bound, rebuild cold with pageRankFixpoint")
-    fixpointFromBelow(standingEdges.unionByName(deltaEdges), srcCol, dstCol,
+                          scaleUnit: Long = 1000000000000L): PrRun =
+    fixpointFromBelow(endpoints(standingEdges, srcCol, dstCol, Standing)
+        .unionByName(endpoints(deltaEdges, srcCol, dstCol, Delta)),
       maxIters, dampingE2, scaleUnit, warmScores = Some(oldScores))
-  }
 
   /** PERSONALIZED PageRank (r17) to the exact integer least fixed
     * point: teleport mass goes ONLY to `seeds` (one id column named by
@@ -156,12 +154,12 @@ object Graph {
                                    seedCol: String, maxIters: Int = 300,
                                    dampingE2: Long = 85L,
                                    scaleUnit: Long = 1000000000000L): PrRun =
-    fixpointFromBelow(edges, srcCol, dstCol, maxIters, dampingE2, scaleUnit,
-      warmScores = None,
+    fixpointFromBelow(endpoints(edges, srcCol, dstCol, Standing), maxIters,
+      dampingE2, scaleUnit, warmScores = None,
       seedIds = Some(seeds.select(col(seedCol).cast("long").as("id"))))
 
-  private def fixpointFromBelow(edges: DataFrame, srcCol: String,
-                                dstCol: String, maxIters: Int,
+  /** The from-below fixpoint over an [[endpoints]] frame. */
+  private def fixpointFromBelow(e: DataFrame, maxIters: Int,
                                 dampingE2: Long, scaleUnit: Long,
                                 warmScores: Option[DataFrame],
                                 seedIds: Option[DataFrame] = None): PrRun = {
@@ -171,8 +169,9 @@ object Graph {
       s"dampingE2=$dampingE2 out of [0,99]") // d=1 has no fixed point here
     require(scaleUnit >= 100L, s"scaleUnit=$scaleUnit too coarse")
     val tele = (100L - dampingE2) * scaleUnit / 100L
-    val (e, part) = endpoints(edges, srcCol, dstCol)
-    val adj = adjacency(e, part)
+    val mixedSources = e.sparkSession.sparkContext.longAccumulator
+    val adj = adjacency(e, mixedSources)
+    val part = adj.partitioner.get
     // per-node teleport: the constant tele (uniform PageRank) or
     // tele·[id ∈ seeds] (personalized)
     val teleOf = seedIds match {
@@ -188,8 +187,8 @@ object Graph {
           col("score").cast("long"))), part)
         .mapValues { case (t, w) => math.max(w.getOrElse(t), t) }
     }
-    val (state, rounds, converged) =
-      iterate(adj, teleOf, init, dampingE2, maxIters, untilFixed = true)
+    val (state, rounds, converged) = iterate(adj, teleOf, init, dampingE2,
+      maxIters, untilFixed = true, mixedSources)
     if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
       s"pageRankFixpoint did not converge in $maxIters rounds; scores are " +
         "the last iterate, not the fixed point — raise maxIters or coarsen scaleUnit")
@@ -198,24 +197,42 @@ object Graph {
 
   private type Id = java.lang.Long
 
-  /** (src, dst) as longs, and the session's shuffle width. */
-  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String) =
-    (edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
-      new HashPartitioner(edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
+  /** Out-edge side tags: an edge of the graph (or of the standing
+    * graph), or of an incremental run's delta. */
+  private final val Standing = 1
+  private final val Delta = 2
 
-  /** Every endpoint → (out-degree, non-null targets), in ONE shuffle,
-    * persisted. A null src adds no out-edge; a null dst counts in its
-    * source's out-degree but receives nothing. */
+  private val NotSourceAdditive =
+    "pageRankIncremental requires a source-additive delta: some delta " +
+      "sources already have out-edges in the standing graph — their " +
+      "out-degrees would change, the standing scores are no longer a " +
+      "certified lower bound, rebuild cold with pageRankFixpoint"
+
+  /** (src, dst) as longs, tagged with their `side`. */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String,
+                        side: Int): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"), lit(side).as("side"))
+
+  /** Every endpoint → (out-degree, non-null targets), in ONE shuffle on
+    * the session's shuffle width, persisted. A null src adds no
+    * out-edge; a null dst counts in its source's out-degree but
+    * receives nothing. A node with out-edges of both sides adds 1 to
+    * `mixedSources` when its partition is computed. */
   private def adjacency(e: DataFrame,
-                        part: HashPartitioner): RDD[(Id, (Long, Array[Long]))] =
+                        mixedSources: LongAccumulator): RDD[(Id, (Long, Array[Long]))] =
     e.rdd.flatMap { r =>
       val (src, dst) = (r.get(0).asInstanceOf[Id], r.get(1).asInstanceOf[Id])
-      // (0, null) only makes the id a node; (1, dst) is an out-edge
-      Iterator((dst, (0, null: Id)), (src, (if (src == null) 0 else 1, dst)))
-    }.groupByKey(part).mapValues { vs =>
-      (vs.count(_._1 == 1).toLong,
-        vs.collect { case (1, d) if d != null => d.longValue }.toArray)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+      // (0, null) only makes the id a node; (side, dst) is an out-edge
+      Iterator((dst, (0, null: Id)), (src, (if (src == null) 0 else r.getInt(2), dst)))
+    }.groupByKey(new HashPartitioner(
+        e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
+      .mapValues { vs =>
+        val out = vs.filter(_._1 != 0)
+        if (out.exists(_._1 == Standing) && out.exists(_._1 == Delta))
+          mixedSources.add(1L)
+        (out.size.toLong, out.collect { case (_, d) if d != null => d.longValue }.toArray)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
 
   /** A two-column long frame as (id, value) pairs; rows with a null id
     * (which never equi-joins) or a null value are dropped. */
@@ -250,27 +267,38 @@ object Graph {
 
   /** `maxIters` rounds from `init`, or fewer once Σ stands still if
     * `untilFixed` (monotone iterates: equal Σ is the fixed point); then
-    * drops `adj` and `teleOf`. Returns (last state, rounds, Σ stood still). */
+    * drops `adj` and `teleOf`. The init settle computes `adj`, so
+    * `mixedSources` is complete after it: a count above zero fails the
+    * run before any round. On any failure every state is dropped too.
+    * Returns (last state, rounds, Σ stood still). */
   private def iterate(adj: RDD[(Id, (Long, Array[Long]))],
                       teleOf: RDD[(Id, Long)], init: RDD[(Id, Long)],
-                      dampingE2: Long, maxIters: Int,
-                      untilFixed: Boolean): (RDD[(Id, Long)], Int, Boolean) = {
+                      dampingE2: Long, maxIters: Int, untilFixed: Boolean,
+                      mixedSources: LongAccumulator): (RDD[(Id, Long)], Int, Boolean) = {
     teleOf.persist(StorageLevel.MEMORY_AND_DISK)
-    var state = init
-    val (rows, sum0) = settle(state)
-    var (prevSum, fixed, i) = (sum0, rows == 0L, 0) // an empty graph is fixed
-    while (i < maxIters && !(untilFixed && fixed)) {
-      val next = round(adj, teleOf, state, dampingE2)
-      val (_, sum) = settle(next) // next is complete: only now drop state
-      state.unpersist(blocking = false)
-      state = next
-      fixed = sum == prevSum
-      prevSum = sum
-      i += 1
+    var (state, next) = (init, init)
+    try {
+      val (rows, sum0) = settle(state)
+      require(mixedSources.isZero, NotSourceAdditive)
+      var (prevSum, fixed, i) = (sum0, rows == 0L, 0) // an empty graph is fixed
+      while (i < maxIters && !(untilFixed && fixed)) {
+        next = round(adj, teleOf, state, dampingE2)
+        val (_, sum) = settle(next) // next is complete: only now drop state
+        Checkpoints.drop(state)
+        state = next
+        fixed = sum == prevSum
+        prevSum = sum
+        i += 1
+      }
+      (state, i, fixed)
+    } catch { case t: Throwable =>
+      Checkpoints.drop(state)
+      Checkpoints.drop(next)
+      throw t
+    } finally {
+      adj.unpersist(blocking = false)
+      teleOf.unpersist(blocking = false)
     }
-    adj.unpersist(blocking = false)
-    teleOf.unpersist(blocking = false)
-    (state, i, fixed)
   }
 
   /** The final state as (id, `scoreCol`), id nullable iff an endpoint
@@ -279,7 +307,7 @@ object Graph {
                     scoreNullable: Boolean): DataFrame = {
     CacheScope.registerRdds(e.sparkSession, Seq(state))
     e.sparkSession.createDataFrame(state.map { case (id, s) => Row(id, s) },
-      StructType(Seq(StructField("id", LongType, e.schema.exists(_.nullable)),
+      StructType(Seq(StructField("id", LongType, e.schema.take(2).exists(_.nullable)),
         StructField(scoreCol, LongType, scoreNullable))))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +28,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = { /* shared session: leave running */ }
+
+  /** Jobs submitted by `body` on this thread. A fence job in a second
+    * job group follows it; the listener bus delivers in order, so once
+    * the fence is seen every job of `body` has been counted. */
+  protected def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("spec-body", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("spec-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("spec-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("spec-fence"), "listener never saw the fence job")
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.count(_ == "spec-body")
+  }
 }
 
 object SparkSpec {

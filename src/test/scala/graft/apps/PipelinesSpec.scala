@@ -89,6 +89,31 @@ class PipelinesSpec extends SparkSpec {
     assert(first.getAs[Long]("dur_sum") == 10000L)
   }
 
+  test("visitorStats keeps the caller's watermark: append mode on a stream equals batch") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cols = Seq("mid", "vc", "ch", "ar", "is_new", "last_page_id", "during_time", "ts")
+    val first = Seq(
+      ("m1", "v1", "ch1", "ar1", "1", null.asInstanceOf[String], 2000L, 1000L),
+      ("m2", "v1", "ch1", "ar1", "1", "home", 8000L, 3000L),
+      ("m1", "v1", "ch1", "ar1", "1", "detail", 12000L, 11000L),
+      ("m3", "v2", "ch2", "ar1", "0", null.asInstanceOf[String], 500L, 15000L))
+    val input = MemoryStream[(String, String, String, String, String, String, Long, Long)]
+    val stats = Pipelines.visitorStats(input.toDF().toDF(cols: _*)
+      .withColumn("event_ts", timestamp_millis($"ts"))
+      .withWatermark("event_ts", "1 second"))
+    val q = stats.writeStream.format("memory").queryName("visitor_stats")
+      .outputMode("append").start()
+    try {
+      input.addData(first)
+      q.processAllAvailable()
+      input.addData(("m4", "v1", "ch1", "ar1", "1", "home", 100L, 40000L)) // closes both windows
+      q.processAllAvailable()
+      val streamed = spark.table("visitor_stats").collect().toSet
+      assert(streamed.size === 3)
+      assert(streamed === Pipelines.visitorStats(first.toDF(cols: _*)).collect().toSet)
+    } finally q.stop()
+  }
+
   test("orderWide interval-joins details and enriches dims") {
     val orders = Seq((1L, 100L, 1000L), (2L, 200L, 50000L))
       .toDF("id", "user_id", "ts")

@@ -82,6 +82,48 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  private def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    dir.deleteOnExit()
+    dir.getAbsolutePath
+  }
+
+  test("a second load of an unchanged table submits no job") {
+    import spark.implicits._
+    val dir = tempDir("tables-memo")
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(jobsIn(Tables.load(spark, dir, "documents")) >= 1) // the inference job
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { again = Tables.load(spark, dir, "documents") } === 0)
+    assert(again.as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+  }
+
+  test("a table rewritten at the same path loads with its new schema") {
+    import spark.implicits._
+    val dir = tempDir("tables-rewrite")
+    val path = s"$dir/documents.parquet"
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(path)
+    assert(Tables.load(spark, dir, "documents").columns.toSeq === Seq("doc_id", "text"))
+    Seq((2L, "en", 7)).toDF("doc_id", "lang", "n_chars").write.mode("overwrite").parquet(path)
+    val reloaded = Tables.load(spark, dir, "documents")
+    assert(reloaded.columns.toSeq === Seq("doc_id", "lang", "n_chars"))
+    assert(reloaded.as[(Long, String, Int)].collect().toSeq === Seq((2L, "en", 7)))
+  }
+
+  test("a gate twin's read submits no job") {
+    import spark.implicits._
+    val dir = tempDir("tables-twin")
+    val built = graft.SparkEntry.twinArtifact(spark, dir, "tables-spec")(
+      Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b"))
+    assert(built.count() === 2L)
+    var twin: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn {
+      twin = graft.SparkEntry.twinArtifact(spark, dir, "tables-spec")(
+        sys.error("a memoized twin is never rebuilt"))
+    } === 0)
+    assert(twin.as[(Long, Long)].collect().toSet === Set((1L, 2L), (3L, 4L)))
+  }
+
   // the size-derived shuffle width (default 4 MB per partition)
   private val MB = 1024 * 1024
   private def withDir(sizes: Int*)(body: java.nio.file.Path => Unit): Unit = {

@@ -1,8 +1,5 @@
 package graft.ops
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -172,45 +169,30 @@ class GraphSpec extends SparkSpec {
   }
 
   test("incremental rejects a non-source-additive delta loud") {
+    val sc = spark.sparkContext
+    graft.Bench.releaseAll(spark)
+    assert(sc.getPersistentRDDs.isEmpty)
     val standing = Seq(1L -> 2L, 2L -> 3L).toDF("src", "dst")
-    val old = Graph.pageRankFixpoint(standing, "src", "dst",
-      dampingE2 = D, scaleUnit = SCALE)
+    // the standing fixed point (tele 5000, d = 0.5), from a local frame
+    val old = Seq(1L -> 5000L, 2L -> 7500L, 3L -> 8750L).toDF("id", "score")
     // node 1 already has out-edges: adding another changes its
     // out-degree — the standing scores are no longer a lower bound
     val bad = Seq(1L -> 3L).toDF("src", "dst")
-    intercept[IllegalArgumentException] {
-      Graph.pageRankIncremental(old.scores, standing, bad, "src", "dst",
+    val err = intercept[IllegalArgumentException] {
+      Graph.pageRankIncremental(old, standing, bad, "src", "dst",
         dampingE2 = D, scaleUnit = SCALE)
     }
+    assert(err.getMessage === "requirement failed: pageRankIncremental " +
+      "requires a source-additive delta: some delta sources already have " +
+      "out-edges in the standing graph — their out-degrees would change, " +
+      "the standing scores are no longer a certified lower bound, rebuild " +
+      "cold with pageRankFixpoint")
+    // adjacency, teleport and the settled init state are all released
+    assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs.values.mkString(", "))
     CacheScope.release(spark)
   }
 
   // ————— the RDD kernel's contracts —————
-
-  /** Jobs submitted by `body` on this thread. A fence job in a second
-    * job group follows it; the listener bus delivers in order, so once
-    * the fence is seen every job of `body` has been counted. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("graph-spec-body", "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("graph-spec-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("graph-spec-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("graph-spec-fence"), "listener never saw the fence job")
-    } finally sc.removeSparkListener(listener)
-    groups.asScala.count(_ == "graph-spec-body")
-  }
 
   test("fixpoint: one more round is exactly one more job") {
     val e = arithEdges(40L).toDF("src", "dst")
@@ -223,6 +205,23 @@ class GraphSpec extends SparkSpec {
     CacheScope.release(spark)
     info(s"jobs: maxIters=3 → $j3, maxIters=4 → $j4")
     assert(j4 === j3 + 1)
+  }
+
+  test("incremental on local frames: the init settle plus one job per round") {
+    val all = arithEdges(40L)
+    val standing = all.filter(_._1 < 32L).toDF("src", "dst")
+    val delta = all.filter(_._1 >= 32L).toDF("src", "dst")
+    val old = Graph.pageRankFixpoint(standing, "src", "dst",
+      dampingE2 = D, scaleUnit = SCALE).scores.as[(Long, Long)].collect().toSeq
+    CacheScope.release(spark)
+    var rounds = 0
+    val jobs = jobsIn {
+      rounds = Graph.pageRankIncremental(old.toDF("id", "score"), standing, delta,
+        "src", "dst", dampingE2 = D, scaleUnit = SCALE).rounds
+    }
+    CacheScope.release(spark)
+    info(s"rounds=$rounds jobs=$jobs")
+    assert(rounds >= 1 && jobs === rounds + 1)
   }
 
   // 1 → 2, 2 → null, null → 1: the null id is a node at its teleport
