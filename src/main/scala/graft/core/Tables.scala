@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
 
+import graft.streaming.NioCheckpointFileManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -84,8 +85,11 @@ object Tables {
 }
 
 /** SparkSession factory with the scale-aware defaults used across the
-  * engine. Local tests run `local[32]`; on a real cluster the same code
-  * runs unchanged — AQE handles partition coalescing and skew joins.
+  * engine. `local(cores)` runs `local[cores]`: Bench, Verify and
+  * PlanDump pass `SPARK_GRAFT_CPUS` (default 4), and the test suites
+  * build their own `local[4]` session with the same streaming checkpoint
+  * manager. On a real cluster the same code runs unchanged — AQE handles
+  * partition coalescing and skew joins.
   */
 object GraftSession {
 
@@ -215,6 +219,8 @@ object GraftSession {
       .config("spark.ui.retainedTasks", "500")
       .config("spark.ui.retainedDeadExecutors", "0")
       .config("spark.sql.ui.retainedExecutions", "5")
+      // streaming checkpoints on local paths are written without forking
+      .config(Map(NioCheckpointFileManager.conf))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import graft.streaming.NioCheckpointFileManager
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -9,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the test suites: small core count and
   * shuffle partitions (test data is tiny; 32 partitions would just add
-  * scheduling overhead), UTC to match the oracle contract.
+  * scheduling overhead), UTC to match the oracle contract, and the
+  * streaming checkpoint manager that `GraftSession.local` sets.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -73,6 +75,8 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's checkpoint manager, as GraftSession.local sets it
+      .config(Map(NioCheckpointFileManager.conf))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -37,6 +37,7 @@ object IngestStress {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Map(graft.streaming.NioCheckpointFileManager.conf))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
