@@ -181,7 +181,7 @@ object GraftSession {
     } catch { case scala.util.control.NonFatal(e) => Left(s"is unreadable ($e)") }
   }
 
-  def local(cores: Int = 32, sfDir: Option[String] = None): SparkSession = {
+  def local(cores: Int, sfDir: Option[String]): SparkSession = {
     val shuffleParts =
       sfDir.map(shufflePartitionsFor(_, cores)).getOrElse(cores)
     val spark = SparkSession.builder()

@@ -11,9 +11,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * The dedup/skew family persists intermediates (shingle rows,
   * signature tables, candidate lists, head vocabularies) because
-  * multiple plan branches consume them; `connectedComponents` and
-  * `trainCentroids` additionally `localCheckpoint` per-round state to
-  * truncate lineage. Those blocks outlive the operator call by design —
+  * multiple plan branches consume them; `trainCentroids` and BPE
+  * training additionally `localCheckpoint` per-round state to truncate
+  * lineage, and the [[Graph]] kernel (PageRank, connected components)
+  * checkpoints its final RDD state. Those blocks outlive the operator
+  * call by design —
   * the returned DataFrame is lazy and still reads them — so the
   * operator cannot unpersist them itself. Before round 9 they simply
   * leaked until something swept the whole block manager
@@ -105,9 +107,9 @@ object CacheScope {
   /** LAZY localCheckpoint (r20, guide §1.2 "fewer passes"): same
     * truncated-lineage LogicalRDD plan as [[localCheckpointTracked]],
     * but the blocks materialize on the caller's NEXT action instead of
-    * an extra eager count pass. The iterative fixpoint drivers (CC,
-    * PageRank) already run a convergence aggregate over each round's
-    * state — folding materialization into it halves the jobs per round.
+    * an extra eager count pass. An iterative driver that already runs
+    * an aggregate over each round's state (BPE training's argmax)
+    * folds materialization into it — half the jobs per round.
     * CONTRACT: the caller must run an action that computes EVERY
     * partition of the returned frame (a full aggregate qualifies)
     * before unpersisting the inputs the plan reads — until then the
@@ -119,7 +121,7 @@ object CacheScope {
   }
 
   /** Register checkpoint RDDs that must survive until [[release]]
-    * (e.g. the final round's labels, still read by the returned frame).
+    * (e.g. a kernel's final state, still read by the returned frame).
     */
   private[graft] def registerRdds(spark: SparkSession, toTrack: Seq[RDD[_]]): Unit = {
     val q = rddQueue(spark)

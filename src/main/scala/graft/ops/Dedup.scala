@@ -692,111 +692,19 @@ object Dedup {
   }
 
   /** Connected components over a near-duplicate pair list → cluster
-    * labels, via iterative min-label propagation (each round joins the
-    * edge list against current labels and keeps the per-node minimum;
-    * converges in O(graph diameter) rounds — near-dup clusters are
-    * shallow, so a handful). The driver-side loop is over ROUNDS, not
-    * rows; every step is a distributed join+aggregate. This is the
-    * dedup deliverable at scale: pair enumeration is quadratic in
-    * cluster size, the representative set is linear.
+    * labels, via iterative min-label propagation on [[Graph]]'s RDD
+    * kernel (each round sends every node's label to its neighbours and
+    * keeps the per-node minimum — one Spark job per round; converges in
+    * O(graph diameter) rounds — near-dup clusters are shallow, so a
+    * handful). This is the dedup deliverable at scale: pair enumeration
+    * is quadratic in cluster size, the representative set is linear.
     *
-    * Input: (id_a, id_b) pairs. Output: (id, label) where label is the
-    * minimum id of the node's component.
+    * Input: (id_a, id_b) pairs of integral ids. Output: (id, label)
+    * where label is the minimum id of the node's component. The state
+    * backing the frame lives until the caller's [[CacheScope.release]].
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val run = connectedComponentsTracked(pairs, maxIter)
-    // the final labels back the RETURNED frame and live until the
-    // caller's CacheScope.release
-    CacheScope.registerRdds(pairs.sparkSession, run.rdds)
-    run.labels
-  }
-
-  /** A finished CC run: the label frame, the checkpoint blocks backing
-    * it, and the convergence telemetry a 100 TB operator alerts on —
-    * `rounds` label-propagation rounds executed (including the final
-    * fixpoint-confirming one), `converged` false when `maxIter` ran out
-    * first (labels then PARTIAL: one true cluster reported as several).
-    */
-  private[ops] final case class CcRun(labels: DataFrame,
-                                      rdds: Seq[org.apache.spark.rdd.RDD[_]],
-                                      rounds: Int, converged: Boolean)
-
-  /** [[connectedComponents]] returning the final checkpoint's RDD
-    * handles instead of registering them — for callers ([[report]])
-    * that materialize the labels elsewhere and can drop the blocks
-    * immediately — plus the convergence telemetry.
-    */
-  private[ops] def connectedComponentsTracked(
-      pairs: DataFrame, maxIter: Int = 20): CcRun = {
-    // localCheckpoint (not persist) on every iteration state: persist
-    // caches the DATA but Catalyst still re-analyzes the full logical
-    // plan, which grows ~3× per round (labels appears three times) —
-    // measured super-exponential planning time by round 4. Checkpointing
-    // truncates the lineage so each round plans against a materialized
-    // leaf.
-    // Bidirectional edge list materialized ONCE: each round then needs a
-    // single join (neighbor's label reaches the node through the reversed
-    // copy) instead of two — half the per-round shuffle and job count.
-    val (edges, edgeRdds) = CacheScope.localCheckpointTracked(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    // LAZY checkpoints (r20): each round's labelSum aggregate is the
-    // materializing action, so a round costs ONE pass over the state
-    // instead of an eager count pass plus the sum pass
-    var (labels, labelRdds) = CacheScope.localCheckpointLazyTracked(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    // Convergence via the monotone invariant: min-label propagation only
-    // ever DECREASES labels, so Σ labels strictly decreases until the
-    // fixpoint — one cheap aggregate per round instead of a join.
-    // coalesce: sum over an EMPTY labels frame is NULL (a pair list with
-    // no pairs — an all-unique corpus — must yield an empty cluster map,
-    // not an NPE); an empty frame is already converged at sum 0.
-    // DECIMAL(38,0) sum, not long: ids may be xxhash64 fingerprints
-    // (FuzzyJoin.canonicalize, the streaming dedup index), whose long
-    // sum overflows ANSI arithmetic; the decimal sum is exact for any
-    // realistic row count (1e18 rows × 2^63 < 10^38) so the monotone
-    // invariant survives.
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast(dec38)), lit(0).cast(dec38)))
-        .head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = labels.isEmpty
-    var i = 0
-    while (!converged && i < maxIter) {
-      val viaEdge = edges.join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"))
-      val (next, nextRdds) = CacheScope.localCheckpointLazyTracked(
-        labels.select(col("id"), col("label"))
-          .unionByName(viaEdge)
-          .groupBy(col("id")).agg(min(col("label")).as("label")))
-      // materializes `next`'s blocks AND computes the convergence sum
-      // in one job (the lazy-checkpoint contract: a full aggregate)
-      val nextSum = labelSum(next)
-      // `next`'s blocks were just materialized by the convergence sum
-      // (the lazy-checkpoint contract), so the previous round's blocks
-      // are dead — drop them NOW instead of leaking one checkpoint per
-      // round until a session-wide sweep
-      CacheScope.unpersistRdds(labelRdds)
-      labels = next
-      labelRdds = nextRdds
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      i += 1
-    }
-    // the edge list is dead once the loop exits
-    CacheScope.unpersistRdds(edgeRdds)
-    // near-dup clusters are shallow, so non-convergence means a
-    // pathological chain (diameter > maxIter) — the labels are then
-    // PARTIAL (one true cluster reported as several) and silence would
-    // turn that into duplicate "representatives" downstream
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents did not converge in $maxIter rounds; " +
-          "labels are partial — raise maxIter for deep-chain graphs")
-    CcRun(labels, labelRdds, i, converged)
-  }
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    Graph.connectedComponents(pairs, maxIter).labels
 
   /** INCREMENTAL connected components (r16 — the q57/q148 incremental
     * regime for the LABEL table): merge a DELTA pair batch into
@@ -1072,14 +980,14 @@ object Dedup {
   def report(pairs: DataFrame, artifactPath: Option[String] = None,
              maxIter: Int = 20): DedupReport = {
     val spark = pairs.sparkSession
-    val run = connectedComponentsTracked(pairs, maxIter)
+    val run = Graph.connectedComponents(pairs, maxIter)
     val path = artifactPath.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-dedup-labels").toString)
     run.labels
       .withColumn("cc_rounds", lit(run.rounds))
       .withColumn("cc_converged", lit(run.converged))
       .write.mode("overwrite").parquet(path)
-    CacheScope.unpersistRdds(run.rdds)
+    CacheScope.unpersistRdds(Seq(run.state))
     new DedupReport(spark, path)
   }
 

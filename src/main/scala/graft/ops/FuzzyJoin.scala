@@ -143,7 +143,7 @@ object FuzzyJoin {
     * loudly instead.
     *
     * Convergence is a hard contract, not a hope: the label-propagation
-    * loop runs via `connectedComponentsTracked`, and if `maxIter`
+    * loop runs via [[Graph.connectedComponents]], and if `maxIter`
     * rounds did not reach the fixpoint (a fuzzy chain with diameter >
     * maxIter) this THROWS rather than returning silently-partial
     * components — raise `maxIter` for deep-chain dictionaries.
@@ -152,8 +152,7 @@ object FuzzyJoin {
                    blockKey: Column => Column, maxIter: Int = 20): DataFrame = {
     val pairs = dictionaryPairs(df, valueCol, maxDist, blockKey)
       .select(xxhash64(col("val_a")).as("id_a"), xxhash64(col("val_b")).as("id_b"))
-    val run = Dedup.connectedComponentsTracked(pairs, maxIter)
-    CacheScope.registerRdds(df.sparkSession, run.rdds)
+    val run = Graph.connectedComponents(pairs, maxIter)
     if (!run.converged) throw new IllegalStateException(
       s"canonicalize: connected components did not converge in ${run.rounds} rounds " +
         s"(cluster chain deeper than maxIter=$maxIter) — labels would be " +

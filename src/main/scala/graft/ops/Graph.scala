@@ -5,7 +5,7 @@ import org.apache.spark.graft.Checkpoints
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
@@ -33,6 +33,11 @@ import org.apache.spark.util.LongAccumulator
   * teleport ⋈ inflow (narrow), checkpointed and materialized by the
   * action that sums it — one job per round. A null id is a node that
   * neither gives nor receives (SQL equi-join semantics).
+  *
+  * Connected components ([[connectedComponents]], the dedup family's
+  * cluster labels) is one more round function on the same loop:
+  * min-label propagation over the adjacency of both pair directions,
+  * also one job per round.
   */
 object Graph {
 
@@ -52,8 +57,8 @@ object Graph {
     val n = adj.count()
     val (init, tele) = if (n == 0L) (0L, 0L)
       else (1000000000000L / n, (100L - dampingE2) * 1000000000000L / (100L * n))
-    val (state, _, _) = iterate(adj, adj.mapValues(_ => tele),
-      adj.mapValues(_ => init), dampingE2, iters, untilFixed = false, mixedSources)
+    val (state, _, _) = prIterate(adj, mixedSources, adj.mapValues(_ => tele),
+      adj.mapValues(_ => init), dampingE2, iters, untilFixed = false)
     frame(e, state, "score_e12", scoreNullable = true)
   }
 
@@ -83,7 +88,7 @@ object Graph {
     *    fixed point EXACTLY in finitely many rounds. No tolerance, no
     *    oscillation: floating-point PageRank can never terminate on
     *    bit equality, this does by construction.
-    *  - Σ-based convergence (the CC loop's monotone-sum doctrine):
+    *  - Σ-based convergence (the monotone-sum rule CC also uses):
     *    pointwise-nondecreasing scores mean Σ strictly increases until
     *    the fixpoint, so convergence is the exact BigInt sum each round
     *    computes anyway, not a self-join.
@@ -187,15 +192,70 @@ object Graph {
           col("score").cast("long"))), part)
         .mapValues { case (t, w) => math.max(w.getOrElse(t), t) }
     }
-    val (state, rounds, converged) = iterate(adj, teleOf, init, dampingE2,
-      maxIters, untilFixed = true, mixedSources)
+    val (state, rounds, converged) = prIterate(adj, mixedSources, teleOf, init,
+      dampingE2, maxIters, untilFixed = true)
     if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
       s"pageRankFixpoint did not converge in $maxIters rounds; scores are " +
         "the last iterate, not the fixed point — raise maxIters or coarsen scaleUnit")
     PrRun(frame(e, state, "score", scoreNullable = false), rounds, converged)
   }
 
+  /** A finished connected-components run: (id, label) rows, label the
+    * minimum id of the node's component; the state backing them,
+    * registered for [[CacheScope.release]]; label-propagation rounds
+    * executed (including the final fixpoint-confirming one); and
+    * whether the labels reached the fixpoint before `maxIters` ran out
+    * (false → PARTIAL labels: one true cluster reported as several).
+    */
+  private[ops] final case class CcRun(labels: DataFrame, state: RDD[_],
+                                      rounds: Int, converged: Boolean)
+
+  /** Connected components of the undirected graph of (id_a, id_b)
+    * `pairs` by min-label propagation on the kernel: the adjacency
+    * holds both directions of every pair, the init state is id → id,
+    * and a round sends each node's label to its neighbours and keeps
+    * the per-node minimum with its own (`reduceByKey` on the
+    * adjacency's partitioner). Labels only fall, so the round whose
+    * Σ stands still is the fixpoint. Ids must be integral; the labels
+    * come back in the ids' type. A null id receives labels but never
+    * gives one (SQL equi-join semantics); it has no label of its own,
+    * and weighs above every id in Σ so that its first label counts as
+    * a fall.
+    */
+  private[ops] def connectedComponents(pairs: DataFrame, maxIters: Int): CcRun = {
+    val ids = pairs.select(col("id_a"), col("id_b"))
+    ids.schema.foreach(f => require(
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+      s"connected components need integral ids: column ${f.name} is ${f.dataType.sql}"))
+    val both = ids.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(ids.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val e = endpoints(both, "src", "dst", Standing)
+    val mixedSources = e.sparkSession.sparkContext.longAccumulator
+    val adj = adjacency(e, mixedSources)
+    val part = adj.partitioner.get
+    val init = adj.mapPartitions(_.map { case (id, _) => (id, id) },
+      preservesPartitioning = true)
+    val (state, rounds, converged) = iterate(adj, mixedSources, init,
+      (l: Id) => if (l == null) BigInt(Long.MaxValue) + 1 else BigInt(l.longValue),
+      maxIters, untilFixed = true) { labels =>
+      labels.join(adj, part).flatMap { case (id, (label, (deg, nbrs))) =>
+        // out-degree above the non-null targets: a null neighbour
+        Iterator((id, label)) ++ nbrs.iterator.map(n => (Long.box(n), label)) ++
+          Iterator.fill(if (deg > nbrs.length) 1 else 0)((null: Id, label))
+      }.reduceByKey(part, (a: Id, b: Id) =>
+        if (a == null || (b != null && b.longValue < a.longValue)) b else a)
+    }
+    if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"connectedComponents did not converge in $maxIters rounds; " +
+        "labels are partial — raise maxIter for deep-chain graphs")
+    val idType = both.schema("src").dataType
+    CcRun(frame(e, state, "label", scoreNullable = true)
+      .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label")),
+      state, rounds, converged)
+  }
+
   private type Id = java.lang.Long
+  private type Adj = RDD[(Id, (Long, Array[Long]))]
 
   /** Out-edge side tags: an edge of the graph (or of the standing
     * graph), or of an incremental run's delta. */
@@ -219,8 +279,7 @@ object Graph {
     * out-edge; a null dst counts in its source's out-degree but
     * receives nothing. A node with out-edges of both sides adds 1 to
     * `mixedSources` when its partition is computed. */
-  private def adjacency(e: DataFrame,
-                        mixedSources: LongAccumulator): RDD[(Id, (Long, Array[Long]))] =
+  private def adjacency(e: DataFrame, mixedSources: LongAccumulator): Adj =
     e.rdd.flatMap { r =>
       val (src, dst) = (r.get(0).asInstanceOf[Id], r.get(1).asInstanceOf[Id])
       // (0, null) only makes the id a node; (side, dst) is an out-edge
@@ -240,11 +299,10 @@ object Graph {
     df.rdd.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
       else Some((Long.box(r.getLong(0)), r.getLong(1))))
 
-  /** One round, lazily. Exact and loud: an overflow throws, as Spark's
-    * ANSI `*` and `sum` do; `/` truncates like `div` (all ≥ 0). */
-  private def round(adj: RDD[(Id, (Long, Array[Long]))],
-                    teleOf: RDD[(Id, Long)], state: RDD[(Id, Long)],
-                    dampingE2: Long): RDD[(Id, Long)] = {
+  /** A PageRank round, lazily. Exact and loud: an overflow throws, as
+    * Spark's ANSI `*` and `sum` do; `/` truncates like `div` (all ≥ 0). */
+  private def prRound(adj: Adj, teleOf: RDD[(Id, Long)], state: RDD[(Id, Long)],
+                      dampingE2: Long): RDD[(Id, Long)] = {
     val part = adj.partitioner.get
     val inflow = state.join(adj, part).flatMap { case (_, (score, (deg, dsts))) =>
       if (deg == 0L) Iterator.empty
@@ -257,33 +315,44 @@ object Graph {
       .mapValues { case (t, in) => in.fold(t)(Math.addExact(t, _)) }
   }
 
+  /** [[iterate]] with PageRank rounds; `teleOf` is persisted for the
+    * loop and dropped with `adj`. */
+  private def prIterate(adj: Adj, mixedSources: LongAccumulator,
+                        teleOf: RDD[(Id, Long)], init: RDD[(Id, Long)],
+                        dampingE2: Long, maxIters: Int,
+                        untilFixed: Boolean): (RDD[(Id, Long)], Int, Boolean) = {
+    teleOf.persist(StorageLevel.MEMORY_AND_DISK)
+    try iterate(adj, mixedSources, init, (s: Long) => BigInt(s), maxIters,
+      untilFixed)(prRound(adj, teleOf, _, dampingE2))
+    finally teleOf.unpersist(blocking = false)
+  }
+
   /** Marks `state` for a lazy local checkpoint and runs the ONE action
-    * that computes every partition of it: (rows, Σ score). */
-  private def settle(state: RDD[(Id, Long)]): (Long, BigInt) = {
+    * that computes every partition of it: (rows, Σ weight). */
+  private def settle[V](state: RDD[(Id, V)], weight: V => BigInt): (Long, BigInt) = {
     state.localCheckpoint()
-    state.aggregate((0L, BigInt(0)))((a, kv) => (a._1 + 1L, a._2 + kv._2),
+    state.aggregate((0L, BigInt(0)))((a, kv) => (a._1 + 1L, a._2 + weight(kv._2)),
       (a, b) => (a._1 + b._1, a._2 + b._2))
   }
 
-  /** `maxIters` rounds from `init`, or fewer once Σ stands still if
-    * `untilFixed` (monotone iterates: equal Σ is the fixed point); then
-    * drops `adj` and `teleOf`. The init settle computes `adj`, so
-    * `mixedSources` is complete after it: a count above zero fails the
-    * run before any round. On any failure every state is dropped too.
-    * Returns (last state, rounds, Σ stood still). */
-  private def iterate(adj: RDD[(Id, (Long, Array[Long]))],
-                      teleOf: RDD[(Id, Long)], init: RDD[(Id, Long)],
-                      dampingE2: Long, maxIters: Int, untilFixed: Boolean,
-                      mixedSources: LongAccumulator): (RDD[(Id, Long)], Int, Boolean) = {
-    teleOf.persist(StorageLevel.MEMORY_AND_DISK)
+  /** `maxIters` applications of `round` from `init`, or fewer once
+    * Σ weight stands still if `untilFixed` (monotone iterates: equal Σ
+    * is the fixed point); then drops `adj`. The init settle computes
+    * `adj`, so `mixedSources` is complete after it: a count above zero
+    * fails the run before any round. On any failure every state is
+    * dropped too. Returns (last state, rounds, Σ stood still). */
+  private def iterate[V](adj: Adj, mixedSources: LongAccumulator,
+                         init: RDD[(Id, V)], weight: V => BigInt,
+                         maxIters: Int, untilFixed: Boolean)
+                        (round: RDD[(Id, V)] => RDD[(Id, V)]): (RDD[(Id, V)], Int, Boolean) = {
     var (state, next) = (init, init)
     try {
-      val (rows, sum0) = settle(state)
+      val (rows, sum0) = settle(state, weight)
       require(mixedSources.isZero, NotSourceAdditive)
       var (prevSum, fixed, i) = (sum0, rows == 0L, 0) // an empty graph is fixed
       while (i < maxIters && !(untilFixed && fixed)) {
-        next = round(adj, teleOf, state, dampingE2)
-        val (_, sum) = settle(next) // next is complete: only now drop state
+        next = round(state)
+        val (_, sum) = settle(next, weight) // next is complete: only now drop state
         Checkpoints.drop(state)
         state = next
         fixed = sum == prevSum
@@ -295,16 +364,13 @@ object Graph {
       Checkpoints.drop(state)
       Checkpoints.drop(next)
       throw t
-    } finally {
-      adj.unpersist(blocking = false)
-      teleOf.unpersist(blocking = false)
-    }
+    } finally adj.unpersist(blocking = false)
   }
 
   /** The final state as (id, `scoreCol`), id nullable iff an endpoint
     * column is; registered for [[CacheScope.release]]. */
-  private def frame(e: DataFrame, state: RDD[(Id, Long)], scoreCol: String,
-                    scoreNullable: Boolean): DataFrame = {
+  private def frame[V](e: DataFrame, state: RDD[(Id, V)], scoreCol: String,
+                       scoreNullable: Boolean): DataFrame = {
     CacheScope.registerRdds(e.sparkSession, Seq(state))
     e.sparkSession.createDataFrame(state.map { case (id, s) => Row(id, s) },
       StructType(Seq(StructField("id", LongType, e.schema.take(2).exists(_.nullable)),

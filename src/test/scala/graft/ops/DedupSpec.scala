@@ -238,6 +238,34 @@ class DedupSpec extends SparkSpec {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 
+  test("connected components: a null id receives labels but never gives one") {
+    // 3's only pair is with the null id, which never passes a label on;
+    // the null id takes the minimum of its neighbours' labels
+    val pairs = Seq(Option(1L) -> Option(2L), Option(2L) -> Option.empty[Long],
+      Option.empty[Long] -> Option(3L)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(got == Set(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
+      Some(3L) -> Some(3L), None -> Some(1L)), s"got $got")
+    CacheScope.release(spark)
+  }
+
+  test("connected components keep the ids' integral type") {
+    val pairs = Seq((1, 2), (2, 3), (7, 8)).toDF("id_a", "id_b")
+    val labels = Dedup.connectedComponents(pairs)
+    assert(labels.schema.simpleString == "struct<id:int,label:int>")
+    assert(labels.as[(Int, Int)].collect().toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+    CacheScope.release(spark)
+  }
+
+  test("connected components reject non-integral ids up front, naming the column") {
+    val pairs = Seq((1L, "2")).toDF("id_a", "id_b")
+    val err = intercept[IllegalArgumentException](Dedup.connectedComponents(pairs))
+    assert(err.getMessage == "requirement failed: connected components need " +
+      "integral ids: column id_b is STRING")
+  }
+
   test("dedupByPairs keeps one representative per cluster plus untouched docs") {
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
     val kept = Dedup.dedupByPairs(docs, "doc_id", pairs)

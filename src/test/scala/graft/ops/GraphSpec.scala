@@ -207,6 +207,19 @@ class GraphSpec extends SparkSpec {
     assert(j4 === j3 + 1)
   }
 
+  test("CC: one more round is exactly one more job") {
+    // a 31-node chain needs 30 rounds: neither run converges
+    val chain = (0L until 30L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
+    def jobs(k: Int): Int = jobsIn {
+      val run = Graph.connectedComponents(chain, maxIters = k)
+      assert(!run.converged && run.rounds === k, s"must not converge by $k: $run")
+    }
+    val (j3, j4) = (jobs(3), jobs(4))
+    CacheScope.release(spark)
+    info(s"jobs: maxIters=3 → $j3, maxIters=4 → $j4")
+    assert(j4 === j3 + 1)
+  }
+
   test("incremental on local frames: the init settle plus one job per round") {
     val all = arithEdges(40L)
     val standing = all.filter(_._1 < 32L).toDF("src", "dst")
