@@ -140,6 +140,22 @@ object SparkEntry {
       .filter(col("id_a") =!= col("id_b"))
   }
 
+  /** q174's two twins over its gate graph: the standing labels (CC over
+    * the ~80% of edges that are not the delta) and the full rebuild.
+    * The graph's modular chains are deep (the standing split needs 25
+    * rounds at sf0.1), so the round bound is the node count: min-label
+    * propagation settles within one round per hop of the longest
+    * shortest path, and the kernel stops at the fixpoint.
+    */
+  private def q174Twins(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val edges = ccGateEdges(s, dir, 1L)
+    lazy val bound =
+      math.min(rowCount(T(s, dir, "documents")) + 1L, Int.MaxValue.toLong).toInt
+    (twinArtifact(s, dir, "cc-standing")(ops.Dedup.connectedComponents(
+       edges.filter(pmod(col("id_a") + col("id_b"), lit(5L)) =!= 0L), bound)),
+     twinArtifact(s, dir, "cc-rebuilt")(ops.Dedup.connectedComponents(edges, bound)))
+  }
+
   /** q177/q186's shared edge synthesis (same factoring rationale). */
   private def prGateEdges(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
@@ -223,10 +239,7 @@ object SparkEntry {
     // equality-gate twins (r20, r19 verdict next #3): the one-shot /
     // full-rebuild legs of q174/q177/q178/q186/q197 — the nightly
     // artifacts those gates audit the incremental legs against
-    val e174 = ccGateEdges(s, dir, 1L)
-    twinArtifact(s, dir, "cc-standing")(ops.Dedup.connectedComponents(
-      e174.filter(pmod(col("id_a") + col("id_b"), lit(5L)) =!= 0L)))
-    twinArtifact(s, dir, "cc-rebuilt")(ops.Dedup.connectedComponents(e174))
+    q174Twins(s, dir)
     twinArtifact(s, dir, "cc16-rebuilt")(
       ops.Dedup.connectedComponents(ccGateEdges(s, dir, 16L)))
     val pe = prGateEdges(s, dir)
@@ -3262,14 +3275,10 @@ object SparkEntry {
     // equality join, the recurring work. Arithmetic and oracle
     // unchanged.
     "q174_cc_incremental" -> ((s, dir) => {
-      val edges = ccGateEdges(s, dir, 1L)
-      val delta = edges.filter(pmod(col("id_a") + col("id_b"), lit(5L)) === 0L)
-      val oldLabels = twinArtifact(s, dir, "cc-standing")(
-        ops.Dedup.connectedComponents(
-          edges.filter(pmod(col("id_a") + col("id_b"), lit(5L)) =!= 0L)))
+      val delta = ccGateEdges(s, dir, 1L)
+        .filter(pmod(col("id_a") + col("id_b"), lit(5L)) === 0L)
+      val (oldLabels, rebuilt) = q174Twins(s, dir)
       val incr = ops.Dedup.connectedComponentsIncremental(oldLabels, delta)
-      val rebuilt = twinArtifact(s, dir, "cc-rebuilt")(
-        ops.Dedup.connectedComponents(edges))
       val mism = incr.alias("i")
         .join(rebuilt.alias("r"), col("i.id") === col("r.id"), "full")
         .filter(col("i.id").isNull || col("r.id").isNull ||

@@ -113,10 +113,10 @@ object Kmeans {
     // heap, never a global sort; the global row_number window then
     // runs on the k-row result, not the corpus
     val initW = org.apache.spark.sql.expressions.Window.orderBy(id)
-    var cents = q.orderBy(id).limit(k)
-      .withColumn("rk", row_number().over(initW))
-      .select((col("rk") - 1).cast("long").as("cell"), col("qv").as("cv"))
-      .localCheckpoint(true)
+    var (cents, centRdds) = CacheScope.localCheckpointTracked(
+      q.orderBy(id).limit(k)
+        .withColumn("rk", row_number().over(initW))
+        .select((col("rk") - 1).cast("long").as("cell"), col("qv").as("cv")))
 
     // Assignment as a NARROW projection (r15 probe finding): the first
     // cut computed the argmin via crossJoin + groupBy(id) and re-joined
@@ -141,13 +141,18 @@ object Kmeans {
         .select(col("cell"), col("j"), expr("sx div n").as("s"))
       // reassemble the centroid array in dim order: array_sort on
       // struct(j, s) orders by the unique j, transform strips it
-      cents = cN
+      val (next, nextRdds) = CacheScope.localCheckpointTracked(cN
         .groupBy(col("cell"))
         .agg(transform(
           array_sort(collect_list(struct(col("j"), col("s")))),
-          e => e.getField("s")).as("cv"))
-        .localCheckpoint(true)
+          e => e.getField("s")).as("cv")))
+      // eager checkpoint: the previous iteration's centroids are dead
+      CacheScope.unpersistRdds(centRdds)
+      cents = next
+      centRdds = nextRdds
     }
+    // the final centroids back the returned frames — caller releases
+    CacheScope.registerRdds(df.sparkSession, centRdds)
     (q, cents)
   }
 

@@ -85,9 +85,8 @@ object Quality {
     // from the scan (explode → map-side partial agg), so the scan's
     // file count caps their parallelism — on a few-file input the whole
     // per-token pass serialized onto ONE core (23.7 s single-task stage
-    // at sf0.1; 32-way after the fan-out). Operator-neutral switch
-    // ([[ScanFanOut]], `graft.fanOutScan`) — disabling the DEDUP
-    // family's fan-out no longer silently reshapes this Quality plan.
+    // at sf0.1; 32-way after the fan-out). [[ScanFanOut]] sizes the
+    // width from the plan's byte estimate.
     val base = ScanFanOut(basePlan)
 
     // ---- line family: shuffle (id, line-hash, len), never the line

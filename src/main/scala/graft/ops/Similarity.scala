@@ -88,27 +88,25 @@ object Similarity {
           struct(lit(t).as("tbl"), col(s"bucket_$t").as("bkt"))): _*)).as("tb"))
       .select(col(idName), col("tb.tbl"), col("tb.bkt"))
 
+  /** Largest query set [[bruteForceTopK]] broadcasts. */
+  final val MaxBroadcastQueries = 100000
+
   /** Exact top-k by cosine: for each query vector, the k nearest
     * candidates (self-match excluded), deterministic tiebreak on
     * candidate id.
     *
     * The query side broadcasts only while it is a bounded query SET
-    * (`graft.sim.maxBroadcastQueries`, default 10⁵ — ~50 MB of 64-dim
-    * doubles): a caller passing a large query frame gets a plain join
+    * ([[MaxBroadcastQueries]], 10⁵ — ~50 MB of 64-dim doubles): a
+    * caller passing a large query frame gets a plain join
     * (AQE picks the strategy) instead of a driver OOM. The guard's
     * count is one aggregate over ids — noise next to the |Q|×|C|
     * scoring this operator exists to do.
     */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val maxBcast = queries.sparkSession.conf
-      .get("graft.sim.maxBroadcastQueries", "100000").toLong
     val qProj = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
-    // clamp before toInt: a conf >= Int.MaxValue would wrap negative
-    // and make limit() throw at analysis
-    val probe = math.min(maxBcast + 1, Int.MaxValue.toLong).toInt
-    val q = if (queries.select(col("vec_id")).limit(probe)
-        .count() <= maxBcast) broadcast(qProj) else qProj
+    val q = if (queries.select(col("vec_id")).limit(MaxBroadcastQueries + 1)
+        .count() <= MaxBroadcastQueries) broadcast(qProj) else qProj
     // NOT fanned out (r20, measured): the ANN query sets are small
     // (bounded |Q|), so the |Q|×|C| scoring here is cheap per candidate
     // row and the fan-out's per-task fixed cost moved q23/q157 UP

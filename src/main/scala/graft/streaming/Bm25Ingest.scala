@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Retrieval
+import graft.ops.{CacheScope, Retrieval}
 
 /** Streaming BM25 index maintenance — the retrieval family's face of
   * the incremental regime (StreamingDedup → signatures, StreamingCc →
@@ -55,58 +55,25 @@ object Bm25Ingest {
                    (onBatch: (Long, Long) => Unit = (_, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureTables(spark, db, postingsTable, statsTable)
-    val pTable = s"`$db`.`$postingsTable`"
-    val sTable = s"`$db`.`$statsTable`"
-    // VISIBILITY BARRIER (the StreamingDedup doctrine, measured here
-    // too: an insertInto issued from foreachBatch's cloned session
-    // lands on disk but the outer session keeps serving its stale
-    // relation snapshot — deterministically, not 1%-rarely, because
-    // the sink's own batchId checks materialize the empty listing
-    // first). Single-writer expected counts; refresh+retry after each
-    // batch's appends, loud failure if freshness can't be established.
-    var expectedPostings = spark.table(pTable).count()
-    var expectedStats = spark.table(sTable).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, postingsTable), expectedPostings),
-        ((db, statsTable), expectedStats)))
+    val sync = new TableSync(spark, db, postingsTable, statsTable)
     (batch: DataFrame, batchId: Long) => {
       if (batch.isEmpty) onBatch(batchId, 0L)
-      else {
-        val statsApplied = !spark.table(sTable)
-          .filter(col("__batch_id") === batchId).isEmpty
-        if (statsApplied) onBatch(batchId, 0L) // full replay: no-op
-        else {
-          val b = batch.select(col(idCol).cast("long").as(idCol),
-            col(textCol).cast("string").as(textCol)).persist()
-          try {
-            val postingsApplied = !spark.table(pTable)
-              .filter(col("__batch_id") === batchId).isEmpty
-            var n = 0L
-            if (!postingsApplied) {
-              val p = Retrieval.bm25Postings(b, idCol, textCol)
-                .withColumn("__batch_id", lit(batchId))
-                .localCheckpoint(true)
-              n = p.count()
-              p.write.mode(SaveMode.Append).insertInto(pTable)
-              expectedPostings += n
-            }
-            // the commit marker lands LAST: its presence certifies the
-            // postings rows for this batchId are complete
-            Retrieval.bm25Stats(b, idCol, textCol)
-              .withColumn("__batch_id", lit(batchId))
-              .write.mode(SaveMode.Append).insertInto(sTable)
-            expectedStats += 1
-            awaitVisible()
-            onBatch(batchId, n)
-          } finally {
-            b.unpersist()
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, pTable)
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, sTable)
-            ()
-          }
-        }
+      else if (sync.applied(statsTable, batchId)) onBatch(batchId, 0L) // full replay: no-op
+      else sync.batch {
+        val b = CacheScope.persist(batch.select(col(idCol).cast("long").as(idCol),
+          col(textCol).cast("string").as(textCol)))
+        val n =
+          if (sync.applied(postingsTable, batchId)) 0L
+          else sync.append(postingsTable, sync.checkpoint(
+            Retrieval.bm25Postings(b, idCol, textCol)
+              .withColumn("__batch_id", lit(batchId))))
+        // the commit marker lands LAST: its presence certifies the
+        // postings rows for this batchId are complete
+        sync.append(statsTable, sync.checkpoint(
+          Retrieval.bm25Stats(b, idCol, textCol)
+            .withColumn("__batch_id", lit(batchId))))
+        sync.visible()
+        onBatch(batchId, n)
       }
     }
   }

@@ -87,9 +87,9 @@ object DimStore {
   }
 
   /** THE keyed last-write-wins merge-and-overwrite — one definition for
-    * every changelog materialization in this package (r10 review:
-    * [[StreamingPipelines.upsertKafkaMaterialize]] had re-implemented
-    * it line for line, and the copies had already started to drift).
+    * every changelog materialization in this package
+    * ([[dimUpsertSink]] through [[upsert]], and
+    * [[StreamingPipelines.upsertKafkaMaterialize]]).
     * Latest `__seq` wins per key; ties break to the incoming row
     * (`__is_new`); `keepRow` filters winners (e.g. tombstone drop) so
     * a deleted key vanishes from the rewritten table rather than
@@ -99,27 +99,26 @@ object DimStore {
                                       existing: DataFrame, incoming: DataFrame,
                                       keyCols: Seq[String],
                                       keepRow: Column = lit(true)): Unit = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__seq").desc, col("__is_new").desc)
-    val merged = existing.withColumn("__is_new", lit(0))
-      .unionByName(incoming.withColumn("__is_new", lit(1)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && keepRow)
-      .drop("__rn", "__is_new")
+    val sync = new TableSync(existing.sparkSession, db, table)
+    sync.batch {
+      val w = Window.partitionBy(keyCols.map(col): _*)
+        .orderBy(col("__seq").desc, col("__is_new").desc)
       // truncate lineage: the overwrite below must not read the files
       // it replaces
-      .localCheckpoint(true)
-    val nMerged = merged.count()
-    merged.write.mode(SaveMode.Overwrite).insertInto(s"`$db`.`$table`")
-    // visibility barrier + cache hygiene (r17 review): this is a
-    // read-modify-OVERWRITE loop — the next batch reads this table to
-    // build its merge, and a stale snapshot wouldn't just weaken the
-    // result, the overwrite would permanently DELETE the missed rows.
-    // The header's "visible to the next batch by construction" claim
-    // is exactly what the measured r12 staleness breaks; make it true.
-    val spark = merged.sparkSession
-    TableSync.uncache(spark, db, table)
-    TableSync.awaitVisible(spark, Seq(((db, table), nMerged)))
+      val merged = sync.checkpoint(existing.withColumn("__is_new", lit(0))
+        .unionByName(incoming.withColumn("__is_new", lit(1)))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1 && keepRow)
+        .drop("__rn", "__is_new"))
+      val nMerged = merged.count()
+      merged.write.mode(SaveMode.Overwrite).insertInto(sync.name(table))
+      // a read-modify-OVERWRITE loop: the next batch reads this table
+      // to build its merge, and a stale snapshot would make that
+      // overwrite permanently DELETE the missed rows — the barrier is
+      // what makes "visible to the next batch" hold
+      sync.overwritten(table, nMerged)
+      sync.visible()
+    }
   }
 
   /** Read a dim table for enrichment (broadcast at the join site). */

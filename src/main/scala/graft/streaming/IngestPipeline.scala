@@ -35,7 +35,7 @@ object IngestPipeline {
     * the contamination list). Matching runs on REDACTED text — the
     * same form the corpus stores and consumers read — and the
     * contamination KEYS pass through the SAME redaction before the
-    * sketch is built (r17 review: hashing them raw meant any benchmark
+    * sketch is built (hashing them raw would mean any benchmark
     * doc containing an email/IP/phone could never match its redacted
     * corpus twin, and the eval leak sailed through the one gate built
     * to stop it).
@@ -66,7 +66,9 @@ object IngestPipeline {
       Decontaminate.prepare(c, TextFunctions.redactPii(col(keyCol)))
     }
     val lmModel = lmGate.map { case (ref, minMeanE6) =>
-      (LmScore.trainBigramModel(ref, idCol, textCol), minMeanE6)
+      val model = LmScore.trainBigramModel(ref, idCol, textCol)
+      model.bi.count() // materialized here, not by the first batch
+      (model, minMeanE6)
     }
     // the dedup sink (and its table DDL) is built ONCE at stream setup;
     // foreachBatch calls are sequential per query, so the per-batch

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.LmScore
+import graft.ops.{CacheScope, LmScore}
 
 /** Streaming reference-LM maintenance — the LM family's face of the
   * incremental regime (Bm25Ingest → postings, StreamingCc → labels,
@@ -49,67 +49,36 @@ object LmIngest {
                  (onBatch: (Long, Long, Long) => Unit = (_, _, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureTables(spark, db, uniTable, biTable)
-    val uTable = s"`$db`.`$uniTable`"
-    val bTable = s"`$db`.`$biTable`"
-    // visibility barrier — the Bm25Ingest/StreamingDedup doctrine:
-    // single-writer expected counts, refresh+retry after each batch's
-    // appends, loud failure if freshness can't be established
-    var expectedUni = spark.table(uTable).count()
-    var expectedBi = spark.table(bTable).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, uniTable), expectedUni), ((db, biTable), expectedBi)))
+    val sync = new TableSync(spark, db, uniTable, biTable)
     (batch: DataFrame, batchId: Long) => {
       if (batch.isEmpty) onBatch(batchId, 0L, 0L)
-      else {
-        val uniApplied = !spark.table(uTable)
-          .filter(col("__batch_id") === batchId).isEmpty
-        if (uniApplied) onBatch(batchId, 0L, 0L) // full replay: no-op
+      else if (sync.applied(uniTable, batchId)) onBatch(batchId, 0L, 0L) // full replay: no-op
+      else sync.batch {
+        // persist the TOKENIZED frame, not the raw rows: both count
+        // builders consume it, so the batch tokenizes exactly once
+        val b = CacheScope.persist(LmScore.tokFrame(
+          batch.select(col(idCol).cast("long").as(idCol),
+            col(textCol).cast("string").as(textCol)),
+          idCol, textCol))
+        val uni = sync.checkpoint(LmScore.unigramCountsFromToks(b)
+          .withColumn("__batch_id", lit(batchId)))
+        // a batch whose documents tokenize to ZERO tokens has no
+        // counts AND no marker rows — skip it whole (the model is
+        // already correct), or the absent marker would make every
+        // replay re-run it. Harmless (it appends nothing) but the
+        // protocol's "marker certifies the batch" claim must hold.
+        if (uni.isEmpty) onBatch(batchId, 0L, 0L)
         else {
-          // persist the TOKENIZED frame, not the raw rows: both count
-          // builders consume it, so the batch tokenizes exactly once
-          // (the header's cost claim, made true rather than asserted)
-          val b = LmScore.tokFrame(
-            batch.select(col(idCol).cast("long").as(idCol),
-              col(textCol).cast("string").as(textCol)),
-            idCol, textCol).persist()
-          try {
-            val uni = LmScore.unigramCountsFromToks(b)
-              .withColumn("__batch_id", lit(batchId))
-              .localCheckpoint(true)
-            val nUni = uni.count()
-            // a batch whose documents tokenize to ZERO tokens has no
-            // counts AND no marker rows — skip it whole (the model is
-            // already correct), or the absent marker would make every
-            // replay re-run it. Harmless (it appends nothing) but the
-            // protocol's "marker certifies the batch" claim must hold.
-            if (nUni == 0L) onBatch(batchId, 0L, 0L)
-            else {
-              val biApplied = !spark.table(bTable)
-                .filter(col("__batch_id") === batchId).isEmpty
-              var nBi = 0L
-              if (!biApplied) {
-                val bi = LmScore.bigramCountsFromToks(b)
-                  .withColumn("__batch_id", lit(batchId))
-                  .localCheckpoint(true)
-                nBi = bi.count()
-                bi.write.mode(SaveMode.Append).insertInto(bTable)
-                expectedBi += nBi
-              }
-              // the commit marker lands LAST: a batch's unigram rows
-              // certify its bigram rows are complete
-              uni.write.mode(SaveMode.Append).insertInto(uTable)
-              expectedUni += nUni
-              awaitVisible()
-              onBatch(batchId, nUni, nBi)
-            }
-          } finally {
-            b.unpersist()
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, uTable)
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, bTable)
-            ()
-          }
+          val nBi =
+            if (sync.applied(biTable, batchId)) 0L
+            else sync.append(biTable, sync.checkpoint(
+              LmScore.bigramCountsFromToks(b)
+                .withColumn("__batch_id", lit(batchId))))
+          // the commit marker lands LAST: a batch's unigram rows
+          // certify its bigram rows are complete
+          val nUni = sync.append(uniTable, uni)
+          sync.visible()
+          onBatch(batchId, nUni, nBi)
         }
       }
     }

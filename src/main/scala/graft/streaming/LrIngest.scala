@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.QualityClassifier
@@ -53,50 +53,21 @@ object LrIngest {
                  (onBatch: (Long, Long) => Unit = (_, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureTable(spark, db, countTable)
-    val target = s"`$db`.`$countTable`"
-    // visibility barrier — the Bm25Ingest/StreamingDedup doctrine:
-    // single-writer expected counts, refresh+retry after each batch's
-    // append, loud failure if freshness can't be established
-    var expected = spark.table(target).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, countTable), expected)))
+    val sync = new TableSync(spark, db, countTable)
     (batch: DataFrame, batchId: Long) => {
       if (batch.isEmpty) onBatch(batchId, 0L)
-      else {
-        val applied = !spark.table(target)
-          .filter(col("__batch_id") === batchId).isEmpty
-        if (applied) onBatch(batchId, 0L) // full replay: no-op
-        else {
-          // scoped per-batch state (r19 ADVICE + r20): the
-          // localCheckpoint below truncates lineage, so its blocks are
-          // only ever freed explicitly — without the drain, a
-          // long-running stream leaks one orphaned checkpoint RDD per
-          // micro-batch; the thread-scoped registry keeps the drain
-          // from touching sibling sinks' in-flight blocks
-          val scopeMark = graft.ops.CacheScope.mark(spark)
-          try {
-            val rows = graft.ops.CacheScope.localCheckpointScoped(
-              QualityClassifier.tokenCounts(
-                  batch.select(col(idCol).cast("long").as(idCol),
-                    col(textCol).cast("string").as(textCol),
-                    col(labelCol).cast("long").as(labelCol)),
-                  idCol, textCol, Some(labelCol), nBuckets)
-                .withColumn("__batch_id", lit(batchId)))
-            val n = rows.count()
-            if (n == 0L) onBatch(batchId, 0L) // untokenizable batch
-            else {
-              rows.write.mode(SaveMode.Append).insertInto(target)
-              expected += n
-              awaitVisible()
-              onBatch(batchId, n)
-            }
-          } finally {
-            graft.ops.CacheScope.releaseSince(spark, scopeMark)
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, target)
-            ()
-          }
-        }
+      else if (sync.applied(countTable, batchId)) onBatch(batchId, 0L) // full replay: no-op
+      else sync.batch {
+        val n = sync.append(countTable, sync.checkpoint(
+          QualityClassifier.tokenCounts(
+              batch.select(col(idCol).cast("long").as(idCol),
+                col(textCol).cast("string").as(textCol),
+                col(labelCol).cast("long").as(labelCol)),
+              idCol, textCol, Some(labelCol), nBuckets)
+            .withColumn("__batch_id", lit(batchId))))
+        // an untokenizable batch appends nothing
+        if (n > 0L) sync.visible()
+        onBatch(batchId, n)
       }
     }
   }
@@ -118,8 +89,9 @@ object LrIngest {
     * keeps growing under the count sink, and a lazy weight plan over
     * it would silently re-derive against the grown table on any cache
     * eviction — the "standing model" would drift WITH the corpus and
-    * the monitor could never see confidence collapse (caught by the
-    * closed-loop spec, r20). A model is a point-in-time artifact.
+    * the monitor could never see confidence collapse (the closed-loop
+    * spec catches it). A model is a point-in-time artifact that the
+    * caller owns.
     */
   def retrain(spark: SparkSession, db: String, countTable: String,
               rounds: Int = 2, gMul: Long = 16L)
@@ -155,7 +127,7 @@ object LrIngest {
     * [[lrCountSink]] protocol — a replayed batch is detected by its
     * own row and skipped whole (the monitor row, already written,
     * stays authoritative). `onDrift` RE-FIRES on replay of a batch
-    * whose row recorded drift=true (r19 ADVICE): a crash between the
+    * whose row recorded drift=true: a crash between the
     * row append and the hook would otherwise lose the retrain trigger
     * forever, so the hook's delivery contract is at-LEAST-once and the
     * retrain must be idempotent — [[retrain]] is (it reads standing
@@ -172,12 +144,9 @@ object LrIngest {
                       (onDrift: (Long, Long) => Unit = (_, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureMonitorTable(spark, db, monitorTable)
-    val target = s"`$db`.`$monitorTable`"
-    var expected = spark.table(target).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, monitorTable), expected)))
+    val sync = new TableSync(spark, db, monitorTable)
     (batch: DataFrame, batchId: Long) => {
-      val prior = spark.table(target)
+      val prior = spark.table(sync.name(monitorTable))
         .filter(col("__batch_id") === batchId)
         .select(col("drift"), col("conf_e6")).collect()
       if (prior.nonEmpty) {
@@ -185,32 +154,24 @@ object LrIngest {
         // recorded drift's trigger may have been lost to a crash
         // before the hook ran — re-fire it (idempotent retrain)
         if (prior.head.getBoolean(0)) onDrift(batchId, prior.head.getLong(1))
-      } else {
-        try {
-          val scored =
-            if (batch.isEmpty) (0L, 0L)
-            else {
-              val r = QualityClassifier.scoreConfidenceE6(
-                QualityClassifier.scoreLogistic(
-                  batch.select(col(idCol).cast("long").as(idCol),
-                    col(textCol).cast("string").as(textCol)),
-                  model, idCol, textCol, nBuckets)).head()
-              (r.getLong(0), r.getLong(1))
-            }
-          val (n, conf) = scored
-          val drift = n > 0L && conf * 2L < baseConfE6
-          import spark.implicits._
-          Seq((batchId, n, conf, drift))
-            .toDF("__batch_id", "n_scored", "conf_e6", "drift")
-            .write.mode(SaveMode.Append).insertInto(target)
-          expected += 1L
-          awaitVisible()
-          if (drift) onDrift(batchId, conf)
-        } finally {
-          org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, target)
-          ()
-        }
+      } else sync.batch {
+        val scored =
+          if (batch.isEmpty) (0L, 0L)
+          else {
+            val r = QualityClassifier.scoreConfidenceE6(
+              QualityClassifier.scoreLogistic(
+                batch.select(col(idCol).cast("long").as(idCol),
+                  col(textCol).cast("string").as(textCol)),
+                model, idCol, textCol, nBuckets)).head()
+            (r.getLong(0), r.getLong(1))
+          }
+        val (n, conf) = scored
+        val drift = n > 0L && conf * 2L < baseConfE6
+        import spark.implicits._
+        sync.append(monitorTable, Seq((batchId, n, conf, drift))
+          .toDF("__batch_id", "n_scored", "conf_e6", "drift"))
+        sync.visible()
+        if (drift) onDrift(batchId, conf)
       }
     }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Retrieval
@@ -47,36 +47,18 @@ object PhraseIngest {
                          (onBatch: (Long, Long) => Unit = (_, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureTable(spark, db, table)
-    val pTable = s"`$db`.`$table`"
-    // visibility barrier — the Bm25Ingest/StreamingDedup doctrine
-    var expected = spark.table(pTable).count()
-    def awaitVisible(): Unit =
-      TableSync.awaitVisible(spark, Seq(((db, table), expected)))
+    val sync = new TableSync(spark, db, table)
     (batch: DataFrame, batchId: Long) => {
       if (batch.isEmpty) onBatch(batchId, 0L)
-      else {
-        val applied = !spark.table(pTable)
-          .filter(col("__batch_id") === batchId).isEmpty
-        if (applied) onBatch(batchId, 0L) // replay: no-op
-        else {
-          val b = batch.select(col(idCol).cast("long").as(idCol),
-            col(textCol).cast("string").as(textCol)).persist()
-          try {
-            val p = Retrieval.positionalPostings(b, idCol, textCol)
-              .withColumn("__batch_id", lit(batchId))
-              .localCheckpoint(true)
-            val n = p.count()
-            p.write.mode(SaveMode.Append).insertInto(pTable)
-            expected += n
-            awaitVisible()
-            onBatch(batchId, n)
-          } finally {
-            b.unpersist()
-            org.apache.spark.sql.graft.CatalogCache
-              .uncacheReferencing(spark, pTable)
-            ()
-          }
-        }
+      else if (sync.applied(table, batchId)) onBatch(batchId, 0L) // replay: no-op
+      else sync.batch {
+        val n = sync.append(table, sync.checkpoint(
+          Retrieval.positionalPostings(batch.select(
+              col(idCol).cast("long").as(idCol),
+              col(textCol).cast("string").as(textCol)), idCol, textCol)
+            .withColumn("__batch_id", lit(batchId))))
+        if (n > 0L) sync.visible()
+        onBatch(batchId, n)
       }
     }
   }

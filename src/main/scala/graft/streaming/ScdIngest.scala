@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.ops.Scd
+import graft.ops.{CacheScope, Scd}
 
 /** Streaming SCD2 dimension-history ingest — the micro-batch twin of
   * the q143 batch operator, closing the loop between the CDC router
@@ -56,10 +56,10 @@ object ScdIngest {
     *     ts covered by a version's [from, to) window for its key and
     *     its attrs null-safe-equal that version's — is a redelivery,
     *     not a retro-edit: anti-joined away. Covering-interval rather
-    *     than exact (key, ts = effective_from, attrs) equality (r17
-    *     review): a row the original apply COLLAPSED mid-batch is not
-    *     any version's boundary, and the exact form re-quarantined it
-    *     on every replay. This also absorbs upstream at-least-once
+    *     than exact (key, ts = effective_from, attrs) equality: a row
+    *     the original apply COLLAPSED mid-batch is not any version's
+    *     boundary, and the exact form re-quarantined it on every
+    *     replay. This also absorbs upstream at-least-once
     *     duplicate delivery of old rows;
     *  2. if the rejects table already holds rows for this `batchId`,
     *     the append is skipped (the failure fell between the reject
@@ -72,78 +72,72 @@ object ScdIngest {
                keyCol: String, tsCol: String, tieCol: String,
                attrCols: Seq[String])
               (onBatch: (Long, Long) => Unit = (_, _) => ())
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      import org.apache.spark.sql.functions.{col, lit}
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
-      val persisted = batch.persist()
-      try {
-        if (!persisted.isEmpty) {
-          val exists = spark.catalog.tableExists(s"$db.$table")
-          // an empty buildHistory carries the exact history schema —
-          // the first batch bootstraps the table through the same fold
-          // every later batch uses (no hand-written DDL to drift)
-          val history =
-            if (exists) spark.table(s"`$db`.`$table`")
-            else Scd.buildHistory(persisted.limit(0),
-              keyCol, tsCol, tieCol, attrCols)
-          val (applied, rejected0) = Scd.applyChangelogWithRejects(
-            history, persisted, keyCol, tsCol, tieCol, attrCols)
-          // guard 1: absorb redeliveries — a "reject" CONSISTENT with
-          // the recorded history is a replay, not a retro-edit: its ts
-          // falls inside a recorded version's [from, to) validity
-          // window for its key AND its attrs null-safe-equal (<=>)
-          // that version's. Covering-interval, not ts == from (r17
-          // review): a row the original apply COLLAPSED mid-batch
-          // ((k,t1,A),(k,t2,A) → one version at t1) is not any
-          // version's boundary, and the exact-match form re-appended
-          // it to the quarantine on every replay — duplicate rejects
-          // and false alerts. Absorption is sound by the collapse rule
-          // itself: a covered same-attr row applied to the history is
-          // a no-op, so dropping it loses nothing. The anti join is
-          // batch-sized vs history versions, equi on key with a
-          // range+attr residual.
-          val recorded = history.select(
-            col(keyCol).as("__r_key") +:
-              col("effective_from").as("__r_from") +:
-              col("effective_to").as("__r_to") +:
-              attrCols.zipWithIndex.map { case (c, i) =>
-                col(c).as(s"__r_a$i") }: _*)
-          val coverCond = (rejected0(keyCol) <=> recorded("__r_key")) &&
-            rejected0(tsCol) >= recorded("__r_from") &&
-            (recorded("__r_to").isNull ||
-              rejected0(tsCol) < recorded("__r_to")) &&
-            attrCols.zipWithIndex
-              .map { case (c, i) => rejected0(c) <=> recorded(s"__r_a$i") }
-              .reduce(_ && _)
-          val rejected = rejected0.join(recorded, coverCond, "left_anti")
-          // truncate lineage: the overwrite must not read the files it
-          // replaces (the DimStore.lwwOverwrite doctrine)
-          val out = applied.localCheckpoint(true)
-          val rej = rejected.localCheckpoint(true)
-          val nRej = rej.count()
-          if (nRej > 0) {
-            // guard 2: this batchId's rejects were already appended on
-            // a prior attempt — appending again would duplicate them
-            val rejTable = s"`$db`.`${table}_rejects`"
-            val alreadyRecorded =
-              spark.catalog.tableExists(s"$db.${table}_rejects") &&
-                !spark.table(rejTable)
-                  .filter(col("__batch_id") === batchId).isEmpty
-            if (!alreadyRecorded)
-              rej.withColumn("__batch_id", lit(batchId))
-                .write.mode(SaveMode.Append).saveAsTable(rejTable)
-          }
-          val nOut = out.count()
-          out.write.mode(SaveMode.Overwrite).saveAsTable(s"`$db`.`$table`")
-          // visibility barrier + cache hygiene (r17 review): the next
-          // batch READS this table to build its merge and then
-          // OVERWRITES it — a stale snapshot here doesn't weaken the
-          // result, it permanently deletes the missed versions
-          TableSync.uncache(spark, db, table)
-          TableSync.awaitVisible(spark, Seq(((db, table), nOut)))
-          onBatch(batchId, nRej)
-        } else onBatch(batchId, 0L)
-      } finally { persisted.unpersist(); () }
+      : (DataFrame, Long) => Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
+    val rejTable = s"${table}_rejects"
+    // both tables are created by their first write: the history from
+    // the fold's own schema, the quarantine from the batch's
+    val sync = new TableSync(spark, db, table, rejTable)
+    (batch: DataFrame, batchId: Long) => sync.batch {
+      val persisted = CacheScope.persist(batch)
+      if (persisted.isEmpty) onBatch(batchId, 0L)
+      else {
+        // an empty buildHistory carries the exact history schema —
+        // the first batch bootstraps the table through the same fold
+        // every later batch uses (no hand-written DDL to drift)
+        val history =
+          if (sync.exists(table)) spark.table(sync.name(table))
+          else Scd.buildHistory(persisted.limit(0),
+            keyCol, tsCol, tieCol, attrCols)
+        val (applied, rejected0) = Scd.applyChangelogWithRejects(
+          history, persisted, keyCol, tsCol, tieCol, attrCols)
+        // guard 1: absorb redeliveries — a "reject" CONSISTENT with
+        // the recorded history is a replay, not a retro-edit: its ts
+        // falls inside a recorded version's [from, to) validity
+        // window for its key AND its attrs null-safe-equal (<=>)
+        // that version's. Covering-interval, not ts == from: a row
+        // the original apply COLLAPSED mid-batch
+        // ((k,t1,A),(k,t2,A) → one version at t1) is not any
+        // version's boundary, and the exact-match form re-appended
+        // it to the quarantine on every replay — duplicate rejects
+        // and false alerts. Absorption is sound by the collapse rule
+        // itself: a covered same-attr row applied to the history is
+        // a no-op, so dropping it loses nothing. The anti join is
+        // batch-sized vs history versions, equi on key with a
+        // range+attr residual.
+        val recorded = history.select(
+          col(keyCol).as("__r_key") +:
+            col("effective_from").as("__r_from") +:
+            col("effective_to").as("__r_to") +:
+            attrCols.zipWithIndex.map { case (c, i) =>
+              col(c).as(s"__r_a$i") }: _*)
+        val coverCond = (rejected0(keyCol) <=> recorded("__r_key")) &&
+          rejected0(tsCol) >= recorded("__r_from") &&
+          (recorded("__r_to").isNull ||
+            rejected0(tsCol) < recorded("__r_to")) &&
+          attrCols.zipWithIndex
+            .map { case (c, i) => rejected0(c) <=> recorded(s"__r_a$i") }
+            .reduce(_ && _)
+        val rejected = rejected0.join(recorded, coverCond, "left_anti")
+        // truncate lineage: the overwrite must not read the files it
+        // replaces
+        val out = sync.checkpoint(applied)
+        val rej = sync.checkpoint(rejected)
+        val nRej = rej.count()
+        // guard 2: this batchId's rejects were already appended on a
+        // prior attempt — appending again would duplicate them
+        if (nRej > 0 && !sync.applied(rejTable, batchId))
+          sync.append(rejTable, rej.withColumn("__batch_id", lit(batchId)))
+        val nOut = out.count()
+        out.write.mode(SaveMode.Overwrite).saveAsTable(sync.name(table))
+        // the next batch READS this table to build its merge and then
+        // OVERWRITES it — a stale snapshot here doesn't weaken the
+        // result, it permanently deletes the missed versions
+        sync.overwritten(table, nOut)
+        sync.visible()
+        onBatch(batchId, nRej)
+      }
     }
+  }
 }

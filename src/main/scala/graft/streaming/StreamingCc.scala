@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{CacheScope, Dedup}
 
 /** Streaming label maintenance — the ingest-path face of connected
   * components, completing the incremental dedup regime:
@@ -64,48 +64,26 @@ object StreamingCc {
                        (onBatch: (Long, Long, Long) => Unit = (_, _, _) => ())
       : (DataFrame, Long) => Unit = {
     ensureTable(spark, db, labelTable)
-    val target = s"`$db`.`$labelTable`"
-    // single-writer visibility barrier (the StreamingDedup doctrine):
-    // batch N+1 folds against batch N's labels only if its catalog
-    // read SEES the overwrite — track the expected row count and
-    // refresh/retry on a stale snapshot, failing loud, never silently
-    // folding against an old labeling
-    var expectedLabels = spark.table(target).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, labelTable), expectedLabels)))
+    val sync = new TableSync(spark, db, labelTable)
     (pairs: DataFrame, batchId: Long) => {
       // no-data / no-pair micro-batches exit on one cheap isEmpty job —
       // the standing table is already the correct labeling
-      if (pairs.isEmpty) onBatch(batchId, 0L, expectedLabels)
-      else {
-        val delta = pairs.select(col("id_a").cast("long").as("id_a"),
-          col("id_b").cast("long").as("id_b")).persist()
-        val scopeMark = graft.ops.CacheScope.mark(spark)
-        try {
-          val nPairs = delta.count()
-          val oldLabels = spark.table(target)
-          // truncate lineage: the overwrite below must not read the
-          // files it replaces (the DimStore.lwwOverwrite doctrine).
-          // Scoped (r20): blocks drain at the releaseSince below,
-          // never via a global RDD-table diff (which clobbered sibling
-          // sinks' concurrent batches).
-          val next = graft.ops.CacheScope.localCheckpointScoped(Dedup
-            .connectedComponentsIncremental(oldLabels, delta, maxIter))
-          val nLabels = next.count()
-          next.write.mode("overwrite").insertInto(target)
-          expectedLabels = nLabels
-          awaitVisible()
-          onBatch(batchId, nPairs, nLabels)
-        } finally {
-          graft.ops.CacheScope.releaseSince(spark, scopeMark)
-          delta.unpersist()
-          // zombie-entry hygiene (the StreamingDedup r12 lesson): drop
-          // any cached entry referencing the table so the next batch
-          // resolves it from disk, not a stale canonical match
-          org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, target)
-          ()
-        }
+      if (pairs.isEmpty) onBatch(batchId, 0L, sync.rows(labelTable))
+      else sync.batch {
+        val delta = CacheScope.persist(pairs.select(
+          col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
+        val nPairs = delta.count()
+        // truncate lineage: the overwrite below must not read the
+        // files it replaces
+        val next = sync.checkpoint(Dedup.connectedComponentsIncremental(
+          spark.table(sync.name(labelTable)), delta, maxIter))
+        val nLabels = next.count()
+        next.write.mode("overwrite").insertInto(sync.name(labelTable))
+        // batch N+1 folds against batch N's labels only if its catalog
+        // read SEES this overwrite
+        sync.overwritten(labelTable, nLabels)
+        sync.visible()
+        onBatch(batchId, nPairs, nLabels)
       }
     }
   }
@@ -118,7 +96,7 @@ object StreamingCc {
       "PARTITIONED BY (`bucket` INT)")
   }
 
-  /** KEYED-MERGE label maintenance (r18, verdict #7) — the same fold
+  /** KEYED-MERGE label maintenance — the same fold
     * as [[incrementalCcSink]] with a write cost proportional to the
     * CHANGED labels instead of the whole table. The remap join already
     * computes exactly the upsert delta
@@ -157,20 +135,17 @@ object StreamingCc {
       : (DataFrame, Long) => Unit = {
     require(nBuckets >= 1, "nBuckets must be positive")
     ensureBucketedTable(spark, db, labelTable)
-    val target = s"`$db`.`$labelTable`"
-    // the dynamic-overwrite conf lives on a CLONED session (r19
-    // ADVICE): `newSession()` shares the SparkContext and catalog but
-    // owns its SQLConf, so flipping partitionOverwriteMode here can
-    // never leak dynamic-overwrite semantics into a concurrent write
-    // on the caller's session (the flip-and-restore it replaces
-    // protected only sequential callers). Set once, for the sink's
-    // lifetime.
+    // the dynamic-overwrite conf lives on a CLONED session:
+    // `newSession()` shares the SparkContext and catalog but owns its
+    // SQLConf, so flipping partitionOverwriteMode here can never leak
+    // dynamic-overwrite semantics into a concurrent write on the
+    // caller's session. Set once, for the sink's lifetime.
     val writeSession = spark.newSession()
     // newSession() builds its SQLConf from the BOOT SparkConf, not the
-    // caller's runtime-set SQL confs (r19 ADVICE): without this copy,
-    // the merge write could silently run under different
-    // write-relevant settings (committer, compression, timezone...)
-    // than every other write in the job. Copy the caller's effective
+    // caller's runtime-set SQL confs: without this copy, the merge
+    // write could silently run under different write-relevant settings
+    // (committer, compression, timezone...) than every other write in
+    // the job. Copy the caller's effective
     // confs first, then pin the one deliberate divergence. Static/
     // immutable entries throw on set — skipped (they are already
     // shared via the SparkContext).
@@ -181,79 +156,70 @@ object StreamingCc {
     writeSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     def bucketOf(c: org.apache.spark.sql.Column) =
       pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
-    var expectedLabels = spark.table(target).count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, labelTable), expectedLabels)))
+    val sync = new TableSync(spark, db, labelTable)
+    val target = sync.name(labelTable)
     (pairs: DataFrame, batchId: Long) => {
       if (pairs.isEmpty) onBatch(batchId, 0L, 0L, 0L)
-      else {
-        val delta = pairs.select(col("id_a").cast("long").as("id_a"),
-          col("id_b").cast("long").as("id_b")).persist()
-        val scopeMark = graft.ops.CacheScope.mark(spark)
-        try {
-          val nPairs = delta.count()
-          val oldLabels = spark.table(target).select(col("id"), col("label"))
-          // truncate lineage: the partition overwrite below must not
-          // read the files it replaces (the lwwOverwrite doctrine);
-          // scoped blocks drain at releaseSince (r20)
-          val changed = graft.ops.CacheScope.localCheckpointScoped(Dedup
-            .connectedComponentsIncrementalChanged(oldLabels, delta, maxIter)
-            .withColumn("bucket", bucketOf(col("id"))))
-          val nChanged = changed.count()
-          if (nChanged == 0L) onBatch(batchId, nPairs, 0L, 0L)
-          else {
-            // bucket list: ≤ nBuckets ints — a model-sized collect
-            val buckets = changed.select(col("bucket")).distinct()
-              .collect().map(_.getInt(0)).sorted
-            val nNew = changed.filter(col("is_new")).count()
-            // merged content of the touched buckets only: the pruned
-            // read carries the partition filter (bucket IN ...), the
-            // anti join is the upsert's DELETE face, the union its
-            // INSERT face. Checkpointed: it reads the files the
-            // overwrite replaces.
-            val touched = graft.ops.CacheScope.localCheckpointScoped(
-              spark.table(target)
-                .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-                .join(changed.select(col("id")), Seq("id"), "left_anti")
-                .select(col("id"), col("label"), col("bucket"))
-                .unionByName(changed.select(col("id"), col("label"),
-                  col("bucket"))))
-            // DYNAMIC partition overwrite: only the partitions present
-            // in the frame (= the touched buckets) are replaced. Set
-            // via session conf, NOT the writer option — insertInto on
-            // a catalog parquet table ignored the option here and ran
-            // STATIC overwrite, truncating every untouched bucket
-            // (caught by the spec's file-listing assertion; one label
-            // row vanished per batch). The conf lives on writeSession
-            // (see above) so the flip is invisible to the caller's
-            // session; the checkpointed frame re-binds to it zero-copy.
-            //
-            // NOT ATOMIC across buckets: parquet dynamic overwrite
-            // replaces the touched partitions one directory at a time,
-            // so a crash mid-write can leave a partially merged table.
-            // Recovery is the streaming engine's replay of the failed
-            // batchId: the re-presented pair delta re-derives the SAME
-            // changed frame against any prefix of the partial write
-            // (already-merged buckets contract to no-ops, unmerged ones
-            // merge now) — the replay-safety induction above covers
-            // partial application, not just duplicate application. The
-            // production form is an ACID MERGE (the documented
-            // Delta/Iceberg seam) where the multi-bucket swap commits
-            // atomically. Single-writer per label table remains the
-            // contract (the awaitVisible barrier assumes it).
-            org.apache.spark.sql.graft.CatalogCache
-              .rebind(touched, writeSession)
-              .write.mode("overwrite").insertInto(target)
-            expectedLabels += nNew
-            awaitVisible()
-            onBatch(batchId, nPairs, nChanged, buckets.length.toLong)
-          }
-        } finally {
-          graft.ops.CacheScope.releaseSince(spark, scopeMark)
-          delta.unpersist()
+      else sync.batch {
+        val delta = CacheScope.persist(pairs.select(
+          col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b")))
+        val nPairs = delta.count()
+        val oldLabels = spark.table(target).select(col("id"), col("label"))
+        // truncate lineage: the partition overwrite below must not
+        // read the files it replaces
+        val changed = sync.checkpoint(Dedup
+          .connectedComponentsIncrementalChanged(oldLabels, delta, maxIter)
+          .withColumn("bucket", bucketOf(col("id"))))
+        val nChanged = changed.count()
+        if (nChanged == 0L) onBatch(batchId, nPairs, 0L, 0L)
+        else {
+          // bucket list: ≤ nBuckets ints — a model-sized collect
+          val buckets = changed.select(col("bucket")).distinct()
+            .collect().map(_.getInt(0)).sorted
+          // read before the write below: the writer's first read counts
+          // the table
+          val nAfter = sync.rows(labelTable) + changed.filter(col("is_new")).count()
+          // merged content of the touched buckets only: the pruned
+          // read carries the partition filter (bucket IN ...), the
+          // anti join is the upsert's DELETE face, the union its
+          // INSERT face. Checkpointed: it reads the files the
+          // overwrite replaces.
+          val touched = sync.checkpoint(
+            spark.table(target)
+              .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
+              .join(changed.select(col("id")), Seq("id"), "left_anti")
+              .select(col("id"), col("label"), col("bucket"))
+              .unionByName(changed.select(col("id"), col("label"),
+                col("bucket"))))
+          // DYNAMIC partition overwrite: only the partitions present
+          // in the frame (= the touched buckets) are replaced. Set
+          // via session conf, NOT the writer option — insertInto on
+          // a catalog parquet table ignored the option here and ran
+          // STATIC overwrite, truncating every untouched bucket
+          // (caught by the spec's file-listing assertion; one label
+          // row vanished per batch). The conf lives on writeSession
+          // (see above) so the flip is invisible to the caller's
+          // session; the checkpointed frame re-binds to it zero-copy.
+          //
+          // NOT ATOMIC across buckets: parquet dynamic overwrite
+          // replaces the touched partitions one directory at a time,
+          // so a crash mid-write can leave a partially merged table.
+          // Recovery is the streaming engine's replay of the failed
+          // batchId: the re-presented pair delta re-derives the SAME
+          // changed frame against any prefix of the partial write
+          // (already-merged buckets contract to no-ops, unmerged ones
+          // merge now) — the replay-safety induction above covers
+          // partial application, not just duplicate application. The
+          // production form is an ACID MERGE (the documented
+          // Delta/Iceberg seam) where the multi-bucket swap commits
+          // atomically. Single-writer per label table remains the
+          // contract (the visibility barrier assumes it).
           org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, target)
-          ()
+            .rebind(touched, writeSession)
+            .write.mode("overwrite").insertInto(target)
+          sync.overwritten(labelTable, nAfter)
+          sync.visible()
+          onBatch(batchId, nPairs, nChanged, buckets.length.toLong)
         }
       }
     }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Dedup
+import graft.ops.{CacheScope, Dedup}
 
 /** Streaming near-duplicate detection: the minhash corpus index
   * ([[graft.ops.Dedup.buildMinhashIndex]]) maintained as a catalog
@@ -45,8 +45,8 @@ object StreamingDedup {
     * materialize its DataFrame (write/collect) before returning — the
     * sink releases the batch's cached intermediates right after it.
     *
-    * Per-trigger cost discipline (r10 — measured at 500-doc triggers,
-    * where the job COUNT, not the data, was the cost):
+    * Per-trigger cost discipline (measured at 500-doc triggers, where
+    * the job COUNT, not the data, was the cost):
     *  - table DDL runs ONCE here at sink creation, not per batch;
     *  - the batch's signatures are computed ONCE and appended to the
     *    index as-is ([[Dedup.minhashLshIncrementalWithIndex]]) instead
@@ -64,11 +64,8 @@ object StreamingDedup {
     *    (Compaction's sizing arithmetic). At trigger cadence small
     *    batches still write one file each — file count, not file size,
     *    is what degrades every later table scan — but a GB-scale
-    *    micro-batch is no longer serialized through a single write
-    *    task (the r12 throughput ceiling): `coalesce` caps parallelism
-    *    without adding a shuffle, and the batch's cached row counts
-    *    (needed by the visibility barrier anyway) price the sizing at
-    *    zero extra scans.
+    *    micro-batch is not serialized through a single write task
+    *    ([[TableSync.append]]).
     */
   def incrementalDedupSink(spark: SparkSession, db: String,
                            corpusTable: String, indexTable: String,
@@ -78,94 +75,40 @@ object StreamingDedup {
                            rowsPerFile: Long = 1L << 20)
                           (onPairs: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     ensureTables(spark, db, corpusTable, indexTable, k)
-    // VISIBILITY BARRIER state (r12): batch N+1 dedups against batches
-    // 1..N only if its catalog-table reads SEE batch N's appends. That
-    // visibility is supposed to be automatic, but a rare (~1%/batch
-    // unmitigated, measured by graft.tools.IngestStress) staleness race
-    // between insertInto's cache refresh machinery and the next read
-    // served a one-batch-old snapshot — a silently weaker dedup. The
-    // sink tracks the EXPECTED cumulative row count of both tables
-    // (single-writer contract) and, after each batch's appends,
-    // re-reads the counts through the same spark.table path the next
-    // batch will use — refreshTable + bounded retries on mismatch,
-    // loud failure if freshness can't be established. Parquet counts
-    // are metadata-only jobs; the two tiny count jobs per trigger are
-    // the price of a dedup index that is never silently behind.
-    var expectedCorpus = spark.table(s"`$db`.`$corpusTable`").count()
-    var expectedIndex = spark.table(s"`$db`.`$indexTable`").count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, corpusTable), expectedCorpus),
-        ((db, indexTable), expectedIndex)))
+    // batch N+1 dedups against batches 1..N only if its catalog-table
+    // reads SEE batch N's appends — without the barrier a stale
+    // snapshot makes the dedup silently weaker
+    val sync = new TableSync(spark, db, corpusTable, indexTable)
     (batch: DataFrame, batchId: Long) => {
       // NO-DATA micro-batches (watermark/timeout bookkeeping triggers —
       // and any quiet period on a real source) must not pay the full
       // fixed per-trigger pipeline: 20 jobs + 2 table commits on zero
       // rows. One cheap isEmpty job exits with an empty pair frame.
       if (batch.isEmpty) onPairs(emptyPairs(spark), batchId)
-      else {
-        val b = batch.select(col(idCol).cast("long").as(idCol),
-          col(textCol).cast("string").as(textCol)).persist()
-        // mark so only THIS batch's operator-internal persists are
-        // released afterwards — a long-running stream must not accrete
-        // cached blocks across batches (r10 review: blocks were freed
-        // but the per-batch DataFrame references accreted in the
-        // registry for the stream's lifetime). r20: the mark is
-        // THREAD-scoped and every operator checkpoint registers
-        // through CacheScope, so the drain below releases exactly this
-        // batch's blocks — the old getPersistentRDDs-diff sweep is
-        // gone (it clobbered sibling sinks' in-flight blocks when
-        // several sinks share one session).
-        val scopeMark = graft.ops.CacheScope.mark(spark)
-        try {
-          val corpus = spark.table(s"`$db`.`$corpusTable`")
-            .select(col("id").as(idCol), col("text").as(textCol))
-          val index = spark.table(s"`$db`.`$indexTable`")
-          val (pairs, newSigs) = Dedup.minhashLshIncrementalWithIndex(
-            b, corpus, index, idCol, textCol, shingleN, k, bands, threshold,
-            smallBatch = true)
-          onPairs(pairs, batchId)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          // newSigs/b are persisted — these counts are cache-local
-          // jobs, and they both feed the visibility barrier AND size
-          // the append file counts (rows-proportional, floor 1)
-          val nIdx = newSigs.count()
-          val nCorpus = b.count()
-          def nFiles(rows: Long): Int =
-            math.max(1L, math.min(Int.MaxValue.toLong,
-              (rows + rowsPerFile - 1) / rowsPerFile)).toInt
-          val appendIndex = Future {
-            newSigs.coalesce(nFiles(nIdx))
-              .write.mode("append").insertInto(s"`$db`.`$indexTable`")
-          }
-          val appendCorpus = Future {
-            b.select(col(idCol).as("id"), col(textCol).as("text"))
-              .coalesce(nFiles(nCorpus))
-              .write.mode("append").insertInto(s"`$db`.`$corpusTable`")
-          }
-          Await.result(appendIndex, Duration.Inf)
-          Await.result(appendCorpus, Duration.Inf)
-          expectedIndex += nIdx
-          expectedCorpus += nCorpus
-          awaitVisible()
-        } finally {
-          graft.ops.CacheScope.releaseSince(spark, scopeMark)
-          b.unpersist()
-          // ZOMBIE-ENTRY HYGIENE (the r12 flake, ~2%/batch in
-          // IngestStress): the appends' recacheByPlan walk re-registers
-          // cached entries referencing these tables behind the
-          // tracker's back; a leftover entry canonically matches the
-          // NEXT batch's freshly-listed scan (HadoopFsRelation equality
-          // ignores file listings) and serves it the PREVIOUS batch's
-          // table state. Cascade-drop everything referencing the two
-          // tables so batch N+1 resolves them from disk. Driver-only.
-          org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, s"`$db`.`$corpusTable`")
-          org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, s"`$db`.`$indexTable`")
-          ()
+      else sync.batch {
+        val b = CacheScope.persist(batch.select(col(idCol).cast("long").as(idCol),
+          col(textCol).cast("string").as(textCol)))
+        val corpus = spark.table(sync.name(corpusTable))
+          .select(col("id").as(idCol), col("text").as(textCol))
+        val index = spark.table(sync.name(indexTable))
+        val (pairs, newSigs) = Dedup.minhashLshIncrementalWithIndex(
+          b, corpus, index, idCol, textCol, shingleN, k, bands, threshold,
+          smallBatch = true)
+        onPairs(pairs, batchId)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.duration.Duration
+        // newSigs/b are persisted: the appends' counts are cache-local
+        val appendIndex = Future {
+          sync.append(indexTable, newSigs, rowsPerFile)
         }
+        val appendCorpus = Future {
+          sync.append(corpusTable,
+            b.select(col(idCol).as("id"), col(textCol).as("text")), rowsPerFile)
+        }
+        Await.result(appendIndex, Duration.Inf)
+        Await.result(appendCorpus, Duration.Inf)
+        sync.visible()
       }
     }
   }

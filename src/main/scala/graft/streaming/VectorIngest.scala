@@ -25,13 +25,9 @@ import graft.ops.Similarity
   * Per-trigger discipline (the StreamingDedup lessons, inherited):
   * table DDL once at sink creation; models persisted once at sink
   * creation (model-sized); no-data batches exit on one isEmpty job;
-  * per-batch persists released via the pre-existing-RDD diff + a
-  * CacheScope mark; appends sized ⌈rows/rowsPerFile⌉ (floor 1); the
-  * visibility barrier re-reads the table count through the same
-  * `spark.table` path the next batch will use, refresh + bounded
-  * retries on mismatch, loud failure if freshness can't be
-  * established; zombie cache entries referencing the table are
-  * cascade-dropped after every batch.
+  * the append, its file sizing, the visibility barrier and the
+  * per-batch release go through the package's one single-writer
+  * protocol ([[TableSync]]).
   */
 object VectorIngest {
 
@@ -68,61 +64,41 @@ object VectorIngest {
                    rowsPerFile: Long = 1L << 20)
                   (onBatch: (Long, Long, Boolean, Long) => Unit): (DataFrame, Long) => Unit = {
     ensureIndexTable(spark, db, indexTable)
-    // standing model frames: persisted once, never released per batch
-    // (CacheScope.releaseSince drains only the per-batch tail)
+    // standing model frames: persisted and materialized once here,
+    // never released per batch (a batch's scope drains only its own
+    // registrations)
     val cents = graft.ops.CacheScope.persist(centroids)
     val books = graft.ops.CacheScope.persist(codebooks)
-    var expectedRows = spark.table(s"`$db`.`$indexTable`").count()
-    def awaitVisible(): Unit = TableSync.awaitVisible(spark,
-      Seq(((db, indexTable), expectedRows)))
+    cents.count(); books.count()
+    val sync = new TableSync(spark, db, indexTable)
     (batch: DataFrame, batchId: Long) => {
       if (batch.isEmpty) onBatch(0L, 0L, false, batchId)
-      else {
-        val b = batch.select(col("vec_id").cast("long").as("vec_id"),
-          col("embedding")).persist()
-        val scopeMark = graft.ops.CacheScope.mark(spark)
-        try {
-          // id dedup vs the standing index: re-sent vectors must not
-          // duplicate index rows (at-least-once sources re-deliver).
-          // The anti join keys on the 8-byte id — index side streams
-          // map-side, embeddings never enter this exchange. Per-batch
-          // persists REGISTER on this thread (r20) so the releaseSince
-          // below frees them without the global RDD-table diff (which
-          // clobbered sibling sinks' concurrent batches).
-          val fresh = graft.ops.CacheScope.persist(b.join(
-              spark.table(s"`$db`.`$indexTable`").select(col("vec_id")),
+      else sync.batch {
+        // id dedup vs the standing index: re-sent vectors must not
+        // duplicate index rows (at-least-once sources re-deliver).
+        // The anti join keys on the 8-byte id — index side streams
+        // map-side, embeddings never enter this exchange.
+        val fresh = graft.ops.CacheScope.persist(
+          batch.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+            .join(spark.table(sync.name(indexTable)).select(col("vec_id")),
               Seq("vec_id"), "left_anti"))
-          if (fresh.isEmpty) onBatch(0L, 0L, false, batchId)
-          else {
-            val delta = graft.ops.CacheScope.persist(
-              Similarity.pqIndex(fresh, cents, books, nSub))
-            val nNew = delta.count()
-            val err = Similarity.pqSelfErrorE6(fresh, delta, books)
-              .select(col("mean_sq_err_e6")).head().getLong(0)
-            val driftFired = err * trigDen > baseErrE6 * trigNum
-            if (driftFired)
-              System.err.println(s"[VectorIngest] batch $batchId drift: " +
-                s"delta err ${err / 1e6} vs base ${baseErrE6 / 1e6} — " +
-                "schedule a codebook retrain + index rebuild")
-            val nFiles = math.max(1L, math.min(Int.MaxValue.toLong,
-              (nNew + rowsPerFile - 1) / rowsPerFile)).toInt
-            delta.coalesce(nFiles)
-              .write.mode("append").insertInto(s"`$db`.`$indexTable`")
-            expectedRows += nNew
-            awaitVisible()
-            // observability AFTER the append is visible (the sibling
-            // sinks' ordering — r17 review: firing before the append
-            // reported rows that a crash-then-replay would re-report,
-            // double-counting nNew and briefly claiming an index state
-            // that wasn't on disk)
-            onBatch(nNew, err, driftFired, batchId)
-          }
-        } finally {
-          graft.ops.CacheScope.releaseSince(spark, scopeMark)
-          b.unpersist()
-          org.apache.spark.sql.graft.CatalogCache
-            .uncacheReferencing(spark, s"`$db`.`$indexTable`")
-          ()
+        if (fresh.isEmpty) onBatch(0L, 0L, false, batchId)
+        else {
+          val delta = graft.ops.CacheScope.persist(
+            Similarity.pqIndex(fresh, cents, books, nSub))
+          val err = Similarity.pqSelfErrorE6(fresh, delta, books)
+            .select(col("mean_sq_err_e6")).head().getLong(0)
+          val driftFired = err * trigDen > baseErrE6 * trigNum
+          if (driftFired)
+            System.err.println(s"[VectorIngest] batch $batchId drift: " +
+              s"delta err ${err / 1e6} vs base ${baseErrE6 / 1e6} — " +
+              "schedule a codebook retrain + index rebuild")
+          val nNew = sync.append(indexTable, delta, rowsPerFile)
+          sync.visible()
+          // observability AFTER the append is visible: firing before
+          // it would report rows that a crash-then-replay re-reports,
+          // claiming an index state that wasn't on disk
+          onBatch(nNew, err, driftFired, batchId)
         }
       }
     }

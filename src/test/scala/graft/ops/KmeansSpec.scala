@@ -150,4 +150,20 @@ class KmeansSpec extends SparkSpec {
       .reduce(_ unionByName _).orderBy("vec_id").collect().toSeq
     assert(pieces === whole)
   }
+
+  test("a fit leaves no persisted RDD once the caller releases") {
+    val df = embDf(0L -> Seq(0.0), 1L -> Seq(0.1), 2L -> Seq(1.0),
+      3L -> Seq(1.1))
+    CacheScope.release(spark)
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    val out = Kmeans.assignInt(df, "vec_id", "embedding", k = 2, iters = 2)
+    assert(out.collect().length === 4)
+    CacheScope.release(spark)
+    assert((persisted() -- before).isEmpty,
+      s"still persisted after release: ${persisted() -- before}")
+    // `out` (and the centroid checkpoint its plan reads) stays reachable
+    // up to here, so a collected RDD cannot hide a leak
+    assert(out.columns.length === 3)
+  }
 }
