@@ -1,7965 +1,43 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Tables
-import graft.functions.{DateFunctions => DF, TextFunctions => TF, VectorFunctions => VF}
-import graft.ops.{Dedup, Pack, Sampling, Similarity}
+import graft.queries.{Artifacts, Registry, Shared, Stored}
 
-/** Driver contract — one `queries` entry per implemented operator from
+/** Driver contract: one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline extensions), each with a DuckDB
-  * oracle in [[oracleSql]] where ANSI-SQL-expressible.
-  *
-  * Determinism rules for oracle parity (see SURVEY §7.4.7):
-  *  - money sums go through DECIMAL(18,2) per-value casts (exact,
-  *    order-independent) and are cast back to DOUBLE at the end;
-  *  - derived ratios are `floor(x * 1e4)` BIGINTs, never `round`
-  *    (floor of an identical IEEE double is portable, round ties
-  *    are not);
-  *  - timestamps are formatted to strings on both sides;
-  *  - every ranking has a deterministic tiebreak column.
+  * oracle in [[oracleSql]] where ANSI-SQL-expressible. Each query is
+  * declared once, as a [[graft.queries.Query]] in its family file under
+  * `graft/queries`; this object is the facade over that registry.
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.builds
 
-  /** The sf0.1 sibling of `dir` — the realistic-density dump the ANN
-    * recall gates must ALSO hold on (r11 verdict ask #5: sf0.01 floors
-    * alone would miss bucket-collapse that only shows at 10× density).
-    * Falls back to `dir` itself when the sibling is absent, so Verify
-    * still runs standalone against any single dump.
-    */
-  private def sf01(dir: String): String = {
-    val p = new java.io.File(new java.io.File(dir).getParentFile, "sf0.1")
-    if (p.isDirectory) p.getAbsolutePath else dir
-  }
+  val oracleSql: Map[String, String] = Registry.all.oracles
 
-  /** exact decimal sum of a double money column, surfaced as double */
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(18,2)")).cast("double")
+  /** The gate-family queries (see [[graft.queries.Query]]). */
+  val gateQueries: Set[String] = Registry.all.gates
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** q52/q93's shared pair predicate: tight-threshold Jaccard within
-    * (lang, length-band) blocks — clusters of true duplicates.
+  /** Build every declared artifact ([[graft.queries.Artifacts]]) for
+    * `dir`, so a caller that prices only recurring work (the bench's
+    * cold reps) takes the one-time builds off the timed path.
+    * Idempotent.
     */
-  private def dedupClusterPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(T(s, dir, "documents"), "doc_id", "text",
-      Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 9500L)
+  def prepareArtifacts(s: SparkSession, dir: String): Unit =
+    Artifacts.store.buildAll(s, dir)
 
-  /** Session-scoped memo of the composed dedup artifact: pairs + CC run
-    * ONCE per (session, sf dir), every consumer a derived view
-    * ([[graft.ops.Dedup.report]]). q52 always REBUILDS — it prices the
-    * full pipeline; q93 reuses the standing artifact (building it on
-    * first access if q93 runs first), pricing the derived-view shape a
-    * production pipeline actually has.
-    */
-  /** Per-(process, session, sf-dir) artifact directory (r19 ADVICE):
-    * the session identity keeps a second session in the same JVM (the
-    * bench's isolated cross-check) from overwriting a path the first
-    * session's artifact lazily reads, and the SANITIZED dir string
-    * (not its hashCode) keeps distinct sf dirs from ever sharing a
-    * file. Stable within a session, so repeated rebuilds overwrite in
-    * place instead of accumulating temp dirs.
-    */
-  private def artifactPath(s: SparkSession, dir: String, tag: String): String =
-    new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-$tag-${ProcessHandle.current().pid()}-" +
-        Integer.toHexString(System.identityHashCode(s)) + "-" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-
-  /** Parquet-memoized EXPENSIVE equality-gate twin (r20, r19 verdict
-    * next #3 — the lrModelArtifact treatment applied to the gate
-    * family): the one-shot / full-rebuild leg of an equality gate is
-    * the NIGHTLY artifact by the repo's own production framing (the
-    * standing label table, the cold-rebuild audit baseline), so it is
-    * built ONCE per (session, sf dir) off the timed path
-    * ([[prepareArtifacts]]) and every bench rep prices the INCREMENTAL
-    * leg + the equality join — the recurring work. The twin's
-    * arithmetic is identical (deterministic integer fixpoints; the
-    * oracle replay is unchanged) — only its build site moves.
-    * Parquet-backed so the bench's blocking releaseAll between reps
-    * cannot evict it.
-    */
-  private val gateTwins =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, StructType)]()
-
-  /** Writes `df` as the twin `tag`; returns its path and the schema it
-    * reads back with, so later reads skip parquet schema inference. */
-  private def writeTwin(s: SparkSession, dir: String, tag: String,
-                        df: DataFrame): (String, StructType) = {
-    val path = artifactPath(s, dir, s"twin-$tag")
-    df.write.mode("overwrite").parquet(path)
-    (path, s.read.parquet(path).schema)
-  }
-
+  /** `build` written once per (session, dir, tag) and read back with its
+    * recorded schema. */
   private[graft] def twinArtifact(s: SparkSession, dir: String, tag: String)
-                                 (build: => DataFrame): DataFrame = {
-    val (p, schema) = gateTwins.computeIfAbsent((s, dir, tag),
-      _ => writeTwin(s, dir, tag, build))
-    s.read.schema(schema).parquet(p)
-  }
-
-  /** [[twinArtifact]] for PageRank fixpoint runs: scores to parquet,
-    * the (rounds, converged) scalars ride the memo. */
-  private val prTwins =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, StructType, Int, Boolean)]()
-
-  private def prTwinArtifact(s: SparkSession, dir: String, tag: String)
-                            (build: => ops.Graph.PrRun): ops.Graph.PrRun = {
-    val (p, schema, rounds, conv) = prTwins.computeIfAbsent((s, dir, tag), _ => {
-      val r = build
-      val (path, schema) = writeTwin(s, dir, tag, r.scores)
-      (path, schema, r.rounds, r.converged)
-    })
-    ops.Graph.PrRun(s.read.schema(schema).parquet(p), rounds, conv)
-  }
-
-  /** q174/q178's deterministic arithmetic CC-gate graph (the q158
-    * synthesis shape); `density` 1 = every doc is a source (q174),
-    * 16 = every 16th (q178's few-round star regime). Factored so
-    * [[prepareArtifacts]] builds the same frames the gates consume.
-    */
-  private def ccGateEdges(s: SparkSession, dir: String,
-                          density: Long): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val n = rowCount(docs)
-    val srcs = if (density == 1L) docs
-               else docs.filter(pmod(col("doc_id"), lit(density)) === 0L)
-    srcs.select(col("doc_id"),
-        explode(sequence(lit(1L), lit(1L) + pmod(col("doc_id"), lit(2L)))).as("k"))
-      .select(col("doc_id").as("id_a"),
-        pmod(col("doc_id") * 37L + col("k") * 101L, lit(n)).as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-  }
-
-  /** q174's two twins over its gate graph: the standing labels (CC over
-    * the ~80% of edges that are not the delta) and the full rebuild.
-    * The graph's modular chains are deep (the standing split needs 25
-    * rounds at sf0.1), so the round bound is the node count: min-label
-    * propagation settles within one round per hop of the longest
-    * shortest path, and the kernel stops at the fixpoint.
-    */
-  private def q174Twins(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val edges = ccGateEdges(s, dir, 1L)
-    lazy val bound =
-      math.min(rowCount(T(s, dir, "documents")) + 1L, Int.MaxValue.toLong).toInt
-    (twinArtifact(s, dir, "cc-standing")(ops.Dedup.connectedComponents(
-       edges.filter(pmod(col("id_a") + col("id_b"), lit(5L)) =!= 0L), bound)),
-     twinArtifact(s, dir, "cc-rebuilt")(ops.Dedup.connectedComponents(edges, bound)))
-  }
-
-  /** q177/q186's shared edge synthesis (same factoring rationale). */
-  private def prGateEdges(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val n = rowCount(docs)
-    docs.select(col("doc_id"),
-        explode(sequence(lit(1L), lit(1L) + pmod(col("doc_id"), lit(3L)))).as("k"))
-      .select(col("doc_id").as("src"),
-        pmod(col("doc_id") * 31L + col("k") * 17L, lit(n)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-  }
-
-  /** `df`'s row count in one job, reading no column (`Dataset.count`
-    * under AQE runs its aggregate's exchange and final stage as two). */
-  private def rowCount(df: DataFrame): Long =
-    df.select().queryExecution.toRdd.count()
-
-  /** The empty (media_id, kind, fp) frame q197's fold bootstraps from. */
-  private def emptyFpFrame(s: SparkSession): DataFrame =
-    s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("kind",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.LongType))))
-
-  private val dedupReports =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dedup.DedupReport]()
-
-  private def rebuildDedupReport(s: SparkSession, dir: String): Dedup.DedupReport = {
-    // stable per-(process, session, sf-dir) artifact location
-    // (overwritten on rebuild): repeated builds in one process — bench
-    // reps, repeated q52 calls — must not accumulate unbounded temp
-    // dirs, while the pid + session components keep concurrent JVMs
-    // (a Verify beside a Bench) AND sibling sessions in one JVM from
-    // overwriting each other's live artifact mid-scan
-    val path = artifactPath(s, dir, "dedup-labels")
-    val rep = Dedup.report(dedupClusterPairs(s, dir), Some(path))
-    dedupReports.put((s, dir), rep)
-    rep
-  }
-
-  private def dedupReport(s: SparkSession, dir: String): Dedup.DedupReport =
-    Option(dedupReports.get((s, dir))).getOrElse(rebuildDedupReport(s, dir))
-
-  /** q57's standing corpus signature index (the nightly artifact a real
-    * incremental pipeline reads, k longs per doc): built ONCE per
-    * (session, sf dir) and materialized to parquet, so the recurring
-    * query prices what recurs — sign/band/verify the NEW batch — not
-    * the nightly index build (q31 prices full-corpus signing).
-    */
-  private val minhashIndexes =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private def minhashIndexArtifact(s: SparkSession, dir: String): DataFrame = {
-    val path = minhashIndexes.computeIfAbsent((s, dir), _ => {
-      val p = artifactPath(s, dir, "minhash-index")
-      Dedup.buildMinhashIndex(
-          T(s, dir, "documents").filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", shingleN = 5, k = 32)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  /** Force-build the memoized per-(session, sf-dir) parquet artifacts —
-    * q57's standing minhash index and q93/q101's dedup report — so a
-    * caller that wants to price only RECURRING work (the bench's cold
-    * reps) can take the one-time builds off the timed path explicitly,
-    * instead of relying on a lucky first-rep ordering. Idempotent.
-    */
-  def prepareArtifacts(s: SparkSession, dir: String): Unit = {
-    minhashIndexArtifact(s, dir)
-    dedupReport(s, dir)
-    pqModelArtifact(s, dir)
-    lrModelArtifact(s, dir)
-    lrCleanModelArtifact(s, dir)
-    // equality-gate twins (r20, r19 verdict next #3): the one-shot /
-    // full-rebuild legs of q174/q177/q178/q186/q197 — the nightly
-    // artifacts those gates audit the incremental legs against
-    q174Twins(s, dir)
-    twinArtifact(s, dir, "cc16-rebuilt")(
-      ops.Dedup.connectedComponents(ccGateEdges(s, dir, 16L)))
-    val pe = prGateEdges(s, dir)
-    prTwinArtifact(s, dir, "pr-standing")(ops.Graph.pageRankFixpoint(
-      pe.filter(pmod(col("src"), lit(8L)) =!= 0L), "src", "dst",
-      dampingE2 = 15L, scaleUnit = 1000L))
-    prTwinArtifact(s, dir, "pr-cold")(ops.Graph.pageRankFixpoint(
-      pe, "src", "dst", dampingE2 = 15L, scaleUnit = 1000L))
-    prTwinArtifact(s, dir, "ppr-all") {
-      val allNodes = pe.select(col("src").as("id"))
-        .unionByName(pe.select(col("dst").as("id"))).distinct()
-      ops.Graph.personalizedPageRankFixpoint(pe, "src", "dst",
-        allNodes, "id", dampingE2 = 15L, scaleUnit = 1000L)
-    }
-    twinArtifact(s, dir, "media-oneshot") {
-      val fps = ops.Multimodal.mediaFingerprints(multimodalMediaTable(s, dir))
-        .repartition(4)
-      ops.Dedup.connectedComponents(
-        ops.Multimodal.mediaPairsIncremental(fps, emptyFpFrame(s),
-            maxHamming = 4)
-          .select(col("id_a"), col("id_b")))
-    }
-    // q128's exact ANN baselines live at the sf0.1 dump regardless of
-    // the caller's dir
-    val d01 = sf01(dir)
-    val emb01 = T(s, d01, "embeddings")
-    twinArtifact(s, d01, "ann-truth")(
-      Similarity.bruteForceTopK(emb01.filter(col("vec_id") < 8), emb01, 5))
-    twinArtifact(s, d01, "ivf-cents")(
-      Similarity.trainCentroids(emb01, nCells = 8, iters = 2))
-    twinArtifact(s, d01, "cos-exact")(
-      Similarity.cosinePairsLabelExact(emb01, "label", 3000L)
-        .select(col("id_a"), col("id_b")))
-    ()
-  }
-
-  /** The standing quality-classifier models (r19, r18 verdict #7):
-    * trained ONCE per (session, sf dir) and materialized to parquet —
-    * the production contract (a quality classifier is a nightly/weekly
-    * artifact; scoring queries price SCORING, the recurring work).
-    * Same memoization shape as [[pqModelArtifact]]; the scalar bias
-    * rides the memo. Training stays priced in-suite by exactly the
-    * tagged gate queries (q191 unbucketed, q195 bucketed, q196's
-    * retrain trigger), never by the scoring faces (q190/q192/q196
-    * baseline).
-    */
-  private val lrModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), (String, Long)]()
-
-  private def lrArtifact(s: SparkSession, dir: String, tag: String)
-                        (train: => DataFrame)
-      : ops.QualityClassifier.LogisticModel = {
-    val (wp, bias) = lrModels.computeIfAbsent((s, dir, tag), _ => {
-      val p = artifactPath(s, dir, tag)
-      val m = ops.QualityClassifier.trainLogistic(train, "doc_id", "text",
-        "y", rounds = 2, gMul = 16L)
-      m.w.write.mode("overwrite").parquet(p)
-      (p, m.biasE6)
-    })
-    ops.QualityClassifier.LogisticModel(s.read.parquet(wp), bias)
-  }
-
-  /** q190/q196's standing model: the full-corpus fixture's train half. */
-  private def lrModelArtifact(s: SparkSession, dir: String)
-      : ops.QualityClassifier.LogisticModel =
-    lrArtifact(s, dir, "lr")(
-      lrAugment(T(s, dir, "documents"))
-        .filter(pmod(col("doc_id"), lit(2L)) === 0L))
-
-  /** q192's standing model: trained on the banned-phrase-FILTERED
-    * pool's train half (a different model — the filter changes every
-    * gradient).
-    */
-  private def lrCleanModelArtifact(s: SparkSession, dir: String)
-      : ops.QualityClassifier.LogisticModel =
-    lrArtifact(s, dir, "lrclean")(
-      lrAugment(ops.Decontaminate.multiPatternFilter(
-          T(s, dir, "documents"), "text", Seq("batch batch", "dow win")))
-        .filter(pmod(col("doc_id"), lit(2L)) === 0L))
-
-  /** q146's standing ANN artifacts (coarse IVF centroids + PQ codebooks
-    * + THE ENCODED INDEX): trained/encoded ONCE per (session, sf dir)
-    * and materialized to parquet — the production contract (models and
-    * the index are nightly artifacts; queries price LUT-build + probe +
-    * re-rank, the recurring work) and the same memoization shape as
-    * q57's minhash index. Parquet-backed so the bench's blocking
-    * releaseAll between reps cannot evict them. The index is (vec_id,
-    * cell, codes) — nSub ints per vector, no embeddings at rest (r14:
-    * the query path consumes THIS, never re-encoding the corpus).
-    */
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String, String)]()
-
-  private def pqModelArtifact(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val (cp, bp, ip) = pqModels.computeIfAbsent((s, dir), _ => {
-      def p(tag: String) = artifactPath(s, dir, s"pq-$tag")
-      val emb = T(s, dir, "embeddings")
-      val (cPath, bPath, iPath) = (p("cents"), p("books"), p("index"))
-      Similarity.trainCentroids(emb, nCells = 8, iters = 2)
-        .write.mode("overwrite").parquet(cPath)
-      Similarity.trainProductQuantizer(emb, nSub = 8, k = 32, iters = 2)
-        .write.mode("overwrite").parquet(bPath)
-      // the index encodes against the MATERIALIZED models (same frames
-      // the queries will read) so artifact and query see one model
-      Similarity.pqIndex(emb, s.read.parquet(cPath), s.read.parquet(bPath),
-          nSub = 8)
-        .write.mode("overwrite").parquet(iPath)
-      (cPath, bPath, iPath)
-    })
-    (s.read.parquet(cp), s.read.parquet(bp), s.read.parquet(ip))
-  }
-
-  /** Driver-visible recall gate for the probabilistic queries (q94-q98):
-    * measured recall of `got` vs the exact `truth` set on `keys`,
-    * surfaced as a single (floor_e4, meets_floor) row whose oracle is a
-    * CONSTANT — the driver's hash compare then checks the floor
-    * NUMERICALLY every round instead of trusting the spec suite. A
-    * hash/params regression that collapses recall flips meets_floor and
-    * fails the round's correctness gate.
-    */
-  private def recallGate(got: DataFrame, truth: DataFrame,
-                         keys: Seq[String], floorE4: Long): DataFrame = {
-    val hits = truth.join(got, keys, "left_semi").agg(count(lit(1)).as("hits"))
-    val total = truth.agg(count(lit(1)).as("total"))
-    hits.crossJoin(total).select(
-      lit(floorE4).as("floor_e4"),
-      (col("hits") * 10000L >= col("total") * floorE4).as("meets_floor"))
-  }
-
-  /** GATE-FAMILY queries (r18, the bench-denominator split): entries
-    * whose in-query cost is dominated by ADJUDICATION machinery they
-    * run BY CONSTRUCTION — an exact baseline recomputed next to the
-    * approximate operator (the recall/error gates), an incremental
-    * path re-run against its own full rebuild plus the equality join
-    * (the ≡-gates), or a duplicate training run that exists only to
-    * grade accuracy. Their medians price verification, not shipped
-    * operators, and by r17 they were 25% of the bench total — so the
-    * bench now reports operator-family and gate-family subtotals
-    * separately (VERDICT r17 ask #2).
-    *
-    * Deliberately NOT tagged: q164 (the k-means training IS the
-    * shipped operator — its exactness lives in the oracle replay, not
-    * in an in-query second path), q176 (pure operator composition),
-    * q130/q69 (threshold faces of shipped scorers), and the additive
-    * family q175/q183/q187/q188 (one path in-query; the equality is
-    * the ORACLE's job). The test is "does the QUERY recompute its own
-    * baseline", not "is the query's purpose assurance".
-    */
-  val gateQueries: Set[String] = Set(
-    "q94_lsh_recall_gate", "q95_lsh_multi_recall_gate",
-    "q96_ivf_recall_gate", "q97_ivf_trained_recall_gate",
-    "q98_cosine_neardup_recall_gate", "q99_uv_approx_error_gate",
-    "q105_temperature_mix_alpha_gate", "q128_recall_gates_sf01",
-    "q146_ivfpq_recall_gate", "q148_pq_index_incremental",
-    "q149_pq_drift_gate", "q156_pca_gate", "q157_pca_ann_gate",
-    "q171_kmeans_incremental", "q174_cc_incremental",
-    "q177_pagerank_incremental", "q178_cc_label_fold",
-    "q186_ppr_seeds", "q191_quality_lr_gate", "q193_pq_streamed_serve",
-    "q195_quality_lr_bucketed_gate", "q196_quality_lr_drift_gate",
-    "q197_multimodal_streamed_curation", "q198_quality_lr_counts_retrain")
-
-  // ------------------------------------------------------------------
-  // Query inventory
-  // ------------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A6/A1 — grouped aggregation with exact decimal arithmetic
-    // (ref: rt-flink ads/demo/JarSubmit.scala:72-111 batch report agg)
-    "q01_pricing_summary" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // A1 — tumbling-window visitor stats (ref: VisitorStatsApp.scala:167-200)
-    "q02_visitor_stats" -> ((s, dir) => {
-      val w = window(col("ts"), "10 minutes")
-      T(s, dir, "events")
-        .groupBy(w.as("w"), col("event_type"))
-        .agg(
-          count(lit(1)).as("pv_ct"),
-          countDistinct(col("user_id")).as("uv_ct"),
-          dsum(col("value")).as("dur_sum"))
-        .select(
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-          date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
-          col("event_type"), col("pv_ct"), col("uv_ct"), col("dur_sum"))
-    }),
-
-    // A3 — province stats: star join + windowed distinct agg
-    // (ref: ProvinceStatsSqlApp.scala:70-78)
-    "q03_province_stats" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val c = broadcast(T(s, dir, "customer"))
-      val n = broadcast(T(s, dir, "nation"))
-      val r = broadcast(T(s, dir, "region"))
-      o.join(c, col("o_custkey") === col("c_custkey"))
-        .join(n, col("c_nationkey") === col("n_nationkey"))
-        .join(r, col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(
-          countDistinct(col("o_orderkey")).as("order_count"),
-          dsum(col("o_totalprice")).as("order_amount"))
-    }),
-
-    // A4 + T1 — tokenize → explode → keyword counts
-    // (ref: KeywordStatsApp.scala:65-80, KeywordUDTF.scala:17-29)
-    "q04_keyword_stats" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .select(col("doc_id"), explode(TF.tokenize(col("text"))).as("keyword"))
-        .groupBy(col("keyword"))
-        .agg(count(lit(1)).as("ct"), countDistinct(col("doc_id")).as("doc_ct"))
-    }),
-
-    // T2 — metric unpivot column→row (ref: KeywordProductC2RUDTF.scala:12-34)
-    "q05_metric_unpivot" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("click_ct"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cart_ct"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("order_ct"))
-        .select(col("user_id"),
-          expr("stack(3, 'CLICK', click_ct, 'CART', cart_ct, 'ORDER', order_ct) AS (source, ct)"))
-        .filter(col("ct") > 0)
-    }),
-
-    // J1 — interval join order ⋈ line within [orderdate, +30d]
-    // (ref: OrderWideAp.scala:128-138, bound ±5s scaled to batch data)
-    "q06_order_line_interval_join" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"))
-      val l = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"), col("l_quantity"))
-      o.join(l,
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") >= col("o_orderdate") &&
-            col("l_shipdate") <= col("o_orderdate") + expr("INTERVAL 30 DAYS"))
-        .select(col("o_orderkey"), col("l_linenumber"),
-          date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"),
-          col("l_quantity").as("qty"))
-    }),
-
-    // J2 — interval join: purchase attributed to a click within the
-    // preceding 30 min (ref: PaymentWideApp.scala:73-88, [-30min, 0])
-    "q07_purchase_attribution" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      val c = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      p.join(c,
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("c_ts") <= col("p_ts"))
-        .select(col("purchase_id"), col("click_id"), col("user_id"))
-    }),
-
-    // J3 — dimension enrichment as broadcast joins
-    // (ref: OrderWideAp.scala:143-236 six async dim lookups)
-    "q08_dim_enrich" -> ((s, dir) => {
-      val l = T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      val p = broadcast(T(s, dir, "part").select(col("p_partkey"), col("p_name"), col("p_brand")))
-      val su = broadcast(T(s, dir, "supplier").select(col("s_suppkey"), col("s_name"), col("s_nationkey")))
-      val n = broadcast(T(s, dir, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey")))
-      val r = broadcast(T(s, dir, "region").select(col("r_regionkey"), col("r_name")))
-      l.join(p, col("l_partkey") === col("p_partkey"), "left")
-        .join(su, col("l_suppkey") === col("s_suppkey"), "left")
-        .join(n, col("s_nationkey") === col("n_nationkey"), "left")
-        .join(r, col("n_regionkey") === col("r_regionkey"), "left")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("p_name"), col("p_brand"), col("s_name"), col("n_name"), col("r_name"))
-    }),
-
-    // ST1 — new-visitor flag correction, batch analog
-    // (ref: OdsBaseLogApp.scala:86-135 ValueState first-visit date)
-    "q09_new_visitor_fix" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val w = Window.partitionBy(col("user_id"))
-      e.withColumn("first_date", min(to_date(col("ts"))).over(w))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
-          when(to_date(col("ts")) === col("first_date"), 1L).otherwise(0L).as("is_new"))
-    }),
-
-    // ST2 — daily UV dedup (ref: UniqueVisitApp.scala:74-116)
-    "q10_daily_uv" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(countDistinct(col("user_id")).as("uv_ct"))
-    }),
-
-    // ST3 — bounce detection, batch analog: session entry with no
-    // follow-up within 30 min (ref: UserJumpDetailApp.scala:94-140,
-    // CEP timeout 10s scaled to this data's cadence)
-    "q11_bounce_detect" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      T(s, dir, "events")
-        .withColumn("next_ts", lead(col("ts"), 1).over(w))
-        .filter(col("next_ts").isNull ||
-          col("next_ts") > col("ts") + expr("INTERVAL 30 MINUTES"))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))
-    }),
-
-    // O1 — 3-way log split (ref: OdsBaseLogApp.scala:140-197):
-    // start / page / display branches as filtered projections
-    "q12_log_split_start" -> ((s, dir) => {
-      T(s, dir, "events").filter(col("event_type") === "signup")
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))
-    }),
-    "q13_log_split_page" -> ((s, dir) => {
-      T(s, dir, "events").filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    }),
-    // display branch: explode the nested props payload (ref exploded
-    // displays[] at OdsBaseLogApp.scala:160-171; props JSON here)
-    "q14_log_split_display" -> ((s, dir) => {
-      T(s, dir, "events").filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-    }),
-
-    // O2/P4 — config-driven routing with column pruning
-    // (ref: OdsBaseDbApp.scala:92-119, TableProcessFunction.scala:140-186)
-    "q15_config_router" -> ((s, dir) => {
-      import s.implicits._
-      val config = Seq(
-        ("signup", "kafka", "dwd_signup"),
-        ("purchase", "kafka", "dwd_purchase"),
-        ("view", "clickhouse", "dws_view"),
-        ("click", "clickhouse", "dws_click"),
-        ("error", "hbase", "dim_error")
-      ).toDF("source_type", "sink_type", "sink_table")
-      T(s, dir, "events")
-        .join(broadcast(config), col("event_type") === col("source_type"))
-        .groupBy(col("sink_type"), col("sink_table"))
-        .agg(count(lit(1)).as("ct"))
-    }),
-
-    // J5/P3/U1 — "full join by union": one-hot metric streams unioned
-    // then summed (ref: VisitorStatsApp.scala:39-41,90-157)
-    "q16_union_onehot" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val pv = e.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), lit(1L).as("pv_ct"), lit(0L).as("order_ct"), lit(0L).as("err_ct"))
-      val ord = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), lit(0L).as("pv_ct"), lit(1L).as("order_ct"), lit(0L).as("err_ct"))
-      val err = e.filter(col("event_type") === "error")
-        .select(col("user_id"), lit(0L).as("pv_ct"), lit(0L).as("order_ct"), lit(1L).as("err_ct"))
-      pv.unionByName(ord).unionByName(err)
-        .groupBy(col("user_id"))
-        .agg(sum(col("pv_ct")).as("pv_ct"), sum(col("order_ct")).as("order_ct"),
-          sum(col("err_ct")).as("err_ct"))
-    }),
-
-    // §2.11 — scalar date function battery (ref: CommonTool.scala:67-150)
-    "q17_scalar_dates" -> ((s, dir) => {
-      T(s, dir, "events").select(
-        col("event_id"),
-        DF.toYmdHms(col("ts")).as("ymd_hms"),
-        DF.tenMinuteInterval(col("ts")).as("ten_min"),
-        DF.dayOfWeekName(col("ts")).as("day_name"),
-        date_format(DF.monthLastDay(col("ts")), "yyyy-MM-dd").as("month_end"),
-        date_format(date_add(to_date(col("ts")), 7), "yyyy-MM-dd").as("plus_7d"),
-        DF.midMonthBucket(to_date(col("ts"))).as("mid_month"))
-    }),
-
-    // §2.11 — emoji/char-class strip (ref: CommonTool.scala:40-47)
-    "q18_text_clean" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        TF.removeEmoji(col("text")).as("clean_text"),
-        length(TF.removeEmoji(col("text"))).as("clean_len"))
-    }),
-
-    // Dedup family — exact (hash groupBy)
-    "q19_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(T(s, dir, "documents"), "doc_id", "text")),
-
-    // Text analysis — whitespace + BPE-ish token counting + portable
-    // rolling fingerprint
-    "q20_token_stats" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        TF.tokenCount(col("text")).cast("long").as("token_ct"),
-        size(TF.bpeTokenize(col("text"))).cast("long").as("bpe_token_ct"),
-        TF.rollingFingerprint(col("text")).as("fingerprint"))
-    }),
-
-    // Text analysis — quality scoring
-    "q21_quality_score" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).cast("long").as("char_ct"),
-        TF.qualityStopwordRatio(col("text")).as("stopword_ratio_e4"),
-        TF.meanTokenLen(col("text")).as("mean_token_len_e4"))
-    }),
-
-    // Multimodal plumbing — opaque binary columns with typed metadata:
-    // byte length + content digest (the decode step itself is stubbed in
-    // graft.ops.Multimodal; Spark-side schema/partitioning is real)
-    "q22_multimodal_meta" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        octet_length(col("text")).cast("long").as("n_bytes"),
-        sha2(col("text").cast("binary"), 256).as("digest"))
-    }),
-
-    // Similarity search — exact brute-force cosine top-k baseline
-    "q23_ann_bruteforce" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 8), emb, 5)
-    }),
-
-    // Text analysis — heuristic language ID
-    "q24_lang_id" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"), TF.langId(col("text")).as("lang_pred"))
-    }),
-
-    // §2.11 — keyword-dictionary multi-label classifier
-    // (ref: BusinessRulesTool.scala:15-68)
-    "q25_dict_classify" -> ((s, dir) => {
-      T(s, dir, "documents").select(col("doc_id"),
-        TF.dictClassify(col("text"), Seq(
-          "perf" -> Seq("fast", "slow"),
-          "storage" -> Seq("table", "row", "column"),
-          "compute" -> Seq("join", "merge", "sort", "scan"),
-          "stream" -> Seq("stream", "window", "batch"))).as("labels"))
-    }),
-
-    // A5 — daily PV/UV (ref: FlinkKafkaSource_02.scala:110-138)
-    "q26_daily_pvuv" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(count(lit(1)).as("pv"), countDistinct(col("user_id")).as("uv"),
-          max(DF.toYmdHms(col("ts"))).as("max_ts"))
-    }),
-
-    // §2.8 — batch sort + limit with deterministic total order
-    // (ref: ads/demo/JarSubmit.scala:110)
-    "q27_top_orders" -> ((s, dir) => {
-      T(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // §2.7 generalization — session windows (gap 30 min)
-    "q28_session_window" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-          col("n_events"))
-    }),
-
-    // beyond-reference completeness — rollup (multi-level agg)
-    "q29_rollup" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-    }),
-
-    // Dedup family — blocked n-gram Jaccard (exact within blocks)
-    "q30_dedup_ngram" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      Dedup.ngramJaccardPairs(d, "doc_id", "text",
-        Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 8000L)
-    }),
-
-    // Dedup family — MinHash + LSH (probabilistic; rows-only check)
-    "q31_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLshPairs(T(s, dir, "documents"), "doc_id", "text",
-        shingleN = 5, k = 32, bands = 8, threshold = 0.5)),
-
-    // Dedup family — INCREMENTAL MinHash+LSH: dedup a "new batch" (odd
-    // doc_ids) against an indexed "historical corpus" (even doc_ids) —
-    // the recurring-production shape where the corpus text is only
-    // re-read for prefilter survivors. Exact oracle: q31's shingle-join
-    // Jaccard restricted to pairs touching an odd id (same recall
-    // precondition as q31 — identical banding over a subset of the same
-    // pair universe).
-    "q57_dedup_incremental" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 2 === 0)
-      val fresh = docs.filter(col("doc_id") % 2 === 1)
-      // the standing signature index is a memoized parquet artifact —
-      // the query prices the RECURRING work (new-batch sign + band join
-      // + survivor verify), matching the production shape where the
-      // index is written nightly and read per batch
-      Dedup.minhashLshIncremental(fresh, corpus,
-        minhashIndexArtifact(s, dir), "doc_id", "text",
-        shingleN = 5, k = 32, bands = 8, threshold = 0.5)
-    }),
-
-    // Dedup family — SimHash near-dup. Portable bit mix → the DuckDB
-    // oracle replays the 64-bit signature (md5-head token hash +
-    // multiplicative-mod per-bit mix) and the exact pair list.
-    "q32_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(T(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 12, portable = true, partialScreen = true)),
-
-    // Similarity search — LSH-bucketed ANN (rows-only check)
-    "q33_ann_lsh" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.lshTopK(emb.filter(col("vec_id") < 8), emb, 5, nPlanes = 4)
-    }),
-
-    // Multimodal decode — REAL header parse: payloads are synthesized
-    // PNGs (signature + IHDR) with row-derived dimensions, and the
-    // decode kernel reads width/height/channels back out of the actual
-    // bytes. The oracle recomputes the dimensions arithmetically, so a
-    // parser regression (endianness, offset, channel map) hash-fails.
-    "q34_multimodal_decode" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val media = ops.Multimodal.asPngMediaTable(docs, "doc_id",
-        lit(16) + pmod(col("doc_id"), lit(64L)),
-        lit(16) + pmod(col("n_chars"), lit(64L)))
-      ops.Multimodal.decodeFeatures(media)
-        .select(col("media_id"), col("width"), col("height"),
-          col("channels"), col("n_bytes"))
-    }),
-
-    // Dedup family — embedding-cosine near-dup (rows-only: LSH-family
-    // dependent candidate set). Bucketed plan kept scale-safe: 8 planes
-    // per table (256 buckets), recall recovered via 8 independent
-    // tables, NOT by collapsing the bucket space (2 planes = 4 buckets
-    // = ~N²/4 pair scoring, the configuration round 2 flagged).
-    // The synthetic embeddings top out near cosine 0.51, so the floor
-    // sits at 0.30; candidate recall at that floor is partial by
-    // design — hence rows-only.
-    "q35_cosine_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairsMulti(T(s, dir, "embeddings"), minSimE4 = 3000L,
-        nPlanes = 8, nTables = 8)),
-
-    // Similarity search — IVF-bucketed ANN, the no-broadcast scale path
-    // (rows-only: recall bounded by the cell partition)
-    "q36_ann_ivf" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 8), emb, 5, nCells = 8)
-    }),
-
-    // Similarity search — IVF with a TRAINED spherical-k-means codebook
-    // and multi-probe (rows-only: cell assignment is model-dependent;
-    // the probe-all == brute-force equivalence is pinned in
-    // SimilaritySpec instead)
-    "q58_ann_ivf_trained" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val cents = Similarity.trainCentroids(emb, nCells = 8, iters = 2)
-      Similarity.ivfTopKTrained(emb.filter(col("vec_id") < 8), emb, 5,
-        cents, nProbe = 2)
-    }),
-
-    // §2.7 beyond-reference — ranking window function, top-3 orders per
-    // customer with deterministic tiebreak
-    "q37_top_orders_per_cust" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      T(s, dir, "orders")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("o_custkey"), col("rk").cast("long").as("rk"),
-          col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // §2.6 beyond-reference — CUBE multi-level aggregate
-    "q38_cube" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-    }),
-
-    // §2.5 beyond-reference — left-semi join: orders having any heavy line
-    "q39_semi_join" -> ((s, dir) => {
-      val heavy = T(s, dir, "lineitem").filter(col("l_quantity") > 45)
-        .select(col("l_orderkey"))
-      T(s, dir, "orders")
-        .join(heavy, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // §2.5 beyond-reference — left-anti join: orders with NO heavy line
-    "q40_anti_join" -> ((s, dir) => {
-      val heavy = T(s, dir, "lineitem").filter(col("l_quantity") > 45)
-        .select(col("l_orderkey"))
-      T(s, dir, "orders")
-        .join(heavy, col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // P1 — schema'd JSON parse with from_json (the reference's
-    // String→JSONObject map, OdsBaseLogApp.scala:74-80, with an explicit
-    // StructType instead of a dynamic map)
-    "q41_json_parse" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("k", LongType)))
-      T(s, dir, "events")
-        .select(col("event_id"),
-          from_json(col("props"), schema).getField("k").as("prop_k"))
-    }),
-
-    // beyond-reference — pivot (wide one-hot aggregation)
-    "q42_pivot" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        .na.fill(0L)
-    }),
-
-    // §2.11 — text business rules: char-class strips + blocklist flag
-    // (ref: CommonTool.scala:17-56, BusinessRulesTool.scala:98-114)
-    "q43_text_rules" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        length(TF.cjkAsciiOnly(col("text"))).cast("long").as("cjk_ascii_len"),
-        length(TF.stripSurrogates(col("text"))).cast("long").as("stripped_len"),
-        TF.blocklistFlag(col("text"), Seq("table", "row")).as("allowed"))
-    }),
-
-    // §2.11 — event gaps: seconds between consecutive events per user
-    // (ref: CommonTool.getDateBetweenTime, CommonTool.scala:97-109)
-    "q44_event_gaps" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      T(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .select(col("event_id"), col("user_id"),
-          (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")))
-            .cast("long").as("gap_s"))
-    }),
-
-    // P1+O1 end-to-end — the OdsBaseLogApp head: behavior-log JSON lines
-    // (synthesized from events) → lenient envelope parse → page split.
-    // Exercises graft.apps.Pipelines under the oracle gate.
-    "q45_log_pipeline" -> ((s, dir) => {
-      // ScanFanOut BEFORE the JSON round-trip (r20, guide §2.5): to_json
-      // + from_json over every event is a narrow CPU chain from a 1-file
-      // scan (measured: 2 tasks, wall ≈ task CPU). The exchange carries
-      // the 5 source columns, not the rendered JSON; the streaming face
-      // gets its width from Kafka partitions instead.
-      val raw = ops.ScanFanOut(T(s, dir, "events").select(
-        col("user_id"), col("event_type"), col("props"), col("value"),
-        col("ts"))).select(to_json(struct(
-        struct(col("user_id").cast("string").as("mid"), lit("v1").as("vc"),
-          lit("web").as("ch"), lit("310000").as("ar"), lit("0").as("is_new"))
-          .as("common"),
-        struct(col("event_type").as("page_id"),
-          lit(null).cast("string").as("last_page_id"),
-          get_json_object(col("props"), "$.k").as("item"),
-          col("value").cast("long").as("during_time")).as("page"),
-        unix_millis(col("ts")).as("ts"))).as("value"))
-      apps.Pipelines.splitPage(apps.Pipelines.parseLog(raw))
-        .select(col("mid"), col("page_id"), col("item"),
-          col("during_time"), col("ts"))
-    }),
-
-    // O2/P4/P7 end-to-end — the OdsBaseDbApp head: Maxwell envelopes
-    // (synthesized from events) → config-driven routing with column
-    // pruning → per-sink counts.
-    "q46_cdc_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val cdc = T(s, dir, "events").select(
-        col("event_type").as("table"),
-        when(col("value") > 50, "bootstrap-insert").otherwise("insert").as("type"),
-        to_json(struct(col("event_id").cast("string").as("id"),
-          col("user_id").cast("string").as("uid"),
-          col("props").as("secret"))).as("data"))
-      val config = Seq(
-        ("view", "insert", "kafka", "dwd_view", "id,uid"),
-        ("click", "insert", "kafka", "dwd_click", "id,uid"),
-        ("purchase", "insert", "clickhouse", "dws_purchase", "id")
-      ).toDF("source_table", "operate_type", "sink_type", "sink_table", "sink_columns")
-      apps.Pipelines.routeCdc(cdc, config)
-        .groupBy(col("sink_type"), col("sink_table"))
-        .agg(count(lit(1)).as("ct"))
-    }),
-
-    // §2.12 — custom typed Aggregator (exact distinct via a merged
-    // long-set buffer; the reference's HashSet accumulator as a UDAF)
-    "q47_custom_aggregator" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(graft.functions.Aggregators.exactDistinct(col("user_id")).as("uv_exact"))
-    }),
-
-    // the documented scale switch for distinct counts: HLL sketch
-    // (mergeable, fixed memory) — rows-only check: approx values are
-    // algorithm-specific, the row set (one per day) is not
-    "q48_uv_approx" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(approx_count_distinct(col("user_id"), 0.02).as("uv_approx"))
-    }),
-
-    // §2.7 generalization — sliding windows (10 min length, 5 min
-    // slide: every event lands in exactly two panes)
-    "q53_sliding_window" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("pv_ct"))
-        .select(
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
-          col("event_type"), col("pv_ct"))
-    }),
-
-    // Similarity search — multi-table LSH (recall lever: L independent
-    // bucketings union candidates before exact re-rank; rows-only).
-    // Defaults measured on this fixture: recall@5 = 0.975 vs brute
-    // force — the ≥0.9 floor is pinned in SimilaritySpec, so a params
-    // change that collapses recall fails the build.
-    "q54_ann_lsh_multi" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.lshTopKMulti(emb.filter(col("vec_id") < 8), emb, 5,
-        nPlanes = 4, nTables = 16)
-    }),
-
-    // §2.5 beyond-reference — AS-OF join: each purchase matched to the
-    // user's latest click at-or-before it (the unbounded exact form of
-    // the reference's [-30 min, 0] payment⋈order interval join,
-    // PaymentWideAp). Union+sort+carry-forward shape: one shuffle of
-    // |L|+|R| rows, never the join-then-rank candidate blowup.
-    "q59_asof_join" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"),
-          col("ts").as("click_ts"), col("value").as("click_value"))
-      graft.ops.AsOfJoin.asOf(purchases, clicks, Seq("user_id"),
-          "ts", "ts", Seq("click_ts", "click_value"))
-        .select(col("event_id"), col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("pts"),
-          date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("cts"),
-          col("click_value"))
-    }),
-
-    // §2.11 — derived age-in-years attribute (ref: rt-flink
-    // OrderWideAp.scala:151-158 computes user age from a birthday dim
-    // column at enrichment time). The test tables carry no birthday
-    // column, so the order date stands in as the anchored date; the
-    // as-of date is fixed so the oracle is deterministic.
-    "q55_age_from_birthday" -> ((s, dir) => {
-      T(s, dir, "orders").select(
-        col("o_orderkey"),
-        DF.ageFromBirthday(col("o_orderdate"),
-          lit("2026-01-01").cast("date")).as("age_years"))
-    }),
-
-    // Training-pipeline utility — EXACT stratified sample (20% per
-    // language), deterministic portable id-mixing so the oracle
-    // re-derives the identical row set in DuckDB.
-    "q60_stratified_sample" -> ((s, dir) => {
-      Sampling.stratifiedSampleExact(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
-        Seq("lang"), "doc_id", 0.2)
-    }),
-
-    // Training-pipeline utility — deterministic train/val/test split as
-    // a pure function of the id (no rand(), no assignment table); the
-    // portable mix makes the assignment replayable in the oracle.
-    "q61_split_assign" -> ((s, dir) => {
-      Sampling.assignSplit(
-        T(s, dir, "documents").select(col("doc_id")),
-        "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-        portable = true)
-    }),
-
-    // Training-pipeline utility — corpus distribution profile: exact
-    // per-(lang, source) percentiles of document length. At 100 TB the
-    // exact `percentile` (sorts each group's values) gives way to
-    // `approx_percentile` (t-digest, one pass, mergeable partials) —
-    // same query shape, one function swap; exact here so the oracle can
-    // hash-match.
-    "q62_corpus_stats" -> ((s, dir) => {
-      T(s, dir, "documents").groupBy(col("lang"), col("source")).agg(
-        count(lit(1)).as("doc_ct"),
-        avg(col("n_chars")).as("avg_chars"),
-        expr("percentile(n_chars, 0.5D)").as("p50_chars"),
-        expr("percentile(n_chars, 0.9D)").as("p90_chars"),
-        expr("percentile(n_chars, 0.99D)").as("p99_chars"),
-        stddev(col("n_chars")).as("sd_chars"))
-    }),
-
-    // Training-pipeline utility — exact heavy hitters: top-10 tokens per
-    // language. Two-level: partial-aggregated (lang, token) counts
-    // (map-side combine absorbs the Zipf head before the shuffle), then
-    // a per-lang top-k window that WindowGroupLimit cuts map-side —
-    // never a global sort, never a driver-side collect.
-    "q63_top_tokens" -> ((s, dir) => {
-      val counts = T(s, dir, "documents")
-        .select(col("lang"), explode(TF.tokenize(col("text"))).as("token"))
-        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("ct"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("ct").desc, col("token"))
-      counts.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 10)
-    }),
-
-    // Training-pipeline utility — DECONTAMINATION: near-duplicate pairs
-    // (q30's exact blocked-Jaccard machinery) that straddle the
-    // test/train boundary. Both sides' splits are computed INLINE from
-    // the pair's ids ([[Sampling.splitExpr]] is a pure function) — no
-    // join against an assignment table, zero shuffles beyond q30's own.
-    "q64_decontaminate" -> ((s, dir) => {
-      val weights = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-      val pairs = Dedup.ngramJaccardPairs(T(s, dir, "documents"), "doc_id", "text",
-        Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 8000L)
-      val sa = Sampling.splitExpr(col("id_a"), weights, portable = true)
-      val sb = Sampling.splitExpr(col("id_b"), weights, portable = true)
-      pairs
-        .withColumn("split_a", sa).withColumn("split_b", sb)
-        .filter((col("split_a") === "test" && col("split_b") === "train") ||
-                (col("split_a") === "train" && col("split_b") === "test"))
-        .select(
-          when(col("split_a") === "test", col("id_a")).otherwise(col("id_b"))
-            .as("test_doc_id"),
-          when(col("split_a") === "train", col("id_a")).otherwise(col("id_b"))
-            .as("train_doc_id"),
-          col("jaccard_e4"))
-    }),
-
-    // Training-pipeline utility — greedy token-budget sequence packing
-    // within (lang, shard-of-16) groups; the id-derived shard bounds the
-    // per-partition sort at scale and keeps the oracle replayable.
-    "q65_pack_sequences" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        TF.tokenCount(col("text")).cast("long").as("token_ct"),
-        Sampling.portableBucket(col("doc_id"), 16).as("shard"))
-      Pack.packGreedy(d, Seq("lang", "shard"), "doc_id", "token_ct", 2048L)
-    }),
-
-    // Training-pipeline utility — EXACT dataset mixing: a different
-    // keep-fraction per language (power-of-two fractions so no decimal
-    // vs double ambiguity), exact counts per stratum.
-    "q66_dataset_mix" -> ((s, dir) => {
-      Sampling.sampleByExact(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", "doc_id",
-        Map("en" -> 1.0, "zh" -> 0.5, "de" -> 0.5, "fr" -> 0.25, "es" -> 0.25))
-    }),
-
-    // Training-pipeline utility — PII redaction. The synthetic corpus
-    // carries no PII, so the query injects a deterministic email/IP/
-    // phone suffix per doc and redacts it — exercising all three
-    // patterns on real text while staying oracle-replayable.
-    "q67_pii_redact" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" contact user"), col("doc_id"), lit("@example.com or 10.0."),
-        pmod(col("doc_id"), lit(256L)), lit(".7 tel 555-867-5309"))
-      T(s, dir, "documents").select(
-        col("doc_id"), TF.redactPii(injected).as("redacted"))
-    }),
-
-    // Training-pipeline utility — repetition metrics (the Gopher-style
-    // repetition filters): duplicate-token fraction and most-common-
-    // token fraction per doc. One explode + two aggregations; ratios
-    // floored at 1e4 so they hash identically across engines.
-    "q68_repetition" -> ((s, dir) => {
-      val counts = T(s, dir, "documents")
-        .select(col("doc_id"), explode(TF.tokenize(lower(col("text")))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("ct"))
-      counts.groupBy(col("doc_id")).agg(
-        sum(col("ct")).as("total_toks"),
-        count(lit(1)).as("distinct_toks"),
-        max(col("ct")).as("top_tok_ct"))
-        .select(col("doc_id"), col("total_toks"), col("distinct_toks"),
-          floor((lit(1.0) - col("distinct_toks").cast("double")
-            / col("total_toks").cast("double")) * 10000).cast("long")
-            .as("dup_ratio_e4"),
-          col("top_tok_ct"),
-          floor(col("top_tok_ct").cast("double")
-            / col("total_toks").cast("double") * 10000).cast("long")
-            .as("top_tok_frac_e4"))
-    }),
-
-    // Training-pipeline utility — composed quality gate: the C4-style
-    // keep/drop decision with a first-failing-reason label, built from
-    // the already-oracle-replayable scalar signals. One narrow
-    // projection; the whole policy rides in the plan as literals.
-    "q69_quality_gate" -> ((s, dir) => {
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        ops.Quality.gateReason(col("text")).as("reason"))
-        .withColumn("keep", (col("reason") === "keep").cast("boolean"))
-    }),
-
-    // Vector family under the EXACT gate (the ANN queries are rows-only
-    // by design): per-embedding L2 norm via the codegen'd DotProduct
-    // (double accumulation in index order — replayable bit-for-bit by
-    // the oracle's list_reduce) and the max-|component| quantization
-    // scale. Zero shuffles; the whole row streams through codegen.
-    "q70_embedding_norms" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      e.select(
-        col("vec_id"),
-        size(col("embedding")).cast("long").as("dim"),
-        floor(sqrt(VF.dot(col("embedding"), col("embedding"))) * 10000)
-          .cast("long").as("l2_norm_e4"),
-        floor(array_max(transform(col("embedding"), x => abs(x))).cast("double") * 10000)
-          .cast("long").as("amax_e4"))
-    }),
-
-    // 100 TB layout lever — the Z-order (Morton) clustering key as a
-    // pure BIGINT expression (ops.ZOrder; writeZClustered uses it to
-    // range-cluster files into small (a, b) boxes for two-dimension
-    // file pruning). Zero shuffles; exact oracle replays the bit math.
-    "q71_zorder_key" -> ((s, dir) => {
-      T(s, dir, "orders").select(
-        col("o_orderkey"),
-        pmod(col("o_custkey"), lit(1024L)).as("bucket_a"),
-        pmod(floor(col("o_totalprice")).cast("long"), lit(1024L)).as("bucket_b"))
-        .withColumn("zval", ops.ZOrder.zValue(col("bucket_a"), col("bucket_b"), 10))
-    }),
-
-    // Range join (beyond ref — the non-equi join Spark plans as a
-    // nested-loop): overlapping price bands resolved via bucketed
-    // equi-join + residual (ops.RangeJoin), never a BNLJ/cartesian.
-    "q72_range_join" -> ((s, dir) => {
-      val bands = s.range(0, 40).select(
-        col("id").as("band_id"),
-        (col("id") * 20000L - 5000L).as("lo"),
-        (col("id") * 20000L + 25000L).as("hi"))
-      val o = T(s, dir, "orders").select(col("o_orderkey"),
-        floor(col("o_totalprice")).cast("long").as("price"))
-      ops.RangeJoin.pointInInterval(o, "price", bands, "lo", "hi", 30000L)
-        .select(col("o_orderkey"), col("price"), col("band_id"))
-    }),
-
-    // Interval-overlap join (the two-sided range join): shipment
-    // transit windows [shipdate, receiptdate] against overlapping
-    // 45-day calendar windows — same bucketed equi-join machinery,
-    // pair ownership by the overlap's left-edge bucket (no dedup).
-    "q73_interval_overlap" -> ((s, dir) => {
-      val transit = T(s, dir, "lineitem")
-        .withColumn("ship_d",
-          datediff(col("l_shipdate"), lit("1993-01-01").cast("date")).cast("long"))
-        .select(
-          col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("ship_d"),
-          // no receipt date in the test schema: a deterministic 0-29 day
-          // transit span derived from the quantity stands in
-          (col("ship_d") + pmod(floor(col("l_quantity")).cast("long"), lit(30L)))
-            .as("rcpt_d"))
-      val windows = s.range(0, 60).select(
-        col("id").as("window_id"),
-        (col("id") * 30L).as("w_lo"),
-        (col("id") * 30L + 44L).as("w_hi"))
-      ops.RangeJoin.intervalOverlap(transit, "ship_d", "rcpt_d",
-        windows, "w_lo", "w_hi", 32L)
-        .select(col("l_orderkey"), col("l_linenumber"), col("window_id"))
-    }),
-
-    // Training-pipeline utility — corpus snapshot diff (versioning):
-    // two deterministic views of the corpus stand in for releases N and
-    // N+1; the diff shuffles (id, fingerprint) only. The oracle
-    // compares normalized text where the operator compares xxhash64
-    // fingerprints — identical output absent 64-bit collisions.
-    "q74_snapshot_diff" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      val oldSnap = d.filter(pmod(col("doc_id"), lit(10L)) =!= 3L)
-      val newSnap = d.filter(pmod(col("doc_id"), lit(10L)) =!= 7L)
-        .withColumn("text", when(pmod(col("doc_id"), lit(5L)) === 0L,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      ops.Snapshot.diff(oldSnap, newSnap, "doc_id", "text")
-    }),
-
-    // Training-pipeline utility — domain capping ("at most N docs per
-    // source"): deterministic rank-and-cut inside each stratum. Which
-    // rows survive is a pure function of the ids, so a grown domain
-    // never evicts previously kept docs arbitrarily.
-    "q75_domain_cap" -> ((s, dir) => {
-      Sampling.capPerStratum(
-        T(s, dir, "documents").select(col("doc_id"), col("source")),
-        Seq("source"), "doc_id", 20L)
-    }),
-
-    // Funnel analysis (beyond ref, same e-commerce domain): per user,
-    // the ordered view → click → purchase progression. Three stacked
-    // windows over ONE user partitioning (a single exchange): each
-    // stage's timestamp is the min event time strictly after the
-    // previous stage's. Output: users reaching each stage.
-    "q76_funnel" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-      val e = T(s, dir, "events")
-        .withColumn("t1", min(when(col("event_type") === "view", col("ts"))).over(w))
-        .withColumn("t2", min(when(col("event_type") === "click" &&
-          col("value") > 90 && col("ts") > col("t1"), col("ts"))).over(w))
-        .withColumn("t3", min(when(col("event_type") === "purchase" &&
-          col("value") > 97 && col("ts") > col("t2"), col("ts"))).over(w))
-      e.agg(
-        count_distinct(when(col("t1").isNotNull, col("user_id"))).as("n_view"),
-        count_distinct(when(col("t2").isNotNull, col("user_id"))).as("n_click_after_view"),
-        count_distinct(when(col("t3").isNotNull, col("user_id"))).as("n_purchase_after_click"))
-    }),
-
-    // Cohort retention (beyond ref, same domain): users bucketed by
-    // first-seen day, activity counted per (cohort, day offset). One
-    // window for the cohort + one grouped aggregate — two exchanges on
-    // a 100 TB event log, both carrying (user, day)-level partials.
-    "q77_retention" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-      T(s, dir, "events")
-        .withColumn("day", to_date(col("ts")))
-        .withColumn("cohort", min(col("day")).over(w))
-        .withColumn("day_offset", datediff(col("day"), col("cohort")).cast("long"))
-        .filter(col("day_offset") <= 7)
-        .groupBy(date_format(col("cohort"), "yyyy-MM-dd").as("cohort"),
-          col("day_offset"))
-        .agg(count_distinct(col("user_id")).as("active_users"))
-    }),
-
-    // Training-pipeline utility — token-rarity scoring (the
-    // LM-perplexity-filter stand-in with EXACT arithmetic: corpus
-    // frequencies are BIGINT counts, so the score is reproducible
-    // across engines, where sums of logs diverge in the last ulp).
-    // A doc of common words scores high, OOV-ish gibberish low.
-    // Skew design for the 100 TB Zipf vocabulary: ONE tokenize pass
-    // into per-(doc, token) counts — (doc, tok) keys spread the head
-    // tokens across every partition, so the pre-aggregation itself
-    // cannot skew — then the corpus frequencies' top-K head (precisely
-    // the keys a token-level shuffle join would hotspot on) joins by
-    // BROADCAST, and only the bounded-frequency tail (each key ≤ the
-    // K-th frequency by construction) takes the shuffle join. Exact:
-    // head ∪ tail partitions the vocabulary.
-    "q78_token_rarity" -> ((s, dir) => {
-      val tokCounts = ops.CacheScope.persist(T(s, dir, "documents")
-        .select(col("doc_id"), explode(TF.tokenize(lower(col("text")))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c")))
-        // ^ feeds the freq agg AND both join probes; released by the
-        //   session's CacheScope.release
-      val freqs = tokCounts.groupBy(col("tok")).agg(sum(col("c")).as("freq"))
-      ops.Skew.headTailJoin(tokCounts, freqs, "tok", col("freq"), topK = 1024,
-          uniqueKeys = true) // freqs is a groupBy(tok) output
-        .select(col("doc_id"), col("c"), (col("c") * col("freq")).as("cf"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("c")).as("n_toks"), sum(col("cf")).as("sum_freq"))
-        .select(col("doc_id"), col("n_toks"), col("sum_freq"),
-          floor(col("sum_freq").cast("double") / col("n_toks").cast("double") * 100)
-            .cast("long").as("mean_freq_e2"))
-    }),
-
-    // §2.9 — set operations beyond the reference's unions
-    "q49_intersect" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.filter(col("event_type") === "click").select(col("user_id"))
-        .intersect(e.filter(col("event_type") === "purchase").select(col("user_id")))
-    }),
-    // 100TB lever — two-phase salted aggregation for hot keys
-    // (decomposable sums; exact decimal partials)
-    "q51_salted_agg" -> ((s, dir) =>
-      ops.Skew.saltedSumCount(T(s, dir, "events"), Seq("event_type"), "value",
-        salts = 8)),
-
-    // the dedup deliverable: near-dup pairs → connected components →
-    // one (member, representative) row per clustered doc, via the
-    // COMPOSED report artifact (pairs+CC once, parquet-backed; q93 is a
-    // derived view of the same artifact). Exact oracle: DuckDB WITH
-    // RECURSIVE transitive closure + min reachable id.
-    "q52_dedup_clusters" -> ((s, dir) =>
-      rebuildDedupReport(s, dir).clusters
-        .select(col("id").as("doc_id"), col("label").as("cluster_rep"))),
-
-    // Dedup observability — the cluster-SIZE distribution (how much
-    // mass dedup will remove, the number a pipeline operator actually
-    // watches): a derived VIEW over q52's report artifact — two tiny
-    // aggregations over the labels table, no pair/CC recompute.
-    "q93_cluster_size_histogram" -> ((s, dir) =>
-      dedupReport(s, dir).sizeHistogram),
-
-    // Dedup family — prefix-filtered (AllPairs/PPJoin) exact Jaccard:
-    // same output contract as q30, candidate join restricted to each
-    // doc's rarest |A|−⌈t·|A|⌉+1 tokens — the sparse-corpus /
-    // stopword-heavy scale path, under the same exact oracle
-    "q56_dedup_ngram_prefix" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      Dedup.ngramJaccardPairsPrefix(d, "doc_id", "text",
-        Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 8000L)
-    }),
-
-    // Dedup family — measured-statistic dispatch between the counting
-    // join (q30's form) and the prefix filter (q56's form): one cheap
-    // Σf² aggregate decides; output identical either way, so the same
-    // exact oracle applies (see Dedup.ngramJaccardPairsAuto + SCALE.md)
-    "q79_dedup_ngram_auto" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      Dedup.ngramJaccardPairsAuto(d, "doc_id", "text",
-        Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 8000L)
-    }),
-
-    // Dedup family — exact shared-substring pairs (windows-at-stride
-    // reformulation of suffix-array substring dedup): docs sharing a
-    // 40-char window sampled every 4 chars. Hash-bucketed candidates
-    // (8-byte fingerprints in the exchange, never text), exact
-    // window-string verify on candidate docs only.
-    "q80_shared_window_pairs" -> ((s, dir) =>
-      Dedup.sharedWindowPairs(T(s, dir, "documents"), "doc_id", "text",
-        k = 40, stride = 4)),
-
-    // Per-doc distinctive terms: top-3 by (tf desc, df asc, term) —
-    // the integer-exact tf-idf rank (float log idf would disagree
-    // across engines in the last ulp; the RANKING it induces at fixed
-    // tf is df asc, which is exact). Same Zipf-skew design as q78:
-    // per-(doc,term) pre-aggregation, then head vocabulary by
-    // broadcast, bounded-frequency tail by shuffle join.
-    "q81_distinctive_terms" -> ((s, dir) => {
-      val tf = ops.CacheScope.persist(T(s, dir, "documents")
-        .select(col("doc_id"), explode(TF.tokenize(lower(col("text")))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
-        // ^ feeds the df agg AND both join probes; released by the
-        //   session's CacheScope.release
-      val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val joined = ops.Skew.headTailJoin(tf, dfreq, "term", col("df"),
-        topK = 1024, uniqueKeys = true) // dfreq is a groupBy(term) output
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tf").desc, col("df").asc, col("term").asc)
-      joined.withColumn("term_rank", row_number().over(w).cast("long"))
-        .filter(col("term_rank") <= 3)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"), col("term_rank"))
-    }),
-
-    // Vector family under the EXACT gate — int8 scalar quantization
-    // (the 4× vector-memory lever for ANN at 100 TB): per-vector
-    // max-abs scale, q_i = ⌊x_i·127/amax⌋, integer summaries + the
-    // reconstruction error in index-ordered fold — every step a
-    // correctly-rounded IEEE double op, replayable bit-for-bit.
-    "q82_quantize_embeddings" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val amax = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-      e.select(col("vec_id"), col("embedding"), amax.as("amax"))
-        .withColumn("q", transform(col("embedding"), x =>
-          when(col("amax") === 0.0, lit(0L)).otherwise(
-            floor(x.cast("double") * 127.0 / col("amax")))))
-        .select(
-          col("vec_id"),
-          array_min(col("q")).as("qmin"),
-          array_max(col("q")).as("qmax"),
-          aggregate(col("q"), lit(0L), (a, v) => a + v).as("qsum"),
-          aggregate(col("q"), lit(0L), (a, v) => a + v * v).as("ql2"),
-          floor(aggregate(
-            zip_with(col("embedding"), col("q"), (x, qi) => {
-              val d = x.cast("double") - qi.cast("double") * col("amax") / 127.0
-              d * d
-            }),
-            lit(0.0), (a, v) => a + v) * 1e9).cast("long").as("err_e9"))
-    }),
-
-    // Dedup family — exact blocked containment (asymmetric Jaccard):
-    // the subset/quote detector symmetric Jaccard cannot see (a short
-    // doc inside a long one). Blocks on language only — a length band
-    // would split exactly the pairs this exists to find.
-    "q83_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(T(s, dir, "documents"), "doc_id", "text",
-        Seq(col("lang")), 9000L, minSize = 30)),
-
-    // Curriculum/data-mix utility — per-language quality deciles via
-    // ntile over a deterministic total order (metric, then id: ntile
-    // bucket boundaries are positional, so ties MUST be broken for a
-    // portable answer). One shuffle on the language key.
-    "q84_quality_deciles" -> ((s, dir) =>
-      T(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"),
-        ntile(10).over(Window.partitionBy(col("lang"))
-          .orderBy(col("n_chars"), col("doc_id"))).cast("long").as("decile"))),
-
-    // Decontamination, bloom-prefiltered two-phase EXACT shape (see
-    // ops.Decontaminate): bloom negatives are flagged clean map-side
-    // with zero exchange; only bloom positives (matches + ~fpp of the
-    // corpus) pay the exact content-key join. Same answer as the plain
-    // anti/semi join — the bloom changes the plan, never the result.
-    "q85_bloom_decontaminate" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val contam = d.filter(col("doc_id") % 7 === 0)
-      ops.Decontaminate.flag(
-        d.select(col("doc_id"), col("text")), col("text"),
-        contam, col("text"))
-        .select(col("doc_id"), col("contaminated"))
-    }),
-
-    // Within-doc self-repetition at window granularity (the
-    // boilerplate/template signal the pair-wise window dedup can't
-    // give): duplicated-40-char-window fraction per doc as PURE array
-    // expressions — sequence → transform(substring) → size vs
-    // size(array_distinct), zero shuffles, whole row streams through
-    // codegen. Complements q68's token-level repetition metrics.
-    "q87_self_repetition" -> ((s, dir) => {
-      val k = 40
-      val wins = transform(
-        sequence(lit(0), greatest(length(col("text")) - k, lit(0)), lit(4)),
-        o => substring(col("text"), o + 1, lit(k)))
-      T(s, dir, "documents")
-        .filter(length(col("text")) >= k)
-        .select(col("doc_id"),
-          size(wins).cast("long").as("n_windows"),
-          size(array_distinct(wins)).cast("long").as("n_distinct"))
-        .withColumn("dup_frac_e4",
-          floor((col("n_windows") - col("n_distinct")).cast("double") * 10000.0 /
-            col("n_windows").cast("double")).cast("long"))
-    }),
-
-    // Context-window chunking (training/RAG prep): 64-token chunks at
-    // stride 48 (16-token overlap), trailing partial kept. Pure
-    // explode + projection — zero shuffles; chunk identity is
-    // (doc_id, chunk_idx), deterministic for downstream dedup/packing.
-    "q89_chunk_documents" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TF.tokenize(lower(col("text"))).as("toks"))
-        // zero-token docs emit NO chunk (the oracle's range(0, 0, 48) is
-        // empty; sequence(0, greatest(-1, 0), 48) would emit offset 0)
-        .filter(size(col("toks")) >= 1)
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0), greatest(size(col("toks")) - 1, lit(0)), lit(48)))
-            .as("off"))
-        .select(col("doc_id"),
-          (col("off") / 48).cast("long").as("chunk_idx"),
-          slice(col("toks"), col("off") + 1, lit(64)).as("chunk"))
-        .select(col("doc_id"), col("chunk_idx"),
-          array_join(col("chunk"), " ").as("chunk_text"),
-          size(col("chunk")).cast("long").as("n_tokens"))),
-
-    // BPE-style adjacent-pair statistics (the aggregate a tokenizer
-    // merge step maximizes): zip each doc's token stream with its own
-    // 1-shift, count globally, rank with a deterministic tiebreak.
-    // One shuffle carrying (pair, partial-count) — map-side combine
-    // absorbs the Zipf head; TakeOrderedAndProject cuts the top-k
-    // per partition before the driver merge.
-    "q92_bpe_pair_counts" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(TF.tokenize(lower(col("text"))).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(zip_with(
-          slice(col("toks"), lit(1), size(col("toks")) - 1),
-          slice(col("toks"), lit(2), size(col("toks")) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("pair_ct"))
-        // TakeOrderedAndProject first (per-partition heap of 20), THEN
-        // rank the 20 survivors — a global window over the full
-        // vocabulary would single-partition-sort the Zipf tail
-        .orderBy(col("pair_ct").desc, col("pair").asc).limit(20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("pair_ct").desc, col("pair").asc)).cast("long"))),
-
-    // Exact within-label cosine pairs — the hash-checked brute-force
-    // BASELINE the LSH/IVF near-dup variants (q35 et al.) are measured
-    // against — behind a MEASURED dispatch (the q79 doctrine applied to
-    // vectors): one (label, count) aggregate checks the largest block
-    // against graft.sim.maxBlock; test scales stay exact (the oracle
-    // replays the codegen'd DotProduct's index-ordered accumulation),
-    // while an over-bound block at 100 TB dispatches to the
-    // label-blocked multi-table LSH subset path instead of a quadratic
-    // that grows 10,000× at 100× data.
-    "q90_cosine_pairs_label" -> ((s, dir) =>
-      Similarity.cosinePairsLabelAuto(T(s, dir, "embeddings"), "label", 3000L)),
-
-    // Nearest-centroid assignment (the k-means E-step over q88's
-    // fixed-point centroids), hash-green: distances are index-ordered
-    // IEEE folds against the e6 centroid (cast back to double — both
-    // engines compute c/1e6 identically), and the argmin is
-    // min(struct(dist, label)) — a MAP-SIDE-COMBINABLE aggregate, so
-    // the shuffle carries one (vec, best-so-far) partial per partition
-    // instead of the |vecs|×|centroids| distance rows a window-rank
-    // argmin would exchange. Tiebreak = lower label, same total order
-    // as the oracle's (dist, label) rank (no ties in the data; the
-    // order is defined anyway).
-    "q91_nearest_centroid" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val cent = e
-        .select(col("label"), posexplode(col("embedding")).as(Seq("dim_idx", "v")))
-        .select(col("label"), col("dim_idx"),
-          floor(col("v").cast("double") * 1000000.0).cast("long").as("v_e6"))
-        .groupBy(col("label"), col("dim_idx"))
-        .agg(count(lit(1)).as("n"), sum(col("v_e6")).as("sum_e6"))
-        .select(col("label").as("c_label"), col("dim_idx"),
-          floor(col("sum_e6").cast("double") / col("n").cast("double"))
-            .cast("long").as("c_e6"))
-        .groupBy(col("c_label"))
-        .agg(transform(array_sort(collect_list(struct(col("dim_idx"), col("c_e6")))),
-          x => x.getField("c_e6")).as("cvec"))
-      e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("c_label"),
-          aggregate(
-            zip_with(col("embedding"), col("cvec"), (x, c) => {
-              val d = x.cast("double") - c.cast("double") / 1000000.0
-              d * d
-            }),
-            lit(0.0), (a, v) => a + v).as("dist"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist"), col("c_label"))).as("best"))
-        .select(col("vec_id"),
-          col("best.c_label").as("nearest_label"),
-          floor(col("best.dist") * 1000000.0).cast("long").as("dist_e6"))
-    }),
-
-    // Per-label embedding centroids in fixed point — the ANN family's
-    // first hash-green TRAINING artifact (Similarity.trainCentroids'
-    // k-means statistic, made engine-portable): components are floored
-    // to e6 BIGINTs BEFORE summing, so the per-(label, dim) sums are
-    // order-independent integers — no float accumulation-order
-    // divergence — and map-side partial aggregation collapses the
-    // posexplode's ×dim rows to |labels|×dim partials per partition
-    // before the only shuffle.
-    "q88_label_centroids" -> ((s, dir) =>
-      T(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("dim_idx", "v")))
-        .select(col("label"), col("dim_idx").cast("long").as("dim_idx"),
-          floor(col("v").cast("double") * 1000000.0).cast("long").as("v_e6"))
-        .groupBy(col("label"), col("dim_idx"))
-        .agg(count(lit(1)).as("n"), sum(col("v_e6")).as("sum_e6"))
-        .withColumn("centroid_e6",
-          floor(col("sum_e6").cast("double") / col("n").cast("double")).cast("long"))),
-
-    // Multimodal audio leg: REAL synthesized RIFF/WAV headers with
-    // row-derived params, parsed back by the real LE chunk walker
-    // (ops.Multimodal.parseWavHeader) — the q34 pattern: Spark
-    // round-trips actual bytes, the oracle replays the arithmetic.
-    "q86_audio_meta" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val media = ops.Multimodal.asWavMediaTable(docs, "doc_id",
-        lit(8000L) + pmod(col("doc_id"), lit(8L)) * 1000L,
-        lit(1L) + pmod(col("doc_id"), lit(2L)))
-      ops.Multimodal.decodeAudioMeta(media)
-    }),
-
-    // VIDEO FRAME SAMPLING (r14): payloads carry real frame data (the
-    // ftyp+moov header plus an mdat of raw 9x8 grayscale frames — the
-    // layout where sampling is a SEEK: unsampled frames are never
-    // materialized), every 2nd frame is sliced partition-local and
-    // dHashed with the q144 kernel. The oracle replays pixels → dhash
-    // for exactly the sampled frames; frame pixels mix the frame index
-    // into the q144 diffusion formula.
-    "q151_video_frame_sample" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val pixels = flatten(transform(sequence(lit(0), lit(3)), f =>
-        flatten(transform(sequence(lit(0), lit(7)), y =>
-          transform(sequence(lit(0), lit(8)), x => {
-            val xl = x.cast("long"); val yl = y.cast("long")
-            val fl = f.cast("long")
-            val h = (did + lit(1L)) * lit(2654435761L) + fl * lit(8191L) +
-              xl * lit(97L) + yl * lit(1031L)
-            val g = h.bitwiseXOR(shiftright(h, 7))
-            pmod(g * lit(31L) + shiftright(g, 11), lit(241L)).cast("int")
-          })))))
-      val media = ops.Multimodal.asMp4FramesMediaTable(docs, "doc_id",
-        timescale = 600, w = 9, h = 8, nFrames = 4, pixels)
-      ops.Multimodal.videoFrameDHash(media, everyN = 2)
-    }),
-
-    // VIDEO SCENE-CUT DETECTION (r14): the temporal-segmentation
-    // composition the frame machinery exists for — per-frame dHash →
-    // one window per media (lag over frame order) → emit frames whose
-    // Hamming distance to the previous frame crosses the cut
-    // threshold. Synthesis: 4 frames per doc; within a scene each
-    // frame perturbs ONE pixel of the scene's base image (consecutive
-    // hamming ≤ 4, the q144 locality property); docs with
-    // doc_id % 3 == 0 switch scenes at frame 2 (a different diffusion
-    // seed — hamming ~32). Threshold 10 separates the regimes with
-    // margin on both sides. Only (media_id, frame, dhash) longs enter
-    // the window exchange — frames stay partition-local.
-    "q152_video_scene_cuts" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val pixels = flatten(transform(sequence(lit(0), lit(3)), f => {
-        val fl = f.cast("long")
-        val scene = when(pmod(did, lit(3L)) === 0L && fl >= 2L, lit(1L))
-          .otherwise(lit(0L))
-        val pos = pmod(did * lit(13L) + fl * lit(29L), lit(72L))
-        flatten(transform(sequence(lit(0), lit(7)), y =>
-          transform(sequence(lit(0), lit(8)), x => {
-            val xl = x.cast("long"); val yl = y.cast("long")
-            val i = yl * lit(9L) + xl
-            // scene offset stays ~1e9 so g*31 cannot overflow a Long
-            // under ANSI (the diffusion spreads it across the grid)
-            val h = (did + lit(1L)) * lit(2654435761L) +
-              scene * lit(999999937L) +
-              xl * lit(97L) + yl * lit(1031L)
-            val g = h.bitwiseXOR(shiftright(h, 7))
-            val p = pmod(g * lit(31L) + shiftright(g, 11), lit(241L))
-            when(i === pos, pmod(p + lit(128L), lit(241L)))
-              .otherwise(p).cast("int")
-          })))
-      }))
-      val media = ops.Multimodal.asMp4FramesMediaTable(docs, "doc_id",
-        timescale = 600, w = 9, h = 8, nFrames = 4, pixels)
-      val hashes = ops.Multimodal.videoFrameDHash(media, everyN = 1)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("media_id")).orderBy(col("frame_idx"))
-      hashes
-        .withColumn("prev", lag(col("dhash"), 1).over(w))
-        .filter(col("prev").isNotNull)
-        .withColumn("hamming_prev",
-          bit_count(col("dhash").bitwiseXOR(col("prev"))).cast("long"))
-        .filter(col("hamming_prev") > 10L)
-        .select(col("media_id"), col("frame_idx"), col("hamming_prev"))
-    }),
-
-    // VIDEO metadata (r14): the q86 doctrine on the third modality —
-    // real MP4/ISO-BMFF payloads (ftyp + moov{mvhd, trak/tkhd})
-    // synthesized from row-derived parameters, walked by the real box
-    // parser (big-endian sizes, nested box walk, 16.16 fixed-point
-    // track dims), oracle-replayed arithmetically including the
-    // integer duration·1000/timescale millisecond conversion.
-    "q150_video_meta" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val media = ops.Multimodal.asMp4MediaTable(docs, "doc_id",
-        lit(600L) + pmod(col("doc_id"), lit(5L)) * 100L,
-        pmod(col("doc_id") * lit(37L), lit(100000L)),
-        lit(320L) + pmod(col("doc_id"), lit(8L)) * 16L,
-        lit(240L) + pmod(col("doc_id"), lit(6L)) * 16L)
-      ops.Multimodal.decodeVideoMeta(media)
-    }),
-
-    // HTML → TEXT EXTRACTION (r14): the crawl pipeline's first stage
-    // (WET generation), the q112/q150 synthesis doctrine — markup is
-    // built in-query from row data (title, heading, escaped entities,
-    // a script whose body contains raw < > && that must NOT leak into
-    // the text, doc_id%4 anchor tags, a comment that must vanish), so
-    // the oracle replays synthesis AND extraction char-for-char. The
-    // whole query is one codegen'd narrow projection — no shuffle, no
-    // UDF; raw HTML never enters an exchange.
-    "q153_html_extract" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id").cast("string")
-      val html = concat(
-        lit("<html><head><title> "), col("source"), lit(" #"), did,
-        lit(" </title>\n<style>p { color: #333; }</style>"),
-        lit("<script type=\"text/javascript\">var t = 1 < 2 && 3 > 2;</script>"),
-        lit("</head>\n<body>\n\t<h1>"), upper(col("source")),
-        lit("</h1>\n<p>"), substring(col("text"), 1, 120),
-        lit("</p>\n<p>Tom &amp; Jerry &lt;3 &quot;quoted&quot; &#39;s&nbsp;end</p>"),
-        array_join(array_repeat(
-          lit("<a href=\"https://example.com/p\">l</a>"),
-          pmod(col("doc_id"), lit(4L)).cast("int")), ""),
-        lit("<!-- hidden "), did, lit(" -->\n</body></html>"))
-      docs.select(col("doc_id"), html.as("__html"))
-        .select(col("doc_id"),
-          ops.Html.extractTitle(col("__html")).as("title"),
-          ops.Html.extractText(col("__html")).as("body_text"),
-          ops.Html.countLinks(col("__html")).cast("long").as("n_links"),
-          ops.Html.linkDensityE6(col("__html")).as("link_density_e6"))
-    }),
-
-    // URL CANONICALIZATION (r14): the q153 sibling — synthesized URLs
-    // exercise every rule (uppercase scheme+host, co.uk vs .com
-    // registrable domains, default vs real ports, tracking-param runs
-    // in every position, fragments), and the oracle replays synthesis
-    // + normalization char-for-char. One narrow codegen'd projection.
-    "q154_url_normalize" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val scheme = when(pmod(did, lit(2L)) === 0L, lit("HTTP")).otherwise(lit("https"))
-      val hostS = concat(lit("WWW."), col("source"),
-        when(pmod(did, lit(3L)) === 0L, lit(".Example.CO.uk"))
-          .otherwise(lit(".Example.com")))
-      val port = when(pmod(did, lit(5L)) === 0L,
-          when(pmod(did, lit(2L)) === 0L, lit(":80")).otherwise(lit(":443")))
-        .when(pmod(did, lit(5L)) === 1L, lit(":8080"))
-        .otherwise(lit(""))
-      val path = concat(lit("/Articles/p"), pmod(did, lit(50L)).cast("string"))
-      val query = when(pmod(did, lit(4L)) === 0L,
-          lit("?utm_source=feed&utm_medium=rss&utm_campaign=x1"))
-        .when(pmod(did, lit(4L)) === 1L,
-          concat(lit("?id="), pmod(did, lit(7L)).cast("string"), lit("&utm_source=tw&gclid=z9")))
-        .when(pmod(did, lit(4L)) === 2L,
-          concat(lit("?a=1&fbclid=abc&b="), pmod(did, lit(9L)).cast("string")))
-        .otherwise(lit(""))
-      val frag = when(pmod(did, lit(6L)) === 0L, lit("#Sec-2")).otherwise(lit(""))
-      val url = concat(scheme, lit("://"), hostS, port, path, query, frag)
-      docs.select(did, url.as("__url"))
-        .select(did,
-          ops.Url.normalizeUrl(col("__url")).as("url_norm"),
-          ops.Url.host(col("__url")).as("host"),
-          ops.Url.registrableDomain(ops.Url.host(col("__url"))).as("domain"))
-    }),
-
-    // WARC ROUND-TRIP (r14): crawl-container ingestion under the q150
-    // synth→parse doctrine — records (with CJK/emoji payloads on
-    // doc_id%4==0, so Content-Length is genuinely octets ≠ chars) are
-    // concatenated into 8 file blobs, then the REAL byte-walk parser
-    // (Content-Length-driven, not separator-split) re-emits every
-    // field; the oracle computes the expected parse arithmetically,
-    // rec_index replaying byte order as the member sort.
-    "q155_warc_roundtrip" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val payload = concat(substring(col("text"), 1, 100),
-        when(pmod(did, lit(4L)) === 0L, lit(" — 中文 😀")).otherwise(lit("")))
-      val rec = ops.Warc.recordString(
-        concat(lit("<urn:uuid:"), did.cast("string"), lit(">")),
-        concat(lit("https://example.com/"), col("source"), lit("/"),
-          did.cast("string")),
-        payload)
-      ops.Warc.parseRecords(
-        ops.Warc.asWarcFiles(docs, pmod(did, lit(8L)), did, rec))
-    }),
-
-    // GZIP-MEMBER WARC ROUND-TRIP (r16): the container crawl corpora
-    // actually ship — q155's records, but each record is its OWN RFC
-    // 1952 gzip member (real Deflater) and members concatenate per
-    // file; the read side is the sequential member walk (header parse
-    // + raw inflate + CRC32/ISIZE trailer verify — NOT a magic scan:
-    // compressed bytes can contain 1f 8b) feeding the SAME record
-    // parser as q155. The oracle replays the identity arithmetically:
-    // compression must be invisible to every parsed field.
-    "q170_warcgz_roundtrip" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val payload = concat(substring(col("text"), 1, 100),
-        when(pmod(did, lit(4L)) === 0L, lit(" — 中文 😀")).otherwise(lit("")))
-      val rec = ops.Warc.recordString(
-        concat(lit("<urn:uuid:"), did.cast("string"), lit(">")),
-        concat(lit("https://example.com/"), col("source"), lit("/"),
-          did.cast("string")),
-        payload)
-      ops.Warc.parseGzRecords(
-        ops.Warc.asWarcGzFiles(docs, pmod(did, lit(7L)), did, rec))
-    }),
-
-    // INDEXED RANDOM-ACCESS FETCH (r16): the read path the member
-    // offsets exist FOR — a CDX-style index (file_id, member_index,
-    // byte_offset, comp_len) from the member walk selects every 3rd
-    // member; the fetch slices ONLY those byte ranges (binary
-    // substring, codegen'd) and inflates member-locally. At 100 TB:
-    // "touch k byte ranges", never "parse the petabyte". Oracle = the
-    // full q170 parse filtered to the requested members — the fetch
-    // must be exactly the restriction of the full read.
-    "q172_warcgz_indexed_fetch" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val payload = concat(substring(col("text"), 1, 100),
-        when(pmod(did, lit(4L)) === 0L, lit(" — 中文 😀")).otherwise(lit("")))
-      val rec = ops.Warc.recordString(
-        concat(lit("<urn:uuid:"), did.cast("string"), lit(">")),
-        concat(lit("https://example.com/"), col("source"), lit("/"),
-          did.cast("string")),
-        payload)
-      val files = ops.Pipeline.stage("warcgz_fetch_files",
-        ops.Warc.asWarcGzFiles(docs, pmod(did, lit(6L)), did, rec))
-      val index = ops.Warc.splitGzMembers(files)
-        .select(col("file_id"), col("member_index"),
-          col("byte_offset"), col("comp_len"))
-        .filter(pmod(col("member_index"), lit(3L)) === 0L)
-      ops.Warc.fetchGzRecords(files, index)
-    }),
-
-    // PCA GATE (r14): distributed dimensionality reduction under the
-    // q149 numeric-gate doctrine (an eigendecomposition is not
-    // SQL-replayable). One-pass moment fit (d²-sized partials, corpus
-    // never shuffles) + driver Jacobi + literal-broadcast projection.
-    // Three booleans: (a) variance explained by k=32 of 64 ≥ 0.52 —
-    // measured 0.651 @ sf0.01 / 0.574 @ sf0.1 (PcaProbe), and any
-    // CORRECT top-k selection is ≥ 0.50 on any spectrum, so the floor
-    // sits in the band only a broken solver/ordering can miss; (b) the
-    // strong self-check: measured reconstruction MSE (explicit x̂ =
-    // mean + Wᵀy per row, no orthonormality assumed) equals the
-    // spectrum's prediction (trace − Σtop-k λ)/d — measured agreement
-    // is machine epsilon (~1e-16), gate 1e-9; a single wrong
-    // eigenvector moves it by ~1e-3; (c) Σλ == trace(cov) within
-    // 1e-9·trace (driver-side invariant of the solve).
-    "q156_pca_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val m = ops.Pca.fit(emb, "embedding", 32)
-      // The projection MUST be materialized before the reconstruction
-      // measurement consumes it (r14 verdict #2): inlined, Catalyst's
-      // CollapseProject folds the k·d-cost projection expression into
-      // reconstructionSqErr's per-coordinate rebuild (interpreted HOFs
-      // are never CSE'd), re-evaluating it once per output coordinate —
-      // O(d²·k) ≈ 131k expression evals PER ROW (measured 24 s isolated
-      // at sf0.1). A stage boundary makes `proj` a read-back attribute:
-      // the rebuild is the intended O(d·k)/row.
-      val projected = ops.Pipeline.stage("pca_proj", emb.select(
-        col("embedding"),
-        ops.Pca.project(col("embedding"), m).as("proj")))
-      val mse = projected.select(
-        ops.Pca.reconstructionSqErr(col("embedding"), col("proj"), m).as("e"))
-      mse.agg(count(lit(1)).as("n_vectors"),
-          (avg(col("e")) / m.d).as("__mse"))
-        .select(col("n_vectors"),
-          lit(520000L).as("floor_e6"),
-          ((lit(1.0) - col("__mse") * m.d / m.trace) * 1e6 >= 520000.0)
-            .as("meets_floor"),
-          (abs(col("__mse") - m.predictedMse) <= 1e-9).as("spectrum_consistent"),
-          lit(m.traceConsistent).as("trace_consistent"))
-    }),
-
-    // PCA→ANN COMPOSITION GATE (r14, teeth r15): cosine top-5 through
-    // the 32-of-64 reduced space (uncentered projection — the LSA
-    // convention for angular retrieval) vs full-dim truth. r14's floor
-    // was 0.10 because the fixture embeddings are near-iid (flat
-    // spectrum — PCA's worst case, honestly documented then); the r15
-    // verdict ask plants LOW-RANK STRUCTURE in-query instead, so the
-    // floor can gate PROJECTION QUALITY, not just composition
-    // collapse: each vector is a rank-8 mix (coefficients and basis
-    // both integer-arithmetic in vec_id/dim — deterministic, replayed
-    // identically every run; the i·j cross term keeps the 8 basis
-    // vectors independent) plus ±0.02 noise. k=32 ⊇ the 8-dim signal
-    // subspace, so a CORRECT fit reconstructs neighborhoods almost
-    // exactly (measured recall@5: 1.0 at sf0.01/sf0.1); floor 0.80
-    // fails on any wrong eigenvector, dim mix-up, or NaN collapse.
-    // PcaSpec holds the same planted-subspace contract at unit scale.
-    "q157_pca_ann_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val vid = col("vec_id")
-      // staged: the synthesis transform is ~512 interpreted HOF ops per
-      // row, and its consumers (fit pass, projection, both sides of two
-      // brute-force joins) would each re-inline it via CollapseProject —
-      // the q156 materialization lesson applies to the synth too
-      // (measured: 17 s inline vs ~2 s staged at sf0.1)
-      val structured = ops.Pipeline.stage("pca_ann_synth", emb.select(vid,
-        transform(sequence(lit(0), lit(63)), i => {
-          val sig = (0 until 8).map { j =>
-            val cj = pmod(vid * 31L + lit(j * 17L), lit(97L)).cast("double") /
-              97.0 - 0.5
-            val bji = (pmod(i.cast("long") * 37L + lit(j * 53L) +
-              i.cast("long") * lit(j * 11L), lit(19L)).cast("double") - 9.0) / 9.0
-            cj * bji
-          }.reduce(_ + _)
-          val eps = (pmod(vid * 7L + i.cast("long") * 3L, lit(11L))
-            .cast("double") - 5.0) / 5.0 * 0.02
-          (sig + eps).cast("float")
-        }).as("embedding")))
-      // the retrieval-correct fit: uncentered second moment (truncated
-      // SVD) — PcaSpec measures how the centered fit can lose the
-      // mean direction full-space cosine is dominated by
-      val m = ops.Pca.fit(structured, "embedding", 32, centered = false)
-      // reduced is consumed by BOTH sides of the brute-force join —
-      // stage it so the projection runs once per row, not per consumer
-      val reduced = ops.Pipeline.stage("pca_ann_reduced",
-        structured.select(col("vec_id"),
-          transform(ops.Pca.project(col("embedding"), m, center = false),
-            y => y.cast("float")).as("embedding")))
-      recallGate(
-        Similarity.bruteForceTopK(reduced.filter(col("vec_id") < 8), reduced, 5),
-        Similarity.bruteForceTopK(structured.filter(col("vec_id") < 8),
-          structured, 5),
-        Seq("query_id", "neighbor_id"), 8000L)
-    }),
-
-    // PAGERANK (r14): link-graph centrality over a synthesized
-    // doc→doc graph (1–3 out-edges per node, arithmetic dst), 3
-    // damped rounds in e12 integer fixed point — EXACTLY replayable
-    // by the oracle's three unrolled CTE iterations (the reason the
-    // operator is integer-arithmetic: distributed float sums are
-    // order-dependent). GraphSpec pins hand-computed values; the
-    // fixed-point cycle case proves the arithmetic is mass-stable.
-    "q158_pagerank" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val n = docs.agg(count(lit(1)).as("n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id"), col("n"),
-          explode(sequence(lit(1L), lit(1L) + pmod(col("doc_id"), lit(3L)))).as("k"))
-        .select(col("doc_id").as("src"),
-          pmod(col("doc_id") * 31L + col("k") * 17L, col("n")).as("dst"))
-      val pr = ops.Graph.pageRank(edges, "src", "dst", iters = 3)
-      pr.select(col("id").as("doc_id"), col("score_e12"))
-    }),
-
-    // THE COMPOSED CRAWL-INGEST PIPELINE (r14): q145's sibling for the
-    // crawl side, under ONE oracle — WARC files → byte-walk record
-    // parse → HTML text extraction → URL canonicalization → canonical-
-    // URL dedup (even/odd doc pairs share a page, the odd twin
-    // differing only by tracking params + fragment: the dedup MUST
-    // fold them) → link-density/length quality gate. Every stage
-    // consumes the previous stage's output; the oracle replays the
-    // whole composition (the WARC leg as the identity it proves,
-    // HTML/URL legs by their regex chains). doc_id is recovered from
-    // the parsed record_id, not threaded through — the pipeline sees
-    // only what a real crawl consumer would.
-    "q159_crawl_pipeline" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val page = (did - pmod(did, lit(2L))).cast("string")
-      val rawUrl = concat(
-        when(pmod(did, lit(2L)) === 0L, lit("HTTPS://")).otherwise(lit("https://")),
-        lit("WWW.crawl"),
-        pmod(did - pmod(did, lit(2L)), lit(5L)).cast("string"),
-        lit(".Example.org/page/"), page,
-        when(pmod(did, lit(2L)) === 1L,
-          lit("?utm_source=mirror&utm_medium=rss#ref")).otherwise(lit("")))
-      val html = concat(
-        lit("<html><head><title>Doc "), page, lit("</title></head>\n<body><p>"),
-        substring(col("text"), 1, 150), lit("</p>"),
-        array_join(array_repeat(lit("<a href=\"/l\">x</a>"),
-          pmod(did, lit(6L)).cast("int")), ""),
-        lit("</body></html>"))
-      val rec = ops.Warc.recordString(
-        concat(lit("<urn:uuid:"), did.cast("string"), lit(">")), rawUrl, html)
-      val parsed = ops.Pipeline.stage("warc_parse", ops.Warc.parseRecords(
-        ops.Warc.asWarcFiles(docs, pmod(did, lit(8L)), did, rec)))
-      val extracted = ops.Pipeline.stage("extract", parsed.select(
-        regexp_extract(col("record_id"), "<urn:uuid:([0-9]+)>", 1)
-          .cast("long").as("doc_id"),
-        ops.Url.normalizeUrl(col("target_uri")).as("url_norm"),
-        ops.Url.registrableDomain(ops.Url.host(col("target_uri"))).as("domain"),
-        ops.Html.extractTitle(col("payload_text")).as("title"),
-        ops.Html.extractText(col("payload_text")).as("body_text"),
-        ops.Html.linkDensityE6(col("payload_text")).as("link_density_e6")))
-      // Canonical-URL keep-first as a combinable argmin — min over a
-      // struct whose FIRST field is the tiebreak key (q114's shape) —
-      // instead of row_number over a window: the aggregate gets a
-      // map-side partial combine, so a hot URL's duplicates fold down
-      // BEFORE the exchange and no per-group sort ever runs (r14
-      // verdict #7). Same winner by construction: doc_id leads the
-      // struct and is unique, so lexicographic min ≡ orderBy(doc_id)
-      // rank 1.
-      extracted
-        .groupBy(col("url_norm"))
-        .agg(min(struct(col("doc_id"), col("domain"), col("title"),
-          col("body_text"), col("link_density_e6"))).as("__w"))
-        .select(col("__w.doc_id").as("doc_id"), col("url_norm"),
-          col("__w.domain").as("domain"), col("__w.title").as("title"),
-          col("__w.body_text").as("body_text"),
-          col("__w.link_density_e6").as("link_density_e6"))
-        .filter(length(col("body_text")) >= 120 &&
-          col("link_density_e6") <= 2500000L)
-        .select(col("doc_id"), col("url_norm"), col("domain"), col("title"),
-          length(col("body_text")).cast("long").as("n_chars"),
-          col("link_density_e6"))
-    }),
-
-    // PER-DOMAIN BOILERPLATE LINE REMOVAL (r14): the site-template pass
-    // (CCNet/trafilatura class) — a line carried by ≥ 60% of the SAME
-    // domain's pages is chrome, deleted from every page of that domain.
-    // The synthesis engineers every contract clause: a domain-specific
-    // NAV + footer (100% → removed), "Subscribe to our newsletter" hot
-    // in domains d0–d4 (every page) but on only ~20% of pages in d5–d9
-    // (SAME string, removed there vs KEPT — frequencies must never pool
-    // across domains), a per-doc body line (kept), and a 2-char "ad"
-    // line everywhere that minLen=3 exempts (kept even at 100% df).
-    // Thresholds are pure integer arithmetic (⌈n·frac/10⁶⌉ via div);
-    // only (domain, 8-byte line hash) rows enter the df exchange.
-    "q160_boilerplate_scrub" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val dom = concat(lit("d"), pmod(did, lit(10L)).cast("string"))
-      val r = expr("doc_id div 10")
-      val synth = concat(
-        lit("NAV d"), pmod(did, lit(10L)).cast("string"),
-        lit(" | home | about"), lit("\n"),
-        when(pmod(did, lit(10L)) < 5L || pmod(r, lit(5L)) === 0L,
-          lit("Subscribe to our newsletter"))
-          .otherwise(concat(lit("Local news item "),
-            pmod(r, lit(11L)).cast("string"))), lit("\n"),
-        substring(col("text"), 1, 200), lit("\n"),
-        lit("ad"), lit("\n"),
-        lit("(c) d"), pmod(did, lit(10L)).cast("string"),
-        lit(" media group"))
-      ops.SpanScrub.scrubBoilerplateLines(
-        docs.select(did, dom.as("dom"), synth.as("text")),
-        "doc_id", "dom", "text",
-        minFracE6 = 600000L, minAbs = 2L, minLen = 3)
-    }),
-
-    // CRAWL PIPELINE WITH BOILERPLATE SCRUB (r15): q159's composition
-    // completed to the CCNet stage order — extract → per-site
-    // boilerplate → dedup — under ONE oracle. WARC files → byte-walk
-    // parse → BLOCK-structured text extraction (extractTextLines: one
-    // DOM block ≈ one line — the representation the line-frequency
-    // pass needs) → per-SITE boilerplate scrub (site = full host:
-    // q159's registrableDomain would pool all five crawl subdomains
-    // into one "example.org" and break the never-pool-frequencies
-    // contract) → canonical-URL keep-first dedup (the q159 argmin
-    // shape) → clean-length quality gate. The synthesis plants the
-    // full scrub contract inside the pipeline: a per-site nav + footer
-    // (100% → removed), "Subscribe to our newsletter" on every page of
-    // sites 0-1 but ~20% of pages of sites 2-4 (removed vs KEPT), the
-    // 2-char "ad" div that minLen=3 exempts, and the per-page title
-    // line (df 2 per site → kept).
-    "q161_crawl_scrub_pipeline" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val page = (did - pmod(did, lit(2L))).cast("string")
-      val site = pmod(did - pmod(did, lit(2L)), lit(5L))
-      val rawUrl = concat(lit("https://www.crawl"), site.cast("string"),
-        lit(".example.org/page/"), page,
-        when(pmod(did, lit(2L)) === 1L,
-          lit("?utm_source=mirror#frag")).otherwise(lit("")))
-      val r = expr("doc_id div 10")
-      val html = concat(
-        lit("<html><head><title>Doc "), page, lit("</title></head><body>"),
-        lit("<div>site"), site.cast("string"),
-        lit(" nav | home | about</div>"),
-        when(site < 2L || pmod(r, lit(5L)) === 0L,
-          lit("<p>Subscribe to our newsletter</p>")).otherwise(lit("")),
-        lit("<p>"), substring(col("text"), 1, 150), lit("</p>"),
-        lit("<div>ad</div>"),
-        lit("<div>(c) site"), site.cast("string"),
-        lit(" media group</div></body></html>"))
-      val rec = ops.Warc.recordString(
-        concat(lit("<urn:uuid:"), did.cast("string"), lit(">")), rawUrl, html)
-      val parsed = ops.Pipeline.stage("warc_parse", ops.Warc.parseRecords(
-        ops.Warc.asWarcFiles(docs, pmod(did, lit(8L)), did, rec)))
-      val extracted = ops.Pipeline.stage("extract", parsed.select(
-        regexp_extract(col("record_id"), "<urn:uuid:([0-9]+)>", 1)
-          .cast("long").as("doc_id"),
-        ops.Url.normalizeUrl(col("target_uri")).as("url_norm"),
-        ops.Url.host(col("target_uri")).as("site"),
-        ops.Html.extractTitle(col("payload_text")).as("title"),
-        ops.Html.extractTextLines(col("payload_text")).as("body_lines")))
-      val scrubbed = ops.Pipeline.stage("scrub",
-        ops.SpanScrub.scrubBoilerplateLines(
-          extracted.select(col("doc_id"), col("site"), col("body_lines")),
-          "doc_id", "site", "body_lines",
-          minFracE6 = 600000L, minAbs = 2L, minLen = 3))
-      val rejoined = extracted.select(col("doc_id"), col("url_norm"),
-          col("site"), col("title"))
-        .join(scrubbed, "doc_id")
-      rejoined
-        .groupBy(col("url_norm"))
-        .agg(min(struct(col("doc_id"), col("site"), col("title"),
-          col("clean_text"), col("removed_lines"))).as("__w"))
-        .select(col("__w.doc_id").as("doc_id"), col("url_norm"),
-          col("__w.site").as("site"), col("__w.title").as("title"),
-          col("__w.clean_text").as("clean_text"),
-          col("__w.removed_lines").as("removed_lines"))
-        .filter(length(col("clean_text")) >= 80)
-        .select(col("doc_id"), col("url_norm"), col("site"), col("title"),
-          length(col("clean_text")).cast("long").as("n_chars_clean"),
-          col("removed_lines"))
-    }),
-
-    // ROBOTS.TXT DECISIONS (r15): RFC 9309 crawl-politeness gating —
-    // parse per-host robots bodies into groups/rules (window-assigned
-    // group ids, host-partitioned), select the fetch agent's group
-    // (named exactly, else the '*' fallback — even hosts carry a
-    // graftbot group, odd hosts only '*', so BOTH selection paths run
-    // under the oracle), translate RFC patterns (prefix, '*' wildcard,
-    // '$' anchor) to engine-portable LIKE, decide by longest-match
-    // with Allow winning ties. The oracle is an INDEPENDENT
-    // hand-derived truth table over the synthesized (host, path)
-    // pairs — stronger than a replay: any parser/matcher bug diverges
-    // from RFC semantics stated directly in SQL.
-    "q162_robots_decisions" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val hk = pmod(did, lit(5L))
-      val host = concat(lit("h"), hk.cast("string"))
-      val body = concat(
-        when(pmod(hk, lit(2L)) === 0L,
-          lit("# policy\nUser-agent: graftbot\nDisallow: /private/\n" +
-            "Allow: /private/pub*\n\n")).otherwise(lit("")),
-        lit("User-agent: *\nDisallow: /tmp/$\nDisallow: /search\n" +
-          "Allow: /search/docs\nDisallow: /*.zip$\n"))
-      val m = pmod(expr("doc_id div 5"), lit(8L))
-      val r = expr("doc_id div 40").cast("string")
-      val path = when(m === 0, concat(lit("/private/secret/"), r))
-        .when(m === 1, concat(lit("/private/pub"), r))
-        .when(m === 2, concat(lit("/search?q="), r))
-        .when(m === 3, concat(lit("/search/docs/"), r))
-        .when(m === 4, lit("/tmp/"))
-        .when(m === 5, concat(lit("/tmp/f"), r))
-        .when(m === 6, concat(lit("/data/f"), r, lit(".zip")))
-        .otherwise(concat(lit("/page/"), r))
-      ops.Robots.decisions(
-        docs.select(host.as("host"), path.as("path")),
-        "host", "path",
-        ops.Robots.parseRules(
-          docs.select(host.as("host"), body.as("txt")).distinct(),
-          "host", "txt"),
-        "graftbot")
-    }),
-
-    // MIME SNIFFING (r15): multimodal ingest dispatch by MAGIC BYTES
-    // (extensions and crawl Content-Type headers lie) — eight payload
-    // kinds synthesized through the repo's own REAL container encoders
-    // (syntheticPng, syntheticMp4, WARC recordString) plus raw
-    // magic-prefixed bytes, sniffed back by the codegen'd when-chain.
-    // The oracle is the independent truth table by construction kind.
-    "q163_mime_sniff" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val k = pmod(did, lit(8L))
-      val textB = encode(substring(col("text"), 1, 64), "UTF-8")
-      val payload = when(k === 0L, ops.Multimodal.syntheticPng(lit(2), lit(2)))
-        .when(k === 1L,
-          concat(unhex(lit("524946461000000057415645")), textB))
-        .when(k === 2L, ops.Multimodal.syntheticMp4(
-          lit(1000L), lit(5000L), lit(64L), lit(48L)))
-        .when(k === 3L, concat(unhex(lit("FFD8FF")), textB))
-        .when(k === 4L, encode(concat(lit("%PDF-1.4 "),
-          substring(col("text"), 1, 32)), "UTF-8"))
-        .when(k === 5L, concat(unhex(lit("1F8B08")), textB))
-        .when(k === 6L, encode(ops.Warc.recordString(
-          concat(lit("<urn:uuid:"), did.cast("string"), lit(">")),
-          lit("https://x/"), substring(col("text"), 1, 40)), "UTF-8"))
-        // "T " guard byte: fixture text starting with a container magic
-        // would otherwise flip the expected fallback row
-        .otherwise(concat(encode(lit("T "), "UTF-8"), textB))
-      docs.select(did, ops.Mime.sniffMime(payload).as("mime"))
-    }),
-
-    // INTEGER K-MEANS (r15): Lloyd's iterations in Long fixed point —
-    // the q158 PageRank doctrine applied to clustering. The ITERATION
-    // ARITHMETIC itself is oracle-gated (two unrolled update rounds
-    // replayed CTE-for-CTE in DuckDB), where the float trainCentroids
-    // path can only carry recall floors (q96/q97). Assignment is a
-    // broadcast join (corpus never shuffles); updates move only
-    // map-side-combined (cell, dim) integer partials.
-    "q164_kmeans_int" -> ((s, dir) =>
-      ops.Kmeans.assignInt(T(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, iters = 2)),
-
-    // SEMDEDUP PROPER (r15): k-means cells as the blocking structure
-    // for embedding dedup (Abbas et al. 2023) — q110 used LSH-bucket
-    // cells; this composes the oracle-exact integer k-means assignment
-    // with the SAME semanticDedup fold, so the full cluster-then-dedup
-    // pipeline sits under one exact oracle (cells integer-exact, pair
-    // scoring the q90/q110-verified cosine fold).
-    "q165_kmeans_semantic_dedup" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val cells = ops.Kmeans.assignInt(e, "vec_id", "embedding",
-        k = 8, iters = 2).select(col("vec_id"), col("cell"))
-      Similarity.semanticDedup(
-          e.select(col("vec_id"), col("embedding")).join(cells, Seq("vec_id")),
-          "cell", 3000L)
-        .select(col("vec_id"), col("cell"))
-    }),
-
-    // K-ANONYMITY SMALL-CELL SUPPRESSION (r15): the release-side gate
-    // for published corpus statistics — rows whose (lang, length-band)
-    // cohort is smaller than k=10 get their quasi columns replaced by
-    // the '*' marker, pooling them into one residual; totals exact,
-    // no cohort under k distinguishable. Corpus never shuffles: one
-    // cell-count exchange, broadcast join back.
-    "q168_k_anonymity" -> ((s, dir) =>
-      ops.Privacy.suppressSmallCells(
-        T(s, dir, "documents").select(col("doc_id"), col("lang"),
-          expr("n_chars div 500").as("band")),
-        Seq("lang", "band"), k = 10L)),
-
-    // FREQUENCY-THRESHOLD RELEASE (r15): the memorization-mitigation
-    // rule — publish an extracted key only when it appears in >= 11
-    // DISTINCT documents; within-doc repetition cannot launder a rare
-    // key past the gate (counting is over distinct (key, doc)). Keys:
-    // the documents' first WORD (heavy natural reuse — the threshold
-    // splits the population both ways) plus a per-doc unique tail row
-    // that must always drop.
-    "q169_frequency_threshold" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val rows = d.select(col("doc_id"),
-          split(col("text"), " ").getItem(0).as("key"))
-        .unionByName(d.select(col("doc_id"),
-          concat(lit("uniq-"), col("doc_id").cast("string")).as("key")))
-      ops.Privacy.frequencyThreshold(rows, "key", "doc_id", minDocs = 11L)
-    }),
-
-    // l-DIVERSITY SUPPRESSION (r16): k-anonymity's attribute-
-    // disclosure sibling — a (lang, length-band) cohort whose
-    // SENSITIVE column (source) holds fewer than l=8 distinct values
-    // pools into the marker even if the cohort is large (everyone in
-    // a low-diversity cohort shares a small sensitive set; releasing
-    // the quasi values discloses it). band=50 chars splits cohorts
-    // both ways at all three SFs (8-36 suppressed / 17-51 kept).
-    // Same shape as q168: one cell-diversity exchange, broadcast
-    // join back, corpus never shuffles.
-    "q173_l_diversity" -> ((s, dir) =>
-      ops.Privacy.suppressLowDiversity(
-        T(s, dir, "documents").select(col("doc_id"), col("lang"),
-          expr("n_chars div 50").as("band"), col("source")),
-        Seq("lang", "band"), "source", l = 8L)),
-
-    // COMPOSED PRIVACY RELEASE (r17): the production posture applies
-    // BOTH gates — k-anonymity first (small cohorts pool into the
-    // marker), then l-diversity over the POOLED cohorts (a cohort that
-    // survived k but shares few sensitive values still suppresses; the
-    // marker cohort itself is re-judged — diverse → it stays '*',
-    // uniform → suppressing it is a no-op, either way pooled). One
-    // oracle replays the whole composition; (band=20, k=8, l=10)
-    // splits three ways at ALL SFs (k-suppressed / l-suppressed-after-
-    // k / kept: 382/93/25 @ sf0.001, 319/126/55 @ sf0.01,
-    // 20/48/4932 @ sf0.1). Scale shape unchanged: each gate is one
-    // cell-sized exchange + a broadcast join back; the corpus never
-    // shuffles in either stage.
-    "q176_privacy_compose" -> ((s, dir) =>
-      ops.Privacy.suppressLowDiversity(
-        ops.Privacy.suppressSmallCells(
-          T(s, dir, "documents").select(col("doc_id"), col("lang"),
-            expr("n_chars div 20").as("band"), col("source")),
-          Seq("lang", "band"), k = 8L),
-        Seq("lang", "band"), "source", l = 10L)),
-
-    // POLITENESS FETCH SCHEDULE (r15): the frontier stage between
-    // robots decisions and the fetch fleet — q162's allow/deny
-    // composed with Crawl-delay (the de-facto REP extension) into
-    // per-host fetch slots: rank allowed URLs per host, slot k fires
-    // at (k−1)·delay. Named-group delay (2.5 s, fractional) on even
-    // hosts, '*' delay (10 s) on odd — BOTH delay-selection paths run
-    // under the oracle, and maxPerHost=5 makes the rank cut a
-    // WindowGroupLimit (map-side heap — a 10⁸-page host never sorts).
-    "q167_fetch_schedule" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val hk = pmod(did, lit(5L))
-      val host = concat(lit("h"), hk.cast("string"))
-      val body = concat(
-        when(pmod(hk, lit(2L)) === 0L,
-          lit("User-agent: graftbot\nCrawl-delay: 2.5\n" +
-            "Disallow: /private/\nAllow: /private/pub*\n\n"))
-          .otherwise(lit("")),
-        lit("User-agent: *\nCrawl-delay: 10\nDisallow: /tmp/$\n" +
-          "Disallow: /search\nAllow: /search/docs\nDisallow: /*.zip$\n"))
-      val m = pmod(expr("doc_id div 5"), lit(8L))
-      val r = expr("doc_id div 40").cast("string")
-      val path = when(m === 0, concat(lit("/private/secret/"), r))
-        .when(m === 1, concat(lit("/private/pub"), r))
-        .when(m === 2, concat(lit("/search?q="), r))
-        .when(m === 3, concat(lit("/search/docs/"), r))
-        .when(m === 4, lit("/tmp/"))
-        .when(m === 5, concat(lit("/tmp/f"), r))
-        .when(m === 6, concat(lit("/data/f"), r, lit(".zip")))
-        .otherwise(concat(lit("/page/"), r))
-      val bodies = docs.select(host.as("host"), body.as("txt")).distinct()
-      ops.Robots.fetchSchedule(
-        docs.select(host.as("host"), path.as("path")), "host", "path",
-        ops.Robots.parseRules(bodies, "host", "txt"),
-        ops.Robots.crawlDelays(bodies, "host", "txt", "graftbot"),
-        "graftbot", defaultDelayMs = 1000L, maxPerHost = Some(5))
-    }),
-
-    // VECTOR CURATION PIPELINE (r15): the SemDeDup→prototype chain of
-    // an embedding-curation deployment (cluster → within-cell dedup →
-    // rank survivors by distance to their cell prototype, Sorscher et
-    // al. NeurIPS'22) composed under ONE exact oracle — every stage is
-    // integer-exact (kmeans cells, cosine e4 drop rule, e6 centroid
-    // distances), so the whole pipeline hash-matches, not just gates.
-    // Stage boundary after the cell join: kmeans output is consumed by
-    // both semanticDedup internals (reps + two joins).
-    "q166_vector_curation" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val cells = ops.Kmeans.assignInt(e, "vec_id", "embedding",
-        k = 8, iters = 2).select(col("vec_id"), col("cell"))
-      val withCell = ops.Pipeline.stage("vcur_cells",
-        e.select(col("vec_id"), col("embedding")).join(cells, Seq("vec_id")))
-      val survivors = Similarity.semanticDedup(withCell, "cell", 3000L)
-      Similarity.prototypicality(survivors, "vec_id", "cell", "embedding",
-        keepPerCell = 20)
-        .withColumnsRenamed(Map("rank" -> "cell_rank"))
-    }),
-
-    // (selective predicates keep the difference non-empty at test SFs —
-    // with only ~150 users every unfiltered per-type user set is equal)
-    "q50_except" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.filter(col("event_type") === "purchase" && col("value") > 95)
-        .select(col("user_id"))
-        .except(e.filter(col("event_type") === "error" && col("value") > 90)
-          .select(col("user_id")))
-    }),
-
-    // ------------------------------------------------------------------
-    // q94-q99: DRIVER-VISIBLE floors for the six rows-only probabilistic
-    // queries. Each re-runs the approximate operator alongside its exact
-    // Spark baseline and emits the measured bound as data under a
-    // CONSTANT oracle — the correctness gate now checks recall/error
-    // numerically every round (previously only the spec suite did).
-    // Floors are calibrated against measured values at sf0.01 AND sf0.1
-    // (GateProbe): a floor sits well under the measured value, so it
-    // catches collapse (hash/params regressions), not noise — and the
-    // measurements are deterministic anyway (seeded hyperplanes).
-    // ------------------------------------------------------------------
-
-    // q33's gate (teeth r16): the raw fixture embeddings are near-iid —
-    // LSH's worst case — so the old floor (0.05, measured 0.10-0.125)
-    // could only catch collapse. The r15 verdict ask plants CLUSTERED
-    // structure in-query instead (the q157 synthesis doctrine, oracle-
-    // replayable integer arithmetic): 16 near-orthogonal ±1 centers
-    // (the c·i cross term decorrelates dims across clusters), ±0.05
-    // noise → angular cluster radius ≈ 0.05 rad, so a CORRECT 4-plane
-    // LSH keeps same-cluster neighbors in-bucket (P[plane splits a
-    // pair] ≈ 0.1rad/π per plane) and recall is high — measured
-    // recall@5: 1.00 @ sf0.01 AND sf0.1 (GateProbe). Floor 0.50 fails
-    // on any hyperplane/sign/bucket regression with 2x margin while
-    // the q33 rows-only entry keeps pricing the raw-fixture path.
-    "q94_lsh_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val vid = col("vec_id")
-      // staged: interpreted HOF synthesis consumed by both join sides
-      val structured = ops.Pipeline.stage("lsh_gate_synth", emb.select(vid,
-        transform(sequence(lit(0), lit(63)), i => {
-          val c = pmod(vid, lit(16L))
-          val center = (pmod(c * 31L + i.cast("long") * 17L +
-            c * i.cast("long") * 7L, lit(19L)).cast("double") - 9.0) / 9.0
-          val eps = (pmod(vid * 7L + i.cast("long") * 3L, lit(11L))
-            .cast("double") - 5.0) / 5.0 * 0.05
-          (center + eps).cast("float")
-        }).as("embedding")))
-      val q = structured.filter(col("vec_id") < 8)
-      recallGate(Similarity.lshTopK(q, structured, 5, nPlanes = 4),
-        Similarity.bruteForceTopK(q, structured, 5),
-        Seq("query_id", "neighbor_id"), 5000L)
-    }),
-
-    // q54's gate — the production multi-table path (measured 0.975 @
-    // sf0.01, 0.90 @ sf0.1; floor 0.85 keeps margin below BOTH — a
-    // floor equal to a measured value would gate on exact equality)
-    "q95_lsh_multi_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      recallGate(Similarity.lshTopKMulti(q, emb, 5, nPlanes = 4, nTables = 16),
-        Similarity.bruteForceTopK(q, emb, 5),
-        Seq("query_id", "neighbor_id"), 8500L)
-    }),
-
-    // q36's gate (teeth r17 — the q94 treatment): on raw near-iid
-    // fixtures untrained IVF measured 0.175/0.075 and the old 0.05
-    // floor could only catch total collapse. The same planted
-    // 16-cluster synthesis as q94 instead: sign-sum cells keep a tight
-    // cluster in ONE cell, so single-probe recall is high when the
-    // bucketing is correct — measured 0.925 @ sf0.01, 1.00 @ sf0.1
-    // (GateProbe). Floor 0.45 fails on any cell/sign/bucket regression
-    // with 2x margin; q36 keeps pricing the raw-fixture path rows-only.
-    "q96_ivf_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val vid = col("vec_id")
-      val structured = ops.Pipeline.stage("ivf_gate_synth", emb.select(vid,
-        transform(sequence(lit(0), lit(63)), i => {
-          val c = pmod(vid, lit(16L))
-          val center = (pmod(c * 31L + i.cast("long") * 17L +
-            c * i.cast("long") * 7L, lit(19L)).cast("double") - 9.0) / 9.0
-          val eps = (pmod(vid * 7L + i.cast("long") * 3L, lit(11L))
-            .cast("double") - 5.0) / 5.0 * 0.05
-          (center + eps).cast("float")
-        }).as("embedding")))
-      val q = structured.filter(col("vec_id") < 8)
-      recallGate(Similarity.ivfTopK(q, structured, 5, nCells = 8),
-        Similarity.bruteForceTopK(q, structured, 5),
-        Seq("query_id", "neighbor_id"), 4500L)
-    }),
-
-    // q58's gate — trained codebook + 2-probe (measured 0.90 @ sf0.01,
-    // 0.975 @ sf0.1)
-    "q97_ivf_trained_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val cents = Similarity.trainCentroids(emb, nCells = 8, iters = 2)
-      recallGate(Similarity.ivfTopKTrained(q, emb, 5, cents, nProbe = 2),
-        Similarity.bruteForceTopK(q, emb, 5),
-        Seq("query_id", "neighbor_id"), 8500L)
-    }),
-
-    // q35's gate, PLANTED-STRUCTURE edition (r18 — the q94/q96
-    // treatment, verdict #3): the old gate measured pair recall on
-    // near-uniform vectors at cos ≥ 0.30 — the info-theoretically-poor
-    // regime (hyperplane agreement p ≈ 0.60 → p^8 per table; measured
-    // 0.144/0.159, floor 0.10 could only catch total collapse, and its
-    // two-mode ratio was the repo's one 1.3x breach). Production
-    // near-dup thresholds (0.85+) sit in the HIGH-recall regime, so
-    // the gate now measures THAT: the q96 16-cluster synthesis
-    // (tight eps=0.05 clusters) with the cluster id as the label,
-    // engineered pairs at cos ≥ 0.85, exact within-label baseline.
-    // Measured 1.00 @ sf0.001/0.01/0.1 (GateProbe r18); floor 0.50
-    // fails on any plane/table/bucket regression with 2x margin. The
-    // uniform-regime number stays recorded in SCALE.md; q35 keeps
-    // pricing the raw-fixture path rows-only.
-    "q98_cosine_neardup_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val vid = col("vec_id")
-      val structured = ops.Pipeline.stage("neardup_gate_synth", emb.select(
-        vid,
-        transform(sequence(lit(0), lit(63)), i => {
-          val c = pmod(vid, lit(16L))
-          val center = (pmod(c * 31L + i.cast("long") * 17L +
-            c * i.cast("long") * 7L, lit(19L)).cast("double") - 9.0) / 9.0
-          val eps = (pmod(vid * 7L + i.cast("long") * 3L, lit(11L))
-            .cast("double") - 5.0) / 5.0 * 0.05
-          (center + eps).cast("float")
-        }).as("embedding"),
-        pmod(vid, lit(16L)).cast("int").as("label")))
-      recallGate(
-        Similarity.cosineNearDupPairsMulti(structured, minSimE4 = 8500L,
-          nPlanes = 8, nTables = 8),
-        Similarity.cosinePairsLabelExact(structured, "label", 8500L)
-          .select(col("id_a"), col("id_b")),
-        Seq("id_a", "id_b"), 5000L)
-    }),
-
-    // q48's gate — per-day HLL relative error vs the exact distinct
-    // (measured max 0.8% @ sf0.01, 1.4% @ sf0.1 at rsd 0.02; bound 5%).
-    // Fully SQL-expressible day set, so the oracle checks every day.
-    "q99_uv_approx_error_gate" -> ((s, dir) =>
-      T(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(approx_count_distinct(col("user_id"), 0.02).as("a"),
-          countDistinct(col("user_id")).as("x"))
-        .select(col("dt"),
-          (abs(col("a") - col("x")) * 10000L <= col("x") * 500L).as("within_bound"))),
-
-    // T1 at CJK parity — the reference's own fixture shape ("Apple手机"
-    // product titles through IK → keyword rows, KeywordUtil.scala:18-42):
-    // deterministic CJK titles keyed by doc_id flow through the
-    // codegen'd FMM dictionary tokenizer (CjkSegmenter), explode, and
-    // count. The oracle hand-pins the expected segmentation of each
-    // template — longest-match priority (平板电脑 over 平板+电脑),
-    // latin/CJK run splitting, and OOV single-char fallback are all
-    // under the hash gate end-to-end.
-    "q100_cjk_keywords" -> ((s, dir) => {
-      val titles = array(
-        lit("Apple手机壳促销"), lit("华为手机充电器"), lit("小米蓝牙耳机"),
-        lit("三星平板电脑保护套"), lit("苹果笔记本电脑"), lit("无线键盘鼠标套装"),
-        lit("智能手表运动版"), lit("数据线两条装"))
-      T(s, dir, "documents")
-        .select(element_at(titles, pmod(col("doc_id"), lit(8L)).cast("int") + 1)
-          .as("title"))
-        .select(explode(TF.tokenize(lower(col("title")))).as("kw"))
-        .groupBy(col("kw")).agg(count(lit(1)).as("kw_ct"))
-    }),
-
-    // The production KEEP-POLICY under the exact gate: one survivor per
-    // q52 near-dup cluster, chosen by score (longest doc wins, ties by
-    // id) — a derived view over the shared report artifact, so the pair
-    // + CC pipeline is not recomputed. Unclustered docs pass through an
-    // anti join untouched; only the clustered minority is windowed
-    // (plan-locked for dedupByPairsScored, same core).
-    "q101_dedup_keep_best" -> ((s, dir) =>
-      dedupReport(s, dir)
-        .keepBest(T(s, dir, "documents"), "doc_id", "n_chars")
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
-
-    // Substring-level duplicate REMOVAL (Lee et al. ACL'22 made
-    // shuffle-friendly): every 40-char window at stride 4 occurring in
-    // >3 distinct docs is CUT from its carriers (boilerplate scrub —
-    // the surgical counterpart of q80's pair detection); the per-doc
-    // surgery is one zero-shuffle fold over the sorted hot offsets.
-    // The oracle reconstructs each document character-by-character
-    // against the same hot-window set — full clean-text equality.
-    "q102_scrub_spans" -> ((s, dir) =>
-      ops.SpanScrub.scrubRepeatedSpans(T(s, dir, "documents"),
-        "doc_id", "text", k = 40, stride = 4, maxDf = 3)),
-
-    // Temperature-based dataset mixing (the mT5 multilingual recipe):
-    // ~300 docs sampled with per-language targets ∝ n^0.5 — small
-    // languages up-weighted vs proportional. Every step engine-exact
-    // (e3 fixed-point sqrt weights, integer floor-division targets,
-    // portable-mix rank), so the oracle replays the full selection.
-    "q103_temperature_mix" -> ((s, dir) =>
-      Sampling.temperatureMix(T(s, dir, "documents"), "lang", "doc_id",
-          totalN = 300)
-        .select(col("doc_id"), col("lang"))),
-
-    // Pure-SQL-TEXT lifecycle parity — the reference's SQL apps declare
-    // tables, functions, query, and sink entirely as SQL strings
-    // (ProvinceStatsSqlApp.scala:54-84: DDL → SELECT → INSERT). The
-    // Spark-batch equivalent of each leg: table DDL = temp-view
-    // registration of the parquet catalog (Tables.registerAll),
-    // function DDL = SqlFunctions.registerAll (the UDAF rides in SQL by
-    // its registered name), and the query + sink are SQL text — the
-    // result view IS the sink a SQL user INSERTs from. Same grouped
-    // star-join semantics as q03, under its own oracle.
-    "q104_province_stats_sql" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      graft.functions.SqlFunctions.registerAll(s)
-      s.sql("""
-        CREATE OR REPLACE TEMPORARY VIEW province_stats AS
-        SELECT /*+ BROADCAST(customer), BROADCAST(nation), BROADCAST(region) */
-          r_name, n_name,
-          graft_exact_distinct(o_orderkey) AS order_count,
-          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_amount
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        GROUP BY r_name, n_name""")
-      s.sql("SELECT * FROM province_stats")
-    }),
-
-    // temperatureMix's ARBITRARY-alpha gate (q94-style): the alpha=0.3
-    // path goes through pow, whose last ulp is libm-dependent — so no
-    // full-replay oracle (a floor flip would hash-fail on a correct
-    // build). Instead BOTH engines independently run the selection at
-    // alpha=0.3 and check the per-stratum sampled count against the
-    // IDEAL real-valued target totalN·n^α/Σn^α within an absolute band
-    // of 3 rows (fixed-point floors + integer division lose < 2; see
-    // temperatureMix's arithmetic notes). A pow/overflow regression
-    // that skews any stratum flips within_band and hash-fails.
-    "q105_temperature_mix_alpha_gate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val sampled = Sampling.temperatureMix(docs, "lang", "doc_id",
-        totalN = 300, alpha = 0.3)
-      val got = sampled.groupBy(col("lang")).agg(count(lit(1)).as("c"))
-      val ideal = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .withColumn("w", pow(col("n").cast("double"), lit(0.3)))
-        .withColumn("ideal",
-          lit(300.0) * col("w") / sum(col("w")).over(Window.partitionBy()))
-      ideal.join(got, Seq("lang"), "left")
-        .select(col("lang"),
-          (abs(coalesce(col("c"), lit(0L)).cast("double")
-            - least(col("n").cast("double"), col("ideal"))) <= 3.0)
-            .as("within_band"))
-    }),
-
-    // Cross-SPLIT leakage audit (r10): train→test pairs sharing a
-    // 40-char window at stride 4, with the train/test assignment
-    // derived INLINE from the id (the zero-state split — no assignment
-    // table exists, let alone joins). The oracle replays the portable
-    // split mix AND the window intersection — pair set and shared
-    // counts are exact.
-    "q106_split_leakage" -> ((s, dir) =>
-      Dedup.splitLeakagePairs(T(s, dir, "documents"), "doc_id", "text",
-        Seq("train" -> 0.8, "test" -> 0.2), "train", "test",
-        k = 40, stride = 4)),
-
-    // BM25 top-k retrieval (r10): inverted-postings shape without the
-    // index — literal IN filter on the query terms before any
-    // exchange, e9-integer score partials (order-independent sum),
-    // TakeOrderedAndProject top-k. The single non-correctly-rounded
-    // op (ln) is e6-quantized per (term, df) with verified margins —
-    // everything else replays bit-for-bit in the oracle.
-    "q107_bm25_topk" -> ((s, dir) =>
-      ops.Retrieval.bm25TopK(T(s, dir, "documents"), "doc_id", "text",
-        Seq("dup", "spark", "vector", "stream", "hash", "scan"),
-        k1 = 1.2, b = 0.75, topK = 20)),
-
-    // INCREMENTAL BM25 INDEX (r17): the retrieval family joins the
-    // incremental regime — BM25's inputs decompose into ADDITIVE
-    // sufficient statistics (postings rows + (n_docs, n_toks)
-    // counters; a document belongs to exactly one ingest batch), so
-    // an index built as THREE slice appends must answer queries
-    // byte-equal to the one-shot corpus operator. The oracle is
-    // q107's replay VERBATIM — equality is the gate. Streaming face
-    // (per-batch appends, two-table replay guards) is spec-gated in
-    // Bm25IngestSpec; at 100 TB the postings table is laid out by
-    // term so a query prunes to |q| buckets instead of tokenizing
-    // the corpus.
-    // EXACT PHRASE MATCH (r17): the positional side of the retrieval
-    // index — adjacent-token phrase queries over (term, doc_id, pos)
-    // postings, one 2-gram and one 3-gram (both attested at ALL SFs:
-    // "part filter" 46/46/~340 occurrences, "big order scan" 5/3/10).
-    // Postings filter to the phrase's terms BEFORE any exchange; the
-    // n-way join is co-partitioned on (doc_id, pos − slot) so every
-    // word of one occurrence meets at its anchor. Oracle replays the
-    // adjacency count as a DuckDB list lambda over token positions.
-    "q180_phrase_match" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      ops.Retrieval.phraseMatch(docs, "doc_id", "text",
-          Seq("part", "filter"))
-        .select(lit("part filter").as("phrase"), col("doc_id"), col("n_hits"))
-        .unionByName(
-          ops.Retrieval.phraseMatch(docs, "doc_id", "text",
-              Seq("big", "order", "scan"))
-            .select(lit("big order scan").as("phrase"), col("doc_id"),
-              col("n_hits")))
-    }),
-
-    // INCREMENTAL POSITIONAL INDEX (r17): q179's decomposition for the
-    // phrase side — positional postings are position FACTS, trivially
-    // additive across disjoint batches, so a 3-slice index build must
-    // answer q180's phrase queries byte-equal (the oracle is q180's
-    // replay VERBATIM). Streaming face (single-table append, the
-    // batch's own rows as the replay marker) spec-gated in
-    // PhraseIngestSpec.
-    "q187_phrase_index" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val postings = (0L until 3L).map(i =>
-          ops.Retrieval.positionalPostings(
-            docs.filter(pmod(col("doc_id"), lit(3L)) === i), "doc_id", "text"))
-        .reduce(_ unionByName _)
-      ops.Retrieval.phraseMatchFromIndex(postings, Seq("part", "filter"))
-        .select(lit("part filter").as("phrase"), col("doc_id"), col("n_hits"))
-        .unionByName(
-          ops.Retrieval.phraseMatchFromIndex(postings,
-              Seq("big", "order", "scan"))
-            .select(lit("big order scan").as("phrase"), col("doc_id"),
-              col("n_hits")))
-    }),
-
-    // MULTI-PATTERN SUBSTRING SCAN (r17): Aho–Corasick over a
-    // query-constant pattern dictionary — the substring face of the
-    // decontamination family (benchmark answer strings, canaries,
-    // banned phrases land mid-paragraph where key and n-gram gates
-    // can't see them). One codegen'd O(|text|) pass per document
-    // regardless of pattern count; the automaton rides the expression
-    // (driver-compiled, broadcast-sized), zero joins, zero exchanges.
-    // The set exercises every automaton behavior on attested corpus
-    // strings: self-overlap ("batch batch" in "batch batch batch"
-    // counts twice), suffix-nesting ("ta" fires inside both "data"
-    // and "table"), cross-word substrings ("an or" inside
-    // "scan order…", "dow win" inside "window window"), and an
-    // absent pattern (contributes no rows). Oracle replays each
-    // pattern as a per-position DuckDB list lambda.
-    "q181_multi_pattern_scan" -> ((s, dir) =>
-      ops.Decontaminate.multiPatternHits(T(s, dir, "documents"),
-        "doc_id", "text",
-        Seq("batch batch", "data", "ta", "an or", "dow win",
-          "missing-from-corpus"))),
-
-    // MULTI-PATTERN SCRUB (r17): the redaction face of q181's
-    // automaton — remove every character covered by any pattern
-    // occurrence (mask-union: overlapping "batch batch" runs and
-    // "ta"-inside-"data" nesting compose order-free, no
-    // leftmost-longest tie rule to replay). Same dictionary as q181 so
-    // the two faces cross-check; oracle rebuilds each text from the
-    // uncovered positions via the same per-position lambda.
-    "q185_multi_pattern_scrub" -> ((s, dir) =>
-      ops.Decontaminate.multiPatternScrub(T(s, dir, "documents"),
-        "doc_id", "text",
-        Seq("batch batch", "data", "ta", "an or", "dow win",
-          "missing-from-corpus"))),
-
-    "q179_bm25_index" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val slices = (0L until 3L).map(i =>
-        docs.filter(pmod(col("doc_id"), lit(3L)) === i))
-      val postings = slices.map(ops.Retrieval.bm25Postings(_, "doc_id", "text"))
-        .reduce(_ unionByName _)
-      val stats = slices.map(ops.Retrieval.bm25Stats(_, "doc_id", "text"))
-        .reduce(_ unionByName _)
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_toks")).as("n_toks"))
-      ops.Retrieval.bm25TopKFromIndex(postings, stats,
-        Seq("dup", "spark", "vector", "stream", "hash", "scan"),
-        k1 = 1.2, b = 0.75, topK = 20)
-    }),
-
-    // Graded n-gram contamination (r10): per-doc fraction of distinct
-    // word 5-grams appearing in a benchmark set (doc_id % 10 == 0
-    // plays the eval set). Completes the decontamination family:
-    // q64/q85 are boolean key hits, this is the partial-leak measure.
-    "q108_ngram_contamination" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      ops.Decontaminate.ngramOverlapFraction(
-        d.filter(col("doc_id") % 10 =!= 0),
-        d.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 5)
-    }),
-
-    // Token-budget sampling (r10): per-language char budget filled in
-    // the deterministic mix order via the distributed prefix-sum
-    // shape — whole coarse buckets pass/drop map-side, only the
-    // boundary bucket pays a window cumsum. The oracle replays the
-    // single-window definition; the two must select the same row set.
-    "q109_token_budget" -> ((s, dir) =>
-      Sampling.tokenBudgetSample(
-        T(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
-        Seq("lang"), "doc_id", "n_chars", budget = 12000L, nBuckets = 16)
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
-
-    // SemDeDup (r10): drop every vector with a lower-id same-cell
-    // neighbor at cos_e4 >= 3000 — pair scoring IS q90's
-    // cosinePairsLabelAuto (one definition, one oracle-verified fold).
-    "q110_semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(T(s, dir, "embeddings"), "label", 3000L)
-        .select(col("vec_id"), col("label"))),
-
-    // Fractional-epoch upsampling (r10): 0.4 epochs of en, 2.5 of zh,
-    // 1.0 of de; es/fr unlisted -> dropped. Milli-epoch integer
-    // arithmetic makes the partial-copy cut engine-exact; the oracle
-    // replays rank, cut, and copy generation.
-    "q111_epoch_upsample" -> ((s, dir) =>
-      Sampling.epochUpsample(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", "doc_id", Map("en" -> 0.4, "zh" -> 2.5, "de" -> 1.0))
-        .select(col("doc_id"), col("lang"), col("epoch"))),
-
-    // Unicode NFC normalization (r10): the corpus is already NFC, so
-    // decomposed text is synthesized inline — even doc_ids get a suffix
-    // with combining marks (e+U+0301, A+U+030A, o+U+0308), odd ids a
-    // plain suffix exercising the zero-allocation fast path. The oracle
-    // is DuckDB's own nfc_normalize over the identical synthesis.
-    "q112_nfc_normalize" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      val synth = concat(substring(col("text"), 1, 60),
-        when(col("doc_id") % 2 === 0, lit(" Café Ångström"))
-          .otherwise(lit(" plain suffix")))
-      d.select(col("doc_id"),
-        TF.nfcNormalize(synth).as("norm_text"),
-        (TF.nfcNormalize(synth) =!= synth).as("changed"))
-    }),
-
-    // LM quality scoring (r10): bigram Stupid Backoff trained on the
-    // doc_id % 10 == 0 split (playing "the reference corpus"), scoring
-    // the rest — the CCNet "looks like Wikipedia" gate. ln is e6-floored
-    // per position (q107's doctrine); sums are integer.
-    "q113_lm_quality" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      ops.LmScore.bigramScore(
-        d.filter(col("doc_id") % 10 =!= 0),
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text")
-    }),
-
-    // ADDITIVE LM-MODEL BUILD (r17): the q179 decomposition applied to
-    // the LM family — an n-gram model is count tables, and counts over
-    // disjoint slices SUM to counts over the union, so a model
-    // assembled from THREE slice-count appends must score byte-equal
-    // to one-shot training (the oracle is q113's replay VERBATIM —
-    // equality is the gate). This is the read path of a standing
-    // reference model maintained by per-batch count appends
-    // (streaming face spec-gated in LmIngestSpec); at 100 TB the
-    // count tables are vocab-sized artifacts, never corpus-sized.
-    "q183_lm_additive" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val ref = d.filter(col("doc_id") % 10 === 0)
-      val slices = (0L until 3L).map(i =>
-        ref.filter(pmod(col("doc_id"), lit(3L)) === i))
-      val model = ops.LmScore.modelFromCounts(
-        slices.map(ops.LmScore.unigramCounts(_, "doc_id", "text"))
-          .reduce(_ unionByName _),
-        slices.map(ops.LmScore.bigramCounts(_, "doc_id", "text"))
-          .reduce(_ unionByName _))
-      ops.LmScore.scoreWithModel(
-        d.filter(col("doc_id") % 10 =!= 0), model, "doc_id", "text")
-    }),
-
-    // DSIR importance scoring (r17, Xie et al. NeurIPS 2023): weight
-    // every raw-pool document by its token-level log-likelihood ratio
-    // between the TARGET distribution (doc_id % 10 == 0 plays the
-    // clean split, as in q113) and the RAW pool itself — the published
-    // data-selection recipe ("resample raw so it looks like target"),
-    // completing the quality family: q21/q69 = well-formedness,
-    // q113 = absolute reference likelihood, this = the target-vs-pool
-    // CONTRAST. Add-one smoothing over the union vocabulary; each ln
-    // e6-floored per token (q113's doctrine), integer sums per doc.
-    // Selection composes downstream (perplexityBuckets / capPerStratum
-    // by dsir_e6) — the score is the new primitive.
-    "q182_dsir_importance" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val rawPool = d.filter(col("doc_id") % 10 =!= 0)
-      ops.LmScore.importanceScore(rawPool,
-        d.filter(col("doc_id") % 10 === 0), rawPool, "doc_id", "text")
-    }),
-
-    // CURATION PIPELINE (r17): the session's new ops composed in
-    // production order under ONE replay — multi-pattern
-    // decontamination (drop any document containing a banned phrase,
-    // the q181 automaton's gate face) → DSIR importance scoring
-    // against the clean target split → per-language top-quarter keep
-    // (q184's cut). The composition is the point: the banned-phrase
-    // filter changes the pool, so every count, λ, rank, and cut
-    // boundary downstream must move EXACTLY as the oracle's filtered
-    // replay moves them.
-    "q189_curation_pipeline" -> ((s, dir) => {
-      val clean = ops.Decontaminate.multiPatternFilter(
-        T(s, dir, "documents"), "text", Seq("batch batch", "dow win"))
-      val rawPool = clean.filter(col("doc_id") % 10 =!= 0)
-      val scored = ops.LmScore.importanceScore(rawPool,
-          clean.filter(col("doc_id") % 10 === 0), rawPool, "doc_id", "text")
-        .join(rawPool.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      ops.LmScore.perplexityBuckets(scored, Seq("lang"), "doc_id",
-          "dsir_e6", cutsE6 = Seq(250000L), labels = Seq("keep", "drop"))
-        .filter(col("bucket") === "keep")
-        .select(col("doc_id"), col("lang"),
-          col("rank_in_group"), col("n_in_group"))
-    }),
-
-    // ADDITIVE DSIR MODEL (r17): the importance model's raw side is
-    // unigram counts, and the raw pool GROWS per ingest batch — so a
-    // model assembled from THREE raw-pool count slices must score
-    // byte-equal to one-shot training (oracle = q182's replay
-    // VERBATIM). The LmIngest unigram table serves the raw side
-    // directly; the target stays a fixed curation asset.
-    "q188_dsir_additive" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val rawPool = d.filter(col("doc_id") % 10 =!= 0)
-      val rawCounts = (0L until 3L).map(i =>
-          ops.LmScore.unigramCounts(
-            rawPool.filter(pmod(col("doc_id"), lit(3L)) === i),
-            "doc_id", "text"))
-        .reduce(_ unionByName _)
-      val model = ops.LmScore.importanceModelFromCounts(
-        ops.LmScore.unigramCounts(
-          d.filter(col("doc_id") % 10 === 0), "doc_id", "text"),
-        rawCounts)
-      ops.LmScore.importanceWithModel(rawPool, model, "doc_id", "text")
-    }),
-
-    // DSIR SELECTION (r17): the composed recipe — q182's importance
-    // scores ranked per language, top quarter kept (the
-    // perplexityBuckets integer-ceil cut arithmetic with a single
-    // 250000-e6 cut). One new-op query composed from two
-    // independently-oracled pieces under ONE exact replay (the
-    // q166/q176 composition pattern): score join ranks join cut, all
-    // integer once the per-token lns are floored.
-    "q184_dsir_selection" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val rawPool = d.filter(col("doc_id") % 10 =!= 0)
-      val scored = ops.LmScore.importanceScore(rawPool,
-          d.filter(col("doc_id") % 10 === 0), rawPool, "doc_id", "text")
-        .join(rawPool.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      ops.LmScore.perplexityBuckets(scored, Seq("lang"), "doc_id",
-          "dsir_e6", cutsE6 = Seq(250000L), labels = Seq("keep", "drop"))
-        .filter(col("bucket") === "keep")
-        .select(col("doc_id"), col("lang"),
-          col("rank_in_group"), col("n_in_group"))
-    }),
-
-    // Paragraph-level dedup (r10): the corpus text has no paragraph
-    // structure, so it is synthesized inline (both engines build the
-    // identical string): a license-header paragraph shared by ALL docs,
-    // two content chunks (every third doc repeats its first chunk —
-    // a within-doc dup), and a shared footer. Only the corpus-first
-    // occurrence of each paragraph survives.
-    "q114_paragraph_dedup" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      val nn = "\n\n"
-      val synth = concat(
-        lit("Licensed under the Apache License Version 2"), lit(nn),
-        substring(col("text"), 1, 70), lit(nn),
-        when(col("doc_id") % 3 === 0, substring(col("text"), 1, 70))
-          .otherwise(substring(col("text"), 71, 70)), lit(nn),
-        lit("standard footer text"))
-      ops.SpanScrub.dedupParagraphs(
-        d.select(col("doc_id"), synth.as("text")), "doc_id", "text")
-    }),
-
-    // Prototypicality scoring + per-cell diversity cap (Sorscher et al.
-    // NeurIPS'22 prototype pruning): distance of each embedding to its
-    // OWN label's fixed-point mean centroid, ranked within the label,
-    // keep-k flag. Exact oracle: DuckDB replays the identical e6
-    // fixed-point centroid and the same (dist, vec_id) window order.
-    "q115_prototypicality" -> ((s, dir) =>
-      ops.Similarity.prototypicality(
-        T(s, dir, "embeddings"), "vec_id", "label", "embedding",
-        keepPerCell = 10)
-        .withColumnsRenamed(Map("rank" -> "cell_rank"))),
-
-    // Entity resolution: blocked edit-distance pairs over the DISTINCT
-    // part-name dictionary (block = the noun token, the q31-style
-    // exact-as-specified recall contract). Exact oracle: DuckDB's
-    // levenshtein is the same textbook DP distance.
-    "q116_fuzzy_name_pairs" -> ((s, dir) =>
-      ops.FuzzyJoin.dictionaryPairs(
-        T(s, dir, "part"), "p_name", maxDist = 4,
-        blockKey = v => coalesce(split(v, " ").getItem(1), lit("")))),
-
-    // Distributed BPE tokenizer TRAINING (Sennrich et al.): 4 greedy
-    // merge rounds over the word-frequency dictionary. Exact oracle:
-    // DuckDB replays the identical loop — space-joined symbol strings,
-    // leftmost non-overlapping replace as the merge, (ct, lhs, rhs)
-    // argmax per round via scalar subqueries.
-    "q117_bpe_learn" -> ((s, dir) =>
-      ops.BpeTrain.learnMerges(T(s, dir, "documents"), "text", nMerges = 4)),
-
-    // BATCHED BPE (r17): the SAME four merges learned through the
-    // mergeBatch>1 path — per round the pair count runs ONCE, the top
-    // candidates are accepted as the longest provably-independent
-    // strict-separated prefix, and the result must be BYTE-IDENTICAL
-    // to the sequential loop (the oracle is q117's sequential replay,
-    // verbatim — equality IS the gate). At corpus scale this is the
-    // vocab-training cost lever: jobs per vocab entry drop by the mean
-    // accepted-prefix length (measured in SCALE.md; BpeTrainSpec
-    // proves mergeBatch=8 ≡ sequential on real text at spec level).
-    "q175_bpe_batched" -> ((s, dir) =>
-      ops.BpeTrain.learnMerges(T(s, dir, "documents"), "text", nMerges = 4,
-        mergeBatch = 8)),
-
-    // Jaro-Winkler record linkage over the same name dictionary as
-    // q116 — the custom codegen'd expression (Spark has no builtin)
-    // pinned bit-for-bit to DuckDB's operation order, gated at the
-    // e6-floored integer per the engine doctrine.
-    "q118_fuzzy_jw_pairs" -> ((s, dir) =>
-      ops.FuzzyJoin.dictionaryPairsJaro(
-        T(s, dir, "part"), "p_name", minSimE6 = 800000L,
-        blockKey = v => coalesce(split(v, " ").getItem(1), lit("")))),
-
-    // Cross-table linkage: a synthesized dirty dictionary (3rd char
-    // deleted from every part name) resolved against the clean name
-    // dim — best JW match per dirty value via combinable max(struct).
-    // Exact oracle: DuckDB replays corruption, blocking, scoring, and
-    // the (score DESC, candidate DESC) argmax.
-    "q119_fuzzy_best_match" -> ((s, dir) => {
-      val part = T(s, dir, "part")
-      val dirty = part.select(
-        concat(substring(col("p_name"), 1, 2),
-          expr("substring(p_name, 4)")).as("name"))
-      ops.FuzzyJoin.bestMatch(dirty, "name", part, "p_name",
-        minSimE6 = 700000L, blockKey = v => coalesce(split(v, " ").getItem(1), lit("")))
-    }),
-
-    // One-pass column profiling over orders (counts / nulls / exact
-    // distinct / canonical min-max per column). Exact oracle: per-column
-    // UNION ALL with the identical DECIMAL(38,6) / strftime renderings.
-    "q120_profile" -> ((s, dir) =>
-      ops.Profile.summarize(T(s, dir, "orders"))),
-
-    // Equi-width histogram with a fixed range (one pass, stable edges,
-    // under/overflow bins, zero-filled spine). Exact oracle: identical
-    // IEEE bin arithmetic.
-    "q121_histogram" -> ((s, dir) =>
-      ops.Profile.histogram(T(s, dir, "orders"), "o_totalprice",
-        lo = 0.0, hi = 600000.0, nBins = 12)),
-
-    // Batch sessionization by 30-min inactivity gap — per-user session
-    // ordinals every funnel/attribution query joins on. Exact oracle:
-    // the classic lag + running-sum-of-breaks replay.
-    "q122_sessionize" -> ((s, dir) =>
-      ops.Sessionize.assignSessions(
-        T(s, dir, "events").select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts", "event_id", gapSeconds = 1800L)
-        .select(col("event_id"), col("user_id"),
-          col("session_seq"), col("is_session_start"))),
-
-    // TF-IDF cosine document pairs — the VSM sibling of the Jaccard
-    // family. Exact oracle under the hashed-term contract (grouping by
-    // xxhash64(term) == grouping by term, collision-free at test scale):
-    // e3-quantized idf makes weights integers, sums are exact decimals,
-    // the final sqrt/divide is IEEE on both engines.
-    "q123_tfidf_pairs" -> ((s, dir) =>
-      ops.Retrieval.tfidfCosinePairs(
-        T(s, dir, "documents"), "doc_id", "text", minSimE4 = 5000L)),
-
-    // Trailing 1-hour RANGE-frame features per user (count + e6 value
-    // sum). Exact oracle: RANGE frames are value-based, so no tie
-    // column is needed for determinism; integer sums replay exactly.
-    "q124_trailing_features" -> ((s, dir) =>
-      ops.TimeFeatures.trailingStats(
-        T(s, dir, "events").select(col("event_id"), col("user_id"),
-          col("ts"), col("value")),
-        "user_id", "ts", "value", windowSeconds = 3600L)
-        .select(col("event_id"), col("user_id"),
-          col("trail_n"), col("trail_sum_e6"))),
-
-    // Per-event-type z-score outliers over the exponential-ish value
-    // column. Exact oracle: moments from exact integer sums (the
-    // stddev-aggregate order-dependence doctrine), fixed-order IEEE
-    // tail, e4 floors.
-    "q125_zscore_outliers" -> ((s, dir) =>
-      ops.Profile.zscoreOutliers(
-        T(s, dir, "events").select(col("event_id"), col("event_type"), col("value")),
-        "event_id", "value", "event_type")),
-
-    // A-ES weighted sampling without replacement, weight = n_chars
-    // (token-mass-weighted doc selection). Exact oracle: portable mix,
-    // identical ln floor, same (key desc, id) top-k.
-    "q126_weighted_sample" -> ((s, dir) =>
-      ops.Sampling.weightedSample(
-        T(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", "n_chars", k = 100)),
-
-    // Fuzzy canonicalization over q116's pair graph — this puts the
-    // connected-components loop itself under an exact oracle: DuckDB
-    // computes the same components via a recursive-CTE transitive
-    // closure and the same lexicographic-min canonical per component.
-    "q127_fuzzy_canonicalize" -> ((s, dir) =>
-      ops.FuzzyJoin.canonicalize(
-        T(s, dir, "part"), "p_name", maxDist = 4,
-        blockKey = v => coalesce(split(v, " ").getItem(1), lit("")))),
-
-    // The q94-q99 recall/error floors re-pinned at the sf0.1 dump in
-    // ONE query (r11 verdict ask #5): each probabilistic-family gate
-    // recomputes approx-vs-exact at 10× the gate density and must
-    // clear the SAME floor constants (chosen below the measured values
-    // of BOTH dumps from the start). A bucket-collapse that only
-    // manifests at realistic density — the q124 failure mode — flips a
-    // meets_floor here and hash-fails the round.
-    // r20 (verdict next #3 continued): the EXACT baselines — the
-    // brute-force truth set and the exact cosine pair set — are the
-    // audit artifacts here; memoized per (session, sf0.1 dir) so each
-    // rep prices the APPROXIMATE operators under gate, which is what
-    // the query gates. The ivf_trained centroids come from the
-    // standing pq model artifact (same arithmetic, same params).
-    "q128_recall_gates_sf01" -> ((s, dir) => {
-      val d = sf01(dir)
-      val emb = T(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val truth = twinArtifact(s, d, "ann-truth")(
-        Similarity.bruteForceTopK(q, emb, 5))
-      def g(name: String, got: DataFrame, tr: DataFrame,
-            keys: Seq[String], f: Long): DataFrame =
-        recallGate(got, tr, keys, f)
-          .select(lit(name).as("gate"), col("floor_e4"), col("meets_floor"))
-      val hll = T(s, d, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
-        .agg(approx_count_distinct(col("user_id"), 0.02).as("a"),
-          countDistinct(col("user_id")).as("x"))
-        .agg(min(abs(col("a") - col("x")) * 10000L <= col("x") * 500L)
-          .as("meets_floor"))
-        .select(lit("uv_hll").as("gate"), lit(500L).as("floor_e4"),
-          col("meets_floor"))
-      g("lsh", Similarity.lshTopK(q, emb, 5, nPlanes = 4), truth,
-          Seq("query_id", "neighbor_id"), 500L)
-        .union(g("lsh_multi",
-          Similarity.lshTopKMulti(q, emb, 5, nPlanes = 4, nTables = 16), truth,
-          Seq("query_id", "neighbor_id"), 8500L))
-        .union(g("ivf", Similarity.ivfTopK(q, emb, 5, nCells = 8), truth,
-          Seq("query_id", "neighbor_id"), 500L))
-        .union(g("ivf_trained",
-          Similarity.ivfTopKTrained(q, emb, 5,
-            twinArtifact(s, d, "ivf-cents")(
-              Similarity.trainCentroids(emb, nCells = 8, iters = 2)),
-            nProbe = 2),
-          truth, Seq("query_id", "neighbor_id"), 8500L))
-        .union(g("cosine_neardup",
-          Similarity.cosineNearDupPairsMulti(emb, minSimE4 = 3000L,
-            nPlanes = 8, nTables = 8),
-          twinArtifact(s, d, "cos-exact")(
-            Similarity.cosinePairsLabelExact(emb, "label", 3000L)
-              .select(col("id_a"), col("id_b"))),
-          Seq("id_a", "id_b"), 1000L))
-        .union(hll)
-    }),
-
-    // Gopher-rule repetition signals (Rae et al. §A1.1) — line
-    // duplication + heaviest-n-gram mass + duplicated-5-gram mass per
-    // document, exact integer e6 floors. The fixture corpus has no
-    // newlines, so the "line" split runs at word granularity (delim
-    // " ") — degenerate but fully exercised: the dup_line columns
-    // become word-repetition fractions. Exact oracle: DuckDB replays
-    // split/count/clamp with the same `//` integer division.
-    "q129_repetition" -> ((s, dir) =>
-      ops.Quality.repetitionSignals(T(s, dir, "documents"),
-        "doc_id", "text", topNs = Seq(2, 3), dupN = 5, lineDelim = " ")),
-
-    // The first-failing-reason repetition gate over q129's signals,
-    // thresholds chosen to spread documents across all four reasons on
-    // this corpus. Exact oracle: the same CASE over the same signal
-    // SQL, counts per reason.
-    "q130_repetition_gate" -> ((s, dir) =>
-      ops.Quality.repetitionSignals(T(s, dir, "documents"),
-        "doc_id", "text", topNs = Seq(2), dupN = 3, lineDelim = " ")
-        .select(ops.Quality.repetitionGate(
-          maxDupLineFracE6 = 970000L, maxDupLineCharFracE6 = 950000L,
-          maxTop2CharFracE6 = 100000L, maxDupNCharFracE6 = 20000L,
-          dupNCol = "dup3gram_char_frac_e6")
-          .as("reason"))
-        .groupBy(col("reason")).agg(count(lit(1)).as("ct"))),
-
-    // BPE ENCODE under a fixed 4-merge list — the apply side of q117's
-    // trainer, sharing its sentinel-replace machinery: the whole encode
-    // is |merges| chained codegen'd replaces over the distinct-word
-    // dictionary, and the corpus side is one (id, word) count join.
-    // Exact oracle: DuckDB replays the identical nested replace chain.
-    "q131_bpe_token_counts" -> ((s, dir) =>
-      ops.BpeTrain.tokenCounts(T(s, dir, "documents"), "doc_id", "text",
-        Seq("a" -> "t", "s" -> "t", "t" -> "h", "at" -> "a"))),
-
-    // EXACT distributed quantiles (discrete: value at rank
-    // ⌈q·n/10⁶⌉ — an actual element, zero float arithmetic in the
-    // selection) via range-exchange + per-partition offset windows —
-    // never a global sort to one partition. Exact oracle: row_number
-    // rank replay with the same integer ceil and the q120 canonical
-    // renderings.
-    "q132_quantiles" -> ((s, dir) =>
-      ops.Profile.quantiles(T(s, dir, "orders"),
-        Seq("o_totalprice", "o_custkey", "o_orderdate"))),
-
-    // CCNet head/middle/tail bucketing per language — score-agnostic
-    // (n_chars stands in for the LM score here; the LM composition is
-    // spec-covered), rank = (score DESC NULLS LAST, id) with the
-    // integer-ceil cut arithmetic. Exact oracle: the same window
-    // replayed.
-    "q133_perplexity_buckets" -> ((s, dir) =>
-      ops.LmScore.perplexityBuckets(
-        T(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars")),
-        Seq("lang"), "doc_id", "n_chars")),
-
-    // Per-doc top-3 TF-IDF keywords — q123's exact integer-weight
-    // conventions, ranked (w DESC, term ASC) inside each document.
-    // Exact oracle: same df screen, idf floor, and window replay.
-    "q134_top_keywords" -> ((s, dir) =>
-      // maxDfFrac 0.9: the synthetic corpus has a ~60-word vocabulary
-      // with most words in >half the docs — the production 0.5 default
-      // would empty the keyword space here
-      ops.Retrieval.topKeywords(T(s, dir, "documents"),
-        "doc_id", "text", k = 3, maxDfFrac = 0.9)),
-
-    // SCD2 dimension history from a changelog: run-collapse on the
-    // tracked attribute, half-open [effective_from, effective_to)
-    // intervals, lead-derived end timestamps. Exact oracle: the same
-    // lag/lead windows in SQL. Timestamps leave as epoch micros
-    // (BIGINT) — the integer-output doctrine.
-    "q135_scd2_history" -> ((s, dir) =>
-      ops.Scd.buildHistory(
-        T(s, dir, "events")
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
-        "user_id", "ts", "event_id", Seq("event_type"))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("effective_from")).as("ef_us"),
-          unix_micros(col("effective_to")).as("et_us"),
-          col("is_current"))),
-
-    // Point-in-time dimension read over the SCD2 history — one covering
-    // version per user mid-fixture. A pure filter on the history (no
-    // window, no shuffle beyond the build's own).
-    "q136_scd2_snapshot" -> ((s, dir) =>
-      ops.Scd.snapshotAt(
-        ops.Scd.buildHistory(
-          T(s, dir, "events")
-            .select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
-          "user_id", "ts", "event_id", Seq("event_type")),
-        lit("2024-01-15 00:00:00").cast("timestamp"))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("effective_from")).as("ef_us"),
-          unix_micros(col("effective_to")).as("et_us"))),
-
-    // Regular-grid resample with LOCF fill: 6-hour cells per user,
-    // bucket max as the cell aggregate (picks an input double — both
-    // engines agree bit-for-bit), gaps forward-filled. Exact oracle:
-    // generate_series + IGNORE NULLS last_value replay.
-    "q137_resample_locf" -> ((s, dir) =>
-      ops.TimeFeatures.resampleLocf(
-        T(s, dir, "events").select(col("user_id"), col("ts"), col("value")),
-        "user_id", "ts", "value", stepSeconds = 21600L)),
-
-    // Deterministic weighted interleave — the curriculum key that
-    // schedules source s's r-th doc at virtual time ⌊10⁹·r/w⌋ so the
-    // training order has no single-source pockets. Exact oracle: the
-    // same rank window + integer floor division.
-    "q138_interleave_key" -> ((s, dir) =>
-      ops.Sampling.interleaveBySource(
-        T(s, dir, "documents").select(col("doc_id"), col("source")),
-        "doc_id", "source", "doc_id",
-        Map("src1" -> 3000000L, "src2" -> 2000000L),
-        defaultWeightE6 = 1000000L)),
-
-    // Per-group Pearson correlation + OLS slope on exact integer
-    // moments (q125's doctrine, bivariate): decimal moment sums,
-    // identities exact, final sqrt/divide float in fixed order. Exact
-    // oracle: HUGEINT replay.
-    "q139_correlation" -> ((s, dir) =>
-      ops.Profile.correlation(T(s, dir, "lineitem"),
-        "l_returnflag", "l_quantity", "l_extendedprice")),
-
-    // INCREMENTAL SCD2: the nightly merge path. The oracle is the FULL
-    // REBUILD's SQL over the complete changelog — gating the equality
-    // incremental ≡ rebuild, the property that makes the incremental
-    // path trustworthy at all.
-    // IVF-PQ recall gate (r13; r14 standing-index dataflow): the
-    // memory-scale ANN path — coarse IVF routing + product-quantized
-    // codes (8 subspaces x 32 codewords = 8 B/vector standing index vs
-    // 256 B of floats) + per-query ADC lookup tables + exact re-rank of
-    // k·refine. Measured recall@5 vs brute force: 0.85 @ sf0.01,
-    // 0.80 @ sf0.1; floor 0.65 keeps margin below both (the q94 floor
-    // doctrine — a floor at a measured value would gate on exact
-    // equality through float shuffle-order wobble).
-    "q146_ivfpq_recall_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      // models AND the encoded index are standing artifacts
-      // (pqModelArtifact — the q57 doctrine): the recurring query
-      // prices LUT-build + probe + re-rank; the corpus is never
-      // re-encoded and candidate embeddings enter only the k·refine
-      // point-lookup re-rank
-      val (cents, cb, idx) = pqModelArtifact(s, dir)
-      recallGate(
-        Similarity.ivfPqTopK(q, idx, emb, 5, cents, cb,
-          nProbe = 2, refine = 8),
-        Similarity.bruteForceTopK(q, emb, 5),
-        Seq("query_id", "neighbor_id"), 6500L)
-    }),
-
-    // INCREMENTAL INDEX MAINTENANCE (r14, the q57 doctrine for
-    // vectors): a pipeline ingesting embeddings continuously must
-    // encode ONLY the delta against the frozen models and append —
-    // never re-encode the corpus, never retrain per batch. Cell
-    // assignment and codeword argmin are pure per-vector functions of
-    // the models, so incremental ≡ full-rebuild EXACTLY (cell AND every
-    // code) — this query counts disagreements between the two paths
-    // over a base/delta split and gates the count at zero under a
-    // constant oracle. A drift into corpus-dependent encoding (e.g.
-    // retraining inside encode) flips the gate.
-    "q148_pq_index_incremental" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val (cents, cb, _) = pqModelArtifact(s, dir)
-      val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
-      val delta = emb.filter(pmod(col("vec_id"), lit(10L)) === 0L)
-      val incremental = Similarity.pqIndexAppend(
-        Similarity.pqIndex(base, cents, cb, nSub = 8),
-        delta, cents, cb, nSub = 8)
-      val rebuilt = Similarity.pqIndex(emb, cents, cb, nSub = 8)
-      val mismatches = incremental.alias("i")
-        .join(rebuilt.alias("r"), col("i.vec_id") === col("r.vec_id"), "full")
-        .filter(col("i.vec_id").isNull || col("r.vec_id").isNull ||
-          col("i.cell") =!= col("r.cell") ||
-          col("i.codes") =!= col("r.codes"))
-      val total = rebuilt.agg(count(lit(1)).as("n_vectors"))
-      mismatches.agg(count(lit(1)).as("mism")).crossJoin(total)
-        .select(col("n_vectors"),
-          (col("mism") === 0L).as("incremental_equals_rebuild"))
-    }),
-
-    // INCREMENTAL K-MEANS INGEST (r16, the q148 doctrine for cells):
-    // fit once, FREEZE the centroids, ingest mini-batches as
-    // per-(cell,dim) integer sufficient statistics (Σx, n) — division
-    // deferred to read time, so the merge is EXACT (mean-of-means
-    // would round per batch and drift). Gates two equalities over a
-    // base/delta split: (a) merged stats = full-corpus stats row for
-    // row; (b) the centroid table derived from merged stats is
-    // byte-identical to the batch Lloyd's update over the union —
-    // i.e. incremental ≡ rebuild, not approximately but exactly.
-    // State is O(k·d) Longs regardless of corpus size; per batch only
-    // ≤ k·d map-side-combined partials reach the wire.
-    "q171_kmeans_incremental" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val cents = ops.Kmeans.fitCentroids(emb, "vec_id", "embedding",
-        k = 8, iters = 1)
-      val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 0L)
-      val delta = emb.filter(pmod(col("vec_id"), lit(10L)) === 0L)
-      val merged = ops.Kmeans.mergeStats(
-        ops.Kmeans.cellStats(base, "vec_id", "embedding", cents),
-        ops.Kmeans.cellStats(delta, "vec_id", "embedding", cents))
-      val full = ops.Kmeans.cellStats(emb, "vec_id", "embedding", cents)
-      val statsMism = merged.alias("m")
-        .join(full.alias("f"),
-          col("m.cell") === col("f.cell") && col("m.j") === col("f.j"), "full")
-        .filter(col("m.cell").isNull || col("f.cell").isNull ||
-          col("m.sx") =!= col("f.sx") || col("m.n") =!= col("f.n"))
-        .agg(count(lit(1)).as("stats_mism"))
-      val centMism = ops.Kmeans.centroidsOf(merged).alias("m")
-        .join(ops.Kmeans.centroidsOf(full).alias("f"),
-          col("m.cell") === col("f.cell"), "full")
-        .filter(col("m.cell").isNull || col("f.cell").isNull ||
-          col("m.cv") =!= col("f.cv"))
-        .agg(count(lit(1)).as("cent_mism"))
-      statsMism.crossJoin(centMism)
-        .select((col("stats_mism") === 0L).as("stats_equal"),
-          (col("cent_mism") === 0L).as("centroids_equal"))
-    }),
-
-    // INCREMENTAL CONNECTED COMPONENTS (r16): the dedup family's last
-    // rebuild-only piece made incremental — q57 maintains the PAIR
-    // stream against a standing index; this maintains the LABEL table
-    // against a pair delta, by contracting old components to their
-    // min-id labels and running CC over the CONTRACTED DELTA graph
-    // only (never the standing edge set). Exactness is structural
-    // (contraction preserves connectivity; old labels are component
-    // minima), so the gate is equality with the full rebuild over a
-    // deterministic arithmetic graph (the q158 synthesis shape),
-    // split ~80/20 into standing/delta.
-    // r20 (verdict next #3): the standing labels and the full-rebuild
-    // audit baseline are MEMOIZED artifacts (built once per session+sf
-    // off the timed path — they are the nightly artifacts by the
-    // production framing); each rep prices the INCREMENTAL fold + the
-    // equality join, the recurring work. Arithmetic and oracle
-    // unchanged.
-    "q174_cc_incremental" -> ((s, dir) => {
-      val delta = ccGateEdges(s, dir, 1L)
-        .filter(pmod(col("id_a") + col("id_b"), lit(5L)) === 0L)
-      val (oldLabels, rebuilt) = q174Twins(s, dir)
-      val incr = ops.Dedup.connectedComponentsIncremental(oldLabels, delta)
-      val mism = incr.alias("i")
-        .join(rebuilt.alias("r"), col("i.id") === col("r.id"), "full")
-        .filter(col("i.id").isNull || col("r.id").isNull ||
-          col("i.label") =!= col("r.label"))
-        .agg(count(lit(1)).as("mism"))
-      val total = rebuilt.agg(count(lit(1)).as("n_nodes"))
-      mism.crossJoin(total).select(col("n_nodes"),
-        (col("mism") === 0L).as("incremental_equals_rebuild"))
-    }),
-
-    // STREAMING LABEL MAINTENANCE FOLD (r17): the per-batch regime the
-    // StreamingCc sink runs, gated batch-equivalent — q174's synthesis
-    // split into FOUR deltas and folded through
-    // connectedComponentsIncremental (each step's output labels are
-    // component minima, the next step's precondition), must equal one
-    // full-rebuild CC over all edges. This is the induction the
-    // composed ingest-path dedup pipeline (StreamingDedup pairs →
-    // StreamingCc labels → keepBestByLabelFrame) rests on; the real
-    // stream (MemoryStream slicings, replay no-op, end-to-end vs the
-    // batch twin) is spec-gated in StreamingCcSpec.
-    "q178_cc_label_fold" -> ((s, dir) => {
-      // sources restricted to 1/16 of docs: the q174 graph's modular
-      // chains put CC in the many-round regime, and FIVE CC runs over
-      // it price the gate at bench-hostile seconds (measured 17 s warm
-      // at sf0.01 even at 1/3 density — the cost is rounds × runs, not
-      // data). At 1/16 density a chained id_b is rarely itself a
-      // source, so components are star-like, every run converges in
-      // ~3 rounds, and the fold still merges across all four deltas
-      // (a source's two edges land in different slices)
-      val edges = ccGateEdges(s, dir, 16L)
-      val slices = (0L until 4L).map(i =>
-        edges.filter(pmod(col("id_a") + col("id_b"), lit(4L)) === i))
-      // fold: batch 0 bootstraps with plain CC (≡ incremental over an
-      // empty labeling, minus the dead contraction/unseen stages), then
-      // each delta folds into the standing labels. Each step
-      // materializes its labels (localCheckpoint) the way the sink
-      // materializes them to the label TABLE per batch — without it
-      // the next step's joins recompute the whole prefix
-      val bootstrap = ops.Dedup.connectedComponents(slices.head)
-        .localCheckpoint(true)
-      val folded = slices.tail.foldLeft(bootstrap) { (labels, delta) =>
-        ops.Dedup.connectedComponentsIncremental(labels, delta)
-          .localCheckpoint(true)
-      }
-      // r20: the full-rebuild audit twin is the memoized artifact
-      val rebuilt = twinArtifact(s, dir, "cc16-rebuilt")(
-        ops.Dedup.connectedComponents(edges))
-      val mism = folded.alias("i")
-        .join(rebuilt.alias("r"), col("i.id") === col("r.id"), "full")
-        .filter(col("i.id").isNull || col("r.id").isNull ||
-          col("i.label") =!= col("r.label"))
-        .agg(count(lit(1)).as("mism"))
-      val total = rebuilt.agg(count(lit(1)).as("n_nodes"))
-      mism.crossJoin(total).select(col("n_nodes"),
-        (col("mism") === 0L).as("fold_equals_rebuild"))
-    }),
-
-    // INCREMENTAL PAGERANK GATE (r17): the graph family's rebuild-only
-    // op made incremental — a SOURCE-ADDITIVE delta (new pages arrive
-    // with their outlinks: src nodes with no standing out-edges, the
-    // crawl-frontier shape) warm-starts the from-below fixpoint
-    // iteration at the standing scores. Exactness is provable
-    // (constant-teleport convention → T_new ≥ T_old pointwise → the
-    // standing least fixed point is a certified lower bound; monotone
-    // integer iteration from any lower bound reaches exactly the lfp)
-    // and GATED here: warm ≡ cold pointwise at the integer fixed
-    // point. q158's synthesis split 7/8 standing + 1/8 delta BY
-    // SOURCE; gate-friendly parameters (e3 scale, d=0.15 → ~4 rounds
-    // per run instead of e12/0.85's ~190; measured 18 s warm at
-    // e4/0.30 and 8.3 s in-suite at e3/0.20 — rounds × three runs are
-    // the whole cost) exercise the identical code path: rounds scale
-    // with log(scaleUnit)/log(1/d), the operator's documented
-    // precision-for-rounds knob.
-    // r20 (verdict next #3): the standing scores and the cold audit
-    // baseline are MEMOIZED artifacts; each rep prices the
-    // WARM-STARTED incremental fixpoint + the equality join.
-    "q177_pagerank_incremental" -> ((s, dir) => {
-      val edges = prGateEdges(s, dir)
-      val standing = edges.filter(pmod(col("src"), lit(8L)) =!= 0L)
-      val delta = edges.filter(pmod(col("src"), lit(8L)) === 0L)
-      val old = prTwinArtifact(s, dir, "pr-standing")(
-        ops.Graph.pageRankFixpoint(standing, "src", "dst",
-          dampingE2 = 15L, scaleUnit = 1000L))
-      val warm = ops.Graph.pageRankIncremental(old.scores, standing, delta,
-        "src", "dst", dampingE2 = 15L, scaleUnit = 1000L)
-      val cold = prTwinArtifact(s, dir, "pr-cold")(
-        ops.Graph.pageRankFixpoint(edges, "src", "dst",
-          dampingE2 = 15L, scaleUnit = 1000L))
-      val mism = warm.scores.alias("w")
-        .join(cold.scores.alias("c"), col("w.id") === col("c.id"), "full")
-        .filter(col("w.id").isNull || col("c.id").isNull ||
-          col("w.score") =!= col("c.score"))
-        .agg(count(lit(1)).as("mism"))
-      val total = cold.scores.agg(count(lit(1)).as("n_nodes"))
-      mism.crossJoin(total).select(col("n_nodes"),
-        (col("mism") === 0L).as("warm_equals_cold"),
-        lit(old.converged && warm.converged && cold.converged)
-          .as("all_converged"),
-        lit(warm.rounds <= cold.rounds).as("warm_rounds_le_cold"))
-    }),
-
-    // PERSONALIZED PAGERANK GATE (r17): seed-restricted teleport over
-    // the q177 edge synthesis, seeds = doc_id % 10 == 0. Three
-    // structural gates, each provable and each breakable by a real
-    // bug: (a) seeds=ALL collapses to the uniform fixpoint (a wrong
-    // per-node tele join flips it); (b) PPR ≤ uniform POINTWISE (tele
-    // monotonicity of the least fixed point — an inflated seed mass or
-    // a stale-round merge flips it); (c) every seed scores ≥ its
-    // teleport and every node ≥ 0 with non-seed zero-inflow nodes at
-    // EXACTLY 0 (the integer form's clean unreachable verdict).
-    // Constant-boolean oracle + replayed node count, the q177 pattern.
-    // r20 (verdict next #3): the uniform fixpoint (shared with q177's
-    // cold twin — same edges, same parameters) and the seeds=ALL
-    // control are MEMOIZED artifacts; each rep prices the SHIPPED
-    // seed-restricted PPR + the property joins.
-    "q186_ppr_seeds" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val edges = prGateEdges(s, dir)
-      val seeds = docs.filter(pmod(col("doc_id"), lit(10L)) === 0L)
-        .select(col("doc_id").as("id"))
-      val uni = prTwinArtifact(s, dir, "pr-cold")(
-        ops.Graph.pageRankFixpoint(edges, "src", "dst",
-          dampingE2 = 15L, scaleUnit = 1000L))
-      val pprAll = prTwinArtifact(s, dir, "ppr-all") {
-        val allNodes = edges.select(col("src").as("id"))
-          .unionByName(edges.select(col("dst").as("id"))).distinct()
-        ops.Graph.personalizedPageRankFixpoint(edges, "src", "dst",
-          allNodes, "id", dampingE2 = 15L, scaleUnit = 1000L)
-      }
-      val ppr = ops.Graph.personalizedPageRankFixpoint(edges, "src", "dst",
-        seeds, "id", dampingE2 = 15L, scaleUnit = 1000L)
-      val tele = 850L // (100 − 15) · 1000 div 100
-      val allEq = pprAll.scores.alias("a")
-        .join(uni.scores.alias("u"), col("a.id") === col("u.id"), "full")
-        .filter(col("a.id").isNull || col("u.id").isNull ||
-          col("a.score") =!= col("u.score"))
-        .agg(count(lit(1)).as("n_all_mismatch"))
-      val joined = ppr.scores.alias("p")
-        .join(uni.scores.alias("u2"), col("p.id") === col("u2.id"), "inner")
-        .join(seeds.select(col("id").as("__sid"), lit(1L).as("__seed")),
-          col("p.id") === col("__sid"), "left")
-      val props = joined.agg(
-        count(lit(1)).as("n_nodes"),
-        sum(when(col("p.score") > col("u2.score"), 1L).otherwise(0L))
-          .as("n_above_uniform"),
-        sum(when(col("p.score") < 0L, 1L).otherwise(0L)).as("n_negative"),
-        sum(when(col("__seed").isNotNull && col("p.score") < tele, 1L)
-          .otherwise(0L)).as("n_seed_below_tele"))
-      props.crossJoin(allEq).select(
-        col("n_nodes"),
-        (col("n_all_mismatch") === 0L).as("all_seeds_equals_uniform"),
-        (col("n_above_uniform") === 0L).as("ppr_le_uniform"),
-        (col("n_negative") === 0L && col("n_seed_below_tele") === 0L)
-          .as("floors_hold"),
-        lit(uni.converged && pprAll.converged && ppr.converged)
-          .as("all_converged"))
-    }),
-
-    // PQ DRIFT DETECTOR GATE (r14): makes the incremental-index
-    // regime's retrain trigger EXECUTABLE, not just documented.
-    // pqIndexAppend (q148) freezes the models, so the operational
-    // question is "when do I retrain?" — answer: when a delta batch's
-    // mean quantization self-error degrades materially vs the
-    // training-time value. This query measures the base corpus's
-    // self-error under the standing artifacts, then a genuinely
-    // SHIFTED delta (one dimension spiked to a constant — the
-    // hot-feature class of upstream pipeline bug, a distribution the
-    // per-subspace codebooks never saw), and gates that the detector
-    // fires. Calibration (DriftProbe, both SFs): base 0.459 @ sf0.01 /
-    // 0.506 @ sf0.1 → ceiling 0.70; spike-shift ratio 1.89× / 1.99× →
-    // trigger 1.5× (the q94 margin doctrine on both sides). Weaker
-    // shifts measured and rejected: reversed dims 1.06-1.20×, +2.0
-    // offset 1.03-1.27× — near-iid synthetic dims quantize almost as
-    // well permuted, which is itself a finding: the detector needs a
-    // trigger BELOW those ratios to catch real drift, hence 1.5× only
-    // fires on genuine distribution change. A codebook regression that
-    // inflates base error, or an error metric that stops
-    // discriminating, flips the constant-oracle booleans.
-    "q149_pq_drift_gate" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val (cents, cb, idx) = pqModelArtifact(s, dir)
-      val base = Similarity.pqSelfErrorE6(emb, idx, cb)
-        .select(col("n_vectors"), col("mean_sq_err_e6").as("base_e6"))
-      val shifted = emb.select(col("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          when(i === 0, lit(10.0f)).otherwise(x)).as("embedding"))
-      val shiftedIdx = Similarity.pqIndex(shifted, cents, cb, nSub = 8)
-      val drift = Similarity.pqSelfErrorE6(shifted, shiftedIdx, cb)
-        .select(col("mean_sq_err_e6").as("shifted_e6"))
-      base.crossJoin(drift).select(
-        col("n_vectors"),
-        (col("base_e6") <= 700000L).as("base_within_ceiling"),
-        (col("shifted_e6") * 2L > col("base_e6") * 3L).as("drift_detected"))
-    }),
-
-    // THE COMPOSED CORPUS-BUILD PIPELINE (r13): the chain a real
-    // LLM-data user runs, as ONE query under ONE oracle — repetition
-    // gate → repeated-span scrub → keep-best near-dup dedup →
-    // split-leakage decontamination → temperature mix → sequence pack
-    // → weighted interleave. Every stage consumes the PREVIOUS stage's
-    // output (gate reasons on raw text, span df on survivors, dedup
-    // bands on CLEANED lengths, mix strata on post-dedup counts...),
-    // so the oracle replaying the full composition proves the operator
-    // contracts compose without column/caching/eagerness surprises.
-    "q145_corpus_pipeline" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      // A. repetition gate (q130's thresholds): drop template-heavy docs
-      val reasons = ops.Quality.repetitionSignals(docs, "doc_id", "text",
-          topNs = Seq(2), dupN = 3, lineDelim = " ")
-        .select(col("doc_id"), ops.Quality.repetitionGate(
-          maxDupLineFracE6 = 970000L, maxDupLineCharFracE6 = 950000L,
-          maxTop2CharFracE6 = 100000L, maxDupNCharFracE6 = 20000L,
-          dupNCol = "dup3gram_char_frac_e6").as("reason"))
-      // STAGE-BOUNDARY PERSISTS via ops.Pipeline.stage (r14 — the
-      // helper carries the doctrine): each stage's output is consumed
-      // several times by the next operator's internal plan (the scrub
-      // alone references its input 3x) — unpersisted, the gate's
-      // explode-aggregate would re-execute once per reference and the
-      // whole chain goes combinatorial (measured: 28 s/rep -> the
-      // staged chain below; see Pipeline.scala for the full lesson)
-      val d1 = ops.Pipeline.stage("gate", docs.join(
-        reasons.filter(col("reason") === "keep").select("doc_id"), Seq("doc_id")))
-      // B. boilerplate scrub (q102's window df) over the SURVIVORS —
-      // the hot-window set is recomputed on the gated corpus
-      val d2 = ops.Pipeline.stage("scrub",
-        ops.SpanScrub.scrubRepeatedSpans(d1, "doc_id", "text",
-            k = 40, stride = 4, maxDf = 3)
-          .select(col("doc_id"), col("clean_text"))
-          .join(d1.select(col("doc_id"), col("lang")), Seq("doc_id"))
-          .select(col("doc_id"), col("lang"), col("clean_text").as("text")))
-      // C. keep-best dedup: exact blocked Jaccard pairs on the CLEANED
-      // text (bands from cleaned lengths), CC, best = longest survivor
-      val banded = d2.withColumn("n_chars", length(col("text")).cast("long"))
-      val pairs = ops.Dedup.ngramJaccardPairs(banded, "doc_id", "text",
-        Seq(col("lang"), floor(col("n_chars") / 100).cast("long")), 9500L)
-      // inline CC + keep-best (dedupByPairsScored): same keep policy as
-      // the q101 artifact path, without pricing a labels parquet
-      // round-trip inside the recurring pipeline
-      val d3 = ops.Dedup.dedupByPairsScored(banded, "doc_id", "n_chars", pairs)
-      // D. decontamination: portable split, then train docs sharing a
-      // TEST doc's exact text are removed (bloom-prefiltered anti join)
-      val withSplit = ops.Pipeline.stage("split",
-        d3.withColumn("split", Sampling.splitExpr(col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), portable = true)))
-      val d4 = ops.Pipeline.stage("decontaminate", ops.Decontaminate.antiJoin(
-        withSplit.filter(col("split") === "train"), col("text"),
-        withSplit.filter(col("split") === "test"), col("text")))
-      // E. temperature mix (√n targets) over the decontaminated train set
-      val d5 = Sampling.temperatureMix(
-        d4.select(col("doc_id"), col("lang"), col("text")),
-        "lang", "doc_id", totalN = 200)
-      // F. greedy sequence packing per (lang, shard) at 1024 tokens
-      val toPack = d5.select(col("doc_id"), col("lang"),
-        TF.tokenCount(col("text")).cast("long").as("token_ct"),
-        Sampling.portableBucket(col("doc_id"), 8).as("shard"))
-      val packed = ops.Pack.packGreedy(toPack, Seq("lang", "shard"),
-        "doc_id", "token_ct", 1024L)
-      // G. weighted interleave of the packed docs across languages
-      Sampling.interleaveBySource(packed, "doc_id", "lang", "doc_id",
-          Map("en" -> 3000000L, "zh" -> 2000000L), defaultWeightE6 = 1000000L)
-        .select(col("doc_id"), col("lang"), col("token_ct"), col("shard"),
-          col("tokens_before"), col("seq_id"), col("within_rank"),
-          col("interleave_key"))
-    }),
-
-    // Perceptual image dedup (r13): synthesize COMPLETE valid PNGs
-    // (real zlib IDAT, real CRCs, alternating scanline filters) whose
-    // 9x8 grayscale pixels are a declarative integer formula of
-    // doc_id — groups of 3 consecutive ids share a base image, the two
-    // variants perturb one pixel each — then full pixel decode →
-    // 64-bit dHash → Hamming-radius pairing via the simhash
-    // chunk-blocking machinery (complete by pigeonhole at h=4). The
-    // oracle replays pixels → dhash → brute-force pairs arithmetically;
-    // Spark's blocked pair set must equal it exactly.
-    "q144_image_neardup" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val base = did - pmod(did, lit(3L))
-      val pos = pmod(did * lit(13L), lit(72L))
-      val pixels = flatten(transform(sequence(lit(0), lit(7)), y =>
-        transform(sequence(lit(0), lit(8)), x => {
-          val xl = x.cast("long"); val yl = y.cast("long")
-          val i = yl * lit(9L) + xl
-          // hash-like mix (xor/shift diffusion) — a LINEAR formula makes
-          // adjacent-pixel deltas constant, which collapses the dhash
-          // space (329 cross-base collisions at 500 docs when tried)
-          val h = (base + lit(1L)) * lit(2654435761L) +
-            xl * lit(97L) + yl * lit(1031L)
-          val g = h.bitwiseXOR(shiftright(h, 7))
-          val p = pmod(g * lit(31L) + shiftright(g, 11), lit(241L))
-          when(pmod(did, lit(3L)) =!= lit(0L) && i === pos,
-            pmod(p + lit(128L), lit(241L))).otherwise(p).cast("int")
-        })))
-      val media = ops.Multimodal.asGrayPngMediaTable(docs, "doc_id", 9, 8, pixels)
-      ops.Multimodal.imageNearDupPairs(media, maxHamming = 4)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-    }),
-
-    // Perceptual audio dedup (r14): the q144 doctrine on the audio
-    // modality, through the SAME generalized pairing machinery
-    // (Dedup.hammingPairs — exactly what its text-decoupling existed
-    // for). Synthesize complete 16-bit mono PCM WAVs whose 520 samples
-    // are a declarative integer formula of doc_id (groups of 3
-    // consecutive ids share a base signal; the two variants perturb
-    // one sample each, moving ONE frame's energy → ≤ 2 fingerprint
-    // bits), full PCM decode → 65-frame energy-difference 64-bit
-    // fingerprint → Hamming pairing at radius 4. The oracle replays
-    // samples → frame energies → fingerprint → brute-force pairs
-    // arithmetically; Spark's blocked pair set must equal it exactly.
-    "q147_audio_neardup" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val base = did - pmod(did, lit(3L))
-      val pos = pmod(did * lit(13L), lit(520L))
-      val samples = transform(sequence(lit(0), lit(519)), i => {
-        val il = i.cast("long")
-        // xor/shift diffusion (the q144 lesson: a linear formula
-        // collapses the fingerprint space)
-        val h = (base + lit(1L)) * lit(2654435761L) + il * lit(7349L)
-        val g = h.bitwiseXOR(shiftright(h, 7))
-        val raw = pmod(g * lit(31L) + shiftright(g, 11), lit(30000L))
-        val rawP = when(pmod(did, lit(3L)) =!= lit(0L) && il === pos,
-          pmod(raw + lit(9000L), lit(30000L))).otherwise(raw)
-        (rawP - lit(15000L)).cast("int")
-      })
-      val media = ops.Multimodal.asPcmWavMediaTable(docs, "doc_id", 16000, samples)
-      ops.Multimodal.audioNearDupPairs(media, maxHamming = 4)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-    }),
-
-    "q143_scd2_apply" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
-      val history = ops.Scd.buildHistory(ev.filter(col("ts") < cutoff),
-        "user_id", "ts", "event_id", Seq("event_type"))
-      ops.Scd.applyChangelog(history, ev.filter(col("ts") >= cutoff),
-        "user_id", "ts", "event_id", Seq("event_type"))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("effective_from")).as("ef_us"),
-          unix_micros(col("effective_to")).as("et_us"),
-          col("is_current"))
-    }),
-
-    // Per-group winsorization at exact rank-based quantile bounds —
-    // the clip picks one of three INPUT doubles, so w_e6 floors replay
-    // exactly (q132's rank contract per group).
-    "q142_winsorize" -> ((s, dir) =>
-      ops.Profile.winsorize(T(s, dir, "events"),
-        "event_id", "value", "event_type")),
-
-    // The general CEP state machine (begin→next→next within t, strict
-    // contiguity, skip-till-next-match) run END TO END in batch via
-    // the fold the streaming operator shares. Exact oracle: for a
-    // strict pattern whose step types are DISJOINT, attempts can never
-    // overlap, so the completed-match set is exactly the consecutive
-    // (lead,lead²) triples inside the window — provable from the fold:
-    // strict kills on any contiguity miss, and a restart can only
-    // begin at a head-type event.
-    "q141_cep_sequence" -> ((s, dir) => {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("string").as("key"), col("ts"),
-          col("event_type").as("etype"))
-        .as[graft.streaming.CepEvent]
-      graft.streaming.Cep.sequencePatternBatch[graft.streaming.CepEvent](
-          ev, _.key, _.ts,
-          Seq(_.etype == "view", _.etype == "click", _.etype == "purchase"),
-          withinSeconds = 604800L, strict = true)
-        .filter(_.completed)
-        .map(m => (m.key.toLong, m.events.head.ts, m.events.last.ts))
-        .toDF("user_id", "t0", "t2")
-        // unix_micros, not Timestamp.getTime*1000 — getTime is millis
-        // and would drop the fixture's sub-millisecond digits
-        .select(col("user_id"), unix_micros(col("t0")).as("t0_us"),
-          unix_micros(col("t2")).as("t2_us"))
-    }),
-
-    // Vocabulary drift between two corpus halves: top-k tokens by
-    // per-token Jensen–Shannon contribution over Laplace-smoothed
-    // unigram distributions. Exact oracle: the probabilities are exact
-    // rationals cast to double, the ln/multiply/floor order is fixed,
-    // and the two e9-floored halves sum as integers.
-    "q140_vocab_divergence" -> ((s, dir) => {
-      val d = T(s, dir, "documents").select(col("doc_id"), col("text"))
-      ops.Retrieval.vocabularyDivergence(
-        d.filter(pmod(col("doc_id"), lit(2L)) === 0L),
-        d.filter(pmod(col("doc_id"), lit(2L)) === 1L),
-        "text", topK = 50)
-    }),
-
-    // TRAINED QUALITY CLASSIFIER (r18): integer fixed-point logistic
-    // regression over bag-of-token features — the scoring family's
-    // discriminative leg (q113 generative LM, q182 importance ratio,
-    // this: the CCNet/GPT-3 "trained quality filter"). The planted
-    // fixture (the q96 treatment): labels derive from doc_id, marker
-    // tokens ride 80% of documents, the real corpus tokens are the
-    // noise the gradient must overcome. TWO full gradient rounds are
-    // replayed by the oracle as unrolled CTEs — the TRAINING
-    // ARITHMETIC is under the hash gate (every weight, margin, clamp,
-    // and floor-div), not just the scoring pass. Held-out doc scores.
-    // ARTIFACT-BACKED since r19 (r18 verdict #7): the scoring face
-    // reads the standing parquet model (lrModelArtifact — same
-    // deterministic training arithmetic, so the oracle's unrolled
-    // training replay still hash-matches); the training cost is priced
-    // in-suite by the tagged gates (q191/q195/q196) only.
-    "q190_quality_lr_scores" -> ((s, dir) => {
-      val aug = lrAugment(T(s, dir, "documents"))
-      val model = lrModelArtifact(s, dir)
-      ops.QualityClassifier.scoreLogistic(
-        aug.filter(pmod(col("doc_id"), lit(2L)) === 1L), model,
-        "doc_id", "text")
-    }),
-
-    // q190's accuracy gate — fully deterministic, so unlike the
-    // probabilistic recall gates (q94-q98) the oracle REPLAYS the
-    // accuracy count rather than pinning a constant: measured 0.904 @
-    // sf0.01, 0.901 @ sf0.1, 0.896 @ sf0.001 (GateProbe row); floor
-    // 0.70 = chance + 0.20 with the measured value at chance + 0.40 —
-    // the 2x-margin convention. gMul=4 diverges on this fixture (the
-    // calibration run's negative control).
-    "q191_quality_lr_gate" -> ((s, dir) => {
-      val aug = lrAugment(T(s, dir, "documents"))
-      val model = ops.QualityClassifier.trainLogistic(
-        aug.filter(pmod(col("doc_id"), lit(2L)) === 0L),
-        "doc_id", "text", "y", rounds = 2, gMul = 16L)
-      val test = aug.filter(pmod(col("doc_id"), lit(2L)) === 1L)
-      ops.QualityClassifier.scoreLogistic(test, model, "doc_id", "text")
-        .join(test.select(col("doc_id"), col("y")), Seq("doc_id"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("pred") === (col("y") === 1L), 1L).otherwise(0L))
-            .as("n_correct"))
-        .select(col("n_test"), col("n_correct"),
-          lit(7000L).as("floor_e4"),
-          (col("n_correct") * 10000L >= col("n_test") * 7000L)
-            .as("meets_floor"))
-    }),
-
-    // COMPOSED CLASSIFIER CURATION (r18): the q189 chain with the
-    // trained classifier as the scorer — banned-phrase gate (q181's
-    // automaton) → train on the FILTERED pool's even half → score the
-    // held-out half → per-language top-half keep (q184's integer-ceil
-    // cut) under ONE oracle. The filter changes the training pool, so
-    // every gradient, weight, margin, rank, and cut boundary
-    // downstream must move exactly as the filtered replay moves them.
-    "q192_curation_classifier" -> ((s, dir) => {
-      val clean = ops.Decontaminate.multiPatternFilter(
-        T(s, dir, "documents"), "text", Seq("batch batch", "dow win"))
-      val aug = lrAugment(clean)
-      // artifact-backed (r19): the filtered-pool model is its own
-      // standing artifact — the filter changes every gradient, so it
-      // can never share q190's weights
-      val model = lrCleanModelArtifact(s, dir)
-      val scored = ops.QualityClassifier.scoreLogistic(
-          aug.filter(pmod(col("doc_id"), lit(2L)) === 1L), model,
-          "doc_id", "text")
-        .join(clean.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      ops.LmScore.perplexityBuckets(scored, Seq("lang"), "doc_id",
-          "z_e6", cutsE6 = Seq(500000L), labels = Seq("keep", "drop"))
-        .filter(col("bucket") === "keep")
-        .select(col("doc_id"), col("lang"),
-          col("rank_in_group"), col("n_in_group"))
-    }),
-
-    // STREAMED-INDEX READ PATH (r18, verdict #6): build the PQ index
-    // via FOUR successive appends (the exact arithmetic VectorIngest
-    // runs per micro-batch — pqIndex on the first slice, pqIndexAppend
-    // for each later delta against the frozen models), then SERVE
-    // ivfPqTopK from the sliced-built index and from the one-shot
-    // artifact. Encoding is a pure per-vector function of the models
-    // and the serve ranking is (sim DESC, neighbor_id ASC)-
-    // deterministic, so full (query, rank, neighbor) equality is
-    // structural — any corpus-dependence smuggled into encode or any
-    // order-dependence in serve flips the boolean and fails the hash.
-    "q193_pq_streamed_serve" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val (cents, cb, oneshot) = pqModelArtifact(s, dir)
-      val slices = (0L until 4L).map(i =>
-        emb.filter(pmod(col("vec_id"), lit(4L)) === i))
-      val built = ops.Pipeline.stage("pq_served_sliced",
-        slices.tail.foldLeft(
-          Similarity.pqIndex(slices.head, cents, cb, nSub = 8))(
-          (ix, sl) => Similarity.pqIndexAppend(ix, sl, cents, cb, nSub = 8)))
-      val q = emb.filter(col("vec_id") < 8)
-      def serve(idx: DataFrame) = Similarity.ivfPqTopK(q, idx, emb, 5,
-        cents, cb, nProbe = 2, refine = 8)
-      val mism = serve(built).alias("a")
-        .join(serve(oneshot).alias("b"),
-          col("a.query_id") === col("b.query_id") &&
-            col("a.rank") === col("b.rank"), "full")
-        .filter(col("a.query_id").isNull || col("b.query_id").isNull ||
-          col("a.neighbor_id") =!= col("b.neighbor_id"))
-        .agg(count(lit(1)).as("mism"))
-      built.agg(count(lit(1)).as("n_index_rows")).crossJoin(mism)
-        .select(col("n_index_rows"),
-          (col("mism") === 0L).as("served_equals_oneshot"))
-    }),
-
-    // BUCKETED (hashing-trick) CLASSIFIER (r18): q190's training with
-    // feature id = pmod(xxhash64(w), 4096) — the 100 TB vocabulary
-    // dial made driver-visible (model bounded at nBuckets rows however
-    // large the corpus vocabulary grows). Bucket ids are xxhash64-
-    // derived, so the oracle can't replay the weights string-keyed
-    // (the q33-family limitation); the gate is therefore the measured
-    // accuracy floor under a constant oracle, like q94-q98: measured
-    // 0.896/0.904/0.901 at sf0.001/0.01/0.1 — IDENTICAL to the
-    // unbucketed q191 at this vocab (LrProbe; zero collisions at
-    // 4096), floor 0.70 = chance + 0.20 at measured chance + 0.40.
-    // The collision trade is recorded honestly: nBuckets=64 degrades
-    // to 0.52-0.79 (LrProbe row), the standard hashing-trick cost.
-    "q195_quality_lr_bucketed_gate" -> ((s, dir) => {
-      val aug = lrAugment(T(s, dir, "documents"))
-      val model = ops.QualityClassifier.trainLogistic(
-        aug.filter(pmod(col("doc_id"), lit(2L)) === 0L),
-        "doc_id", "text", "y", rounds = 2, gMul = 16L, nBuckets = 4096L)
-      val test = aug.filter(pmod(col("doc_id"), lit(2L)) === 1L)
-      ops.QualityClassifier.scoreLogistic(test, model, "doc_id", "text",
-          nBuckets = 4096L)
-        .join(test.select(col("doc_id"), col("y")), Seq("doc_id"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("pred") === (col("y") === 1L), 1L).otherwise(0L))
-            .as("n_correct"))
-        .select(col("n_test"), lit(7000L).as("floor_e4"),
-          (col("n_correct") * 10000L >= col("n_test") * 7000L)
-            .as("meets_floor"))
-    }),
-
-    // MULTIMODAL CURATION PIPELINE (r18, verdict #5) — the q189
-    // composition on the media side, in production order under ONE
-    // oracle: a mixed-payload media table (real PNG bytes for half the
-    // corpus via q144's planted pixel formula, real RIFF/PCM WAVs for
-    // a quarter via q147's sample formula, real frame-carrying MP4s
-    // for an eighth — r20, with planted near-dup triples of their own
-    // — text payloads for the rest) → MIME sniff ROUTES each payload
-    // to its decoder (text routed away entirely) → per-modality
-    // container decode → perceptual fingerprint → Hamming pairs → ONE
-    // connected-components run over the union pair set → keep-best
-    // per cluster by n_chars. The
-    // composition is the test: a sniff misroute, codec drift, or
-    // fingerprint change moves the kept set exactly as the oracle's
-    // arithmetic replay moves it. Payload bytes never shuffle (the
-    // media doctrine — only (id, 8-byte fingerprint) enters any
-    // exchange); pairing is chunk-blocked, complete by pigeonhole.
-    "q194_multimodal_curation" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val did = col("doc_id")
-      val media = multimodalMediaTable(s, dir)
-      // SNIFF-ROUTE on payload bytes alone (never the kind column —
-      // production media arrives untagged), in ONE decode pass
-      // (r20: mediaFingerprints dispatches per row; the earlier
-      // per-modality unions each re-evaluated the full synthesis
-      // because a payload-mime filter cannot push into the source),
-      // then ONE kind-blocked Hamming join — the pair set is
-      // byte-identical to the per-kind imageNearDupPairs ∪
-      // audioNearDupPairs ∪ videoNearDupPairs composition (q197's
-      // gated equality), fingerprints staged as 3 longs/row
-      val fps = ops.Pipeline.stage("q194_fps",
-        ops.Multimodal.mediaFingerprints(media).repartition(4))
-      val pairs = ops.Multimodal.mediaPairsIncremental(
-        fps, emptyFpFrame(s), maxHamming = 4)
-      val labels = ops.Dedup.connectedComponents(
-        pairs.select(col("id_a"), col("id_b")))
-      // the keep-best pool is every fingerprintable payload — image,
-      // audio, and (r20) video; only the text eighth is routed away
-      val scored = docs.filter(pmod(did, lit(8L)) =!= 7L)
-        .select(did, col("n_chars").as("score"))
-      ops.Dedup.keepBestByLabelFrame(scored, "doc_id", "score", labels)
-        .select(col("doc_id"), col("score"))
-    }),
-
-    // CLASSIFIER DRIFT GATE (r19, r18 verdict #5a) — the q149
-    // treatment for the standing LogisticModel: the ARTIFACT model
-    // (trained once off the timed path, the q190/q192 scoring source)
-    // scores (a) the fixture's held-out half — the accepted-baseline
-    // confidence — and (b) the SAME documents under a new marker
-    // regime the model has never seen (xmk/zmk replace qmk/jmk: the
-    // discriminative surface features left the corpus, the production
-    // vocabulary-drift failure). Confidence = mean |p−½| in e6,
-    // label-free, exact integer arithmetic. Drift trips the ratio gate
-    // (new·2 < base, the PQ drift gate's shape), and the RETRAIN
-    // TRIGGER is exercised in-query: a full retrain on the new
-    // regime's train half must recover held-out accuracy past the
-    // q191 floor. Everything — both trainings, both scorings, the
-    // confidence folds — replays in the oracle's unrolled CTEs.
-    "q196_quality_lr_drift_gate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val odd = pmod(col("doc_id"), lit(2L)) === 1L
-      val model = lrModelArtifact(s, dir)
-      val base = ops.QualityClassifier.scoreConfidenceE6(
-          ops.QualityClassifier.scoreLogistic(
-            lrAugment(docs).filter(odd), model, "doc_id", "text"))
-        .select(col("n_scored"), col("conf_e6").as("base_conf_e6"))
-      val augNew = lrAugmentMk(docs, "xmk", "zmk")
-      val drift = ops.QualityClassifier.scoreConfidenceE6(
-          ops.QualityClassifier.scoreLogistic(
-            augNew.filter(odd), model, "doc_id", "text"))
-        .select(col("conf_e6").as("new_conf_e6"))
-      val re = ops.QualityClassifier.trainLogistic(
-        augNew.filter(pmod(col("doc_id"), lit(2L)) === 0L),
-        "doc_id", "text", "y", rounds = 2, gMul = 16L)
-      val heldNew = augNew.filter(odd)
-      val reAcc = ops.QualityClassifier.scoreLogistic(
-          heldNew, re, "doc_id", "text")
-        .join(heldNew.select(col("doc_id"), col("y")), Seq("doc_id"))
-        .agg(count(lit(1)).as("n_re"),
-          sum(when(col("pred") === (col("y") === 1L), 1L).otherwise(0L))
-            .as("n_correct"))
-      base.crossJoin(drift).crossJoin(reAcc).select(
-        col("n_scored"), col("base_conf_e6"), col("new_conf_e6"),
-        (col("new_conf_e6") * 2L < col("base_conf_e6"))
-          .as("drift_detected"),
-        (col("n_correct") * 10000L >= col("n_re") * 7000L)
-          .as("retrain_recovers"))
-    }),
-
-    // STREAMED MULTIMODAL CURATION (r19, r18 verdict #1 — the q193
-    // shape for the media family): the SAME mixed-payload corpus q194
-    // one-shots is folded in TWO fingerprint slices through the exact
-    // per-batch arithmetic StreamingMedia runs (incremental Hamming
-    // pair delta vs the standing fingerprints, incremental CC fold of
-    // each delta), then the folded labels are compared row-for-row
-    // with q194's one-shot labeling. Equality is structural — each
-    // pair lands in the slice where its later endpoint arrives and the
-    // CC fold is exact — so any batch-dependence smuggled into the
-    // delta join or the label fold flips the boolean and fails the
-    // hash. Decode runs ONCE (fingerprints staged); payload bytes
-    // never shuffle.
-    "q197_multimodal_streamed_curation" -> ((s, dir) => {
-      val media = multimodalMediaTable(s, dir)
-      // decode at ScanFanOut parallelism, then SHRINK: the fingerprint
-      // frame is 3 longs/row, and every downstream stage (8 incremental
-      // pair joins, 4 incremental CC folds, the one-shot CC, the
-      // equality join) would otherwise inherit the fan-out's hundreds
-      // of near-empty partitions — measured 30,695 tasks / 79 s for
-      // this query before the shrink, pure per-task overhead
-      val fps = ops.Pipeline.stage("mm_fps",
-        ops.Multimodal.mediaFingerprints(media).repartition(4))
-      val sliceKey = pmod(xxhash64(col("media_id")), lit(2L))
-      val lblSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.LongType)))
-      val empty = emptyFpFrame(s)
-      var standing = empty
-      var folded = s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], lblSchema)
-      // TWO fold slices: the driver face needs batch-vs-standing
-      // pairing and a cross-batch merge to be live — both are — while
-      // the any-slicing generality is the spec's job
-      // (StreamingMediaSpec runs three slicings through the real sink);
-      // each extra slice costs a full incremental-CC fold of pure
-      // stage overhead at this scale (measured: the 4-slice form spent
-      // 79 s on 30,695 near-empty tasks)
-      for (i <- 0L until 2L) {
-        val slice = fps.filter(sliceKey === i)
-        val delta = ops.Multimodal.mediaPairsIncremental(slice, standing,
-          maxHamming = 4)
-        // EAGER checkpoint, deliberately (r21 A/B): the lazy form was
-        // tried and REVERTED — until a lazy local checkpoint
-        // materializes, every downstream task closure carries the
-        // UNTRUNCATED fold plan, and q197's per-task deserialization
-        // went 0.3 s → 4-15 s (wall 5.5-5.9 → 7.4-10.5 measured).
-        // Truncating the lineage eagerly is what keeps the per-slice
-        // task binaries small; the extra materialization pass is the
-        // cheaper side of that trade here (contrast the CC/PageRank
-        // round state, whose per-round plans are small, where lazy
-        // wins — the r20 change).
-        folded = ops.Dedup.connectedComponentsIncremental(folded,
-            delta.select(col("id_a"), col("id_b")))
-          .coalesce(4).localCheckpoint(true)
-        standing = standing.unionByName(slice)
-      }
-      // one-shot pair set = the incremental join against an EMPTY
-      // standing side (all pairs have a new endpoint) — one blocked
-      // join, same arithmetic q194's per-kind calls compute. r20
-      // (verdict next #3): the one-shot labeling is the MEMOIZED
-      // audit twin; each rep prices the 2-slice fold + the equality
-      // join.
-      val oneshot = twinArtifact(s, dir, "media-oneshot")(
-        ops.Dedup.connectedComponents(
-          ops.Multimodal.mediaPairsIncremental(fps, empty, maxHamming = 4)
-            .select(col("id_a"), col("id_b"))))
-      val mism = folded.alias("a")
-        .join(oneshot.alias("b"), col("a.id") === col("b.id"), "full")
-        .filter(col("a.id").isNull || col("b.id").isNull ||
-          col("a.label") =!= col("b.label"))
-        .agg(count(lit(1)).as("mism"))
-      fps.agg(count(lit(1)).as("n_fingerprinted")).crossJoin(mism)
-        .select(col("n_fingerprinted"),
-          (col("mism") === 0L).as("fold_equals_oneshot"))
-    }),
-
-    // COUNTS-BASED RETRAIN CONTRACT (r20, r19 verdict next #2 — the
-    // q197 shape applied to LrIngest): the fixture's train half is
-    // folded in TWO slices through the count-maintenance arithmetic
-    // lrCountSink runs per micro-batch (tokenize the slice once,
-    // append its (doc_id, y, h, c) rows), the model is trained FROM
-    // the folded standing counts, and its weight table is
-    // equality-joined against the from-scratch twin — the 100 TB
-    // retrain contract (retrain ≡ from-scratch, zero re-tokenize)
-    // made oracle-visible. The twin is the MEMOIZED artifact model
-    // (lrModelArtifact — the same frame q190/q196 score from, built
-    // once off the timed path: the verdict-#3 treatment, the
-    // from-scratch leg is the nightly artifact by the family's own
-    // production framing), so each rep prices the counts fold + the
-    // 2-round counts training + the equality join. n_w / sum_w_e6 /
-    // bias_e6 replay string-keyed in the oracle's unrolled training
-    // CTEs, so the hash gate covers the folded training's arithmetic,
-    // not just the equality boolean.
-    "q198_quality_lr_counts_retrain" -> ((s, dir) => {
-      val train = lrAugment(T(s, dir, "documents"))
-        .filter(pmod(col("doc_id"), lit(2L)) === 0L)
-      val sliceKey = pmod(xxhash64(col("doc_id")), lit(2L))
-      val counts = (0L until 2L).map { i =>
-        ops.QualityClassifier.tokenCounts(train.filter(sliceKey === i),
-          "doc_id", "text", Some("y"))
-      }.reduce(_ unionByName _)
-      val m = ops.QualityClassifier.trainLogisticFromCounts(counts,
-        rounds = 2, gMul = 16L)
-      val scratch = lrModelArtifact(s, dir)
-      val mism = m.w.alias("a")
-        .join(scratch.w.alias("b"), col("a.h") === col("b.h"), "full")
-        .filter(col("a.h").isNull || col("b.h").isNull ||
-          col("a.w_e6") =!= col("b.w_e6"))
-        .agg(count(lit(1)).as("mism"))
-      val nTrain = counts.select(col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_train"))
-      m.w.agg(count(lit(1)).as("n_w"), sum(col("w_e6")).as("sum_w_e6"))
-        .crossJoin(mism).crossJoin(nTrain)
-        .select(col("n_train"), col("n_w"), col("sum_w_e6"),
-          lit(m.biasE6).as("bias_e6"),
-          (col("mism") === 0L && lit(m.biasE6 == scratch.biasE6))
-            .as("fold_equals_scratch"))
-    }),
-  )
-
-  /** The q190-q192 planted-label fixture: doc_id-derived labels
-    * (y = 1 iff doc_id % 4 ≤ 1 — balanced on both corpus halves),
-    * class-marker tokens appended to 80% of documents
-    * (doc_id % 5 ≠ 4), the untouched corpus text as noise features.
-    */
-  private def lrAugment(docs: DataFrame): DataFrame =
-    lrAugmentMk(docs, "qmk", "jmk")
-
-  /** Marker-parameterized fixture (r19): q196's drift regime is the
-    * SAME concept (y map, coverage, noise text) under NEW surface
-    * markers — the features the standing model learned have left the
-    * corpus.
-    */
-  private def lrAugmentMk(docs: DataFrame, posMk: String,
-                          negMk: String): DataFrame =
-    docs.select(col("doc_id"), col("lang"),
-      concat(col("text"),
-        when(pmod(col("doc_id"), lit(5L)) === 4L, lit(""))
-          .when(pmod(col("doc_id"), lit(4L)) <= 1L,
-            lit(s" $posMk $posMk $posMk"))
-          .otherwise(lit(s" $negMk $negMk $negMk"))).as("text"),
-      (pmod(col("doc_id"), lit(4L)) <= 1L).cast("long").as("y"))
-
-  /** The q194/q197 mixed-payload media fixture: real PNG bytes for
-    * half the corpus (q144's planted pixel formula), real RIFF/PCM
-    * WAVs for a quarter (q147's sample formula), real frame-carrying
-    * MP4s for an eighth (r20 — carved out of the former text slice so
-    * the image/audio arithmetic is byte-identical to r19; the video
-    * slice plants near-dup triples of its own: groups of three
-    * consecutive videos share a content base, the 2nd/3rd carry one
-    * perturbed pixel), text payloads for the final eighth — all
-    * synthesized from `documents` so every downstream fingerprint
-    * replays arithmetically in the oracle.
-    */
-  private[graft] def multimodalMediaTable(s: SparkSession,
-                                          dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val did = col("doc_id")
-    val base = did - pmod(did, lit(3L))
-    // q144's pixel synthesis verbatim, over the image subset
-    val ipos = pmod(did * lit(13L), lit(72L))
-    val pixels = flatten(transform(sequence(lit(0), lit(7)), y =>
-      transform(sequence(lit(0), lit(8)), x => {
-        val xl = x.cast("long"); val yl = y.cast("long")
-        val i = yl * lit(9L) + xl
-        val h = (base + lit(1L)) * lit(2654435761L) +
-          xl * lit(97L) + yl * lit(1031L)
-        val g = h.bitwiseXOR(shiftright(h, 7))
-        val p = pmod(g * lit(31L) + shiftright(g, 11), lit(241L))
-        when(pmod(did, lit(3L)) =!= lit(0L) && i === ipos,
-          pmod(p + lit(128L), lit(241L))).otherwise(p).cast("int")
-      })))
-    val pngs = ops.Multimodal.asGrayPngMediaTable(
-      docs.filter(pmod(did, lit(4L)).isin(0L, 2L)), "doc_id", 9, 8, pixels)
-    // q147's sample synthesis verbatim, over the audio subset
-    val apos = pmod(did * lit(13L), lit(520L))
-    val samples = transform(sequence(lit(0), lit(519)), i => {
-      val il = i.cast("long")
-      val h = (base + lit(1L)) * lit(2654435761L) + il * lit(7349L)
-      val g = h.bitwiseXOR(shiftright(h, 7))
-      val raw = pmod(g * lit(31L) + shiftright(g, 11), lit(30000L))
-      val rawP = when(pmod(did, lit(3L)) =!= lit(0L) && il === apos,
-        pmod(raw + lit(9000L), lit(30000L))).otherwise(raw)
-      (rawP - lit(15000L)).cast("int")
-    })
-    val wavs = ops.Multimodal.asPcmWavMediaTable(
-      docs.filter(pmod(did, lit(4L)) === 1L), "doc_id", 16000, samples)
-    // the video slice (r20): 3-frame 9x8 MP4s whose pixel values are a
-    // declarative formula over the VIDEO-ORDINAL group base vb — three
-    // consecutive videos (vm = (did-3)/8 ∈ {3j, 3j+1, 3j+2}) share
-    // content, the 2nd/3rd get ONE perturbed pixel (a near-dup triple
-    // per group, the video twin of the image/audio planting)
-    val vm = ((did - lit(3L)) / lit(8L)).cast("long")
-    val vb = vm - pmod(vm, lit(3L))
-    val vpos = pmod(did * lit(13L), lit(216L))
-    val vpixels = flatten(transform(sequence(lit(0), lit(2)), f =>
-      flatten(transform(sequence(lit(0), lit(7)), y =>
-        transform(sequence(lit(0), lit(8)), x => {
-          val xl = x.cast("long"); val yl = y.cast("long")
-          val fl = f.cast("long")
-          val i = fl * lit(72L) + yl * lit(9L) + xl
-          val h = (vb + lit(1L)) * lit(2654435761L) +
-            xl * lit(97L) + yl * lit(1031L) + fl * lit(761L)
-          val g = h.bitwiseXOR(shiftright(h, 7))
-          val p = pmod(g * lit(31L) + shiftright(g, 11), lit(241L))
-          when(pmod(vm, lit(3L)) =!= lit(0L) && i === vpos,
-            pmod(p + lit(128L), lit(241L))).otherwise(p).cast("int")
-        })))))
-    val mp4s = ops.Multimodal.asMp4FramesMediaTable(
-      docs.filter(pmod(did, lit(8L)) === 3L), "doc_id",
-      timescale = 1000, w = 9, h = 8, nFrames = 3, pixels = vpixels)
-    // text payloads ride the SAME table (the "T " guard byte keeps a
-    // text prefix from colliding with a container magic — q163)
-    val texts = docs.filter(pmod(did, lit(8L)) === 7L)
-      .select(did.cast("long").as("media_id"), lit("text").as("media_type"),
-        encode(concat(lit("T "), substring(col("text"), 1, 64)), "UTF-8")
-          .as("payload"),
-        lit(null).cast("int").as("meta_width"),
-        lit(null).cast("int").as("meta_height"),
-        lit(null).cast("long").as("meta_duration_ms"))
-    pngs.unionByName(wavs).unionByName(mp4s).unionByName(texts)
-  }
-
-  // Shared CTE prefix for the q164/q165 oracles: quantize (float
-  // widened to double, floor(x*1000)+1000 — non-negative so `//` ==
-  // floor == Spark's div) → init = the 8 smallest vec_ids → TWO
-  // unrolled Lloyd's rounds → final assignment `af(vec_id, cell,
-  // dist)`. Every distance/argmin/mean is BIGINT-exact, so the
-  // assignment replay is hash-exact, not recall-gated.
-  private val kmeansCtes: String =
-    """q AS (
-         SELECT vec_id,
-           list_transform(CAST(embedding AS DOUBLE[]),
-             x -> CAST(floor(x * 1000) AS BIGINT) + 1000) AS v
-         FROM embeddings),
-       dims AS (SELECT unnest(range(1, 65)) AS j),
-       c0 AS (
-         SELECT CAST(rn - 1 AS BIGINT) AS cell, v FROM (
-           SELECT v, row_number() OVER (ORDER BY vec_id) AS rn FROM q)
-         WHERE rn <= 8),
-       d1 AS (
-         SELECT q.vec_id, c.cell,
-           CAST(list_sum(list_transform(range(1, 65),
-             j -> (q.v[j] - c.v[j]) * (q.v[j] - c.v[j]))) AS BIGINT) AS dist
-         FROM q CROSS JOIN c0 c),
-       a1 AS (
-         SELECT vec_id, cell FROM (
-           SELECT vec_id, cell,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-           FROM d1) WHERE rn = 1),
-       s1 AS (
-         SELECT a.cell, d.j, CAST(SUM(q.v[d.j]) // COUNT(*) AS BIGINT) AS s
-         FROM a1 a JOIN q USING (vec_id) CROSS JOIN dims d
-         GROUP BY a.cell, d.j),
-       c1 AS (SELECT cell, list(s ORDER BY j) AS v FROM s1 GROUP BY cell),
-       d2 AS (
-         SELECT q.vec_id, c.cell,
-           CAST(list_sum(list_transform(range(1, 65),
-             j -> (q.v[j] - c.v[j]) * (q.v[j] - c.v[j]))) AS BIGINT) AS dist
-         FROM q CROSS JOIN c1 c),
-       a2 AS (
-         SELECT vec_id, cell FROM (
-           SELECT vec_id, cell,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-           FROM d2) WHERE rn = 1),
-       s2 AS (
-         SELECT a.cell, d.j, CAST(SUM(q.v[d.j]) // COUNT(*) AS BIGINT) AS s
-         FROM a2 a JOIN q USING (vec_id) CROSS JOIN dims d
-         GROUP BY a.cell, d.j),
-       c2 AS (SELECT cell, list(s ORDER BY j) AS v FROM s2 GROUP BY cell),
-       df2 AS (
-         SELECT q.vec_id, c.cell,
-           CAST(list_sum(list_transform(range(1, 65),
-             j -> (q.v[j] - c.v[j]) * (q.v[j] - c.v[j]))) AS BIGINT) AS dist
-         FROM q CROSS JOIN c2 c),
-       af AS (
-         SELECT vec_id, cell, dist FROM (
-           SELECT vec_id, cell, dist,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-           FROM df2) WHERE rn = 1)"""
-
-  // ------------------------------------------------------------------
-  // DuckDB oracles (ANSI SQL on the same parquet tables)
-  // ------------------------------------------------------------------
-  // q180's full phrase replay — shared verbatim by q187: the
-  // incremental positional-index path's oracle IS the one-shot answer
-  private val phraseOracle: String =
-    """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'),
-               x -> length(x) > 0) AS toks
-           FROM documents),
-         m2 AS (
-           SELECT 'part filter' AS phrase, doc_id,
-             CAST(len(list_filter(range(1, len(toks)),
-               i -> toks[i] = 'part' AND toks[i+1] = 'filter'))
-               AS BIGINT) AS n_hits
-           FROM d),
-         m3 AS (
-           SELECT 'big order scan' AS phrase, doc_id,
-             CAST(len(list_filter(range(1, len(toks) - 1),
-               i -> toks[i] = 'big' AND toks[i+1] = 'order'
-                 AND toks[i+2] = 'scan')) AS BIGINT) AS n_hits
-           FROM d)
-         SELECT phrase, doc_id, n_hits
-         FROM (SELECT * FROM m2 UNION ALL SELECT * FROM m3)
-         WHERE n_hits >= 1"""
-
-  // Floor division in DuckDB SQL, exactly as the Spark side computes
-  // it (QualityClassifier.fdiv): subtract the non-negative mod, then
-  // divide — exactly divisible, so `//`'s truncation semantics can't
-  // differ from Spark's
-  private def fdivSql(a: String, b: String): String =
-    s"(($a) - ((($a) % ($b) + ($b)) % ($b))) // ($b)"
-
-  /** The q190-q192 training replay: two unrolled gradient rounds of
-    * the e6 fixed-point logistic regression (hard-sigmoid link, floor
-    * division) over `docSrc` (a table name or filtered subquery),
-    * ending with `zt(doc_id, z)` = held-out margins. String-keyed
-    * where Spark is hash-keyed (the q113 contract); every other op is
-    * integer arithmetic both engines replay bit-for-bit.
-    *
-    * r19: parameterized by the fixture MARKERS (q196's drift regime
-    * swaps qmk/jmk for xmk/zmk) and a CTE-name PREFIX so one query can
-    * unroll TWO independent trainings (q196 replays the baseline
-    * training AND the post-drift retrain side by side).
-    */
-  private def lrOracleCtes(docSrc: String, posMk: String = "qmk",
-                           negMk: String = "jmk", p: String = ""): String = {
-    val sig = "greatest(0, least(1000000, (" + fdivSql("z", "4") + ") + 500000))"
-    s"""${p}aug AS (
-           SELECT doc_id, lang,
-             lower(text) || CASE WHEN doc_id % 5 = 4 THEN ''
-               WHEN doc_id % 4 <= 1 THEN ' $posMk $posMk $posMk'
-               ELSE ' $negMk $negMk $negMk' END AS text,
-             CAST(CASE WHEN doc_id % 4 <= 1 THEN 1 ELSE 0 END AS BIGINT) AS y
-           FROM $docSrc),
-         ${p}cnt AS (
-           SELECT doc_id, y, w, CAST(count(*) AS BIGINT) AS c
-           FROM (SELECT doc_id, y,
-                   unnest(list_filter(string_split_regex(text, '\\s+'),
-                     x -> length(x) > 0)) AS w
-                 FROM ${p}aug)
-           GROUP BY 1, 2, 3),
-         ${p}tr AS (SELECT * FROM ${p}cnt WHERE doc_id % 2 = 0),
-         ${p}gden AS (SELECT 16 * CAST(count(DISTINCT doc_id) AS BIGINT) AS g FROM ${p}tr),
-         ${p}e1 AS (SELECT DISTINCT doc_id, 500000 - 1000000 * y AS e FROM ${p}tr),
-         ${p}gw1 AS (SELECT w, CAST(sum(e * c) AS BIGINT) AS gr
-                 FROM ${p}tr JOIN ${p}e1 USING (doc_id) GROUP BY 1),
-         ${p}w1 AS (SELECT w, -(${fdivSql("gr", "g")}) AS wt FROM ${p}gw1 CROSS JOIN ${p}gden),
-         ${p}b1 AS (SELECT -(${fdivSql(s"(SELECT CAST(sum(e) AS BIGINT) FROM ${p}e1)", "g")}) AS b FROM ${p}gden),
-         ${p}z2 AS (SELECT t.doc_id, any_value(t.y) AS y,
-                  (SELECT b FROM ${p}b1) + CAST(sum(t.c * ${p}w1.wt) AS BIGINT) AS z
-                FROM ${p}tr t JOIN ${p}w1 USING (w) GROUP BY t.doc_id),
-         ${p}e2 AS (SELECT doc_id, $sig - 1000000 * y AS e FROM ${p}z2),
-         ${p}gw2 AS (SELECT w, CAST(sum(e * c) AS BIGINT) AS gr
-                 FROM ${p}tr JOIN ${p}e2 USING (doc_id) GROUP BY 1),
-         ${p}w2 AS (SELECT ${p}w1.w, ${p}w1.wt - (${fdivSql(s"coalesce(${p}gw2.gr, 0)", "g")}) AS wt
-                FROM ${p}w1 LEFT JOIN ${p}gw2 USING (w) CROSS JOIN ${p}gden),
-         ${p}b2 AS (SELECT (SELECT b FROM ${p}b1)
-                  - (${fdivSql(s"(SELECT CAST(sum(e) AS BIGINT) FROM ${p}e2)", "g")}) AS b FROM ${p}gden),
-         ${p}te AS (SELECT * FROM ${p}cnt WHERE doc_id % 2 = 1),
-         ${p}zt AS (SELECT t.doc_id, any_value(t.y) AS y,
-                  (SELECT b FROM ${p}b2) + CAST(sum(t.c * coalesce(${p}w2.wt, 0)) AS BIGINT) AS z
-                FROM ${p}te t LEFT JOIN ${p}w2 USING (w) GROUP BY t.doc_id)"""
-  }
-
-  private val lrSigSql: String =
-    "greatest(0, least(1000000, (" + fdivSql("z", "4") + ") + 500000))"
-
-  // q182's full DSIR replay — shared verbatim by q188: the additive
-  // raw-count-merge path's oracle IS the one-shot training answer
-  private val dsirOracle: String =
-    """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         t AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 = 0),
-         r AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0),
-         ct AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-         cr AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1),
-         k AS (SELECT
-             (SELECT count(*) FROM (SELECT w FROM ct UNION SELECT w FROM cr)) AS v,
-             (SELECT sum(c) FROM ct) AS nt,
-             (SELECT sum(c) FROM cr) AS nr),
-         lam AS (
-           SELECT coalesce(ct.w, cr.w) AS w,
-             CAST(floor(1000000.0 * ln((coalesce(ct.c, 0) + 1.0) / (nt + v))) AS BIGINT)
-             - CAST(floor(1000000.0 * ln((coalesce(cr.c, 0) + 1.0) / (nr + v))) AS BIGINT) AS lam_e6
-           FROM ct FULL JOIN cr ON ct.w = cr.w CROSS JOIN k),
-         pos AS (SELECT doc_id, unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0)
-         SELECT doc_id, CAST(sum(lam_e6) AS BIGINT) AS dsir_e6,
-           CAST(count(*) AS BIGINT) AS n_pos, CAST(0 AS BIGINT) AS n_unseen
-         FROM pos JOIN lam USING (w) GROUP BY 1"""
-
-  // q113's full Stupid-Backoff replay — shared verbatim by q183: the
-  // additive count-merge path's oracle IS the one-shot training answer
-  private val lmQualityOracle: String =
-    """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         r AS (SELECT toks FROM d WHERE doc_id % 10 = 0),
-         t AS (SELECT doc_id, toks FROM d WHERE doc_id % 10 <> 0),
-         uni AS (
-           SELECT w, CAST(count(*) AS BIGINT) AS cu
-           FROM (SELECT unnest(toks) AS w FROM r) GROUP BY 1),
-         stats AS (SELECT CAST(sum(cu) + count(*) AS DOUBLE) AS nv FROM uni),
-         bi AS (
-           SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb
-           FROM (SELECT toks[i] AS w1, toks[i+1] AS w2
-                 FROM (SELECT toks, unnest(range(1, len(toks))) AS i FROM r))
-           GROUP BY 1, 2),
-         biu AS (
-           SELECT bi.w1, bi.w2, bi.cb, uni.cu AS cu1
-           FROM bi JOIN uni ON bi.w1 = uni.w),
-         p AS (
-           SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-           FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t)),
-         j AS (
-           SELECT p.doc_id, biu.cb, biu.cu1, u2.cu AS cu2
-           FROM p LEFT JOIN biu ON p.w1 = biu.w1 AND p.w2 = biu.w2
-                  LEFT JOIN uni u2 ON p.w2 = u2.w),
-         s AS (
-           SELECT doc_id,
-             CAST(floor(1000000.0 * CASE
-               WHEN cb IS NOT NULL THEN ln(CAST(cb AS DOUBLE) / CAST(cu1 AS DOUBLE))
-               ELSE ln(0.4 * (CAST(COALESCE(cu2, 0) + 1 AS DOUBLE) / (SELECT nv FROM stats)))
-             END) AS BIGINT) AS lnp_e6,
-             CASE WHEN cb IS NULL THEN 1 ELSE 0 END AS bo
-           FROM j)
-         SELECT doc_id, CAST(sum(lnp_e6) AS BIGINT) AS ll_e6,
-           CAST(count(*) AS BIGINT) AS n_pos, CAST(sum(bo) AS BIGINT) AS n_backoff
-         FROM s GROUP BY 1"""
-
-  // q107's full BM25 replay — shared verbatim by q179: the
-  // incremental index path's oracle IS the one-shot corpus answer
-  private val bm25Oracle: String =
-    """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         base AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl FROM d),
-         stats AS (
-           SELECT CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-           FROM base),
-         tf AS (
-           SELECT doc_id, dl, term, count(*) AS tf
-           FROM (SELECT doc_id, dl, unnest(toks) AS term FROM base)
-           WHERE term IN ('dup', 'spark', 'vector', 'stream', 'hash', 'scan')
-           GROUP BY 1, 2, 3),
-         idf AS (
-           SELECT term,
-             CAST(floor(1000000.0 * ln(
-               (CAST((SELECT n_docs FROM stats) AS DOUBLE) - count(*) + 0.5)
-                 / (count(*) + 0.5) + 1.0)) AS BIGINT) AS idf_e6
-           FROM tf GROUP BY term),
-         parts AS (
-           SELECT tf.doc_id,
-             CAST(floor(CAST(idf.idf_e6 AS DOUBLE) *
-               ((tf.tf * (1.2 + 1.0)) /
-                 (tf.tf + 1.2 * (1.0 - 0.75) +
-                   1.2 * 0.75 * tf.dl / (SELECT avgdl FROM stats))) * 1000.0)
-               AS BIGINT) AS part_e9
-           FROM tf JOIN idf USING (term)),
-         s AS (
-           SELECT doc_id, CAST(sum(part_e9) AS BIGINT) AS score_e9,
-             count(*) AS n_terms
-           FROM parts GROUP BY 1)
-         SELECT doc_id, score_e9, n_terms FROM s
-         QUALIFY row_number() OVER (ORDER BY score_e9 DESC, doc_id) <= 20"""
-
-  // q117's sequential 4-merge replay — shared verbatim by q175:
-  // the batched-merge path's oracle IS the sequential answer
-  private val bpeSequentialOracle: String =
-    """WITH w AS (
-           SELECT word, count(*) AS freq FROM (
-             SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-               x -> length(x) > 0 AND NOT contains(x, chr(1)))) AS word
-             FROM documents) GROUP BY 1),
-         d0 AS (SELECT array_to_string(list_transform(string_split(word, ''), c -> chr(1) || c || chr(1)), '') AS sym, freq FROM w),
-         p1 AS (SELECT z[1] AS x, z[2] AS y, sum(freq) AS ct
-                FROM (SELECT freq, unnest(list_zip(list_slice(toks, 1, len(toks)-1), list_slice(toks, 2, len(toks)))) AS z
-                      FROM (SELECT string_split(trim(sym, chr(1)), chr(1) || chr(1)) AS toks, freq FROM d0))
-                GROUP BY 1, 2 ORDER BY ct DESC, x ASC, y ASC LIMIT 1),
-         d1 AS (SELECT replace(sym, (SELECT chr(1) || x || chr(1) || chr(1) || y || chr(1) FROM p1), (SELECT chr(1) || x || y || chr(1) FROM p1)) AS sym, freq FROM d0),
-         p2 AS (SELECT z[1] AS x, z[2] AS y, sum(freq) AS ct
-                FROM (SELECT freq, unnest(list_zip(list_slice(toks, 1, len(toks)-1), list_slice(toks, 2, len(toks)))) AS z
-                      FROM (SELECT string_split(trim(sym, chr(1)), chr(1) || chr(1)) AS toks, freq FROM d1))
-                GROUP BY 1, 2 ORDER BY ct DESC, x ASC, y ASC LIMIT 1),
-         d2 AS (SELECT replace(sym, (SELECT chr(1) || x || chr(1) || chr(1) || y || chr(1) FROM p2), (SELECT chr(1) || x || y || chr(1) FROM p2)) AS sym, freq FROM d1),
-         p3 AS (SELECT z[1] AS x, z[2] AS y, sum(freq) AS ct
-                FROM (SELECT freq, unnest(list_zip(list_slice(toks, 1, len(toks)-1), list_slice(toks, 2, len(toks)))) AS z
-                      FROM (SELECT string_split(trim(sym, chr(1)), chr(1) || chr(1)) AS toks, freq FROM d2))
-                GROUP BY 1, 2 ORDER BY ct DESC, x ASC, y ASC LIMIT 1),
-         d3 AS (SELECT replace(sym, (SELECT chr(1) || x || chr(1) || chr(1) || y || chr(1) FROM p3), (SELECT chr(1) || x || y || chr(1) FROM p3)) AS sym, freq FROM d2),
-         p4 AS (SELECT z[1] AS x, z[2] AS y, sum(freq) AS ct
-                FROM (SELECT freq, unnest(list_zip(list_slice(toks, 1, len(toks)-1), list_slice(toks, 2, len(toks)))) AS z
-                      FROM (SELECT string_split(trim(sym, chr(1)), chr(1) || chr(1)) AS toks, freq FROM d3))
-                GROUP BY 1, 2 ORDER BY ct DESC, x ASC, y ASC LIMIT 1)
-         SELECT * FROM (
-           SELECT CAST(1 AS INT) AS rank, x AS lhs, y AS rhs, x || y AS merged, CAST(ct AS BIGINT) AS pair_ct FROM p1
-           UNION ALL SELECT 2, x, y, x || y, CAST(ct AS BIGINT) FROM p2
-           UNION ALL SELECT 3, x, y, x || y, CAST(ct AS BIGINT) FROM p3
-           UNION ALL SELECT 4, x, y, x || y, CAST(ct AS BIGINT) FROM p4)
-         WHERE pair_ct >= 2"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-         count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-
-    "q02_visitor_stats" ->
-      """SELECT strftime(time_bucket(INTERVAL 10 MINUTES, ts), '%Y-%m-%d %H:%M:%S') AS stt,
-         strftime(time_bucket(INTERVAL 10 MINUTES, ts) + INTERVAL 10 MINUTES, '%Y-%m-%d %H:%M:%S') AS edt,
-         event_type,
-         count(*) AS pv_ct,
-         count(DISTINCT user_id) AS uv_ct,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS dur_sum
-         FROM events GROUP BY 1, 2, 3""",
-
-    "q03_province_stats" ->
-      """SELECT r_name, n_name,
-         count(DISTINCT o_orderkey) AS order_count,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_amount
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-
-    "q04_keyword_stats" ->
-      """SELECT keyword, count(*) AS ct, count(DISTINCT doc_id) AS doc_ct
-         FROM (SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'), t -> length(t) > 0)) AS keyword
-               FROM documents)
-         GROUP BY keyword""",
-
-    "q05_metric_unpivot" ->
-      """WITH m AS (
-           SELECT user_id,
-             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_ct,
-             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS cart_ct,
-             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS order_ct
-           FROM events GROUP BY user_id)
-         SELECT user_id, source, ct FROM (
-           SELECT user_id, 'CLICK' AS source, click_ct AS ct FROM m
-           UNION ALL SELECT user_id, 'CART', cart_ct FROM m
-           UNION ALL SELECT user_id, 'ORDER', order_ct FROM m)
-         WHERE ct > 0""",
-
-    "q06_order_line_interval_join" ->
-      """SELECT o_orderkey, l_linenumber,
-         strftime(l_shipdate, '%Y-%m-%d') AS ship_date,
-         l_quantity AS qty
-         FROM orders JOIN lineitem
-           ON l_orderkey = o_orderkey
-          AND l_shipdate >= o_orderdate
-          AND l_shipdate <= o_orderdate + INTERVAL 30 DAYS""",
-
-    "q07_purchase_attribution" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
-         FROM events p JOIN events c
-           ON p.user_id = c.user_id
-          AND p.event_type = 'purchase' AND c.event_type = 'click'
-          AND c.ts >= p.ts - INTERVAL 30 MINUTES AND c.ts <= p.ts""",
-
-    "q08_dim_enrich" ->
-      """SELECT l_orderkey, l_linenumber, p_name, p_brand, s_name, n_name, r_name
-         FROM lineitem
-         LEFT JOIN part ON l_partkey = p_partkey
-         LEFT JOIN supplier ON l_suppkey = s_suppkey
-         LEFT JOIN nation ON s_nationkey = n_nationkey
-         LEFT JOIN region ON n_regionkey = r_regionkey""",
-
-    "q09_new_visitor_fix" ->
-      """SELECT event_id, user_id,
-         strftime(ts, '%Y-%m-%d') AS event_date,
-         CASE WHEN CAST(ts AS DATE) = min(CAST(ts AS DATE)) OVER (PARTITION BY user_id)
-              THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is_new
-         FROM events""",
-
-    "q10_daily_uv" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt, count(DISTINCT user_id) AS uv_ct
-         FROM events GROUP BY 1""",
-
-    "q11_bounce_detect" ->
-      """SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str
-         FROM (SELECT event_id, user_id, ts,
-                 lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_ts
-               FROM events)
-         WHERE next_ts IS NULL OR next_ts > ts + INTERVAL 30 MINUTES""",
-
-    "q12_log_split_start" ->
-      """SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str
-         FROM events WHERE event_type = 'signup'""",
-
-    "q13_log_split_page" ->
-      """SELECT event_id, user_id, event_type, value
-         FROM events WHERE event_type IN ('view', 'click')""",
-
-    "q14_log_split_display" ->
-      """SELECT event_id, user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-         FROM events WHERE event_type IN ('view', 'click')""",
-
-    "q15_config_router" ->
-      """SELECT sink_type, sink_table, count(*) AS ct
-         FROM events
-         JOIN (VALUES ('signup','kafka','dwd_signup'),
-                      ('purchase','kafka','dwd_purchase'),
-                      ('view','clickhouse','dws_view'),
-                      ('click','clickhouse','dws_click'),
-                      ('error','hbase','dim_error'))
-              AS config(source_type, sink_type, sink_table)
-           ON event_type = source_type
-         GROUP BY sink_type, sink_table""",
-
-    "q16_union_onehot" ->
-      """SELECT user_id,
-         CAST(sum(CASE WHEN event_type IN ('view','click') THEN 1 ELSE 0 END) AS BIGINT) AS pv_ct,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS order_ct,
-         CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS err_ct
-         FROM events GROUP BY user_id
-         HAVING pv_ct + order_ct + err_ct > 0""",
-
-    "q17_scalar_dates" ->
-      """SELECT event_id,
-         strftime(ts, '%Y-%m-%d %H:%M:%S') AS ymd_hms,
-         substr(strftime(ts, '%H:%M'), 1, 4) || '0:00-' || substr(strftime(ts, '%H:%M'), 1, 4) || '9:59' AS ten_min,
-         dayname(ts) AS day_name,
-         strftime(last_day(CAST(ts AS DATE)), '%Y-%m-%d') AS month_end,
-         strftime(CAST(ts AS DATE) + 7, '%Y-%m-%d') AS plus_7d,
-         CASE WHEN day(CAST(ts AS DATE)) <= 15 THEN strftime(ts, '%Y-%m-15')
-              ELSE strftime(CAST(ts AS DATE) + INTERVAL 1 MONTH, '%Y-%m-15') END AS mid_month
-         FROM events""",
-
-    "q18_text_clean" ->
-      """SELECT doc_id,
-         regexp_replace(text, '[^\p{L}\p{M}\p{N}\p{P}\p{Z}\s]', '', 'g') AS clean_text,
-         length(regexp_replace(text, '[^\p{L}\p{M}\p{N}\p{P}\p{Z}\s]', '', 'g')) AS clean_len
-         FROM documents""",
-
-    "q19_dedup_exact" ->
-      """SELECT min(doc_id) AS rep_id, count(*) AS dup_ct
-         FROM documents GROUP BY text""",
-
-    "q20_token_stats" ->
-      """SELECT doc_id,
-         len(list_filter(string_split_regex(text, '\s+'), t -> length(t) > 0)) AS token_ct,
-         len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS bpe_token_ct,
-         list_reduce(
-           list_prepend(CAST(0 AS BIGINT),
-             list_transform(list_filter(string_split_regex(text, '\s+'), t -> length(t) > 0),
-               t -> CAST(length(t) AS BIGINT))),
-           (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
-         FROM documents""",
-
-    "q21_quality_score" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents)
-         SELECT doc_id,
-           length(text) AS char_ct,
-           CAST(floor(CAST(len(list_filter(toks, x -> x IN ('the','a','an','and','or','of','to','in','is','it','that','this','for','on','with','as','was','at','by'))) AS DOUBLE)
-             / CAST(greatest(len(toks), 1) AS DOUBLE) * 10000) AS BIGINT) AS stopword_ratio_e4,
-           CAST(floor(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(toks, x -> CAST(length(x) AS BIGINT))), (a,b) -> a + b) AS DOUBLE)
-             / CAST(greatest(len(toks), 1) AS DOUBLE) * 10000) AS BIGINT) AS mean_token_len_e4
-         FROM t""",
-
-    "q22_multimodal_meta" ->
-      """SELECT doc_id,
-         octet_length(encode(text)) AS n_bytes,
-         sha256(text) AS digest
-         FROM documents""",
-
-    "q23_ann_bruteforce" ->
-      """SELECT query_id, rank, neighbor_id FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC,
-                        c.vec_id ASC) AS rank
-           FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-           WHERE q.vec_id < 8)
-         WHERE rank <= 5""",
-
-    "q24_lang_id" ->
-      """WITH t AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         r AS (
-           SELECT doc_id,
-             CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','is'))) AS DOUBLE) / CAST(greatest(len(toks),1) AS DOUBLE) AS en,
-             CAST(len(list_filter(toks, x -> x IN ('le','la','les','et','de','un'))) AS DOUBLE) / CAST(greatest(len(toks),1) AS DOUBLE) AS fr,
-             CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ein','zu'))) AS DOUBLE) / CAST(greatest(len(toks),1) AS DOUBLE) AS de,
-             CAST(len(list_filter(toks, x -> x IN ('el','los','las','y','una','en'))) AS DOUBLE) / CAST(greatest(len(toks),1) AS DOUBLE) AS es
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN en >= fr AND en >= de AND en >= es AND en > 0 THEN 'en'
-                WHEN fr >= de AND fr >= es AND fr > 0 THEN 'fr'
-                WHEN de >= es AND de > 0 THEN 'de'
-                WHEN es > 0 THEN 'es'
-                ELSE 'und' END AS lang_pred
-         FROM r""",
-
-    "q25_dict_classify" ->
-      """WITH t AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         l AS (
-           SELECT doc_id,
-             concat_ws(',',
-               CASE WHEN len(list_filter(toks, x -> x IN ('fast','slow'))) > 0 THEN 'perf' END,
-               CASE WHEN len(list_filter(toks, x -> x IN ('table','row','column'))) > 0 THEN 'storage' END,
-               CASE WHEN len(list_filter(toks, x -> x IN ('join','merge','sort','scan'))) > 0 THEN 'compute' END,
-               CASE WHEN len(list_filter(toks, x -> x IN ('stream','window','batch'))) > 0 THEN 'stream' END) AS joined
-           FROM t)
-         SELECT doc_id, CASE WHEN length(joined) > 0 THEN joined ELSE 'none' END AS labels
-         FROM l""",
-
-    "q26_daily_pvuv" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt,
-         count(*) AS pv, count(DISTINCT user_id) AS uv,
-         max(strftime(ts, '%Y-%m-%d %H:%M:%S')) AS max_ts
-         FROM events GROUP BY 1""",
-
-    "q27_top_orders" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-
-    "q28_session_window" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                    OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL 30 MINUTES
-                  THEN 1 ELSE 0 END AS new_session
-           FROM events),
-         sessions AS (
-           SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-           FROM flagged)
-         SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(max(ts) + INTERVAL 30 MINUTES, '%Y-%m-%d %H:%M:%S') AS session_end,
-           count(*) AS n_events
-         FROM sessions GROUP BY user_id, session_id""",
-
-    "q29_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         count(*) AS n
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-
-    "q30_dedup_ngram" ->
-      """WITH t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-         FROM t a JOIN t b
-           ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-         WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 8000""",
-
-    // exact same semantics as q30 (the dispatch is purely physical)
-    "q79_dedup_ngram_auto" ->
-      """WITH t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-         FROM t a JOIN t b
-           ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-         WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 8000""",
-
-    // exact same semantics as q30 (prefix filtering is output-preserving)
-    "q56_dedup_ngram_prefix" ->
-      """WITH t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-         FROM t a JOIN t b
-           ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-         WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 8000""",
-    // the payload is a synthesized PNG: 8-byte signature + len + "IHDR"
-    // + 13 data bytes + CRC = 33 bytes; decoded dims must equal the
-    // arithmetic the payload was built from, channels = 3 (color type 2)
-    "q34_multimodal_decode" ->
-      """SELECT doc_id AS media_id,
-         16 + doc_id % 64 AS width,
-         16 + n_chars % 64 AS height,
-         3 AS channels,
-         CAST(33 AS BIGINT) AS n_bytes
-         FROM documents""",
-
-    "q37_top_orders_per_cust" ->
-      """SELECT o_custkey, rk, o_orderkey, o_totalprice FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-           FROM orders)
-         WHERE rk <= 3""",
-
-    "q38_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         count(*) AS n
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-
-    "q39_semi_join" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 45)""",
-
-    "q40_anti_join" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 45)""",
-
-    "q41_json_parse" ->
-      """SELECT event_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS prop_k
-         FROM events""",
-
-    "q42_pivot" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-         CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-         CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-         CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-         FROM events GROUP BY 1""",
-
-    "q43_text_rules" ->
-      """SELECT doc_id,
-         length(regexp_replace(text, '[^\x{4E00}-\x{9FA5}\x{F900}-\x{FA2D}\x{FF00}-\x{FFEF}\x{0000}-\x{00FF}]', '', 'g')) AS cjk_ascii_len,
-         length(trim(regexp_replace(text, '[\x{D800}-\x{DFFF}]', '', 'g'))) AS stripped_len,
-         CASE WHEN contains(text, 'table') OR contains(text, 'row')
-              THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END AS allowed
-         FROM documents""",
-
-    "q44_event_gaps" ->
-      """SELECT event_id, user_id,
-         CAST(floor(epoch(ts)) - floor(epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) AS gap_s
-         FROM events""",
-
-    "q45_log_pipeline" ->
-      """SELECT CAST(user_id AS VARCHAR) AS mid,
-         event_type AS page_id,
-         json_extract_string(props, '$.k') AS item,
-         CAST(floor(value) AS BIGINT) AS during_time,
-         epoch_ms(ts) AS ts
-         FROM events""",
-
-    "q46_cdc_pipeline" ->
-      """SELECT sink_type, sink_table, count(*) AS ct
-         FROM events
-         JOIN (VALUES ('view','kafka','dwd_view'),
-                      ('click','kafka','dwd_click'),
-                      ('purchase','clickhouse','dws_purchase'))
-              AS config(source_table, sink_type, sink_table)
-           ON event_type = source_table
-         GROUP BY 1, 2""",
-
-    "q47_custom_aggregator" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt,
-         count(DISTINCT user_id) AS uv_exact
-         FROM events GROUP BY 1""",
-
-    "q49_intersect" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-         INTERSECT
-         SELECT user_id FROM events WHERE event_type = 'purchase'""",
-
-    "q53_sliding_window" ->
-      """WITH panes AS (
-           SELECT strftime(time_bucket(INTERVAL 5 MINUTES, ts), '%Y-%m-%d %H:%M:%S') AS stt,
-                  event_type FROM events
-           UNION ALL
-           SELECT strftime(time_bucket(INTERVAL 5 MINUTES, ts) - INTERVAL 5 MINUTES, '%Y-%m-%d %H:%M:%S') AS stt,
-                  event_type FROM events)
-         SELECT stt, event_type, count(*) AS pv_ct
-         FROM panes GROUP BY 1, 2""",
-
-    "q50_except" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 95
-         EXCEPT
-         SELECT user_id FROM events WHERE event_type = 'error' AND value > 90""",
-
-    "q51_salted_agg" ->
-      """SELECT event_type,
-         CAST(sum(CAST(value AS DECIMAL(38,2))) AS DOUBLE) AS sum_value,
-         count(*) AS row_ct
-         FROM events GROUP BY 1""",
-
-    // As-of join oracle: the rank formulation (quadratic, fine at oracle
-    // scale). Right-side ties at one (user, ts) collapse to max(value)
-    // first — the same greatest-payload-tuple tie-break the operator
-    // applies.
-    "q59_asof_join" ->
-      """WITH p AS (
-           SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-         c AS (
-           SELECT user_id, ts, CAST(max(value) AS DOUBLE) AS click_value
-           FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-         j AS (
-           SELECT p.event_id, p.user_id, p.ts AS pts, c.ts AS cts, c.click_value,
-             row_number() OVER (PARTITION BY p.event_id ORDER BY c.ts DESC) AS rn
-           FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts)
-         SELECT event_id, user_id,
-           strftime(pts, '%Y-%m-%d %H:%M:%S') AS pts,
-           strftime(cts, '%Y-%m-%d %H:%M:%S') AS cts,
-           click_value
-         FROM j WHERE rn = 1""",
-
-    // Spark datediff(asOf, d)/365 is double division; DuckDB mirrors with
-    // /365.0 and CAST(floor(...)) (DuckDB CAST alone ROUNDS, Spark truncates).
-    "q55_age_from_birthday" ->
-      """SELECT o_orderkey,
-         CAST(floor(date_diff('day', o_orderdate, DATE '2026-01-01') / 365.0) AS BIGINT) AS age_years
-         FROM orders""",
-
-    // Replays Sampling.portableBucket exactly: ((id % 1000003) *
-    // 2654435761) % 1000000007 in plain BIGINT math (every term < 2^63),
-    // then the same rank-within-stratum cut. The cutoff multiplies by a
-    // DOUBLE 0.2 to mirror Spark's IEEE arithmetic — DuckDB's bare 0.2
-    // is DECIMAL and could disagree by one row at exact boundaries.
-    "q60_stratified_sample" ->
-      """WITH m AS (
-           SELECT doc_id, lang,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 AS mix
-           FROM documents),
-         r AS (
-           SELECT doc_id, lang,
-             row_number() OVER (PARTITION BY lang ORDER BY mix, doc_id) AS rn,
-             count(*) OVER (PARTITION BY lang) AS ct
-           FROM m)
-         SELECT doc_id, lang FROM r WHERE rn <= ceil(ct * CAST(0.2 AS DOUBLE))""",
-
-    // Replays assignSplit's portable path: bucket = mix % 1e6, then the
-    // cumulative-weight cuts. 800000/900000 are the exact values of
-    // (0.8*1e6).toLong / ((0.8+0.1)*1e6).toLong under IEEE doubles.
-    "q61_split_assign" ->
-      """SELECT doc_id,
-         CASE WHEN b < 800000 THEN 'train'
-              WHEN b < 900000 THEN 'val'
-              ELSE 'test' END AS split
-         FROM (SELECT doc_id,
-                 ((doc_id % 1000003) * 2654435761) % 1000000007 % 1000000 AS b
-               FROM documents)""",
-
-    // DuckDB quantile_cont and Spark percentile both interpolate at
-    // p*(N-1) (R-7), so exact percentiles hash-match at the driver's
-    // float normalization.
-    "q62_corpus_stats" ->
-      """SELECT lang, source,
-         count(*) AS doc_ct,
-         avg(n_chars) AS avg_chars,
-         quantile_cont(n_chars, 0.5) AS p50_chars,
-         quantile_cont(n_chars, 0.9) AS p90_chars,
-         quantile_cont(n_chars, 0.99) AS p99_chars,
-         stddev(n_chars) AS sd_chars
-         FROM documents GROUP BY 1, 2""",
-
-    "q63_top_tokens" ->
-      """WITH t AS (
-           SELECT lang,
-             unnest(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS token
-           FROM documents),
-         c AS (SELECT lang, token, count(*) AS ct FROM t GROUP BY 1, 2),
-         r AS (SELECT lang, token, ct,
-                 row_number() OVER (PARTITION BY lang ORDER BY ct DESC, token) AS rk
-               FROM c)
-         SELECT lang, token, ct, rk FROM r WHERE rk <= 10""",
-
-    // q30's exact pair oracle + the q61 split CASE applied to both ids.
-    "q64_decontaminate" ->
-      """WITH t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks,
-             CASE WHEN ((doc_id % 1000003) * 2654435761) % 1000000007 % 1000000 < 800000 THEN 'train'
-                  WHEN ((doc_id % 1000003) * 2654435761) % 1000000007 % 1000000 < 900000 THEN 'val'
-                  ELSE 'test' END AS split
-           FROM documents),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.split AS split_a, b.split AS split_b,
-             CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-           FROM t a JOIN t b
-             ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id)
-         SELECT CASE WHEN split_a = 'test' THEN id_a ELSE id_b END AS test_doc_id,
-                CASE WHEN split_a = 'train' THEN id_a ELSE id_b END AS train_doc_id,
-                jaccard_e4
-         FROM p
-         WHERE jaccard_e4 >= 8000
-           AND ((split_a = 'test' AND split_b = 'train')
-             OR (split_a = 'train' AND split_b = 'test'))""",
-
-    "q65_pack_sequences" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             CAST(len(list_filter(string_split_regex(text, '\s+'), x -> length(x) > 0)) AS BIGINT) AS token_ct,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 % 16 AS shard
-           FROM documents),
-         c AS (
-           SELECT doc_id, lang, token_ct, shard,
-             CAST(COALESCE(sum(token_ct) OVER (PARTITION BY lang, shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tokens_before
-           FROM t)
-         SELECT doc_id, lang, token_ct, shard, tokens_before,
-           CAST(tokens_before // 2048 AS BIGINT) AS seq_id
-         FROM c""",
-
-    "q66_dataset_mix" ->
-      """WITH m AS (
-           SELECT doc_id, lang,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 AS mix,
-             CASE lang WHEN 'en' THEN 1.0 WHEN 'zh' THEN 0.5 WHEN 'de' THEN 0.5
-                       WHEN 'fr' THEN 0.25 WHEN 'es' THEN 0.25 ELSE 0.0 END AS frac
-           FROM documents),
-         r AS (
-           SELECT doc_id, lang, frac,
-             row_number() OVER (PARTITION BY lang ORDER BY mix, doc_id) AS rn,
-             count(*) OVER (PARTITION BY lang) AS ct
-           FROM m)
-         SELECT doc_id, lang FROM r WHERE rn <= ceil(ct * CAST(frac AS DOUBLE))""",
-
-    // Same regex chain, RE2/Java-shared syntax; 'g' = replace-all to
-    // match Spark's regexp_replace semantics.
-    "q67_pii_redact" ->
-      """SELECT doc_id,
-         regexp_replace(regexp_replace(regexp_replace(
-           text || ' contact user' || doc_id || '@example.com or 10.0.' || (doc_id % 256) || '.7 tel 555-867-5309',
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-           '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g') AS redacted
-         FROM documents""",
-
-    "q68_repetition" ->
-      """WITH c AS (
-           SELECT doc_id, tok, count(*) AS ct
-           FROM (SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS tok
-                 FROM documents)
-           GROUP BY doc_id, tok),
-         a AS (
-           SELECT doc_id, CAST(sum(ct) AS BIGINT) AS total_toks,
-             count(*) AS distinct_toks, CAST(max(ct) AS BIGINT) AS top_tok_ct
-           FROM c GROUP BY doc_id)
-         SELECT doc_id, total_toks, distinct_toks,
-           CAST(floor((CAST(1 AS DOUBLE) - CAST(distinct_toks AS DOUBLE) / CAST(total_toks AS DOUBLE)) * 10000) AS BIGINT) AS dup_ratio_e4,
-           top_tok_ct,
-           CAST(floor(CAST(top_tok_ct AS DOUBLE) / CAST(total_toks AS DOUBLE) * 10000) AS BIGINT) AS top_tok_frac_e4
-         FROM a""",
-
-    // q21's replayed signal expressions feeding the gate's CASE.
-    "q69_quality_gate" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         m AS (
-           SELECT doc_id,
-             length(text) AS char_ct,
-             CAST(floor(CAST(len(list_filter(toks, x -> x IN ('the','a','an','and','or','of','to','in','is','it','that','this','for','on','with','as','was','at','by'))) AS DOUBLE)
-               / CAST(greatest(len(toks), 1) AS DOUBLE) * 10000) AS BIGINT) AS stop_e4,
-             CAST(floor(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(toks, x -> CAST(length(x) AS BIGINT))), (a,b) -> a + b) AS DOUBLE)
-               / CAST(greatest(len(toks), 1) AS DOUBLE) * 10000) AS BIGINT) AS mtl_e4
-           FROM t),
-         r AS (
-           SELECT doc_id,
-             CASE WHEN char_ct < 200 THEN 'too_short'
-                  WHEN char_ct > 20000 THEN 'too_long'
-                  WHEN mtl_e4 < 20000 OR mtl_e4 > 120000 THEN 'token_len_out_of_range'
-                  WHEN stop_e4 < 100 THEN 'low_stopword_density'
-                  ELSE 'keep' END AS reason
-           FROM m)
-         SELECT doc_id, reason, reason = 'keep' AS keep FROM r""",
-
-    // Mirrors DotProduct's evaluation exactly: widen float→double
-    // (exact), square, accumulate left-to-right; sqrt/floor are
-    // correctly-rounded IEEE ops in both engines.
-    "q70_embedding_norms" ->
-      """SELECT vec_id,
-         CAST(len(embedding) AS BIGINT) AS dim,
-         CAST(floor(sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) * 10000) AS BIGINT) AS l2_norm_e4,
-         CAST(floor(CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) * 10000) AS BIGINT) AS amax_e4
-         FROM embeddings""",
-
-    // floor() spelled explicitly in both engines: DuckDB CAST alone
-    // ROUNDS decimals where Spark truncates. The interleave sum is
-    // generated by ZOrder.zValueSql — identical bit math both sides.
-    "q71_zorder_key" ->
-      s"""SELECT o_orderkey,
-         (o_custkey % 1024) AS bucket_a,
-         (CAST(floor(o_totalprice) AS BIGINT) % 1024) AS bucket_b,
-         ${ops.ZOrder.zValueSql("(o_custkey % 1024)",
-           "(CAST(floor(o_totalprice) AS BIGINT) % 1024)", 10)} AS zval
-         FROM orders""",
-
-    "q72_range_join" ->
-      """WITH b AS (
-           SELECT CAST(i AS BIGINT) AS band_id,
-             CAST(i * 20000 - 5000 AS BIGINT) AS lo,
-             CAST(i * 20000 + 25000 AS BIGINT) AS hi
-           FROM range(0, 40) t(i)),
-         o AS (
-           SELECT o_orderkey, CAST(floor(o_totalprice) AS BIGINT) AS price
-           FROM orders)
-         SELECT o.o_orderkey, o.price, b.band_id
-         FROM o JOIN b ON o.price >= b.lo AND o.price <= b.hi""",
-
-    "q73_interval_overlap" ->
-      """WITH t AS (
-           SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-             CAST(date_diff('day', DATE '1993-01-01', l_shipdate) AS BIGINT) AS ship_d,
-             CAST(date_diff('day', DATE '1993-01-01', l_shipdate) AS BIGINT)
-               + (CAST(floor(l_quantity) AS BIGINT) % 30) AS rcpt_d
-           FROM lineitem),
-         w AS (
-           SELECT CAST(i AS BIGINT) AS window_id,
-             CAST(i * 30 AS BIGINT) AS w_lo, CAST(i * 30 + 44 AS BIGINT) AS w_hi
-           FROM range(0, 60) t(i))
-         SELECT t.l_orderkey, t.l_linenumber, w.window_id
-         FROM t JOIN w ON t.ship_d <= w.w_hi AND w.w_lo <= t.rcpt_d""",
-
-    "q74_snapshot_diff" ->
-      """WITH o AS (
-           SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS nt
-           FROM documents WHERE doc_id % 10 <> 3),
-         n AS (
-           SELECT doc_id,
-             lower(regexp_replace(
-               CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END,
-               '\s+', ' ', 'g')) AS nt
-           FROM documents WHERE doc_id % 10 <> 7),
-         j AS (
-           SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-             CASE WHEN o.doc_id IS NULL THEN 'added'
-                  WHEN n.doc_id IS NULL THEN 'removed'
-                  WHEN o.nt <> n.nt THEN 'changed'
-                  ELSE 'unchanged' END AS change
-           FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
-         SELECT doc_id, change FROM j WHERE change <> 'unchanged'""",
-
-    "q75_domain_cap" ->
-      """WITH m AS (
-           SELECT doc_id, source,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 AS mix
-           FROM documents),
-         r AS (
-           SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source ORDER BY mix, doc_id) AS rn
-           FROM m)
-         SELECT doc_id, source FROM r WHERE rn <= 20""",
-
-    "q76_funnel" ->
-      """WITH e1 AS (
-           SELECT user_id, event_type, ts, value,
-             min(CASE WHEN event_type = 'view' THEN ts END)
-               OVER (PARTITION BY user_id) AS t1
-           FROM events),
-         e2 AS (
-           SELECT *, min(CASE WHEN event_type = 'click' AND value > 90 AND ts > t1 THEN ts END)
-               OVER (PARTITION BY user_id) AS t2
-           FROM e1),
-         e3 AS (
-           SELECT *, min(CASE WHEN event_type = 'purchase' AND value > 97 AND ts > t2 THEN ts END)
-               OVER (PARTITION BY user_id) AS t3
-           FROM e2)
-         SELECT
-           count(DISTINCT CASE WHEN t1 IS NOT NULL THEN user_id END) AS n_view,
-           count(DISTINCT CASE WHEN t2 IS NOT NULL THEN user_id END) AS n_click_after_view,
-           count(DISTINCT CASE WHEN t3 IS NOT NULL THEN user_id END) AS n_purchase_after_click
-         FROM e3""",
-
-    "q77_retention" ->
-      """WITH d AS (
-           SELECT user_id, CAST(ts AS DATE) AS day,
-             min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS cohort
-           FROM events)
-         SELECT strftime(cohort, '%Y-%m-%d') AS cohort,
-           CAST(date_diff('day', cohort, day) AS BIGINT) AS day_offset,
-           count(DISTINCT user_id) AS active_users
-         FROM d
-         WHERE date_diff('day', cohort, day) <= 7
-         GROUP BY 1, 2""",
-
-    "q78_token_rarity" ->
-      """WITH t AS (
-           SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS tok
-           FROM documents),
-         f AS (SELECT tok, count(*) AS freq FROM t GROUP BY tok)
-         SELECT t.doc_id, count(*) AS n_toks,
-           CAST(sum(f.freq) AS BIGINT) AS sum_freq,
-           CAST(floor(CAST(sum(f.freq) AS DOUBLE) / CAST(count(*) AS DOUBLE) * 100) AS BIGINT) AS mean_freq_e2
-         FROM t JOIN f ON t.tok = f.tok
-         GROUP BY t.doc_id""",
-
-    // EXACT oracle for the portable simhash: recompute the 64 ±1
-    // bit-counters from the md5-head token hash and the same per-bit
-    // multipliers g^(j+1) mod p (the VALUES list below is generated
-    // from Dedup.SimhashMults — every product < p² < 2^60, exact in
-    // BIGINT), pack the four 16-bit chunks, and replay the
-    // chunk-blocked hamming join. Chunk values, not a packed 64-bit
-    // long, so no 1<<63 sign games in either engine.
-    "q32_dedup_simhash" ->
-      s"""WITH m(j, mult) AS (VALUES ${
-           ops.Dedup.SimhashMults.zipWithIndex
-             .map { case (mu, j) => s"($j, ${mu}::BIGINT)" }.mkString(", ")
-         }),
-         t AS (
-           SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> length(x) > 0)) AS tok
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) % 1000000007 AS ti
-           FROM t),
-         c AS (
-           SELECT doc_id, j,
-             sum(CASE WHEN ((ti * mult) % 1000000007) % 2 = 1
-                 THEN 1 ELSE -1 END) AS cnt
-           FROM h CROSS JOIN m
-           GROUP BY doc_id, j),
-         s AS (
-           SELECT doc_id,
-             sum(CASE WHEN j BETWEEN 0  AND 15 AND cnt > 0 THEN (1::BIGINT << CAST(j AS INT))      ELSE 0 END) AS ch0,
-             sum(CASE WHEN j BETWEEN 16 AND 31 AND cnt > 0 THEN (1::BIGINT << CAST(j - 16 AS INT)) ELSE 0 END) AS ch1,
-             sum(CASE WHEN j BETWEEN 32 AND 47 AND cnt > 0 THEN (1::BIGINT << CAST(j - 32 AS INT)) ELSE 0 END) AS ch2,
-             sum(CASE WHEN j BETWEEN 48 AND 63 AND cnt > 0 THEN (1::BIGINT << CAST(j - 48 AS INT)) ELSE 0 END) AS ch3
-           FROM c GROUP BY doc_id)
-         SELECT id_a, id_b, hamming FROM (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             bit_count(xor(a.ch0, b.ch0)) + bit_count(xor(a.ch1, b.ch1))
-               + bit_count(xor(a.ch2, b.ch2)) + bit_count(xor(a.ch3, b.ch3)) AS hamming
-           FROM s a JOIN s b ON a.doc_id < b.doc_id
-             AND (a.ch0 = b.ch0 OR a.ch1 = b.ch1 OR a.ch2 = b.ch2 OR a.ch3 = b.ch3))
-         WHERE hamming <= 12""",
-
-    // EXACT oracle for the clustering deliverable: q30-style pair
-    // enumeration at the q52 threshold, then connected components as a
-    // recursive transitive closure — reach(id, r) grows by one edge hop
-    // per iteration (UNION dedups, so it terminates at the closure) and
-    // min(r) per id is exactly min-label propagation's fixpoint.
-    "q52_dedup_clusters" ->
-      """WITH RECURSIVE t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM t a JOIN t b
-             ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-           WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 9500),
-         e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT src, src FROM e
-           UNION
-           SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-         SELECT id AS doc_id, min(r) AS cluster_rep FROM reach GROUP BY id""",
-
-    // q52's transitive closure regrouped into the size histogram
-    "q93_cluster_size_histogram" ->
-      """WITH RECURSIVE t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM t a JOIN t b
-             ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-           WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 9500),
-         e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT src, src FROM e
-           UNION
-           SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-         labels AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         sizes AS (SELECT rep, count(*) AS cluster_size FROM labels GROUP BY rep)
-         SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1""",
-
-    // EXACT oracle for the LSH pipeline: exhaustive char-5-shingle
-    // Jaccard (shingle equi-join counting form — the all-pairs
-    // list_intersect form takes ~28 s in DuckDB, this ~1 s). Valid
-    // because (a) the final stage exact-verifies candidates, so
-    // precision is 1 by construction, and (b) recall measured 100% on
-    // this corpus: every true pair has J ≥ 0.928, where the 8-band ×
-    // 4-row banding misses with p < 1e-4 (all 25 sf0.01 truth pairs
-    // matched offline; Jaccard over xxhash64'd shingles equals Jaccard
-    // over shingles absent 64-bit collisions).
-    "q31_dedup_minhash" ->
-      """WITH n AS (
-           SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS nt
-           FROM documents),
-         s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(length(nt) - 4, 1) + 1),
-               i -> substr(nt, CAST(i AS INT), 5))) AS sh
-           FROM n),
-         e AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS g FROM s),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sa, b.sz AS sb,
-                  count(*) AS inter
-           FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
-         SELECT id_a, id_b,
-           CAST(floor(CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-         FROM p
-         WHERE CAST(floor(CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) * 10000) AS BIGINT) >= 5000""",
-
-    // q31's exact oracle restricted to pairs touching a new-batch (odd)
-    // doc — the incremental pipeline must produce exactly the full-corpus
-    // result minus corpus-corpus pairs.
-    "q57_dedup_incremental" ->
-      """WITH n AS (
-           SELECT doc_id, lower(regexp_replace(text, '\s+', ' ', 'g')) AS nt
-           FROM documents),
-         s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(length(nt) - 4, 1) + 1),
-               i -> substr(nt, CAST(i AS INT), 5))) AS sh
-           FROM n),
-         e AS (SELECT doc_id, len(sh) AS sz, unnest(sh) AS g FROM s),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sa, b.sz AS sb,
-                  count(*) AS inter
-           FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
-         SELECT id_a, id_b,
-           CAST(floor(CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) * 10000) AS BIGINT) AS jaccard_e4
-         FROM p
-         WHERE CAST(floor(CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) * 10000) AS BIGINT) >= 5000
-           AND (id_a % 2 = 1 OR id_b % 2 = 1)""",
-
-    // exact by construction: candidate fingerprints can only ADD pairs
-    // (collisions), the window-string verify removes them — so the
-    // oracle is the plain windows-at-stride self-join. range() end is
-    // exclusive: range(0, len-39, 4) ≡ Spark sequence(0, len-40, 4).
-    "q80_shared_window_pairs" ->
-      """WITH w AS (
-           SELECT DISTINCT doc_id, substr(text, CAST(o AS INT) + 1, 40) AS win
-           FROM (SELECT doc_id, text,
-                   unnest(range(0, CAST(length(text) AS BIGINT) - 39, 4)) AS o
-                 FROM documents WHERE length(text) >= 40))
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared_ct
-         FROM w a JOIN w b ON a.win = b.win AND a.doc_id < b.doc_id
-         GROUP BY 1, 2""",
-
-    "q81_distinctive_terms" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS term
-           FROM documents),
-         tfm AS (SELECT doc_id, term, count(*) AS tf FROM tk GROUP BY 1, 2),
-         dfm AS (SELECT term, count(*) AS df FROM tfm GROUP BY 1),
-         r AS (
-           SELECT tfm.doc_id, tfm.term, tfm.tf, dfm.df,
-             CAST(row_number() OVER (PARTITION BY tfm.doc_id
-               ORDER BY tfm.tf DESC, dfm.df ASC, tfm.term ASC) AS BIGINT) AS term_rank
-           FROM tfm JOIN dfm USING (term))
-         SELECT doc_id, term, tf, df, term_rank FROM r WHERE term_rank <= 3""",
-
-    // list_reduce has no init value, so a typed 0 is prepended — the
-    // fold then runs 0+e0+e1+… in index order, exactly Spark's
-    // aggregate(init=0) accumulation.
-    "q82_quantize_embeddings" ->
-      """WITH m AS (
-           SELECT vec_id, embedding,
-             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax
-           FROM embeddings),
-         q AS (
-           SELECT vec_id, embedding, amax,
-             list_transform(embedding, x -> CASE WHEN amax = 0 THEN 0
-               ELSE CAST(floor(CAST(x AS DOUBLE) * 127.0 / amax) AS BIGINT) END) AS qv
-           FROM m)
-         SELECT vec_id,
-           list_min(qv) AS qmin, list_max(qv) AS qmax,
-           list_reduce(list_prepend(CAST(0 AS BIGINT), qv), (a, b) -> a + b) AS qsum,
-           list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(qv, v -> v * v)), (a, b) -> a + b) AS ql2,
-           CAST(floor(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             list_transform(list_zip(embedding, qv),
-               p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) * amax / 127.0)
-                  * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) * amax / 127.0))),
-             (a, b) -> a + b) * 1e9) AS BIGINT) AS err_e9
-         FROM q""",
-
-    "q83_containment_pairs" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents),
-         f AS (SELECT * FROM t WHERE len(toks) >= 30)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) * 10000.0
-             / CAST(least(len(a.toks), len(b.toks)) AS DOUBLE)) AS BIGINT) AS containment_e4
-         FROM f a JOIN f b ON a.lang = b.lang AND a.doc_id < b.doc_id
-         WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) * 10000.0
-             / CAST(least(len(a.toks), len(b.toks)) AS DOUBLE)) AS BIGINT) >= 9000""",
-
-    "q84_quality_deciles" ->
-      """SELECT doc_id, lang, n_chars,
-         CAST(ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS BIGINT) AS decile
-         FROM documents""",
-
-    // the bloom is plan-level only (no false negatives; false positives
-    // cleared by the exact phase), so the oracle is the plain
-    // content-membership predicate
-    "q85_bloom_decontaminate" ->
-      """SELECT doc_id,
-         text IN (SELECT text FROM documents WHERE doc_id % 7 = 0) AS contaminated
-         FROM documents""",
-
-    "q92_bpe_pair_counts" ->
-      """WITH t AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         p AS (
-           SELECT unnest(list_transform(
-             list_zip(list_slice(toks, 1, len(toks) - 1), list_slice(toks, 2, len(toks))),
-             z -> z[1] || ' ' || z[2])) AS pair
-           FROM t WHERE len(toks) >= 2),
-         c AS (SELECT pair, count(*) AS pair_ct FROM p GROUP BY 1)
-         SELECT pair, pair_ct,
-           CAST(row_number() OVER (ORDER BY pair_ct DESC, pair ASC) AS BIGINT) AS rank
-         FROM c ORDER BY pair_ct DESC, pair ASC LIMIT 20""",
-
-    // window-rank argmin on (dist, label): the same total order as the
-    // engine's min(struct(dist, label)) — equal when no per-vec
-    // distance ties (none in this data; both orders break ties by
-    // lower label anyway)
-    "q91_nearest_centroid" ->
-      """WITH x AS (
-           SELECT label, unnest(range(0, len(embedding))) AS dim_idx,
-             unnest(list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))) AS v_e6
-           FROM embeddings),
-         c AS (
-           SELECT label AS c_label, dim_idx,
-             CAST(floor(CAST(sum(v_e6) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c_e6
-           FROM x GROUP BY 1, 2),
-         cv AS (
-           SELECT c_label, list(c_e6 ORDER BY dim_idx) AS cvec FROM c GROUP BY 1),
-         d AS (
-           SELECT e.vec_id, cv.c_label,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(list_zip(e.embedding, cv.cvec),
-                 p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0)
-                    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0))),
-               (a, b) -> a + b) AS dist
-           FROM embeddings e CROSS JOIN cv),
-         r AS (
-           SELECT vec_id, c_label, dist,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist, c_label) AS rn
-           FROM d)
-         SELECT vec_id, c_label AS nearest_label,
-           CAST(floor(dist * 1000000.0) AS BIGINT) AS dist_e6
-         FROM r WHERE rn = 1""",
-
-    // mirrors VF.cosine's composition exactly: zip-product fold for
-    // the dot (index order = Spark's DotProduct loop), sqrt'd
-    // self-dots, (dot / (na*nb)) * 1e4 floored — correctly-rounded
-    // IEEE ops end to end, so the floors agree bit-for-bit
-    "q90_cosine_pairs_label" ->
-      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(floor(
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip(a.embedding, b.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y))
-                * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y)))
-               * 10000) AS BIGINT) AS cos_e4
-           FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-         SELECT * FROM p WHERE cos_e4 >= 3000""",
-
-    // list_slice end-index is INCLUSIVE (Spark slice takes a length)
-    "q89_chunk_documents" ->
-      """WITH t AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id, toks,
-             unnest(range(0, CAST(len(toks) AS BIGINT), 48)) AS o
-           FROM t)
-         SELECT doc_id, o // 48 AS chunk_idx,
-           array_to_string(list_slice(toks, CAST(o AS INT) + 1, CAST(o AS INT) + 64), ' ') AS chunk_text,
-           CAST(len(list_slice(toks, CAST(o AS INT) + 1, CAST(o AS INT) + 64)) AS BIGINT) AS n_tokens
-         FROM c""",
-
-    // fixed-point BEFORE the sum: integer sums are order-independent,
-    // so engine-side aggregation order cannot diverge
-    "q88_label_centroids" ->
-      """WITH e AS (
-           SELECT label,
-             unnest(range(0, len(embedding))) AS dim_idx,
-             unnest(list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))) AS v_e6
-           FROM embeddings)
-         SELECT label, CAST(dim_idx AS BIGINT) AS dim_idx,
-           count(*) AS n,
-           CAST(sum(v_e6) AS BIGINT) AS sum_e6,
-           CAST(floor(CAST(sum(v_e6) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS centroid_e6
-         FROM e GROUP BY 1, 2""",
-
-    "q87_self_repetition" ->
-      """WITH w AS (
-           SELECT doc_id,
-             list_transform(range(0, CAST(length(text) AS BIGINT) - 39, 4),
-               o -> substr(text, CAST(o AS INT) + 1, 40)) AS wins
-           FROM documents WHERE length(text) >= 40)
-         SELECT doc_id,
-           CAST(len(wins) AS BIGINT) AS n_windows,
-           CAST(len(list_distinct(wins)) AS BIGINT) AS n_distinct,
-           CAST(floor(CAST(len(wins) - len(list_distinct(wins)) AS DOUBLE) * 10000.0
-             / CAST(len(wins) AS DOUBLE)) AS BIGINT) AS dup_frac_e4
-         FROM w""",
-
-    // replays the WAV synthesis arithmetic; the Spark side actually
-    // round-trips through RIFF bytes (q34's oracle pattern)
-    "q86_audio_meta" ->
-      """SELECT doc_id AS media_id,
-         CAST(8000 + (doc_id % 8) * 1000 AS INT) AS sample_rate,
-         CAST(1 + doc_id % 2 AS INT) AS channels,
-         16 AS bits_per_sample,
-         CAST(44 AS BIGINT) AS n_bytes
-         FROM documents""",
-
-    // Replays the q152 pipeline: all four frames' dhashes from the
-    // scene/perturbation formula, consecutive-frame Hamming via a
-    // self-join on f-1, cuts = distance > 10 (q144's HUGEINT bit-63
-    // trick in the dhash fold)
-    "q152_video_scene_cuts" ->
-      """WITH hx AS (
-           SELECT d.doc_id, fs.f AS f, xs.x AS x, ys.y AS y,
-             (d.doc_id * 13 + fs.f * 29) % 72 AS pos,
-             (d.doc_id + 1) * 2654435761
-               + (CASE WHEN d.doc_id % 3 = 0 AND fs.f >= 2
-                  THEN 999999937 ELSE 0 END)
-               + xs.x * 97 + ys.y * 1031 AS h
-           FROM documents d
-           CROSS JOIN (SELECT unnest(range(0, 4)) AS f) fs
-           CROSS JOIN (SELECT unnest(range(0, 9)) AS x) xs
-           CROSS JOIN (SELECT unnest(range(0, 8)) AS y) ys),
-         gx AS (
-           SELECT doc_id, f, x, y, pos, xor(h, h >> 7) AS g FROM hx),
-         px AS (
-           SELECT doc_id, f, x, y,
-             CASE WHEN y * 9 + x = pos
-               THEN ((g * 31 + (g >> 11)) % 241 + 128) % 241
-               ELSE (g * 31 + (g >> 11)) % 241
-             END AS p
-           FROM gx),
-         dh AS (
-           SELECT l.doc_id, l.f,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.p < r.p AND l.y * 8 + l.x = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.p < r.p
-                 THEN CAST(CAST(1 AS BIGINT) << (l.y * 8 + l.x) AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-           FROM px l JOIN px r
-             ON r.doc_id = l.doc_id AND r.f = l.f
-               AND r.y = l.y AND r.x = l.x + 1
-           WHERE l.x < 8
-           GROUP BY l.doc_id, l.f)
-         SELECT a.doc_id AS media_id, CAST(a.f AS INT) AS frame_idx,
-           CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming_prev
-         FROM dh a JOIN dh b
-           ON b.doc_id = a.doc_id AND b.f = a.f - 1
-         WHERE bit_count(xor(a.dhash, b.dhash)) > 10""",
-
-    // Replays the q151 pipeline from the pixel formula for exactly the
-    // SAMPLED frames (range(0,4,2) = frames 0 and 2): same 9x8 values
-    // with the frame index mixed into the diffusion, the q144 dhash
-    // bit rule (bit 63 via the two's-complement HUGEINT trick)
-    "q151_video_frame_sample" ->
-      """WITH hx AS (
-           SELECT d.doc_id, fs.f AS f, xs.x AS x, ys.y AS y,
-             (d.doc_id + 1) * 2654435761 + fs.f * 8191
-               + xs.x * 97 + ys.y * 1031 AS h
-           FROM documents d
-           CROSS JOIN (SELECT unnest(range(0, 4, 2)) AS f) fs
-           CROSS JOIN (SELECT unnest(range(0, 9)) AS x) xs
-           CROSS JOIN (SELECT unnest(range(0, 8)) AS y) ys),
-         px AS (
-           SELECT doc_id, f, x, y,
-             (xor(h, h >> 7) * 31 + (xor(h, h >> 7) >> 11)) % 241 AS p
-           FROM hx)
-         SELECT l.doc_id AS media_id, CAST(l.f AS INT) AS frame_idx,
-           CAST(COALESCE(SUM(
-             CASE WHEN l.p < r.p AND l.y * 8 + l.x = 63
-               THEN CAST(-9223372036854775808 AS HUGEINT)
-             WHEN l.p < r.p
-               THEN CAST(CAST(1 AS BIGINT) << (l.y * 8 + l.x) AS HUGEINT)
-             ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-         FROM px l JOIN px r
-           ON r.doc_id = l.doc_id AND r.f = l.f AND r.y = l.y AND r.x = l.x + 1
-         WHERE l.x < 8
-         GROUP BY l.doc_id, l.f""",
-
-    // payload size is constant by construction: 16 (ftyp) + 216 (moov
-    // with one mvhd + one trak/tkhd); duration_ms is the integer
-    // duration*1000/timescale the decoder computes
-    "q150_video_meta" ->
-      """SELECT doc_id AS media_id,
-         CAST(600 + (doc_id % 5) * 100 AS INT) AS timescale,
-         CAST(((doc_id * 37) % 100000) * 1000
-           // (600 + (doc_id % 5) * 100) AS BIGINT) AS duration_ms,
-         CAST(320 + (doc_id % 8) * 16 AS INT) AS width,
-         CAST(240 + (doc_id % 6) * 16 AS INT) AS height,
-         CAST(232 AS BIGINT) AS n_bytes
-         FROM documents""",
-
-    // replays synthesis AND the extraction chain char-for-char: DuckDB
-    // regexes are RE2 (no lookaround, no \x0B in any class — the
-    // operator avoids both by construction), replacement backrefs are
-    // \1 vs Spark's $1 (none used here), and regexp_replace needs the
-    // explicit 'g' flag where Spark replaces globally by default
-    "q153_html_extract" ->
-      """WITH h AS (
-           SELECT doc_id,
-             '<html><head><title> ' || source || ' #' || doc_id ||
-             ' </title>' || chr(10) || '<style>p { color: #333; }</style>' ||
-             '<script type="text/javascript">var t = 1 < 2 && 3 > 2;</script>' ||
-             '</head>' || chr(10) || '<body>' || chr(10) || chr(9) ||
-             '<h1>' || upper(source) || '</h1>' || chr(10) || '<p>' ||
-             substring(text, 1, 120) || '</p>' || chr(10) ||
-             '<p>Tom &amp; Jerry &lt;3 &quot;quoted&quot; &#39;s&nbsp;end</p>' ||
-             repeat('<a href="https://example.com/p">l</a>',
-               CAST(doc_id % 4 AS INT)) ||
-             '<!-- hidden ' || doc_id || ' -->' || chr(10) ||
-             '</body></html>' AS html
-           FROM documents),
-         u AS (
-           SELECT doc_id, html,
-             regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-               '(?is)<script\b[^>]*>.*?</script>', '', 'g'),
-               '(?is)<style\b[^>]*>.*?</style>', '', 'g'),
-               '(?s)<!--.*?-->', '', 'g'),
-               '(?s)<[^>]+>', ' ', 'g') AS untag,
-             regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1) AS rawtitle
-           FROM h),
-         dec AS (
-           SELECT doc_id, html,
-             replace(replace(replace(replace(replace(replace(replace(untag,
-               '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),
-               '&apos;',chr(39)),'&nbsp;',' '),'&amp;','&') AS dtext,
-             replace(replace(replace(replace(replace(replace(replace(rawtitle,
-               '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),
-               '&apos;',chr(39)),'&nbsp;',' '),'&amp;','&') AS dtitle
-           FROM u),
-         fin AS (
-           SELECT doc_id,
-             trim(regexp_replace(dtitle, '[ \t\r\n]+', ' ', 'g')) AS title,
-             trim(regexp_replace(dtext, '[ \t\r\n]+', ' ', 'g')) AS body_text,
-             CAST(len(regexp_extract_all(html, '(?is)<a\b[^>]*href', 0)) AS BIGINT) AS n_links
-           FROM dec)
-         SELECT doc_id, title, body_text, n_links,
-           CASE WHEN length(body_text) = 0 THEN CAST(0 AS BIGINT)
-             ELSE CAST(floor(n_links * 100000000.0 / length(body_text)) AS BIGINT)
-           END AS link_density_e6
-         FROM fin""",
-
-    // replays synthesis + every normalization rule; anchored port
-    // patterns need no 'g', the tracking/collapse passes do
-    "q154_url_normalize" ->
-      """WITH u0 AS (
-           SELECT doc_id,
-             (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END) || '://' ||
-             'WWW.' || source ||
-             (CASE WHEN doc_id % 3 = 0 THEN '.Example.CO.uk' ELSE '.Example.com' END) ||
-             (CASE WHEN doc_id % 5 = 0 THEN
-                (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
-               WHEN doc_id % 5 = 1 THEN ':8080' ELSE '' END) ||
-             '/Articles/p' || (doc_id % 50) ||
-             (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&utm_medium=rss&utm_campaign=x1'
-               WHEN doc_id % 4 = 1 THEN '?id=' || (doc_id % 7) || '&utm_source=tw&gclid=z9'
-               WHEN doc_id % 4 = 2 THEN '?a=1&fbclid=abc&b=' || (doc_id % 9)
-               ELSE '' END) ||
-             (CASE WHEN doc_id % 6 = 0 THEN '#Sec-2' ELSE '' END) AS url
-           FROM documents),
-         n1 AS (
-           SELECT doc_id,
-             lower(regexp_extract(url, '^([^/?#]*://[^/?#]*)', 1)) ||
-               regexp_extract(url, '(?s)^[^/?#]*://[^/?#]*(.*)$', 1) AS lowered,
-             lower(regexp_extract(url,
-               '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1)) AS host
-           FROM u0),
-         n2 AS (
-           SELECT doc_id, host,
-             regexp_replace(regexp_replace(regexp_replace(lowered,
-               '(?s)#.*', '', 'g'),
-               '^(http://(?:[^/?#]*@)?[^/:?#]*):80([/?#].*)?$', '\1\2'),
-               '^(https://(?:[^/?#]*@)?[^/:?#]*):443([/?#].*)?$', '\1\2')
-               AS base
-           FROM n1),
-         n3 AS (
-           SELECT doc_id, host,
-             regexp_extract(base, '(?s)^([^?]*)', 1) AS pre,
-             regexp_replace(regexp_replace(regexp_replace(
-               regexp_extract(base, '(?s)^[^?]*\?(.*)$', 1),
-               '(^|&)(utm_[a-z0-9]+|fbclid|gclid|msclkid)=[^&]*', '\1', 'g'),
-               '&&+', '&', 'g'),
-               '^&+|&+$', '', 'g') AS qbody
-           FROM n2),
-         n4 AS (
-           SELECT doc_id, host,
-             pre || CASE WHEN qbody = '' THEN '' ELSE '?' || qbody END
-               AS url_norm
-           FROM n3)
-         SELECT doc_id, url_norm, host,
-           CASE WHEN regexp_extract(host,
-               '([^.]+\.(?:co|com|org|net|ac|gov|edu)\.[a-z][a-z])$', 1) <> ''
-             THEN regexp_extract(host,
-               '([^.]+\.(?:co|com|org|net|ac|gov|edu)\.[a-z][a-z])$', 1)
-             WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) <> ''
-             THEN regexp_extract(host, '([^.]+\.[^.]+)$', 1)
-             ELSE host END AS domain
-         FROM n4""",
-
-    // the parse is replayed arithmetically: every field is a pure
-    // function of the source row, content_length in OCTETS (DuckDB
-    // strlen = bytes, mirroring Spark octet_length), rec_index = the
-    // member's rank in its file (byte order == doc_id order)
-    "q155_warc_roundtrip" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             substring(text, 1, 100) ||
-               CASE WHEN doc_id % 4 = 0 THEN ' — 中文 😀' ELSE '' END AS payload
-           FROM documents)
-         SELECT doc_id % 8 AS file_id,
-           CAST(row_number() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - 1
-             AS BIGINT) AS rec_index,
-           'response' AS warc_type,
-           '<urn:uuid:' || doc_id || '>' AS record_id,
-           'https://example.com/' || source || '/' || doc_id AS target_uri,
-           CAST(strlen(payload) AS BIGINT) AS content_length,
-           payload AS payload_text
-         FROM d""",
-
-    // the gzip container is invisible to the parse: same replay as
-    // q155 modulo the file grouping (one gzip member per record)
-    "q170_warcgz_roundtrip" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             substring(text, 1, 100) ||
-               CASE WHEN doc_id % 4 = 0 THEN ' — 中文 😀' ELSE '' END AS payload
-           FROM documents)
-         SELECT doc_id % 7 AS file_id,
-           CAST(row_number() OVER (PARTITION BY doc_id % 7 ORDER BY doc_id) - 1
-             AS BIGINT) AS rec_index,
-           'response' AS warc_type,
-           '<urn:uuid:' || doc_id || '>' AS record_id,
-           'https://example.com/' || source || '/' || doc_id AS target_uri,
-           CAST(strlen(payload) AS BIGINT) AS content_length,
-           payload AS payload_text
-         FROM d""",
-
-    // the fetch is the restriction of the full parse: members are
-    // doc-ordered per file, every 3rd selected; rec_index is WITHIN
-    // the fetched member (one record per member -> 0)
-    "q172_warcgz_indexed_fetch" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             substring(text, 1, 100) ||
-               CASE WHEN doc_id % 4 = 0 THEN ' — 中文 😀' ELSE '' END AS payload
-           FROM documents),
-         m AS (
-           SELECT doc_id, source, payload,
-             doc_id % 6 AS file_id,
-             CAST(row_number() OVER (PARTITION BY doc_id % 6 ORDER BY doc_id) - 1
-               AS BIGINT) AS member_index
-           FROM d)
-         SELECT member_index, file_id,
-           CAST(0 AS BIGINT) AS rec_index,
-           'response' AS warc_type,
-           '<urn:uuid:' || doc_id || '>' AS record_id,
-           'https://example.com/' || source || '/' || doc_id AS target_uri,
-           CAST(strlen(payload) AS BIGINT) AS content_length,
-           payload AS payload_text
-         FROM m WHERE member_index % 3 = 0""",
-
-    // replays the FULL composition: synthesis, the WARC leg as the
-    // identity it proves, the q153 extract chain, the q154 normalize
-    // chain, canonical dedup, and the gate — one SQL statement
-    "q159_crawl_pipeline" ->
-      """WITH h AS (
-           SELECT doc_id,
-             (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END) ||
-               'WWW.crawl' || ((doc_id - (doc_id % 2)) % 5) ||
-               '.Example.org/page/' || (doc_id - (doc_id % 2)) ||
-               (CASE WHEN doc_id % 2 = 1
-                 THEN '?utm_source=mirror&utm_medium=rss#ref' ELSE '' END) AS url,
-             '<html><head><title>Doc ' || (doc_id - (doc_id % 2)) ||
-               '</title></head>' || chr(10) || '<body><p>' ||
-               substring(text, 1, 150) || '</p>' ||
-               repeat('<a href="/l">x</a>', CAST(doc_id % 6 AS INT)) ||
-               '</body></html>' AS html
-           FROM documents),
-         x AS (
-           SELECT doc_id,
-             regexp_replace(regexp_replace(regexp_replace(
-               lower(regexp_extract(url, '^([^/?#]*://[^/?#]*)', 1)) ||
-                 regexp_extract(url, '(?s)^[^/?#]*://[^/?#]*(.*)$', 1),
-               '(?s)#.*', '', 'g'),
-               '^(http://(?:[^/?#]*@)?[^/:?#]*):80([/?#].*)?$', '\1\2'),
-               '^(https://(?:[^/?#]*@)?[^/:?#]*):443([/?#].*)?$', '\1\2')
-               AS base,
-             lower(regexp_extract(url,
-               '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1)) AS host,
-             trim(regexp_replace(
-               regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1),
-               '[ \t\r\n]+', ' ', 'g')) AS title,
-             trim(regexp_replace(
-               replace(replace(replace(replace(replace(replace(replace(
-                 regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-                   '(?is)<script\b[^>]*>.*?</script>', '', 'g'),
-                   '(?is)<style\b[^>]*>.*?</style>', '', 'g'),
-                   '(?s)<!--.*?-->', '', 'g'),
-                   '(?s)<[^>]+>', ' ', 'g'),
-                 '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),
-                 '&apos;',chr(39)),'&nbsp;',' '),'&amp;','&'),
-               '[ \t\r\n]+', ' ', 'g')) AS body_text,
-             CAST(len(regexp_extract_all(html, '(?is)<a\b[^>]*href', 0))
-               AS BIGINT) AS n_links
-           FROM h),
-         x2 AS (
-           SELECT doc_id, host, title, body_text, n_links,
-             regexp_extract(base, '(?s)^([^?]*)', 1) AS pre,
-             regexp_replace(regexp_replace(regexp_replace(
-               regexp_extract(base, '(?s)^[^?]*\?(.*)$', 1),
-               '(^|&)(utm_[a-z0-9]+|fbclid|gclid|msclkid)=[^&]*', '\1', 'g'),
-               '&&+', '&', 'g'),
-               '^&+|&+$', '', 'g') AS qbody
-           FROM x),
-         y AS (
-           SELECT doc_id,
-             pre || CASE WHEN qbody = '' THEN '' ELSE '?' || qbody END
-               AS url_norm,
-             title, body_text,
-             CASE WHEN regexp_extract(host,
-                 '([^.]+\.(?:co|com|org|net|ac|gov|edu)\.[a-z][a-z])$', 1) <> ''
-               THEN regexp_extract(host,
-                 '([^.]+\.(?:co|com|org|net|ac|gov|edu)\.[a-z][a-z])$', 1)
-               WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) <> ''
-               THEN regexp_extract(host, '([^.]+\.[^.]+)$', 1)
-               ELSE host END AS domain,
-             CASE WHEN length(body_text) = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(floor(n_links * 100000000.0 / length(body_text))
-                 AS BIGINT) END AS link_density_e6
-           FROM x2),
-         z AS (
-           SELECT y.*, row_number() OVER (PARTITION BY url_norm
-             ORDER BY doc_id) AS rk FROM y)
-         SELECT doc_id, url_norm, domain, title,
-           CAST(length(body_text) AS BIGINT) AS n_chars, link_density_e6
-         FROM z
-         WHERE rk = 1 AND length(body_text) >= 120
-           AND link_density_e6 <= 2500000""",
-
-    // full replay of the per-domain boilerplate pass (q114's rebuild
-    // shape with q160's df-threshold kill rule): the synthesis, the
-    // minLen=3 exemption ('ad' never participates), the per-domain
-    // distinct doc-frequency, the integer ceil threshold
-    // max(2, ceil(n*0.6)) as (n*600000 + 999999) // 1000000, and the
-    // position-wise line surgery — '//' is DuckDB integral division
-    // (both operands positive, so trunc == floor == Spark's div)
-    "q160_boilerplate_scrub" ->
-      """WITH d0 AS (
-           SELECT doc_id, 'd' || CAST(doc_id % 10 AS VARCHAR) AS dom,
-             'NAV d' || CAST(doc_id % 10 AS VARCHAR) || ' | home | about'
-               || chr(10) ||
-             CASE WHEN doc_id % 10 < 5 OR (doc_id // 10) % 5 = 0
-               THEN 'Subscribe to our newsletter'
-               ELSE 'Local news item ' || CAST((doc_id // 10) % 11 AS VARCHAR)
-             END || chr(10) ||
-             substring(text, 1, 200) || chr(10) ||
-             'ad' || chr(10) ||
-             '(c) d' || CAST(doc_id % 10 AS VARCHAR) || ' media group' AS text
-           FROM documents),
-         w AS (SELECT doc_id, dom, string_split(text, chr(10)) AS lines FROM d0),
-         p AS (
-           SELECT doc_id, dom, CAST(i - 1 AS BIGINT) AS pos, lines[i] AS line
-           FROM (SELECT doc_id, dom, lines,
-                   unnest(range(1, len(lines) + 1)) AS i FROM w)),
-         el AS (SELECT * FROM p WHERE length(line) >= 3),
-         nd AS (SELECT dom, count(*) AS n FROM d0 GROUP BY 1),
-         ldf AS (
-           SELECT dom, line, count(DISTINCT doc_id) AS df FROM el GROUP BY 1, 2),
-         hot AS (
-           SELECT ldf.dom, ldf.line FROM ldf JOIN nd USING (dom)
-           WHERE df >= greatest(2, (n * 600000 + 999999) // 1000000)),
-         kill AS (
-           SELECT doc_id, list(pos ORDER BY pos) AS killed
-           FROM el JOIN hot ON el.dom = hot.dom AND el.line = hot.line
-           GROUP BY 1)
-         SELECT w.doc_id,
-           CASE WHEN k.killed IS NULL THEN array_to_string(w.lines, chr(10))
-             ELSE COALESCE(array_to_string(
-               list_transform(
-                 list_filter(
-                   list_transform(range(1, len(w.lines) + 1),
-                     i -> {'p': w.lines[i], 'i': CAST(i - 1 AS BIGINT)}),
-                   s -> NOT list_contains(k.killed, s.i)),
-                 s -> s.p),
-               chr(10)), '') END AS clean_text,
-           CAST(COALESCE(len(k.killed), 0) AS BIGINT) AS removed_lines
-         FROM w LEFT JOIN kill k USING (doc_id)""",
-
-    // q159's replay extended by the block-line extraction and the q160
-    // scrub CTEs: extractTextLines is replayed as the same regexp chain
-    // with the per-line trim/drop done as list ops (equivalent by
-    // construction: after '[ \t\r]+'→' ' only spaces and newlines
-    // remain, so trim-around-newlines + collapse-blank-lines + edge
-    // strip ≡ split/trim/filter-empty). The WARC leg is the identity
-    // q155 proves; '//' is DuckDB integral division (operands positive)
-    "q161_crawl_scrub_pipeline" ->
-      """WITH h AS (
-           SELECT doc_id,
-             'https://www.crawl' || ((doc_id - (doc_id % 2)) % 5) ||
-               '.example.org/page/' || (doc_id - (doc_id % 2)) ||
-               (CASE WHEN doc_id % 2 = 1 THEN '?utm_source=mirror#frag'
-                 ELSE '' END) AS url,
-             '<html><head><title>Doc ' || (doc_id - (doc_id % 2)) ||
-               '</title></head><body>' ||
-               '<div>site' || ((doc_id - (doc_id % 2)) % 5) ||
-               ' nav | home | about</div>' ||
-               (CASE WHEN (doc_id - (doc_id % 2)) % 5 < 2
-                   OR (doc_id // 10) % 5 = 0
-                 THEN '<p>Subscribe to our newsletter</p>' ELSE '' END) ||
-               '<p>' || substring(text, 1, 150) || '</p>' ||
-               '<div>ad</div>' ||
-               '<div>(c) site' || ((doc_id - (doc_id % 2)) % 5) ||
-               ' media group</div></body></html>' AS html
-           FROM documents),
-         x AS (
-           SELECT doc_id,
-             regexp_replace(regexp_replace(regexp_replace(
-               lower(regexp_extract(url, '^([^/?#]*://[^/?#]*)', 1)) ||
-                 regexp_extract(url, '(?s)^[^/?#]*://[^/?#]*(.*)$', 1),
-               '(?s)#.*', '', 'g'),
-               '^(http://(?:[^/?#]*@)?[^/:?#]*):80([/?#].*)?$', '\1\2'),
-               '^(https://(?:[^/?#]*@)?[^/:?#]*):443([/?#].*)?$', '\1\2')
-               AS base,
-             lower(regexp_extract(url,
-               '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1))
-               AS site,
-             trim(regexp_replace(
-               regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1),
-               '[ \t\r\n]+', ' ', 'g')) AS title,
-             list_filter(list_transform(string_split(
-               regexp_replace(
-                 replace(replace(replace(replace(replace(replace(replace(
-                   regexp_replace(regexp_replace(
-                     regexp_replace(regexp_replace(regexp_replace(html,
-                       '(?is)<script\b[^>]*>.*?</script>', '', 'g'),
-                       '(?is)<style\b[^>]*>.*?</style>', '', 'g'),
-                       '(?s)<!--.*?-->', '', 'g'),
-                     '(?i)</?(?:p|div|br|li|ul|ol|h[1-6]|tr|table|title|head|body|html|section|article|header|footer|blockquote|pre)\b[^>]*>',
-                     chr(10), 'g'),
-                     '(?s)<[^>]+>', ' ', 'g'),
-                   '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),
-                   '&apos;',chr(39)),'&nbsp;',' '),'&amp;','&'),
-                 '[ \t\r]+', ' ', 'g'),
-               chr(10)), l -> trim(l, ' ')), l -> l <> '') AS lines
-           FROM h),
-         x2 AS (
-           SELECT doc_id, site, title, lines,
-             regexp_extract(base, '(?s)^([^?]*)', 1) ||
-               CASE WHEN regexp_replace(regexp_replace(regexp_replace(
-                   regexp_extract(base, '(?s)^[^?]*\?(.*)$', 1),
-                   '(^|&)(utm_[a-z0-9]+|fbclid|gclid|msclkid)=[^&]*', '\1', 'g'),
-                   '&&+', '&', 'g'), '^&+|&+$', '', 'g') = '' THEN ''
-                 ELSE '?' || regexp_replace(regexp_replace(regexp_replace(
-                   regexp_extract(base, '(?s)^[^?]*\?(.*)$', 1),
-                   '(^|&)(utm_[a-z0-9]+|fbclid|gclid|msclkid)=[^&]*', '\1', 'g'),
-                   '&&+', '&', 'g'), '^&+|&+$', '', 'g') END AS url_norm
-           FROM x),
-         el AS (
-           SELECT doc_id, site, CAST(i - 1 AS BIGINT) AS pos, lines[i] AS line
-           FROM (SELECT doc_id, site, lines,
-                   unnest(range(1, len(lines) + 1)) AS i FROM x2)
-           WHERE length(lines[i]) >= 3),
-         nd AS (SELECT site, count(*) AS n FROM x2 GROUP BY 1),
-         ldf AS (
-           SELECT site, line, count(DISTINCT doc_id) AS df FROM el GROUP BY 1, 2),
-         hot AS (
-           SELECT ldf.site, ldf.line FROM ldf JOIN nd USING (site)
-           WHERE df >= greatest(2, (n * 600000 + 999999) // 1000000)),
-         kill AS (
-           SELECT doc_id, list(pos ORDER BY pos) AS killed
-           FROM el JOIN hot ON el.site = hot.site AND el.line = hot.line
-           GROUP BY 1),
-         sc AS (
-           SELECT x2.doc_id, x2.url_norm, x2.site, x2.title,
-             CASE WHEN k.killed IS NULL
-               THEN array_to_string(x2.lines, chr(10))
-               ELSE COALESCE(array_to_string(
-                 list_transform(
-                   list_filter(
-                     list_transform(range(1, len(x2.lines) + 1),
-                       i -> {'p': x2.lines[i], 'i': CAST(i - 1 AS BIGINT)}),
-                     s -> NOT list_contains(k.killed, s.i)),
-                   s -> s.p),
-                 chr(10)), '') END AS clean_text,
-             CAST(COALESCE(len(k.killed), 0) AS BIGINT) AS removed_lines
-           FROM x2 LEFT JOIN kill k USING (doc_id)),
-         z AS (
-           SELECT sc.*, row_number() OVER (PARTITION BY url_norm
-             ORDER BY doc_id) AS rk FROM sc)
-         SELECT doc_id, url_norm, site, title,
-           CAST(length(clean_text) AS BIGINT) AS n_chars_clean, removed_lines
-         FROM z
-         WHERE rk = 1 AND length(clean_text) >= 80""",
-
-    // INDEPENDENT truth table, not a parse replay: the expected
-    // decision for every synthesized (host, path) pair is stated
-    // directly from RFC 9309 semantics — named-group selection on even
-    // hosts (the '*' group must NOT leak in), '*' fallback on odd
-    // hosts, longest-match with Allow winning, '$' anchors, default
-    // allow. Any engine-side parser/matcher bug diverges.
-    "q162_robots_decisions" ->
-      """WITH u AS (
-           SELECT DISTINCT
-             CAST(doc_id % 5 AS BIGINT) AS hk,
-             CAST((doc_id // 5) % 8 AS BIGINT) AS m,
-             CAST(doc_id // 40 AS BIGINT) AS r
-           FROM documents),
-         p AS (
-           SELECT 'h' || CAST(hk AS VARCHAR) AS host, hk, m,
-             CASE m
-               WHEN 0 THEN '/private/secret/' || r
-               WHEN 1 THEN '/private/pub' || r
-               WHEN 2 THEN '/search?q=' || r
-               WHEN 3 THEN '/search/docs/' || r
-               WHEN 4 THEN '/tmp/'
-               WHEN 5 THEN '/tmp/f' || r
-               WHEN 6 THEN '/data/f' || r || '.zip'
-               ELSE '/page/' || r END AS path
-           FROM u),
-         d AS (SELECT DISTINCT host, hk, m, path FROM p),
-         sel AS (
-           SELECT host, path,
-             CASE WHEN hk % 2 = 0 AND m = 0 THEN '/private/'
-                  WHEN hk % 2 = 0 AND m = 1 THEN '/private/pub*'
-                  WHEN hk % 2 = 1 AND m = 2 THEN '/search'
-                  WHEN hk % 2 = 1 AND m = 3 THEN '/search/docs'
-                  WHEN hk % 2 = 1 AND m = 4 THEN '/tmp/$'
-                  WHEN hk % 2 = 1 AND m = 6 THEN '/*.zip$'
-                  ELSE NULL END AS matched_pattern,
-             NOT ((hk % 2 = 0 AND m = 0)
-               OR (hk % 2 = 1 AND m IN (2, 4, 6))) AS allowed
-           FROM d)
-         SELECT host, path, matched_pattern,
-           CAST(length(matched_pattern) AS BIGINT) AS matched_len,
-           allowed
-         FROM sel""",
-
-    // truth table by construction kind — any signature/offset bug in
-    // the sniffer (or a corrupt synthesized container) diverges
-    "q163_mime_sniff" ->
-      """SELECT doc_id,
-           CASE doc_id % 8
-             WHEN 0 THEN 'image/png'
-             WHEN 1 THEN 'audio/wav'
-             WHEN 2 THEN 'video/mp4'
-             WHEN 3 THEN 'image/jpeg'
-             WHEN 4 THEN 'application/pdf'
-             WHEN 5 THEN 'application/gzip'
-             WHEN 6 THEN 'application/warc'
-             ELSE 'application/octet-stream' END AS mime
-         FROM documents""",
-
-    // two unrolled integer Lloyd's rounds replayed CTE-for-CTE — the
-    // iteration arithmetic itself is the gate (q158 doctrine)
-    "q164_kmeans_int" ->
-      s"""WITH $kmeansCtes
-         SELECT vec_id, cell, dist FROM af""",
-
-    // SemDeDup composition: the kmeans cells feed the q110 dominated-
-    // set rule (drop iff a lower-id SAME-CELL neighbor at cos_e4 >=
-    // 3000). The engine's exact-duplicate rep collapse is equivalence-
-    // preserving (q110's argument), so the oracle scores all pairs.
-    "q165_kmeans_semantic_dedup" ->
-      s"""WITH $kmeansCtes,
-         e2 AS (
-           SELECT e.vec_id, e.embedding, af.cell
-           FROM embeddings e JOIN af USING (vec_id)),
-         p AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(floor(
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip(a.embedding, b.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y))
-                * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y)))
-               * 10000) AS BIGINT) AS cos_e4
-           FROM e2 a JOIN e2 b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-         SELECT vec_id, cell FROM e2
-         WHERE vec_id NOT IN (SELECT id_b FROM p WHERE cos_e4 >= 3000)""",
-
-    // replay: window count per cohort, CASE under k -> '*'; quasi
-    // columns released as strings (the marker needs a common type)
-    "q168_k_anonymity" ->
-      """WITH t AS (
-           SELECT doc_id, lang, n_chars // 500 AS band
-           FROM documents),
-         c AS (
-           SELECT doc_id, lang, band,
-             count(*) OVER (PARTITION BY lang, band) AS n
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN n < 10 THEN '*' ELSE lang END AS lang,
-           CASE WHEN n < 10 THEN '*' ELSE CAST(band AS VARCHAR) END AS band
-         FROM c""",
-
-    // replay: per-cohort COUNT(DISTINCT sensitive) via a grouped
-    // subquery joined back (DuckDB windows don't take DISTINCT);
-    // CASE under l -> '*' on both quasi columns, sensitive released
-    "q173_l_diversity" ->
-      """WITH t AS (
-           SELECT doc_id, lang, n_chars // 50 AS band, source
-           FROM documents),
-         c AS (
-           SELECT lang, band, count(DISTINCT source) AS nd
-           FROM t GROUP BY 1, 2)
-         SELECT t.doc_id,
-           CASE WHEN c.nd < 8 THEN '*' ELSE t.lang END AS lang,
-           CASE WHEN c.nd < 8 THEN '*' ELSE CAST(t.band AS VARCHAR) END AS band,
-           t.source
-         FROM t JOIN c ON t.lang = c.lang AND t.band = c.band""",
-
-    // replay of the COMPOSITION: window-count k-gate first, then the
-    // distinct-sensitive l-gate over the k-gated quasi values (the
-    // marker cohort re-judged like any other — count(DISTINCT) skips
-    // NULL sources, matching the fail-closed Spark side)
-    "q176_privacy_compose" ->
-      """WITH t AS (
-           SELECT doc_id, lang, n_chars // 20 AS band, source
-           FROM documents),
-         k AS (
-           SELECT doc_id,
-             CASE WHEN n < 8 THEN '*' ELSE lang END AS lang,
-             CASE WHEN n < 8 THEN '*' ELSE CAST(band AS VARCHAR) END AS band,
-             source
-           FROM (SELECT *, count(*) OVER (PARTITION BY lang, band) AS n
-                 FROM t)),
-         c AS (
-           SELECT lang, band, count(DISTINCT source) AS nd
-           FROM k GROUP BY 1, 2)
-         SELECT k.doc_id,
-           CASE WHEN c.nd < 10 THEN '*' ELSE k.lang END AS lang,
-           CASE WHEN c.nd < 10 THEN '*' ELSE k.band END AS band,
-           k.source
-         FROM k JOIN c ON k.lang = c.lang AND k.band = c.band""",
-
-    // replay: distinct (key, doc) document frequency >= 11 keeps the
-    // row; the per-doc unique tail rows must all drop
-    "q169_frequency_threshold" ->
-      """WITH rows_in AS (
-           SELECT doc_id, split_part(text, ' ', 1) AS key FROM documents
-           UNION ALL
-           SELECT doc_id, 'uniq-' || CAST(doc_id AS VARCHAR) AS key
-           FROM documents),
-         ok AS (
-           SELECT key FROM (SELECT DISTINCT key, doc_id FROM rows_in)
-           GROUP BY key HAVING count(*) >= 11)
-         SELECT key, doc_id FROM rows_in WHERE key IN (SELECT key FROM ok)""",
-
-    // independent truth table again: allowed set = q162's RFC
-    // semantics, delay = named-group 2500 ms on even hosts / '*'
-    // 10000 ms on odd, slots = (rank−1)·delay over path order
-    "q167_fetch_schedule" ->
-      """WITH u AS (
-           SELECT DISTINCT
-             CAST(doc_id % 5 AS BIGINT) AS hk,
-             CAST((doc_id // 5) % 8 AS BIGINT) AS m,
-             CAST(doc_id // 40 AS BIGINT) AS r
-           FROM documents),
-         p AS (
-           SELECT 'h' || CAST(hk AS VARCHAR) AS host, hk, m,
-             CASE m
-               WHEN 0 THEN '/private/secret/' || r
-               WHEN 1 THEN '/private/pub' || r
-               WHEN 2 THEN '/search?q=' || r
-               WHEN 3 THEN '/search/docs/' || r
-               WHEN 4 THEN '/tmp/'
-               WHEN 5 THEN '/tmp/f' || r
-               WHEN 6 THEN '/data/f' || r || '.zip'
-               ELSE '/page/' || r END AS path
-           FROM u),
-         d AS (SELECT DISTINCT host, hk, m, path FROM p),
-         al AS (
-           SELECT host, hk, path FROM d
-           WHERE NOT ((hk % 2 = 0 AND m = 0)
-             OR (hk % 2 = 1 AND m IN (2, 4, 6)))),
-         rk AS (
-           SELECT host, path,
-             CASE WHEN hk % 2 = 0 THEN 2500 ELSE 10000 END AS delay_ms,
-             row_number() OVER (PARTITION BY host ORDER BY path) AS fetch_rank
-           FROM al)
-         SELECT host, path, CAST(delay_ms AS BIGINT) AS delay_ms,
-           CAST(fetch_rank AS BIGINT) AS fetch_rank,
-           CAST((fetch_rank - 1) * delay_ms AS BIGINT) AS fetch_at_ms
-         FROM rk WHERE fetch_rank <= 5""",
-
-    // the q165 survivor set piped through the q115 prototypicality
-    // replay, with cells (not labels) as the grouping — centroids are
-    // computed over SURVIVORS only, exactly as the engine composes it
-    "q166_vector_curation" ->
-      s"""WITH $kmeansCtes,
-         e2 AS (
-           SELECT e.vec_id, e.embedding, af.cell
-           FROM embeddings e JOIN af USING (vec_id)),
-         p AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(floor(
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip(a.embedding, b.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y))
-                * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y)))
-               * 10000) AS BIGINT) AS cos_e4
-           FROM e2 a JOIN e2 b ON a.cell = b.cell AND a.vec_id < b.vec_id),
-         srv AS (
-           SELECT vec_id, embedding, cell FROM e2
-           WHERE vec_id NOT IN (SELECT id_b FROM p WHERE cos_e4 >= 3000)),
-         x AS (
-           SELECT cell, unnest(range(0, len(embedding))) AS dim_idx,
-             unnest(list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))) AS v_e6
-           FROM srv),
-         cc AS (
-           SELECT cell, dim_idx,
-             CAST(floor(CAST(sum(v_e6) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c_e6
-           FROM x GROUP BY 1, 2),
-         cvv AS (
-           SELECT cell, list(c_e6 ORDER BY dim_idx) AS cvec FROM cc GROUP BY 1),
-         dd AS (
-           SELECT e.vec_id, e.cell,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(list_zip(e.embedding, cvv.cvec),
-                 p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0)
-                    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0))),
-               (a, b) -> a + b) AS dist
-           FROM srv e JOIN cvv USING (cell))
-         SELECT vec_id, cell,
-           CAST(floor(dist * 1000000.0) AS BIGINT) AS dist_e6,
-           CAST(row_number() OVER (PARTITION BY cell ORDER BY dist, vec_id) AS INT) AS cell_rank,
-           (row_number() OVER (PARTITION BY cell ORDER BY dist, vec_id)) <= 20 AS kept
-         FROM dd""",
-
-    // three unrolled integer-arithmetic iterations — '//' is DuckDB
-    // integral division (both sides positive, so trunc == floor ==
-    // Spark's div); the (nodes × t) pre-join avoids the comma-join /
-    // LEFT JOIN precedence trap
-    "q158_pagerank" ->
-      """WITH nd AS (SELECT count(*) AS n FROM documents),
-         e AS (
-           SELECT doc_id AS src,
-             (doc_id * 31 + k * 17) % (SELECT n FROM nd) AS dst
-           FROM (SELECT doc_id,
-                   unnest(generate_series(1, CAST(1 + doc_id % 3 AS BIGINT))) AS k
-                 FROM documents)),
-         nodes AS (
-           SELECT DISTINCT id
-           FROM (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-         t AS (SELECT count(*) AS nn FROM nodes),
-         outdeg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         s0 AS (SELECT id, 1000000000000 // nn AS score FROM nodes, t),
-         i1 AS (SELECT e.dst, sum((s.score * 85) // (100 * o.outdeg)) AS inflow
-                FROM e JOIN s0 s ON e.src = s.id
-                JOIN outdeg o ON o.src = e.src GROUP BY 1),
-         s1 AS (SELECT b.id, (15 * 1000000000000 // (100 * b.nn)) +
-                  COALESCE(i1.inflow, 0) AS score
-                FROM (SELECT id, nn FROM nodes, t) b
-                LEFT JOIN i1 ON b.id = i1.dst),
-         i2 AS (SELECT e.dst, sum((s.score * 85) // (100 * o.outdeg)) AS inflow
-                FROM e JOIN s1 s ON e.src = s.id
-                JOIN outdeg o ON o.src = e.src GROUP BY 1),
-         s2 AS (SELECT b.id, (15 * 1000000000000 // (100 * b.nn)) +
-                  COALESCE(i2.inflow, 0) AS score
-                FROM (SELECT id, nn FROM nodes, t) b
-                LEFT JOIN i2 ON b.id = i2.dst),
-         i3 AS (SELECT e.dst, sum((s.score * 85) // (100 * o.outdeg)) AS inflow
-                FROM e JOIN s2 s ON e.src = s.id
-                JOIN outdeg o ON o.src = e.src GROUP BY 1),
-         s3 AS (SELECT b.id, (15 * 1000000000000 // (100 * b.nn)) +
-                  COALESCE(i3.inflow, 0) AS score
-                FROM (SELECT id, nn FROM nodes, t) b
-                LEFT JOIN i3 ON b.id = i3.dst)
-         SELECT id AS doc_id, CAST(score AS BIGINT) AS score_e12 FROM s3""",
-
-    // all three booleans are numeric gates (PcaProbe calibration in
-    // the query comment); the eigensolve itself is not SQL-replayable
-    "q156_pca_gate" ->
-      """SELECT count(*) AS n_vectors, CAST(520000 AS BIGINT) AS floor_e6,
-           true AS meets_floor, true AS spectrum_consistent,
-           true AS trace_consistent
-         FROM embeddings""",
-
-    // q94-q98: the measured-recall gates for the probabilistic family.
-    // The MEASUREMENT happens on the Spark side (approx operator vs its
-    // exact baseline, both computed in the query); the oracle pins the
-    // contract — the floor constant and that it is met. A recall
-    // collapse flips meets_floor and hash-fails the round.
-    "q94_lsh_recall_gate" ->
-      "SELECT CAST(5000 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q95_lsh_multi_recall_gate" ->
-      "SELECT CAST(8500 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q96_ivf_recall_gate" ->
-      "SELECT CAST(4500 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q97_ivf_trained_recall_gate" ->
-      "SELECT CAST(8500 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q98_cosine_neardup_recall_gate" ->
-      "SELECT CAST(5000 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q146_ivfpq_recall_gate" ->
-      "SELECT CAST(6500 AS BIGINT) AS floor_e4, true AS meets_floor",
-    "q157_pca_ann_gate" ->
-      "SELECT CAST(8000 AS BIGINT) AS floor_e4, true AS meets_floor",
-
-    // incremental-vs-rebuild equality is exact by construction (pure
-    // per-vector encoding against frozen models), so the oracle is the
-    // corpus count + a constant TRUE — any corpus-dependence introduced
-    // into the encode path flips the boolean and fails the hash
-    "q148_pq_index_incremental" ->
-      """SELECT count(*) AS n_vectors, true AS incremental_equals_rebuild
-         FROM embeddings""",
-
-    // integer-sum associativity makes the stats merge exact and the
-    // derived centroid div deterministic — both equalities are
-    // structural, so the oracle is two constant TRUEs; any per-batch
-    // rounding (mean-of-means) or order-dependence flips one
-    "q171_kmeans_incremental" ->
-      "SELECT true AS stats_equal, true AS centroids_equal",
-
-    // node count replayed over the same arithmetic edge synthesis;
-    // the equality boolean is structural (contraction preserves
-    // connectivity, labels are minima) — a wrong remap/expansion or a
-    // non-minimum label convention flips it
-    "q174_cc_incremental" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (
-           SELECT doc_id AS id_a,
-             (doc_id * 37 + k * 101) % n AS id_b
-           FROM documents, nn,
-             (SELECT 1 AS k UNION ALL SELECT 2) ks
-           WHERE k <= 1 + doc_id % 2
-             AND doc_id <> (doc_id * 37 + k * 101) % n)
-         SELECT count(DISTINCT id) AS n_nodes,
-           true AS incremental_equals_rebuild
-         FROM (SELECT id_a AS id FROM e UNION SELECT id_b AS id FROM e)""",
-
-    // node count replayed over q158's edge synthesis (minus
-    // self-loops); the three booleans are structural — a broken warm
-    // init, clamp, precondition, or convergence check flips them
-    "q177_pagerank_incremental" ->
-      """WITH nd AS (SELECT count(*) AS n FROM documents),
-         e AS (
-           SELECT doc_id AS src,
-             (doc_id * 31 + k * 17) % (SELECT n FROM nd) AS dst
-           FROM (SELECT doc_id,
-                   unnest(generate_series(1, CAST(1 + doc_id % 3 AS BIGINT))) AS k
-                 FROM documents) t
-           WHERE doc_id <> (doc_id * 31 + k * 17) % (SELECT n FROM nd))
-         SELECT count(DISTINCT id) AS n_nodes,
-           true AS warm_equals_cold, true AS all_converged,
-           true AS warm_rounds_le_cold
-         FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)""",
-
-    // q177's node-count replay; the three booleans are structural
-    // (seeds=all equality, pointwise tele monotonicity, integer
-    // floors) — computed in Spark, provable on paper, flipped by any
-    // per-node-teleport join or merge bug
-    "q186_ppr_seeds" ->
-      """WITH nd AS (SELECT count(*) AS n FROM documents),
-         e AS (
-           SELECT doc_id AS src,
-             (doc_id * 31 + k * 17) % (SELECT n FROM nd) AS dst
-           FROM (SELECT doc_id,
-                   unnest(generate_series(1, CAST(1 + doc_id % 3 AS BIGINT))) AS k
-                 FROM documents) t
-           WHERE doc_id <> (doc_id * 31 + k * 17) % (SELECT n FROM nd))
-         SELECT count(DISTINCT id) AS n_nodes,
-           true AS all_seeds_equals_uniform, true AS ppr_le_uniform,
-           true AS floors_hold, true AS all_converged
-         FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)""",
-
-    // same arithmetic edge synthesis; the fold-equality boolean is
-    // structural (each incremental step outputs component minima — a
-    // broken remap/expansion or a non-minimum label after ANY step
-    // propagates to the final labeling and flips it)
-    "q178_cc_label_fold" ->
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-         e AS (
-           SELECT doc_id AS id_a,
-             (doc_id * 37 + k * 101) % n AS id_b
-           FROM documents, nn,
-             (SELECT 1 AS k UNION ALL SELECT 2) ks
-           WHERE doc_id % 16 = 0
-             AND k <= 1 + doc_id % 2
-             AND doc_id <> (doc_id * 37 + k * 101) % n)
-         SELECT count(DISTINCT id) AS n_nodes,
-           true AS fold_equals_rebuild
-         FROM (SELECT id_a AS id FROM e UNION SELECT id_b AS id FROM e)""",
-
-    // both booleans are numeric gates (the q94/q146 floor doctrine):
-    // base error measured 0.459-0.506 across SFs, ceiling 0.70; the
-    // spiked-dimension shift measured 1.89-1.99x base, trigger 1.5x
-    "q149_pq_drift_gate" ->
-      """SELECT count(*) AS n_vectors, true AS base_within_ceiling,
-           true AS drift_detected
-         FROM embeddings""",
-
-    // q48's error gate: the day set is exact SQL; the bound check on
-    // the Spark side must hold for every day
-    "q99_uv_approx_error_gate" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS dt, true AS within_bound
-         FROM events GROUP BY 1""",
-
-    // hand-derived FMM segmentation of the 8 fixture titles (the
-    // MEASUREMENT — actual dictionary segmentation through the codegen'd
-    // expression — happens Spark-side; the oracle pins expected tokens)
-    "q100_cjk_keywords" ->
-      """WITH t AS (
-           SELECT CASE CAST(doc_id % 8 AS INT)
-             WHEN 0 THEN 'apple 手机壳 促销'
-             WHEN 1 THEN '华为 手机 充电器'
-             WHEN 2 THEN '小米 蓝牙耳机'
-             WHEN 3 THEN '三星 平板电脑 保护套'
-             WHEN 4 THEN '苹果 笔记本电脑'
-             WHEN 5 THEN '无线 键盘 鼠标 套装'
-             WHEN 6 THEN '智能手表 运动 版'
-             ELSE '数据线 两 条 装' END AS segged
-           FROM documents)
-         SELECT kw, count(*) AS kw_ct
-         FROM (SELECT unnest(string_split(segged, ' ')) AS kw FROM t)
-         GROUP BY 1""",
-
-    // q52's recursive transitive closure + keep-policy rank: the best-
-    // scoring member (n_chars desc, doc_id asc) survives per cluster;
-    // docs in no cluster pass through
-    "q101_dedup_keep_best" ->
-      """WITH RECURSIVE t AS (
-           SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS toks
-           FROM documents),
-         p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM t a JOIN t b
-             ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-           WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) * 10000) AS BIGINT) >= 9500),
-         e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-         reach(id, r) AS (
-           SELECT src, src FROM e
-           UNION
-           SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-         labels AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         ranked AS (
-           SELECT d.doc_id, d.lang, d.n_chars,
-             row_number() OVER (PARTITION BY l.rep
-               ORDER BY d.n_chars DESC, d.doc_id) AS rk
-           FROM documents d JOIN labels l ON d.doc_id = l.id)
-         SELECT doc_id, lang, n_chars FROM ranked WHERE rk = 1
-         UNION ALL
-         SELECT doc_id, lang, n_chars FROM documents
-         WHERE doc_id NOT IN (SELECT id FROM labels)""",
-
-    // character-level reconstruction against the same hot-window set:
-    // a char survives iff no hot window of its own doc covers it
-    "q102_scrub_spans" ->
-      """WITH w AS (
-           SELECT doc_id, CAST(o AS INT) AS o,
-             substr(text, CAST(o AS INT) + 1, 40) AS win
-           FROM (SELECT doc_id, text,
-                   unnest(range(0, CAST(length(text) AS BIGINT) - 39, 4)) AS o
-                 FROM documents WHERE length(text) >= 40)),
-         wdf AS (
-           SELECT win FROM (SELECT DISTINCT doc_id, win FROM w)
-           GROUP BY win HAVING count(*) > 3),
-         hot AS (SELECT DISTINCT w.doc_id, w.o FROM w JOIN wdf USING (win)),
-         pos AS (
-           SELECT doc_id, text,
-             CAST(unnest(range(1, CAST(length(text) AS BIGINT) + 1)) AS INT) AS p
-           FROM documents),
-         kept AS (
-           SELECT pos.doc_id, pos.p, substr(pos.text, pos.p, 1) AS ch
-           FROM pos
-           WHERE NOT EXISTS (SELECT 1 FROM hot h
-             WHERE h.doc_id = pos.doc_id AND pos.p > h.o AND pos.p <= h.o + 40))
-         SELECT d.doc_id,
-           coalesce(k.clean_text, '') AS clean_text,
-           CAST(length(d.text) - length(coalesce(k.clean_text, '')) AS BIGINT)
-             AS removed_chars
-         FROM documents d LEFT JOIN (
-           SELECT doc_id, string_agg(ch, '' ORDER BY p) AS clean_text
-           FROM kept GROUP BY doc_id) k USING (doc_id)""",
-
-    // full replay of the temperature-mix selection: e3 fixed-point sqrt
-    // weights summed as integers, floor-division targets capped at the
-    // stratum size, portable-mix rank (same mix as the split/sample
-    // oracles)
-    "q103_temperature_mix" ->
-      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-         w AS (SELECT lang, n,
-           CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000) AS BIGINT) AS s FROM c),
-         t AS (SELECT lang,
-           least(n, (300 * s) // (SELECT sum(s) FROM w)) AS target FROM w),
-         r AS (SELECT d.doc_id, d.lang,
-           row_number() OVER (PARTITION BY d.lang
-             ORDER BY ((d.doc_id % 1000003) * 2654435761) % 1000000007,
-               d.doc_id) AS rn
-           FROM documents d)
-         SELECT r.doc_id, r.lang FROM r JOIN t USING (lang)
-         WHERE rn <= target""",
-
-    // same star join as q03 — the SQL-text lifecycle produces the same
-    // table; order_count exercises the registered UDAF name Spark-side
-    "q104_province_stats_sql" ->
-      """SELECT r_name, n_name,
-         count(DISTINCT o_orderkey) AS order_count,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_amount
-         FROM orders
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-
-    // independent replay of the alpha=0.3 selection with DUCKDB's pow:
-    // both engines must land inside the same ±3-row band around the
-    // real-valued ideal targets — libm ulp differences cannot flip it,
-    // a broken pow path or target overflow can
-    "q105_temperature_mix_alpha_gate" ->
-      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-         w AS (SELECT lang, n,
-           CAST(floor(pow(CAST(n AS DOUBLE), 0.3) * 1000) AS BIGINT) AS s,
-           pow(CAST(n AS DOUBLE), 0.3) AS wr FROM c),
-         t AS (SELECT lang, n,
-           least(n, (300 * s) // (SELECT sum(s) FROM w)) AS target,
-           300.0 * wr / (SELECT sum(wr) FROM w) AS ideal FROM w),
-         r AS (SELECT d.doc_id, d.lang,
-           row_number() OVER (PARTITION BY d.lang
-             ORDER BY ((d.doc_id % 1000003) * 2654435761) % 1000000007,
-               d.doc_id) AS rn
-           FROM documents d),
-         sel AS (SELECT r.lang, count(*) AS c
-           FROM r JOIN t USING (lang) WHERE rn <= target GROUP BY 1)
-         SELECT t.lang,
-           abs(CAST(coalesce(sel.c, 0) AS DOUBLE)
-             - least(CAST(t.n AS DOUBLE), t.ideal)) <= 3.0 AS within_band
-         FROM t LEFT JOIN sel USING (lang)""",
-
-    // replays the portable split mix (same arithmetic as q61/q103's
-    // oracles) and the 40-char/stride-4 window intersection across the
-    // train×test pair space
-    "q106_split_leakage" ->
-      """WITH sp AS (
-           SELECT doc_id, text,
-             CASE WHEN ((doc_id % 1000003) * 2654435761) % 1000000007 % 1000000 < 800000
-                  THEN 'train' ELSE 'test' END AS split
-           FROM documents WHERE length(text) >= 40),
-         w AS (
-           SELECT DISTINCT doc_id, split,
-             substr(text, CAST(o AS INT) + 1, 40) AS win
-           FROM (SELECT doc_id, split, text,
-                   unnest(range(0, CAST(length(text) AS BIGINT) - 39, 4)) AS o
-                 FROM sp))
-         SELECT a.doc_id AS train_id, b.doc_id AS eval_id,
-           CAST(count(DISTINCT a.win) AS BIGINT) AS shared_ct
-         FROM w a JOIN w b ON a.win = b.win
-         WHERE a.split = 'train' AND b.split = 'test'
-         GROUP BY 1, 2""",
-    // replays BM25 with the identical association order: idf is
-    // e6-floored per term BEFORE use (isolating the one libm op, ln),
-    // per-(doc,term) parts are e9-floored BEFORE the per-doc sum
-    // (integer sums are order-independent), top-20 by (score desc,
-    // doc_id) — every other op is a correctly-rounded IEEE double op
-    // over identical operands
-    "q107_bm25_topk" -> bm25Oracle,
-
-    // the 3-slice incremental index build must answer byte-equal —
-    // the additive-sufficient-statistics decomposition made visible
-    "q179_bm25_index" -> bm25Oracle,
-
-    // per-pattern occurrence counts replayed as a per-position list
-    // lambda (overlapping occurrences each count — one per start
-    // position); char-unit vs code-point indexing can't disagree on a
-    // literal's occurrence COUNT, so the replay is exact
-    "q181_multi_pattern_scan" ->
-      """WITH pats AS (
-           SELECT unnest(['batch batch', 'data', 'ta', 'an or',
-                          'dow win', 'missing-from-corpus']) AS pattern),
-         h AS (
-           SELECT d.doc_id, p.pattern,
-             CAST(len(list_filter(
-               range(1, length(d.text) - length(p.pattern) + 2),
-               i -> substr(d.text, i, length(p.pattern)) = p.pattern))
-               AS BIGINT) AS n_hits
-           FROM documents d, pats p)
-         SELECT doc_id, pattern, n_hits FROM h WHERE n_hits >= 1""",
-
-    // mask-union replay: per (doc, pattern) the occurrence-start list,
-    // flattened to covered positions, text rebuilt from the uncovered
-    // ones (array_to_string so a fully-covered doc yields '' not NULL)
-    "q185_multi_pattern_scrub" ->
-      """WITH pats AS (
-           SELECT unnest(['batch batch', 'data', 'ta', 'an or',
-                          'dow win', 'missing-from-corpus']) AS pattern),
-         spans AS (
-           SELECT d.doc_id,
-             flatten(list_transform(
-               list_filter(range(1, length(d.text) - length(p.pattern) + 2),
-                 i -> substr(d.text, i, length(p.pattern)) = p.pattern),
-               s -> range(s, s + length(p.pattern)))) AS cov
-           FROM documents d, pats p),
-         cov AS (
-           SELECT doc_id, list_distinct(flatten(list(cov))) AS covered
-           FROM spans GROUP BY doc_id)
-         SELECT d.doc_id,
-           array_to_string(list_transform(
-             list_filter(range(1, length(d.text) + 1),
-               i -> NOT list_contains(coalesce(c.covered, []), i)),
-             i -> substr(d.text, i, 1)), '') AS scrub_text,
-           CAST(coalesce(len(c.covered), 0) AS BIGINT) AS n_removed
-         FROM documents d LEFT JOIN cov c USING (doc_id)""",
-
-    // adjacency counts replayed as list lambdas over 1-based token
-    // positions; overlapping occurrences each count (one per anchor)
-    "q180_phrase_match" -> phraseOracle,
-
-    // the 3-slice positional index must answer byte-equal — postings
-    // rows are position facts and position facts add
-    "q187_phrase_index" -> phraseOracle,
-
-    // replays the word-5-gram overlap on the gram STRINGS (the Spark
-    // side joins xxhash64 fingerprints — identical modulo ~2^-64
-    // collisions, the established hashed-token contract); the single
-    // float op is one correctly-rounded division
-    "q108_ngram_contamination" ->
-      """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-             list_distinct(list_transform(range(1, len(toks) - 3),
-               o -> array_to_string(list_slice(toks, o, o + 4), ' '))) AS grams
-           FROM d),
-         doc AS (
-           SELECT doc_id, grams, CAST(len(grams) AS BIGINT) AS n_grams
-           FROM g WHERE doc_id % 10 <> 0 AND len(grams) > 0),
-         bg AS (
-           SELECT DISTINCT unnest(grams) AS gram
-           FROM g WHERE doc_id % 10 = 0),
-         agg AS (
-           SELECT e.doc_id, e.n_grams,
-             CAST(sum(CASE WHEN bg.gram IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS hits
-           FROM (SELECT doc_id, n_grams, unnest(grams) AS gram FROM doc) e
-           LEFT JOIN bg USING (gram)
-           GROUP BY 1, 2)
-         SELECT doc_id, n_grams, hits,
-           CAST(floor(CAST(hits AS DOUBLE) / n_grams * 10000.0) AS BIGINT) AS frac_e4
-         FROM agg""",
-
-    // replays the single-window cumsum definition of the budget
-    // selection: order (coarse bucket, fine mix, id) per lang, keep
-    // while inclusive running n_chars <= 12000 — all integer arithmetic
-    "q109_token_budget" ->
-      """WITH t AS (
-           SELECT doc_id, lang, n_chars,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 % 16 AS b,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 AS m
-           FROM documents),
-         c AS (
-           SELECT doc_id, lang, n_chars,
-             sum(n_chars) OVER (PARTITION BY lang ORDER BY b, m, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM t)
-         SELECT doc_id, lang, n_chars FROM c WHERE cum <= 12000""",
-
-    // q90's pair fold verbatim, then the one-pass dominated rule:
-    // a vector is dropped iff some lower-id same-label neighbor sits
-    // at cos_e4 >= 3000
-    "q110_semantic_dedup" ->
-      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(floor(
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip(a.embedding, b.embedding), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (x, y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(a.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y))
-                * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(b.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (x, y) -> x + y)))
-               * 10000) AS BIGINT) AS cos_e4
-           FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-         SELECT vec_id, label FROM e
-         WHERE vec_id NOT IN (SELECT id_b FROM p WHERE cos_e4 >= 3000)""",
-
-    // replays the milli-epoch rule: nc = em div 1000 full copies plus
-    // one more iff (rank-1)*1000 < n*(em mod 1000) — all integer, the
-    // exact ceil(n*frac) prefix of the portable-mix order
-    "q111_epoch_upsample" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             CASE lang WHEN 'en' THEN 400 WHEN 'zh' THEN 2500
-                       WHEN 'de' THEN 1000 ELSE 0 END AS em,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 AS m
-           FROM documents),
-         r AS (
-           SELECT doc_id, lang, em,
-             row_number() OVER (PARTITION BY lang ORDER BY m, doc_id) AS rn,
-             count(*) OVER (PARTITION BY lang) AS ct
-           FROM t),
-         c AS (
-           SELECT doc_id, lang,
-             em // 1000
-               + CASE WHEN (rn - 1) * 1000 < ct * (em % 1000) THEN 1 ELSE 0 END AS nc
-           FROM r)
-         SELECT doc_id, lang, gs.e AS epoch
-         FROM c CROSS JOIN (SELECT unnest(range(0, 4)) AS e) gs
-         WHERE gs.e < c.nc""",
-
-    // DuckDB's own NFC pass over the identical synthesis — the suffix
-    // is built from chr() codepoints (769/778/776 = the combining
-    // acute/ring/diaeresis the Spark literal embeds as UTF-8)
-    "q112_nfc_normalize" ->
-      """WITH t AS (
-           SELECT doc_id,
-             substring(text, 1, 60) ||
-             CASE WHEN doc_id % 2 = 0
-               THEN ' Cafe' || chr(769) || ' A' || chr(778) || 'ngstro' || chr(776) || 'm'
-               ELSE ' plain suffix' END AS synth
-           FROM documents)
-         SELECT doc_id, nfc_normalize(synth) AS norm_text,
-           nfc_normalize(synth) <> synth AS changed
-         FROM t""",
-
-    // replays the bigram Stupid Backoff string-keyed (Spark joins
-    // xxhash64 keys — the established hashed-token contract): identical
-    // operands, identical association order, the single ln e6-floored
-    // per position before the order-independent integer sum
-    "q113_lm_quality" -> lmQualityOracle,
-
-    // the 3-slice additive count-merge must score byte-equal — the
-    // n-gram model's sufficient statistics are counts, and counts add
-    "q183_lm_additive" -> lmQualityOracle,
-
-    // replays the DSIR log-ratio string-keyed (Spark joins xxhash64
-    // fingerprints — the hashed-token contract). Both lns run over
-    // identical correctly-rounded operands ((c+1)/(N+V), all integers
-    // exact in double) and e6-floor separately, the q113 margin
-    // doctrine. n_unseen is literal 0: the raw side of the ratio IS
-    // the scored pool, so every scored token has a raw count.
-    "q182_dsir_importance" -> dsirOracle,
-
-    // the 3-slice raw-pool count merge must score byte-equal — the
-    // importance model's raw side is additive counts (q182's replay)
-    "q188_dsir_additive" -> dsirOracle,
-
-    // the q184 chain over a banned-phrase-filtered pool: the filter
-    // changes every count, λ, rank, and cut boundary downstream, and
-    // the replay must move with them
-    "q189_curation_pipeline" ->
-      """WITH d0 AS (
-           SELECT * FROM documents
-           WHERE text NOT LIKE '%batch batch%'
-             AND text NOT LIKE '%dow win%'),
-         d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM d0),
-         t AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 = 0),
-         r AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0),
-         ct AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-         cr AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1),
-         k AS (SELECT
-             (SELECT count(*) FROM (SELECT w FROM ct UNION SELECT w FROM cr)) AS v,
-             (SELECT sum(c) FROM ct) AS nt,
-             (SELECT sum(c) FROM cr) AS nr),
-         lam AS (
-           SELECT coalesce(ct.w, cr.w) AS w,
-             CAST(floor(1000000.0 * ln((coalesce(ct.c, 0) + 1.0) / (nt + v))) AS BIGINT)
-             - CAST(floor(1000000.0 * ln((coalesce(cr.c, 0) + 1.0) / (nr + v))) AS BIGINT) AS lam_e6
-           FROM ct FULL JOIN cr ON ct.w = cr.w CROSS JOIN k),
-         pos AS (SELECT doc_id, unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0),
-         scored AS (
-           SELECT doc_id, CAST(sum(lam_e6) AS BIGINT) AS dsir_e6
-           FROM pos JOIN lam USING (w) GROUP BY 1),
-         sl AS (
-           SELECT s.doc_id, d2.lang, s.dsir_e6
-           FROM scored s JOIN d0 d2 USING (doc_id)),
-         rk AS (
-           SELECT doc_id, lang,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY dsir_e6 DESC, doc_id ASC) AS BIGINT) AS rank_in_group,
-             CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n_in_group
-           FROM sl)
-         SELECT doc_id, lang, rank_in_group, n_in_group
-         FROM rk
-         WHERE rank_in_group <= (250000 * n_in_group + 999999) // 1000000""",
-
-    // q182's score replay, then the perplexityBuckets window verbatim:
-    // rank per language by (dsir_e6 DESC, doc_id), keep rank ≤
-    // ⌈0.25·n⌉ via the same integer-ceil arithmetic
-    "q184_dsir_selection" ->
-      """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0) AS toks
-           FROM documents),
-         t AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 = 0),
-         r AS (SELECT unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0),
-         ct AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM t GROUP BY 1),
-         cr AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1),
-         k AS (SELECT
-             (SELECT count(*) FROM (SELECT w FROM ct UNION SELECT w FROM cr)) AS v,
-             (SELECT sum(c) FROM ct) AS nt,
-             (SELECT sum(c) FROM cr) AS nr),
-         lam AS (
-           SELECT coalesce(ct.w, cr.w) AS w,
-             CAST(floor(1000000.0 * ln((coalesce(ct.c, 0) + 1.0) / (nt + v))) AS BIGINT)
-             - CAST(floor(1000000.0 * ln((coalesce(cr.c, 0) + 1.0) / (nr + v))) AS BIGINT) AS lam_e6
-           FROM ct FULL JOIN cr ON ct.w = cr.w CROSS JOIN k),
-         pos AS (SELECT doc_id, unnest(toks) AS w FROM d WHERE doc_id % 10 <> 0),
-         scored AS (
-           SELECT doc_id, CAST(sum(lam_e6) AS BIGINT) AS dsir_e6
-           FROM pos JOIN lam USING (w) GROUP BY 1),
-         sl AS (
-           SELECT s.doc_id, d2.lang, s.dsir_e6
-           FROM scored s JOIN documents d2 USING (doc_id)),
-         rk AS (
-           SELECT doc_id, lang,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY dsir_e6 DESC, doc_id ASC) AS BIGINT) AS rank_in_group,
-             CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n_in_group
-           FROM sl)
-         SELECT doc_id, lang, rank_in_group, n_in_group
-         FROM rk
-         WHERE rank_in_group <= (250000 * n_in_group + 999999) // 1000000""",
-
-    // replays the keep-first rule on paragraph STRINGS (Spark keys on
-    // xxhash64 — the hashed-token contract): first occurrence by
-    // (doc_id, pos), later occurrences killed, text rebuilt by
-    // position-filtered rejoin
-    "q114_paragraph_dedup" ->
-      """WITH d0 AS (
-           SELECT doc_id,
-             'Licensed under the Apache License Version 2' || chr(10) || chr(10) ||
-             substring(text, 1, 70) || chr(10) || chr(10) ||
-             CASE WHEN doc_id % 3 = 0 THEN substring(text, 1, 70)
-                  ELSE substring(text, 71, 70) END ||
-             chr(10) || chr(10) || 'standard footer text' AS text
-           FROM documents),
-         w AS (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS paras FROM d0),
-         p AS (
-           SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, paras[i] AS para
-           FROM (SELECT doc_id, paras, unnest(range(1, len(paras) + 1)) AS i FROM w)),
-         el AS (SELECT * FROM p WHERE length(para) >= 1),
-         m AS (
-           SELECT doc_id, pos,
-             row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn
-           FROM el),
-         kill AS (
-           SELECT doc_id, list(pos ORDER BY pos) AS killed
-           FROM m WHERE rn > 1 GROUP BY 1)
-         SELECT w.doc_id,
-           CASE WHEN k.killed IS NULL
-             THEN array_to_string(w.paras, chr(10) || chr(10))
-             -- COALESCE: DuckDB's array_to_string of an EMPTY list is
-             -- NULL; an all-paragraphs-killed doc must be '' (Spark's
-             -- array_join semantics)
-             ELSE COALESCE(array_to_string(
-               list_transform(
-                 list_filter(
-                   list_transform(range(1, len(w.paras) + 1),
-                     i -> {'p': w.paras[i], 'i': CAST(i - 1 AS BIGINT)}),
-                   s -> NOT list_contains(k.killed, s.i)),
-                 s -> s.p),
-               chr(10) || chr(10)), '') END AS clean_text,
-           CAST(COALESCE(len(k.killed), 0) AS BIGINT) AS removed_paras
-         FROM w LEFT JOIN kill k USING (doc_id)""",
-
-    // replays q91's e6 fixed-point centroid construction, but each
-    // vector scores against its OWN label's centroid and ranks within
-    // the label by (raw double dist, vec_id) — both sides build the
-    // distance from the identical left-fold of correctly-rounded IEEE
-    // ops, so the floors and the ordering agree exactly
-    "q115_prototypicality" ->
-      """WITH x AS (
-           SELECT label, unnest(range(0, len(embedding))) AS dim_idx,
-             unnest(list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))) AS v_e6
-           FROM embeddings),
-         c AS (
-           SELECT label, dim_idx,
-             CAST(floor(CAST(sum(v_e6) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c_e6
-           FROM x GROUP BY 1, 2),
-         cv AS (
-           SELECT label, list(c_e6 ORDER BY dim_idx) AS cvec FROM c GROUP BY 1),
-         d AS (
-           SELECT e.vec_id, e.label,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(list_zip(e.embedding, cv.cvec),
-                 p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0)
-                    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / 1000000.0))),
-               (a, b) -> a + b) AS dist
-           FROM embeddings e JOIN cv USING (label))
-         SELECT vec_id, label,
-           CAST(floor(dist * 1000000.0) AS BIGINT) AS dist_e6,
-           CAST(row_number() OVER (PARTITION BY label ORDER BY dist, vec_id) AS INT) AS cell_rank,
-           (row_number() OVER (PARTITION BY label ORDER BY dist, vec_id)) <= 10 AS kept
-         FROM d""",
-
-    // replays the identical dictionary + noun-token blocking + length
-    // screen; levenshtein is the same textbook edit distance on both
-    // engines
-    "q116_fuzzy_name_pairs" ->
-      """WITH dict AS (
-           SELECT DISTINCT p_name AS v FROM part WHERE p_name IS NOT NULL),
-         b AS (SELECT v, split_part(v, ' ', 2) AS blk FROM dict)
-         SELECT x.v AS val_a, y.v AS val_b,
-           CAST(levenshtein(x.v, y.v) AS INT) AS dist
-         FROM b x JOIN b y USING (blk)
-         WHERE x.v < y.v
-           AND abs(length(x.v) - length(y.v)) <= 4
-           AND levenshtein(x.v, y.v) <= 4""",
-
-    // full replay of the 4-round greedy BPE loop: every symbol is
-    // wrapped in its own chr(1) sentinel pair, and a merge is leftmost
-    // non-overlapping replace of chr(1)||x||chr(1)||chr(1)||y||chr(1)
-    // (both engines' replace() has exactly those semantics; the
-    // sentinels keep a pattern from matching INSIDE a longer symbol and
-    // give adjacent occurrences disjoint boundaries). Per-round argmax
-    // by (ct DESC, lhs, rhs) via scalar subqueries.
-    "q117_bpe_learn" -> bpeSequentialOracle,
-
-    // the BATCHED path must return byte-identical merges — the
-    // independent-prefix acceptance proof made driver-visible
-    "q175_bpe_batched" -> bpeSequentialOracle,
-
-    // DuckDB's jaro_winkler_similarity is the same rapidfuzz-order
-    // computation the codegen'd expression replays — floors agree
-    // bit-for-bit
-    "q118_fuzzy_jw_pairs" ->
-      """WITH dict AS (
-           SELECT DISTINCT p_name AS v FROM part WHERE p_name IS NOT NULL),
-         b AS (SELECT v, split_part(v, ' ', 2) AS blk FROM dict)
-         SELECT val_a, val_b, jw_e6 FROM (
-           SELECT x.v AS val_a, y.v AS val_b,
-             CAST(floor(jaro_winkler_similarity(x.v, y.v) * 1000000.0) AS BIGINT) AS jw_e6
-           FROM b x JOIN b y USING (blk)
-           WHERE x.v < y.v)
-         WHERE jw_e6 >= 800000""",
-
-    // corruption, blocking, scoring, and argmax replayed; ties break
-    // toward the lexicographically greatest candidate (the documented
-    // max(struct) contract)
-    "q119_fuzzy_best_match" ->
-      """WITH dirty AS (
-           SELECT DISTINCT substr(p_name, 1, 2) || substr(p_name, 4) AS value
-           FROM part WHERE p_name IS NOT NULL),
-         clean AS (SELECT DISTINCT p_name AS matched FROM part WHERE p_name IS NOT NULL),
-         scored AS (
-           SELECT d.value, c.matched,
-             CAST(floor(jaro_winkler_similarity(d.value, c.matched) * 1000000.0) AS BIGINT) AS jw_e6
-           FROM (SELECT value, split_part(value, ' ', 2) AS blk FROM dirty) d
-           JOIN (SELECT matched, split_part(matched, ' ', 2) AS blk FROM clean) c USING (blk))
-         SELECT value, matched, jw_e6 FROM (
-           SELECT value, matched, jw_e6,
-             row_number() OVER (PARTITION BY value ORDER BY jw_e6 DESC, matched DESC) AS rn
-           FROM scored WHERE jw_e6 >= 700000)
-         WHERE rn = 1""",
-
-    // the type-canonical renderings (DECIMAL(38,6) for numerics,
-    // strftime seconds for timestamps) are what make min/max
-    // engine-portable — both sides format identically by construction
-    "q120_profile" ->
-      """SELECT 'o_orderkey' AS "column", count(*) AS n_rows,
-           count(*) - count(o_orderkey) AS n_nulls,
-           count(DISTINCT o_orderkey) AS n_distinct,
-           CAST(CAST(min(o_orderkey) AS DECIMAL(38,6)) AS VARCHAR) AS min_value,
-           CAST(CAST(max(o_orderkey) AS DECIMAL(38,6)) AS VARCHAR) AS max_value
-         FROM orders
-         UNION ALL SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
-           count(DISTINCT o_custkey),
-           CAST(CAST(min(o_custkey) AS DECIMAL(38,6)) AS VARCHAR),
-           CAST(CAST(max(o_custkey) AS DECIMAL(38,6)) AS VARCHAR) FROM orders
-         UNION ALL SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-           count(DISTINCT o_orderstatus), min(o_orderstatus), max(o_orderstatus) FROM orders
-         UNION ALL SELECT 'o_totalprice', count(*), count(*) - count(o_totalprice),
-           count(DISTINCT o_totalprice),
-           CAST(CAST(min(o_totalprice) AS DECIMAL(38,6)) AS VARCHAR),
-           CAST(CAST(max(o_totalprice) AS DECIMAL(38,6)) AS VARCHAR) FROM orders
-         UNION ALL SELECT 'o_orderdate', count(*), count(*) - count(o_orderdate),
-           count(DISTINCT o_orderdate),
-           strftime(min(o_orderdate), '%Y-%m-%d %H:%M:%S'),
-           strftime(max(o_orderdate), '%Y-%m-%d %H:%M:%S') FROM orders
-         UNION ALL SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-           count(DISTINCT o_orderpriority), min(o_orderpriority), max(o_orderpriority) FROM orders""",
-
-    // identical IEEE bin arithmetic: floor((v - lo) / width) with
-    // width = (hi - lo) / nBins computed in doubles on both engines
-    "q121_histogram" ->
-      """WITH b AS (
-           SELECT CASE WHEN o_totalprice < 0 THEN -1
-                       WHEN o_totalprice >= 600000 THEN 12
-                       ELSE CAST(floor((CAST(o_totalprice AS DOUBLE) - 0.0) / 50000.0) AS INT) END AS bin
-           FROM orders WHERE o_totalprice IS NOT NULL),
-         c AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
-         spine AS (SELECT unnest(range(-1, 13)) AS bin)
-         SELECT CAST(spine.bin AS INT) AS bin,
-           CASE WHEN spine.bin >= 0 AND spine.bin < 12 THEN 0.0 + spine.bin * 50000.0 END AS lo_edge,
-           CASE WHEN spine.bin >= 0 AND spine.bin < 12 THEN 0.0 + (spine.bin + 1) * 50000.0 END AS hi_edge,
-           COALESCE(c.n, CAST(0 AS BIGINT)) AS n
-         FROM spine LEFT JOIN c USING (bin)""",
-
-    // lag + running sum of break flags, ordered (ts, event_id) for
-    // same-timestamp determinism; gaps in INTEGER MICROSECONDS
-    // (epoch_us) — matching the engine's unix_micros exactly
-    "q122_sessionize" ->
-      """WITH g AS (
-           SELECT event_id, user_id, ts,
-             epoch_us(ts) - epoch_us(lag(ts, 1) OVER w) AS gap
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         f AS (
-           SELECT event_id, user_id, ts,
-             CASE WHEN gap IS NULL OR gap > 1800000000 THEN 1 ELSE 0 END AS st
-           FROM g)
-         SELECT event_id, user_id,
-           CAST(sum(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq,
-           st = 1 AS is_session_start
-         FROM f""",
-
-    // string-keyed replay of the hashed-term pipeline: same token
-    // space, e3 idf floors, integer weights, IEEE sqrt/divide in the
-    // identical operation order
-    "q123_tfidf_pairs" ->
-      """WITH t AS (
-           SELECT doc_id, word AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS word
-             FROM documents) GROUP BY 1, 2),
-         nd AS (SELECT count(*) AS n FROM documents),
-         d AS (SELECT term, count(*) AS df FROM t GROUP BY 1
-               HAVING count(*) >= 2 AND count(*) <= (SELECT floor(0.5 * n) FROM nd)),
-         w AS (SELECT doc_id, term,
-                 tf * CAST(floor(1000.0 * ln(CAST((SELECT n FROM nd) AS DOUBLE) / df)) AS BIGINT) AS w
-               FROM t JOIN d USING (term)),
-         norms AS (SELECT doc_id, sqrt(CAST(sum(w * w) AS DOUBLE)) AS nrm FROM w GROUP BY 1),
-         p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(sum(a.w * b.w) AS DOUBLE) AS dot
-               FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id GROUP BY 1, 2)
-         SELECT id_a, id_b, sim_e4 FROM (
-           SELECT id_a, id_b,
-             CAST(floor(10000.0 * (dot / (na.nrm * nb.nrm))) AS BIGINT) AS sim_e4
-           FROM p JOIN norms na ON p.id_a = na.doc_id JOIN norms nb ON p.id_b = nb.doc_id)
-         WHERE sim_e4 >= 5000""",
-
-    // value-based RANGE frame on INTEGER MICROSECONDS (epoch_us ==
-    // unix_micros) — same-instant rows are in the frame together on
-    // both engines at full precision; e6 integer sums replay
-    "q124_trailing_features" ->
-      """SELECT event_id, user_id,
-           count(*) OVER w AS trail_n,
-           CAST(sum(CAST(floor("value" * 1000000.0) AS BIGINT)) OVER w AS BIGINT) AS trail_sum_e6
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""",
-
-    // exact integer moments (HUGEINT sums == the engine's decimal
-    // sums), the n*S2 - S1^2 identity evaluated exactly, then the same
-    // fixed-order sqrt/divide and e4 floor
-    "q125_zscore_outliers" ->
-      """WITH r AS (
-           SELECT event_id, event_type, CAST(round("value" * 100.0) AS BIGINT) AS c
-           FROM events WHERE "value" IS NOT NULL),
-         m AS (
-           SELECT event_type, count(*) AS n, sum(c) AS s1, sum(c * c) AS s2
-           FROM r GROUP BY 1 HAVING count(*) >= 2),
-         m2 AS (
-           SELECT event_type, n, s1,
-             CAST(n * s2 - s1 * s1 AS DOUBLE) AS varnum
-           FROM m),
-         m3 AS (
-           SELECT event_type, n, s1,
-             sqrt(varnum / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS std
-           FROM m2 WHERE varnum > 0)
-         SELECT event_id, event_type, z_e4 FROM (
-           SELECT r.event_id, r.event_type,
-             CAST(floor(10000.0 * (CAST(r.c * m3.n - m3.s1 AS DOUBLE) /
-               (CAST(m3.n AS DOUBLE) * m3.std))) AS BIGINT) AS z_e4
-           FROM r JOIN m3 USING (event_type))
-         WHERE abs(z_e4) >= 30000""",
-
-    // portable mix -> u in (0,1) -> floor(1e9 * ln(u)/w) -> top-k by
-    // (key DESC, id) — the A-ES key order replayed exactly
-    "q126_weighted_sample" ->
-      """WITH m AS (
-           SELECT doc_id, n_chars,
-             ((doc_id % 2147483647) * 2654435761) % 2147483629
-               * 2147483648
-               + ((doc_id % 2147483629) * 2246822519) % 2147483647 AS mix
-           FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
-         SELECT doc_id, n_chars,
-           CAST(floor(1000000000.0 *
-             (ln((CAST(mix AS DOUBLE) + 1.0) / 4611686018427387904.0) / CAST(n_chars AS DOUBLE))) AS BIGINT) AS aes_key_e9
-         FROM m
-         ORDER BY aes_key_e9 DESC, doc_id ASC LIMIT 100""",
-
-    // transitive closure by recursive CTE == the engine's min-label CC
-    // fixpoint; canonical = min VALUE over the component on both sides
-    "q127_fuzzy_canonicalize" ->
-      """WITH RECURSIVE
-         dict AS (SELECT DISTINCT p_name AS v FROM part WHERE p_name IS NOT NULL),
-         b AS (SELECT v, split_part(v, ' ', 2) AS blk FROM dict),
-         e0 AS (SELECT x.v AS a, y.v AS bb FROM b x JOIN b y USING (blk)
-                WHERE x.v < y.v AND abs(length(x.v) - length(y.v)) <= 4
-                  AND levenshtein(x.v, y.v) <= 4),
-         edges AS (SELECT a, bb FROM e0 UNION ALL SELECT bb, a FROM e0),
-         reach(v, l) AS (
-           SELECT v, v FROM dict
-           UNION
-           SELECT e.bb, r.l FROM reach r JOIN edges e ON r.v = e.a)
-         SELECT v AS value, min(l) AS canonical FROM reach GROUP BY 1""",
-
-    // the sf0.1 re-pin of the probabilistic floors: measurement is
-    // Spark-side (on the sibling sf0.1 dump); the oracle pins the
-    // contract rows — six gates, their floor constants, all met
-    "q128_recall_gates_sf01" ->
-      """SELECT * FROM (VALUES
-           ('cosine_neardup', CAST(1000 AS BIGINT), true),
-           ('ivf', CAST(500 AS BIGINT), true),
-           ('ivf_trained', CAST(8500 AS BIGINT), true),
-           ('lsh', CAST(500 AS BIGINT), true),
-           ('lsh_multi', CAST(8500 AS BIGINT), true),
-           ('uv_hll', CAST(500 AS BIGINT), true)) AS t(gate, floor_e4, meets_floor)""",
-
-    // Gopher repetition signals: duplicated mass counts EVERY
-    // occurrence (c·len, not (c−1)·len); top-gram = max of the c·len
-    // PRODUCT (deterministic without a tie-break); exact `//` integer
-    // e6 floors; overlap-driven masses clamp to 1e6. Grouping grams by
-    // value here == grouping by xxhash64 in the engine (per-document
-    // collision-free contract, as q123).
-    "q129_repetition" ->
-      """WITH l AS (
-           SELECT doc_id, line, count(*) AS c, max(length(line)) AS len
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS line
-                 FROM documents)
-           WHERE length(line) > 0 GROUP BY 1, 2),
-         la AS (
-           SELECT doc_id, sum(c) AS n_lines,
-             sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_lines,
-             sum(c * len) AS line_chars,
-             sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS dup_line_chars
-           FROM l GROUP BY 1),
-         w AS (SELECT doc_id,
-                 list_filter(string_split_regex(text, '\s+'),
-                   x -> length(x) > 0) AS words,
-                 length(text) AS total_chars
-               FROM documents),
-         g AS (
-           SELECT doc_id, 2 AS n, array_to_string(words[i:i+1], ' ') AS gram
-           FROM w, unnest(range(1, len(words))) AS t(i)
-           UNION ALL
-           SELECT doc_id, 3, array_to_string(words[i:i+2], ' ')
-           FROM w, unnest(range(1, len(words) - 1)) AS t(i)
-           UNION ALL
-           SELECT doc_id, 5, array_to_string(words[i:i+4], ' ')
-           FROM w, unnest(range(1, len(words) - 3)) AS t(i)),
-         gc AS (SELECT doc_id, n, gram, count(*) AS c,
-                  max(length(gram)) AS len
-                FROM g GROUP BY 1, 2, 3),
-         ga AS (SELECT doc_id,
-                  max(CASE WHEN n = 2 THEN c * len END) AS top2_mass,
-                  max(CASE WHEN n = 3 THEN c * len END) AS top3_mass,
-                  sum(CASE WHEN n = 5 AND c > 1 THEN c * len ELSE 0 END)
-                    AS dup_mass
-                FROM gc GROUP BY 1)
-         SELECT w.doc_id,
-           CAST(COALESCE(la.n_lines, 0) AS BIGINT) AS n_lines,
-           CAST(CASE WHEN COALESCE(la.n_lines, 0) > 0
-             THEN (1000000 * la.dup_lines) // la.n_lines ELSE 0 END
-             AS BIGINT) AS dup_line_frac_e6,
-           CAST(CASE WHEN COALESCE(la.line_chars, 0) > 0
-             THEN (1000000 * la.dup_line_chars) // la.line_chars ELSE 0 END
-             AS BIGINT) AS dup_line_char_frac_e6,
-           CAST(LEAST(CASE WHEN w.total_chars > 0
-             THEN (1000000 * COALESCE(ga.top2_mass, 0)) // w.total_chars
-             ELSE 0 END, 1000000) AS BIGINT) AS top2gram_char_frac_e6,
-           CAST(LEAST(CASE WHEN w.total_chars > 0
-             THEN (1000000 * COALESCE(ga.top3_mass, 0)) // w.total_chars
-             ELSE 0 END, 1000000) AS BIGINT) AS top3gram_char_frac_e6,
-           CAST(LEAST(CASE WHEN w.total_chars > 0
-             THEN (1000000 * COALESCE(ga.dup_mass, 0)) // w.total_chars
-             ELSE 0 END, 1000000) AS BIGINT) AS dup5gram_char_frac_e6
-         FROM w LEFT JOIN la USING (doc_id) LEFT JOIN ga USING (doc_id)""",
-
-    // the same CASE over the same signal SQL, counts per first-failing
-    // reason
-    "q130_repetition_gate" ->
-      """WITH l AS (
-           SELECT doc_id, line, count(*) AS c, max(length(line)) AS len
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS line
-                 FROM documents)
-           WHERE length(line) > 0 GROUP BY 1, 2),
-         la AS (
-           SELECT doc_id, sum(c) AS n_lines,
-             sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_lines,
-             sum(c * len) AS line_chars,
-             sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS dup_line_chars
-           FROM l GROUP BY 1),
-         w AS (SELECT doc_id,
-                 list_filter(string_split_regex(text, '\s+'),
-                   x -> length(x) > 0) AS words,
-                 length(text) AS total_chars
-               FROM documents),
-         g AS (
-           SELECT doc_id, 2 AS n, array_to_string(words[i:i+1], ' ') AS gram
-           FROM w, unnest(range(1, len(words))) AS t(i)
-           UNION ALL
-           SELECT doc_id, 3, array_to_string(words[i:i+2], ' ')
-           FROM w, unnest(range(1, len(words) - 1)) AS t(i)),
-         gc AS (SELECT doc_id, n, gram, count(*) AS c,
-                  max(length(gram)) AS len
-                FROM g GROUP BY 1, 2, 3),
-         ga AS (SELECT doc_id,
-                  max(CASE WHEN n = 2 THEN c * len END) AS top2_mass,
-                  sum(CASE WHEN n = 3 AND c > 1 THEN c * len ELSE 0 END)
-                    AS dup_mass
-                FROM gc GROUP BY 1),
-         sig AS (
-           SELECT
-             CAST(CASE WHEN COALESCE(la.n_lines, 0) > 0
-               THEN (1000000 * la.dup_lines) // la.n_lines ELSE 0 END
-               AS BIGINT) AS dlf,
-             CAST(CASE WHEN COALESCE(la.line_chars, 0) > 0
-               THEN (1000000 * la.dup_line_chars) // la.line_chars ELSE 0 END
-               AS BIGINT) AS dlcf,
-             CAST(LEAST(CASE WHEN w.total_chars > 0
-               THEN (1000000 * COALESCE(ga.top2_mass, 0)) // w.total_chars
-               ELSE 0 END, 1000000) AS BIGINT) AS t2f,
-             CAST(LEAST(CASE WHEN w.total_chars > 0
-               THEN (1000000 * COALESCE(ga.dup_mass, 0)) // w.total_chars
-               ELSE 0 END, 1000000) AS BIGINT) AS d5f
-           FROM w LEFT JOIN la USING (doc_id) LEFT JOIN ga USING (doc_id))
-         SELECT reason, count(*) AS ct FROM (
-           SELECT CASE WHEN dlf > 970000 THEN 'dup_lines'
-                       WHEN dlcf > 950000 THEN 'dup_line_chars'
-                       WHEN t2f > 100000 THEN 'top_ngram_mass'
-                       WHEN d5f > 20000 THEN 'dup_ngram_mass'
-                       ELSE 'keep' END AS reason
-           FROM sig)
-         GROUP BY 1""",
-
-    // BPE encode replay: the identical sentinel-replace chain, applied
-    // to the distinct-word dictionary in merge-rank order, then one
-    // count join — DuckDB's replace is the same leftmost
-    // non-overlapping rule
-    "q131_bpe_token_counts" ->
-      """WITH w AS (
-           SELECT doc_id, word FROM (
-             SELECT doc_id, unnest(list_filter(
-               string_split_regex(lower(text), '\s+'),
-               x -> length(x) > 0 AND NOT contains(x, chr(1)))) AS word
-             FROM documents)),
-         wc AS (SELECT doc_id, word, count(*) AS wct FROM w GROUP BY 1, 2),
-         dict AS (SELECT DISTINCT word FROM w),
-         enc AS (SELECT word, len(string_split(trim(
-             replace(replace(replace(replace(
-               array_to_string(list_transform(string_split(word, ''),
-                 c -> chr(1) || c || chr(1)), ''),
-               chr(1)||'a'||chr(1)||chr(1)||'t'||chr(1), chr(1)||'at'||chr(1)),
-               chr(1)||'s'||chr(1)||chr(1)||'t'||chr(1), chr(1)||'st'||chr(1)),
-               chr(1)||'t'||chr(1)||chr(1)||'h'||chr(1), chr(1)||'th'||chr(1)),
-               chr(1)||'at'||chr(1)||chr(1)||'a'||chr(1), chr(1)||'ata'||chr(1)),
-             chr(1)), chr(1) || chr(1))) AS n_tokens
-           FROM dict)
-         SELECT d.doc_id,
-           CAST(COALESCE(sum(x.wct * x.n_tokens), 0) AS BIGINT) AS bpe_tokens,
-           CAST(COALESCE(sum(x.wct), 0) AS BIGINT) AS n_words
-         FROM (SELECT DISTINCT doc_id FROM documents) d
-         LEFT JOIN (SELECT wc.doc_id, wc.wct, enc.n_tokens
-                    FROM wc JOIN enc USING (word)) x USING (doc_id)
-         GROUP BY 1""",
-
-    // discrete-quantile rank replay: same integer ceil
-    // (q·n + 999999) // 1e6, same q120 canonical value renderings;
-    // ties can only sit on equal values so the picked value is
-    // engine-independent
-    "q132_quantiles" ->
-      """WITH q AS (SELECT * FROM (VALUES (250000), (500000), (750000),
-             (900000), (990000)) t(q_e6)),
-         tp AS (SELECT o_totalprice AS v FROM orders
-                WHERE o_totalprice IS NOT NULL),
-         tpr AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM tp),
-         tpn AS (SELECT count(*) AS n FROM tp),
-         ck AS (SELECT o_custkey AS v FROM orders
-                WHERE o_custkey IS NOT NULL),
-         ckr AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM ck),
-         ckn AS (SELECT count(*) AS n FROM ck),
-         od AS (SELECT o_orderdate AS v FROM orders
-                WHERE o_orderdate IS NOT NULL),
-         odr AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM od),
-         odn AS (SELECT count(*) AS n FROM od)
-         SELECT 'o_totalprice' AS "column", CAST(q.q_e6 AS BIGINT) AS q_e6,
-           CAST(CAST(tpr.v AS DECIMAL(38,6)) AS VARCHAR) AS value
-         FROM q CROSS JOIN tpn CROSS JOIN tpr
-         WHERE tpr.rn = LEAST(tpn.n, GREATEST(1,
-             (q.q_e6 * tpn.n + 999999) // 1000000))
-         UNION ALL
-         SELECT 'o_custkey', CAST(q.q_e6 AS BIGINT),
-           CAST(CAST(ckr.v AS DECIMAL(38,6)) AS VARCHAR)
-         FROM q CROSS JOIN ckn CROSS JOIN ckr
-         WHERE ckr.rn = LEAST(ckn.n, GREATEST(1,
-             (q.q_e6 * ckn.n + 999999) // 1000000))
-         UNION ALL
-         SELECT 'o_orderdate', CAST(q.q_e6 AS BIGINT),
-           strftime(odr.v, '%Y-%m-%d %H:%M:%S')
-         FROM q CROSS JOIN odn CROSS JOIN odr
-         WHERE odr.rn = LEAST(odn.n, GREATEST(1,
-             (q.q_e6 * odn.n + 999999) // 1000000))""",
-
-    // the same window + integer-ceil cut replay; DESC defaults to
-    // NULLS FIRST in DuckDB, so the NULLS LAST contract is explicit
-    "q133_perplexity_buckets" ->
-      """WITH r AS (
-           SELECT doc_id, lang,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY n_chars DESC NULLS LAST, doc_id ASC) AS p,
-             count(*) OVER (PARTITION BY lang) AS n
-           FROM documents)
-         SELECT doc_id, lang,
-           CAST(p AS BIGINT) AS rank_in_group,
-           CAST(n AS BIGINT) AS n_in_group,
-           CASE WHEN p <= (333333 * n + 999999) // 1000000 THEN 'head'
-                WHEN p <= (666667 * n + 999999) // 1000000 THEN 'middle'
-                ELSE 'tail' END AS bucket
-         FROM r""",
-
-    // q123's exact vocabulary/weight replay, then the per-document
-    // window with the lexicographic tie-break
-    "q134_top_keywords" ->
-      """WITH t AS (
-           SELECT doc_id, word AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> length(x) > 0)) AS word
-             FROM documents) GROUP BY 1, 2),
-         nd AS (SELECT count(*) AS n FROM documents),
-         d AS (SELECT term, count(*) AS df FROM t GROUP BY 1
-               HAVING count(*) >= 2 AND count(*) <= (SELECT floor(0.9 * n) FROM nd)),
-         w AS (SELECT doc_id, term, tf,
-                 tf * CAST(floor(1000.0 * ln(CAST((SELECT n FROM nd) AS DOUBLE) / df)) AS BIGINT) AS w
-               FROM t JOIN d USING (term)),
-         r AS (SELECT doc_id, term, tf, w,
-                 row_number() OVER (PARTITION BY doc_id
-                   ORDER BY w DESC, term ASC) AS rk
-               FROM w)
-         SELECT doc_id, term, CAST(tf AS BIGINT) AS tf,
-           CAST(w AS BIGINT) AS w, CAST(rk AS BIGINT) AS rk
-         FROM r WHERE rk <= 3""",
-
-    // SCD2 build: identical lag-based run-collapse (IS DISTINCT FROM ==
-    // the engine's null-safe struct compare on a non-null attr), then
-    // lead for the interval end — epoch-micro BIGINT output
-    "q135_scd2_history" ->
-      """WITH m AS (
-           SELECT user_id, ts, event_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-           FROM events),
-         k AS (
-           SELECT user_id, ts, event_id, event_type FROM m
-           WHERE prev IS DISTINCT FROM event_type)
-         SELECT user_id, event_type,
-           epoch_us(ts) AS ef_us,
-           epoch_us(lead(ts) OVER w) AS et_us,
-           lead(ts) OVER w IS NULL AS is_current
-         FROM k
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""",
-
-    // the same history filtered to the one version covering the as-of
-    // instant (half-open: from <= t < to)
-    "q136_scd2_snapshot" ->
-      """WITH m AS (
-           SELECT user_id, ts, event_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-           FROM events),
-         k AS (
-           SELECT user_id, ts, event_id, event_type FROM m
-           WHERE prev IS DISTINCT FROM event_type),
-         h AS (
-           SELECT user_id, event_type, ts AS ef,
-             lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS et
-           FROM k)
-         SELECT user_id, event_type, epoch_us(ef) AS ef_us, epoch_us(et) AS et_us
-         FROM h
-         WHERE ef <= TIMESTAMP '2024-01-15 00:00:00'
-           AND (et IS NULL OR et > TIMESTAMP '2024-01-15 00:00:00')""",
-
-    // grid resample: integer floor-div bucketing (epoch_us // step),
-    // per-cell max + count, generate_series grid between each key's
-    // first and last cell, IGNORE NULLS last_value as the LOCF; the
-    // carried double hits the same ⌊10⁶·x⌋ floor in both engines
-    "q137_resample_locf" ->
-      """WITH b AS (
-           SELECT user_id, epoch_us(ts) // 21600000000 AS bucket,
-             max(value) AS vmax, count(*) AS n
-           FROM events GROUP BY 1, 2),
-         s AS (
-           SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-           FROM b GROUP BY 1),
-         g AS (
-           SELECT user_id, unnest(generate_series(b0, b1)) AS bucket FROM s),
-         j AS (
-           SELECT g.user_id, g.bucket, b.vmax, b.n
-           FROM g LEFT JOIN b USING (user_id, bucket))
-         SELECT user_id, bucket,
-           CAST(floor(last_value(vmax IGNORE NULLS) OVER (
-             PARTITION BY user_id ORDER BY bucket
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1000000.0)
-             AS BIGINT) AS v_e6,
-           CAST(coalesce(n, 0) AS BIGINT) AS n_obs,
-           n IS NOT NULL AS observed
-         FROM j""",
-
-    // interleave key: same per-source rank window, same integer floor
-    // division (// == Spark's div on positive operands)
-    "q138_interleave_key" ->
-      """WITH r AS (
-           SELECT doc_id, source,
-             CAST(row_number() OVER (PARTITION BY source
-               ORDER BY doc_id, doc_id) AS BIGINT) AS within_rank
-           FROM documents)
-         SELECT doc_id, source, within_rank,
-           CAST((within_rank * 1000000000) //
-             (CASE WHEN source = 'src1' THEN 3000000
-                   WHEN source = 'src2' THEN 2000000
-                   ELSE 1000000 END) AS BIGINT) AS interleave_key
-         FROM r""",
-
-    // exact bivariate moments in HUGEINT (DuckDB promotes BIGINT
-    // products automatically), identical identity/divide order
-    "q139_correlation" ->
-      """WITH r AS (
-           SELECT l_returnflag,
-             CAST(round(l_quantity * 10000.0) AS BIGINT) AS cx,
-             CAST(round(l_extendedprice * 10000.0) AS BIGINT) AS cy
-           FROM lineitem
-           WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-         m AS (
-           SELECT l_returnflag, count(*) AS n,
-             sum(cx) AS sx, sum(cy) AS sy,
-             sum(cx * cx) AS sxx, sum(cy * cy) AS syy,
-             sum(cx * cy) AS sxy
-           FROM r GROUP BY 1 HAVING count(*) >= 2),
-         m2 AS (
-           SELECT l_returnflag, n,
-             CAST(n * sxy - sx * sy AS DOUBLE) AS covnum,
-             CAST(n * sxx - sx * sx AS DOUBLE) AS varx,
-             CAST(n * syy - sy * sy AS DOUBLE) AS vary
-           FROM m)
-         SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-           CAST(floor(10000.0 * (covnum / (sqrt(varx) * sqrt(vary)))) AS BIGINT) AS corr_e4,
-           CAST(floor(1000000.0 * (covnum / varx)) AS BIGINT) AS slope_e6
-         FROM m2 WHERE varx > 0 AND vary > 0""",
-
-    // incremental ≡ rebuild: the oracle is q135's full-rebuild SQL over
-    // the COMPLETE changelog, byte-identical conventions
-    // Replays the ENTIRE q145 composition stage by stage (gate -> scrub
-    // -> keep-best CC dedup -> split decontamination -> temperature mix
-    // -> pack -> interleave); every intermediate relation d1..d6 feeds
-    // the next stage exactly as the Spark operators chain.
-    "q145_corpus_pipeline" ->
-      """WITH RECURSIVE d0 AS (SELECT doc_id, lang, text FROM documents),
-         -- A. repetition gate (q130 replay over d0)
-         rl AS (
-           SELECT doc_id, line, count(*) AS c, max(length(line)) AS len
-           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS line FROM d0)
-           WHERE length(line) > 0 GROUP BY 1, 2),
-         rla AS (
-           SELECT doc_id, sum(c) AS n_lines,
-             sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup_lines,
-             sum(c * len) AS line_chars,
-             sum(CASE WHEN c > 1 THEN c * len ELSE 0 END) AS dup_line_chars
-           FROM rl GROUP BY 1),
-         rw AS (SELECT doc_id,
-                  list_filter(string_split_regex(text, '\s+'),
-                    x -> length(x) > 0) AS words,
-                  length(text) AS total_chars
-                FROM d0),
-         rg AS (
-           SELECT doc_id, 2 AS n, array_to_string(words[i:i+1], ' ') AS gram
-           FROM rw, unnest(range(1, len(words))) AS t(i)
-           UNION ALL
-           SELECT doc_id, 3, array_to_string(words[i:i+2], ' ')
-           FROM rw, unnest(range(1, len(words) - 1)) AS t(i)),
-         rgc AS (SELECT doc_id, n, gram, count(*) AS c, max(length(gram)) AS len
-                 FROM rg GROUP BY 1, 2, 3),
-         rga AS (SELECT doc_id,
-                   max(CASE WHEN n = 2 THEN c * len END) AS top2_mass,
-                   sum(CASE WHEN n = 3 AND c > 1 THEN c * len ELSE 0 END) AS dup_mass
-                 FROM rgc GROUP BY 1),
-         rsig AS (
-           SELECT rw.doc_id,
-             CAST(CASE WHEN COALESCE(rla.n_lines, 0) > 0
-               THEN (1000000 * rla.dup_lines) // rla.n_lines ELSE 0 END AS BIGINT) AS dlf,
-             CAST(CASE WHEN COALESCE(rla.line_chars, 0) > 0
-               THEN (1000000 * rla.dup_line_chars) // rla.line_chars ELSE 0 END AS BIGINT) AS dlcf,
-             CAST(LEAST(CASE WHEN rw.total_chars > 0
-               THEN (1000000 * COALESCE(rga.top2_mass, 0)) // rw.total_chars
-               ELSE 0 END, 1000000) AS BIGINT) AS t2f,
-             CAST(LEAST(CASE WHEN rw.total_chars > 0
-               THEN (1000000 * COALESCE(rga.dup_mass, 0)) // rw.total_chars
-               ELSE 0 END, 1000000) AS BIGINT) AS d5f
-           FROM rw LEFT JOIN rla USING (doc_id) LEFT JOIN rga USING (doc_id)),
-         d1 AS MATERIALIZED (
-           SELECT d0.* FROM d0 JOIN rsig USING (doc_id)
-           WHERE NOT (dlf > 970000 OR dlcf > 950000 OR t2f > 100000 OR d5f > 20000)),
-         -- B. span scrub (q102 replay over d1)
-         sw AS MATERIALIZED (
-           SELECT doc_id, CAST(o AS INT) AS o,
-             substr(text, CAST(o AS INT) + 1, 40) AS win
-           FROM (SELECT doc_id, text,
-                   unnest(range(0, CAST(length(text) AS BIGINT) - 39, 4)) AS o
-                 FROM d1 WHERE length(text) >= 40)),
-         swdf AS MATERIALIZED (
-           SELECT win FROM (SELECT DISTINCT doc_id, win FROM sw)
-           GROUP BY win HAVING count(*) > 3),
-         shot AS MATERIALIZED (SELECT DISTINCT sw.doc_id, sw.o FROM sw JOIN swdf USING (win)),
-         spos AS (
-           SELECT doc_id, text,
-             CAST(unnest(range(1, CAST(length(text) AS BIGINT) + 1)) AS INT) AS p
-           FROM d1),
-         skept AS (
-           SELECT spos.doc_id, spos.p, substr(spos.text, spos.p, 1) AS ch
-           FROM spos
-           WHERE NOT EXISTS (SELECT 1 FROM shot h
-             WHERE h.doc_id = spos.doc_id AND spos.p > h.o AND spos.p <= h.o + 40)),
-         d2 AS MATERIALIZED (
-           SELECT d1.doc_id, d1.lang, coalesce(k.clean_text, '') AS text
-           FROM d1 LEFT JOIN (
-             SELECT doc_id, string_agg(ch, '' ORDER BY p) AS clean_text
-             FROM skept GROUP BY doc_id) k USING (doc_id)),
-         -- C. keep-best dedup (q101 replay over d2, bands on cleaned lengths)
-         ct AS MATERIALIZED (
-           SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS n_chars,
-             CAST(floor(length(text) / 100) AS BIGINT) AS band,
-             list_distinct(list_filter(string_split_regex(lower(text), '\s+'),
-               x -> length(x) > 0)) AS toks
-           FROM d2),
-         cp AS MATERIALIZED (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM ct a JOIN ct b
-             ON a.lang = b.lang AND a.band = b.band AND a.doc_id < b.doc_id
-           WHERE CAST(floor(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE)
-               * 10000) AS BIGINT) >= 9500),
-         ce AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM cp UNION SELECT id_b, id_a FROM cp),
-         creach AS (
-           SELECT src AS id, src AS r FROM ce
-           UNION
-           SELECT ce.src, creach.r FROM ce JOIN creach ON ce.dst = creach.id),
-         clabels AS (SELECT id, min(r) AS rep FROM creach GROUP BY id),
-         cranked AS (
-           SELECT t.doc_id, t.lang, t.n_chars,
-             row_number() OVER (PARTITION BY l.rep
-               ORDER BY t.n_chars DESC, t.doc_id) AS rk
-           FROM ct t JOIN clabels l ON t.doc_id = l.id),
-         d3 AS MATERIALIZED (
-           SELECT d2.doc_id, d2.lang, d2.text
-           FROM d2 JOIN cranked USING (doc_id) WHERE cranked.rk = 1
-           UNION ALL
-           SELECT d2.doc_id, d2.lang, d2.text
-           FROM d2 WHERE doc_id NOT IN (SELECT id FROM clabels)),
-         -- D. decontamination: portable split; train docs with a test doc's text removed
-         dsplit AS (
-           SELECT doc_id, lang, text,
-             CASE WHEN b < 800000 THEN 'train'
-                  WHEN b < 900000 THEN 'val'
-                  ELSE 'test' END AS split
-           FROM (SELECT d3.*,
-                   ((doc_id % 1000003) * 2654435761) % 1000000007 % 1000000 AS b
-                 FROM d3)),
-         d4 AS MATERIALIZED (
-           SELECT tr.doc_id, tr.lang, tr.text
-           FROM dsplit tr
-           WHERE tr.split = 'train'
-             AND NOT EXISTS (SELECT 1 FROM dsplit te
-               WHERE te.split = 'test' AND te.text = tr.text)),
-         -- E. temperature mix totalN=200 over d4
-         mc AS (SELECT lang, count(*) AS n FROM d4 GROUP BY 1),
-         mw AS (SELECT lang, n,
-           CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000) AS BIGINT) AS s FROM mc),
-         mt AS (SELECT lang,
-           least(n, (200 * s) // (SELECT sum(s) FROM mw)) AS target FROM mw),
-         mr AS (SELECT d4.doc_id, d4.lang, d4.text,
-           row_number() OVER (PARTITION BY d4.lang
-             ORDER BY ((d4.doc_id % 1000003) * 2654435761) % 1000000007,
-               d4.doc_id) AS rn
-           FROM d4),
-         d5 AS MATERIALIZED (
-           SELECT mr.doc_id, mr.lang, mr.text FROM mr JOIN mt USING (lang)
-           WHERE rn <= target),
-         -- F. pack (q65 replay over d5, shard % 8, 1024 tokens)
-         pt AS (
-           SELECT doc_id, lang,
-             CAST(len(list_filter(string_split_regex(text, '\s+'),
-               x -> length(x) > 0)) AS BIGINT) AS token_ct,
-             ((doc_id % 1000003) * 2654435761) % 1000000007 % 8 AS shard
-           FROM d5),
-         pc AS (
-           SELECT doc_id, lang, token_ct, shard,
-             CAST(COALESCE(sum(token_ct) OVER (PARTITION BY lang, shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS tokens_before
-           FROM pt),
-         d6 AS MATERIALIZED (
-           SELECT doc_id, lang, token_ct, shard, tokens_before,
-             CAST(tokens_before // 1024 AS BIGINT) AS seq_id
-           FROM pc),
-         -- G. weighted interleave (q138 replay over d6)
-         gr AS (
-           SELECT d6.*,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY doc_id, doc_id) AS BIGINT) AS within_rank
-           FROM d6)
-         SELECT doc_id, lang, token_ct, CAST(shard AS BIGINT) AS shard,
-           tokens_before, seq_id, within_rank,
-           CAST((within_rank * 1000000000) //
-             (CASE WHEN lang = 'en' THEN 3000000
-                   WHEN lang = 'zh' THEN 2000000
-                   ELSE 1000000 END) AS BIGINT) AS interleave_key
-         FROM gr""",
-
-    // Replays the q144 pipeline end-to-end from the pixel formula: the
-    // same 9x8 grayscale values, the dHash bit rule (bit y*8+x set iff
-    // left < right), then BRUTE-FORCE pairs at hamming <= 4 — Spark's
-    // chunk-blocked set must match exactly (blocking is complete by
-    // pigeonhole at this radius).
-    "q144_image_neardup" ->
-      """WITH hx AS (
-           SELECT d.doc_id, xs.x AS x, ys.y AS y,
-             ((d.doc_id - d.doc_id % 3) + 1) * 2654435761
-               + xs.x * 97 + ys.y * 1031 AS h
-           FROM documents d
-           CROSS JOIN (SELECT unnest(range(0, 9)) AS x) xs
-           CROSS JOIN (SELECT unnest(range(0, 8)) AS y) ys),
-         gx AS (
-           SELECT doc_id, x, y, xor(h, h >> 7) AS g FROM hx),
-         px AS (
-           SELECT doc_id, x, y,
-             CASE WHEN doc_id % 3 <> 0
-                    AND y * 9 + x = (doc_id * 13) % 72
-               THEN ((g * 31 + (g >> 11)) % 241 + 128) % 241
-               ELSE (g * 31 + (g >> 11)) % 241
-             END AS p
-           FROM gx),
-         dh AS (
-           -- bit 63 cannot be built as 1<<63 in signed BIGINT; adding
-           -- -2^63 sets it (two's complement), and the HUGEINT sum of
-           -- bits 0..62 plus that term lands back in BIGINT range
-           SELECT l.doc_id,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.p < r.p AND l.y * 8 + l.x = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.p < r.p
-                 THEN CAST(CAST(1 AS BIGINT) << (l.y * 8 + l.x) AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-           FROM px l JOIN px r
-             ON r.doc_id = l.doc_id AND r.y = l.y AND r.x = l.x + 1
-           WHERE l.x < 8
-           GROUP BY l.doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-         FROM dh a JOIN dh b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.dhash, b.dhash)) <= 4""",
-
-    // Replays the q147 pipeline from the sample formula: the same 520
-    // PCM values, 65 frame energies (sum |sample| per 8-sample frame),
-    // the difference-bit rule (bit j set iff e(j) < e(j+1), bit 63 via
-    // the two's-complement HUGEINT trick, see q144), then BRUTE-FORCE
-    // pairs at hamming <= 4 — Spark's chunk-blocked set must match
-    // exactly (blocking complete by pigeonhole at this radius).
-    "q147_audio_neardup" ->
-      """WITH s AS (
-           SELECT d.doc_id, ix.i AS i,
-             ((d.doc_id - d.doc_id % 3) + 1) * 2654435761
-               + ix.i * 7349 AS h
-           FROM documents d
-           CROSS JOIN (SELECT unnest(range(0, 520)) AS i) ix),
-         g AS (
-           SELECT doc_id, i, xor(h, h >> 7) AS g FROM s),
-         p AS (
-           SELECT doc_id, i,
-             CASE WHEN doc_id % 3 <> 0 AND i = (doc_id * 13) % 520
-               THEN ((g * 31 + (g >> 11)) % 30000 + 9000) % 30000 - 15000
-               ELSE (g * 31 + (g >> 11)) % 30000 - 15000
-             END AS smp
-           FROM g),
-         e AS (
-           SELECT doc_id, i // 8 AS frame, SUM(abs(smp)) AS en
-           FROM p GROUP BY doc_id, i // 8),
-         fp AS (
-           SELECT l.doc_id,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.en < r.en AND l.frame = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.en < r.en
-                 THEN CAST(CAST(1 AS BIGINT) << l.frame AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS afp
-           FROM e l JOIN e r
-             ON r.doc_id = l.doc_id AND r.frame = l.frame + 1
-           WHERE l.frame < 64
-           GROUP BY l.doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS hamming
-         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.afp, b.afp)) <= 4""",
-
-    "q143_scd2_apply" ->
-      """WITH m AS (
-           SELECT user_id, ts, event_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-           FROM events),
-         k AS (
-           SELECT user_id, ts, event_id, event_type FROM m
-           WHERE prev IS DISTINCT FROM event_type)
-         SELECT user_id, event_type,
-           epoch_us(ts) AS ef_us,
-           epoch_us(lead(ts) OVER w) AS et_us,
-           lead(ts) OVER w IS NULL AS is_current
-         FROM k
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""",
-
-    // same rank targets (integer ceil via (q*n+999999)//1e6, clamp
-    // >= 1), same (value, id) ordering, clip on input doubles
-    "q142_winsorize" ->
-      """WITH r AS (
-           SELECT event_id, event_type, "value" AS v,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY "value", event_id) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS n
-           FROM events WHERE "value" IS NOT NULL),
-         b AS (
-           SELECT event_type,
-             min(CASE WHEN rn = greatest(1, (50000 * n + 999999) // 1000000)
-                 THEN v END) AS lo,
-             max(CASE WHEN rn = greatest(1, (950000 * n + 999999) // 1000000)
-                 THEN v END) AS hi
-           FROM r GROUP BY 1)
-         SELECT r.event_id, r.event_type,
-           CAST(floor(least(greatest(r.v, b.lo), b.hi) * 1000000.0) AS BIGINT) AS w_e6
-         FROM r JOIN b USING (event_type)""",
-
-    // disjoint-step strict CEP == consecutive lead-triples (see the
-    // query comment); the window compare runs on MILLIS (epoch_ms)
-    // because the fold's deadline arithmetic is Timestamp.getTime —
-    // a micros-based oracle bound could disagree within 1 ms of the
-    // window edge
-    "q141_cep_sequence" ->
-      """WITH o AS (
-           SELECT user_id, ts, event_type,
-             lead(event_type, 1) OVER w AS e1,
-             lead(event_type, 2) OVER w AS e2,
-             lead(ts, 2) OVER w AS t2
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts))
-         SELECT user_id, epoch_us(ts) AS t0_us, epoch_us(t2) AS t2_us
-         FROM o
-         WHERE event_type = 'view' AND e1 = 'click' AND e2 = 'purchase'
-           AND epoch_ms(t2) - epoch_ms(ts) <= 604800000""",
-
-    // identical smoothing rationals, double casts, and ln/floor order;
-    // DESC NULLS LAST mirrors Spark's desc
-    "q140_vocab_divergence" ->
-      """WITH ta AS (
-           SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-             x -> length(x) > 0)) AS term
-           FROM documents WHERE doc_id % 2 = 0),
-         tb AS (
-           SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-             x -> length(x) > 0)) AS term
-           FROM documents WHERE doc_id % 2 = 1),
-         ca AS (SELECT term, count(*) AS c FROM ta GROUP BY 1),
-         cb AS (SELECT term, count(*) AS c FROM tb GROUP BY 1),
-         j AS (
-           SELECT COALESCE(ca.term, cb.term) AS term,
-             COALESCE(ca.c, 0) AS ca, COALESCE(cb.c, 0) AS cb
-           FROM ca FULL OUTER JOIN cb ON ca.term = cb.term),
-         t AS (SELECT sum(ca) AS na, sum(cb) AS nb, count(*) AS v FROM j),
-         w AS (
-           SELECT term, ca, cb,
-             CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE) AS pa,
-             CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE) AS pb
-           FROM j CROSS JOIN t)
-         SELECT term, CAST(ca AS BIGINT) AS ca, CAST(cb AS BIGINT) AS cb,
-           CAST(floor(500000000.0 * (pa * ln(pa / ((pa + pb) / 2.0)))) +
-                floor(500000000.0 * (pb * ln(pb / ((pa + pb) / 2.0)))) AS BIGINT) AS js_e9
-         FROM w
-         ORDER BY js_e9 DESC NULLS LAST, term ASC LIMIT 50""",
-
-    // two unrolled gradient rounds replayed string-keyed — the
-    // TRAINING arithmetic (every weight, margin, hard-sigmoid clamp,
-    // floor division) is under the hash gate, then the held-out
-    // margins/scores
-    "q190_quality_lr_scores" ->
-      s"""WITH ${lrOracleCtes("documents")}
-         SELECT doc_id, CAST(z AS BIGINT) AS z_e6,
-           CAST($lrSigSql AS BIGINT) AS p_e6,
-           $lrSigSql >= 500000 AS pred
-         FROM zt""",
-
-    // deterministic training ⇒ the accuracy REPLAYS (not a pinned
-    // constant like the probabilistic q94-q98 gates); the floor
-    // boolean rides along
-    "q191_quality_lr_gate" ->
-      s"""WITH ${lrOracleCtes("documents")},
-         pr AS (SELECT doc_id, y, $lrSigSql >= 500000 AS pred FROM zt)
-         SELECT CAST(count(*) AS BIGINT) AS n_test,
-           CAST(sum(CASE WHEN pred = (y = 1) THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_correct,
-           CAST(7000 AS BIGINT) AS floor_e4,
-           sum(CASE WHEN pred = (y = 1) THEN 1 ELSE 0 END) * 10000
-             >= count(*) * 7000 AS meets_floor
-         FROM pr""",
-
-    // the q190 chain over a banned-phrase-filtered pool, then the
-    // perplexityBuckets top-half cut: the filter changes the training
-    // pool, so every gradient and rank downstream must move with it
-    "q192_curation_classifier" ->
-      s"""WITH ${lrOracleCtes(
-          """(SELECT * FROM documents
-           WHERE text NOT LIKE '%batch batch%'
-             AND text NOT LIKE '%dow win%')""")},
-         sl AS (SELECT zt.doc_id, aug.lang, zt.z
-                FROM zt JOIN aug USING (doc_id)),
-         rk AS (
-           SELECT doc_id, lang,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY z DESC, doc_id ASC) AS BIGINT) AS rank_in_group,
-             CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n_in_group
-           FROM sl)
-         SELECT doc_id, lang, rank_in_group, n_in_group
-         FROM rk
-         WHERE rank_in_group <= (500000 * n_in_group + 999999) // 1000000""",
-
-    // the q144 + q147 arithmetic replays over their sniff-routed
-    // subsets (the routing IS what the mime dispatch computes:
-    // PNG magic for %4∈{0,2}, RIFF/WAVE for %4=1, the ISO-BMFF ftyp
-    // for %8=3, the "T " text guard for %8=7 — pinned per-doc by
-    // q163), the VIDEO fingerprint replays as the dHash of the
-    // per-position frame SUM (r20 — the temporal fold is exact
-    // integer arithmetic), the union pair set closes transitively
-    // (recursive CTE), and keep-best replays the (n_chars DESC,
-    // doc_id ASC) window with unpaired media passing through
-    "q194_multimodal_curation" ->
-      """WITH RECURSIVE
-         img AS (SELECT doc_id, n_chars FROM documents WHERE doc_id % 4 IN (0, 2)),
-         aud AS (SELECT doc_id, n_chars FROM documents WHERE doc_id % 4 = 1),
-         vid AS (SELECT doc_id, n_chars FROM documents WHERE doc_id % 8 = 3),
-         hx AS (
-           SELECT d.doc_id, xs.x AS x, ys.y AS y,
-             ((d.doc_id - d.doc_id % 3) + 1) * 2654435761
-               + xs.x * 97 + ys.y * 1031 AS h
-           FROM img d
-           CROSS JOIN (SELECT unnest(range(0, 9)) AS x) xs
-           CROSS JOIN (SELECT unnest(range(0, 8)) AS y) ys),
-         px AS (
-           SELECT doc_id, x, y,
-             CASE WHEN doc_id % 3 <> 0
-                    AND y * 9 + x = (doc_id * 13) % 72
-               THEN ((g * 31 + (g >> 11)) % 241 + 128) % 241
-               ELSE (g * 31 + (g >> 11)) % 241
-             END AS p
-           FROM (SELECT doc_id, x, y, xor(h, h >> 7) AS g FROM hx)),
-         dh AS (
-           SELECT l.doc_id,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.p < r.p AND l.y * 8 + l.x = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.p < r.p
-                 THEN CAST(CAST(1 AS BIGINT) << (l.y * 8 + l.x) AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS dhash
-           FROM px l JOIN px r
-             ON r.doc_id = l.doc_id AND r.y = l.y AND r.x = l.x + 1
-           WHERE l.x < 8
-           GROUP BY l.doc_id),
-         ip AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM dh a JOIN dh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.dhash, b.dhash)) <= 4),
-         sa AS (
-           SELECT d.doc_id, ix.i AS i,
-             ((d.doc_id - d.doc_id % 3) + 1) * 2654435761
-               + ix.i * 7349 AS h
-           FROM aud d
-           CROSS JOIN (SELECT unnest(range(0, 520)) AS i) ix),
-         sp AS (
-           SELECT doc_id, i,
-             CASE WHEN doc_id % 3 <> 0 AND i = (doc_id * 13) % 520
-               THEN ((g * 31 + (g >> 11)) % 30000 + 9000) % 30000 - 15000
-               ELSE (g * 31 + (g >> 11)) % 30000 - 15000
-             END AS smp
-           FROM (SELECT doc_id, i, xor(h, h >> 7) AS g FROM sa)),
-         en AS (
-           SELECT doc_id, i // 8 AS frame, SUM(abs(smp)) AS en
-           FROM sp GROUP BY doc_id, i // 8),
-         fp AS (
-           SELECT l.doc_id,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.en < r.en AND l.frame = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.en < r.en
-                 THEN CAST(CAST(1 AS BIGINT) << l.frame AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS afp
-           FROM en l JOIN en r
-             ON r.doc_id = l.doc_id AND r.frame = l.frame + 1
-           WHERE l.frame < 64
-           GROUP BY l.doc_id),
-         ap AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.afp, b.afp)) <= 4),
-         vhx AS (
-           SELECT d.doc_id, fs.f AS f, xs.x AS x, ys.y AS y,
-             ((((d.doc_id - 3) // 8) - ((d.doc_id - 3) // 8) % 3) + 1)
-               * 2654435761 + xs.x * 97 + ys.y * 1031 + fs.f * 761 AS h
-           FROM vid d
-           CROSS JOIN (SELECT unnest(range(0, 3)) AS f) fs
-           CROSS JOIN (SELECT unnest(range(0, 9)) AS x) xs
-           CROSS JOIN (SELECT unnest(range(0, 8)) AS y) ys),
-         vpx AS (
-           SELECT doc_id, x, y,
-             CASE WHEN ((doc_id - 3) // 8) % 3 <> 0
-                    AND f * 72 + y * 9 + x = (doc_id * 13) % 216
-               THEN ((g * 31 + (g >> 11)) % 241 + 128) % 241
-               ELSE (g * 31 + (g >> 11)) % 241
-             END AS p
-           FROM (SELECT doc_id, f, x, y, xor(h, h >> 7) AS g FROM vhx)),
-         vsm AS (SELECT doc_id, x, y, SUM(p) AS ps FROM vpx GROUP BY 1, 2, 3),
-         vdh AS (
-           SELECT l.doc_id,
-             CAST(COALESCE(SUM(
-               CASE WHEN l.ps < r.ps AND l.y * 8 + l.x = 63
-                 THEN CAST(-9223372036854775808 AS HUGEINT)
-               WHEN l.ps < r.ps
-                 THEN CAST(CAST(1 AS BIGINT) << (l.y * 8 + l.x) AS HUGEINT)
-               ELSE CAST(0 AS HUGEINT) END), 0) AS BIGINT) AS vfp
-           FROM vsm l JOIN vsm r
-             ON r.doc_id = l.doc_id AND r.y = l.y AND r.x = l.x + 1
-           WHERE l.x < 8
-           GROUP BY l.doc_id),
-         vp AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM vdh a JOIN vdh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.vfp, b.vfp)) <= 4),
-         pr AS (SELECT * FROM ip UNION ALL SELECT * FROM ap
-                UNION ALL SELECT * FROM vp),
-         e AS (SELECT id_a AS src, id_b AS dst FROM pr
-               UNION SELECT id_b, id_a FROM pr),
-         reach(id, r) AS (
-           SELECT src, src FROM e
-           UNION
-           SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-         labels AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         pool AS (SELECT doc_id, n_chars FROM img
-                  UNION ALL SELECT doc_id, n_chars FROM aud
-                  UNION ALL SELECT doc_id, n_chars FROM vid),
-         best AS (
-           SELECT p2.doc_id, p2.n_chars FROM pool p2
-           JOIN labels l ON p2.doc_id = l.id
-           QUALIFY row_number() OVER (PARTITION BY l.rep
-             ORDER BY p2.n_chars DESC, p2.doc_id ASC) = 1),
-         unpaired AS (
-           SELECT doc_id, n_chars FROM pool
-           WHERE doc_id NOT IN (SELECT id FROM labels))
-         SELECT doc_id, CAST(n_chars AS BIGINT) AS score
-         FROM (SELECT * FROM best UNION ALL SELECT * FROM unpaired)""",
-
-    // bucket ids are xxhash64-derived (not SQL-replayable), so the
-    // gate is the q94-style measured floor: n_test replays, the
-    // accuracy boolean is computed in Spark against the floor constant
-    "q195_quality_lr_bucketed_gate" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_test,
-           CAST(7000 AS BIGINT) AS floor_e4, true AS meets_floor
-         FROM documents WHERE doc_id % 2 = 1""",
-
-    // TWO independent unrolled trainings side by side (baseline
-    // regime + the xmk/zmk drift regime via the CTE prefix), the
-    // cross-regime scoring of the new corpus under the OLD weights
-    // (zx), both confidence folds, and the retrain accuracy — every
-    // integer of the drift decision replays
-    "q196_quality_lr_drift_gate" ->
-      s"""WITH ${lrOracleCtes("documents")},
-         ${lrOracleCtes("documents", "xmk", "zmk", "n")},
-         zx AS (SELECT t.doc_id,
-                  (SELECT b FROM b2) + CAST(sum(t.c * coalesce(w2.wt, 0)) AS BIGINT) AS z
-                FROM nte t LEFT JOIN w2 USING (w) GROUP BY t.doc_id),
-         cb AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(abs($lrSigSql - 500000)) AS BIGINT) AS s FROM zt),
-         cn AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(abs($lrSigSql - 500000)) AS BIGINT) AS s FROM zx),
-         ac AS (SELECT CAST(count(*) AS BIGINT) AS n_re,
-                  CAST(sum(CASE WHEN ($lrSigSql >= 500000) = (y = 1)
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-                FROM nzt)
-         SELECT cb.n AS n_scored,
-           CAST(${fdivSql("cb.s", "cb.n")} AS BIGINT) AS base_conf_e6,
-           CAST(${fdivSql("cn.s", "cn.n")} AS BIGINT) AS new_conf_e6,
-           (${fdivSql("cn.s", "cn.n")}) * 2 < (${fdivSql("cb.s", "cb.n")})
-             AS drift_detected,
-           ac.n_correct * 10000 >= ac.n_re * 7000 AS retrain_recovers
-         FROM cb, cn, ac""",
-
-    // sliced-fold labels ≡ one-shot labels is structural (each pair
-    // lands in the slice where its later endpoint arrives; the CC fold
-    // is exact); the fingerprint census replays as the non-text media
-    // count — every PNG, WAV, and (r20) MP4 in the fixture decodes
-    // (q194's oracle proves the fingerprints themselves, hash-exact)
-    "q197_multimodal_streamed_curation" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_fingerprinted,
-           true AS fold_equals_oneshot
-         FROM documents WHERE doc_id % 8 <> 7""",
-
-    // the folded-counts training replays in the SAME unrolled CTEs as
-    // q190's from-scratch training (count additivity means the folded
-    // standing table IS the one-shot count table, so one replay covers
-    // both legs); the equality boolean is structural. n_w counts the
-    // train vocabulary, sum_w_e6 folds every final weight — a drifted
-    // gradient anywhere moves it
-    "q198_quality_lr_counts_retrain" ->
-      s"""WITH ${lrOracleCtes("documents")}
-         SELECT
-           (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM tr) AS n_train,
-           (SELECT CAST(count(*) AS BIGINT) FROM w2) AS n_w,
-           (SELECT CAST(sum(wt) AS BIGINT) FROM w2) AS sum_w_e6,
-           (SELECT CAST(b AS BIGINT) FROM b2) AS bias_e6,
-           true AS fold_equals_scratch""",
-
-    // sliced-built-index serve ≡ one-shot serve is structural (pure
-    // per-vector encoding + deterministic serve ranking); the index
-    // row count replays as the corpus count
-    "q193_pq_streamed_serve" ->
-      """SELECT count(*) AS n_index_rows, true AS served_equals_oneshot
-         FROM embeddings""",
-
-    // q33_ann_lsh / q35_cosine_neardup / q36_ann_ivf /
-    // q54_ann_lsh_multi: probabilistic and hash-family-specific — the
-    // output VALUES depend on xxhash64 / murmur3 hyperplanes, which
-    // DuckDB cannot reproduce, and measured candidate recall on the
-    // near-uniform synthetic embeddings is partial (top-5 overlap with
-    // exact brute force: 4-9/40) — so the pair/neighbor SET itself is
-    // not SQL-expressible. Rows-only checks remain by design for the
-    // neighbor/pair SETS; their floors are now gated numerically by
-    // q94-q98 above (and the spec suite pins them at build time too).
-  )
+                                 (build: => DataFrame): DataFrame =
+    Artifacts.store.stored(s, dir, tag)(Stored.write(build, _)).frame(s)
+
+  private[graft] def multimodalMediaTable(s: SparkSession, dir: String): DataFrame =
+    Shared.multimodalMediaTable(s, dir)
 }

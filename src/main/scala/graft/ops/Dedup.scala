@@ -925,15 +925,18 @@ object Dedup {
     * eviction and session cache sweeps — reading it is a
     * labels-table-sized scan, ~10⁻⁵ of the corpus bytes.
     */
-  final class DedupReport private[Dedup] (
+  final class DedupReport private[graft] (
       @transient private val spark: org.apache.spark.sql.SparkSession,
-      val artifactPath: String) extends Serializable {
+      val artifactPath: String,
+      val schema: org.apache.spark.sql.types.StructType) extends Serializable {
 
     /** The raw artifact: one (id, label) row per clustered document,
       * carrying the CC convergence telemetry as constant columns
       * (`cc_rounds`, `cc_converged` — parquet RLE makes them free).
+      * Read with the schema recorded when it was written, so a read
+      * runs no schema-inference job.
       */
-    def labels: DataFrame = spark.read.parquet(artifactPath)
+    def labels: DataFrame = spark.read.schema(schema).parquet(artifactPath)
 
     /** Convergence telemetry of the CC run that built the artifact:
       * (rounds executed, converged). A pipeline operator alerts on
@@ -988,7 +991,7 @@ object Dedup {
       .withColumn("cc_converged", lit(run.converged))
       .write.mode("overwrite").parquet(path)
     CacheScope.unpersistRdds(Seq(run.state))
-    new DedupReport(spark, path)
+    new DedupReport(spark, path, spark.read.parquet(path).schema)
   }
 
   /** Exact blocked n-gram Jaccard: pairwise token-set Jaccard within

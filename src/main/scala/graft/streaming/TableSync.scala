@@ -15,9 +15,11 @@ import graft.ops.CacheScope
   * Why a visibility barrier: an `insertInto` issued from foreachBatch's
   * cloned session lands on disk, but the outer session can keep serving
   * a STALE relation snapshot (~1% of batches, measured by
-  * `graft.tools.IngestStress`) or a zombie cached plan (~2%); a sink
-  * whose replay probe reads a table before appending to it sees the
-  * stale listing on most batches, because the probe resolved it. A sink
+  * `graft.tools.IngestStress`) or a zombie cached plan (~2%). A sink
+  * whose replay probe reads a table before appending to it would see
+  * the pre-append listing on most batches, because the probe resolved
+  * it in this session; [[append]] refreshes this session's entry after
+  * its write, so the barrier's first count normally passes. A sink
   * that reads its own table next batch would then fold against old
   * state. For append-only tables that under-counts; for the
   * read-modify-OVERWRITE loops (DimStore, SCD2 history, CC labels) it
@@ -106,6 +108,11 @@ private[streaming] final class TableSync(spark: SparkSession, db: String,
         (n + rowsPerFile - 1) / rowsPerFile)).toInt
       val w = df.coalesce(files).write.mode(SaveMode.Append)
       if (exists(table)) w.insertInto(name(table)) else w.saveAsTable(name(table))
+      // the write went through `df`'s session (foreachBatch's clone),
+      // which leaves this session's relation entry listing the files from
+      // before it: refresh it, so [[visible]]'s first count reads the
+      // append instead of taking its retry path
+      spark.catalog.refreshTable(name(table))
       rows.addAndGet(n)
     }
     n

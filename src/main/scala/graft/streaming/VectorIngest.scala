@@ -52,7 +52,7 @@ object VectorIngest {
     * themselves).
     *
     * The model frames must be DURABLE — parquet-backed (the
-    * `pqModelArtifact` shape) or otherwise lineage-free — NOT the raw
+    * `Artifacts.pq` shape) or otherwise lineage-free — NOT the raw
     * training output: `trainCentroids`/`trainProductQuantizer` return
     * frames backed by localCheckpoint blocks whose release
     * (CacheScope) would leave a long-lived sink reading

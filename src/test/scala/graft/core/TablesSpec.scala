@@ -124,6 +124,24 @@ class TablesSpec extends SparkSpec {
     assert(twin.as[(Long, Long)].collect().toSet === Set((1L, 2L), (3L, 4L)))
   }
 
+  test("a memoized artifact of every kind reads back without a job") {
+    import graft.queries.Artifacts._
+    val dir = "/root/testdata/sf0.001"
+    val reads: Seq[(String, () => Any)] = Seq(
+      "minhash index" -> (() => store(minhashIndex, spark, dir)),
+      "dedup-report labels" -> (() => store(dedupLabels, spark, dir).labels),
+      "LR model" -> (() => store(lrModel, spark, dir).w),
+      "PQ centroids, codebooks and index" -> (() => pq(spark, dir)),
+      "PageRank twin" -> (() => store(prCold, spark, dir).scores))
+    reads.foreach { case (_, read) => read() } // builds what is not built yet
+    for ((kind, read) <- reads)
+      assert(jobsIn(read()) === 0, s"a read of the $kind ran a job")
+    val model = store(lrModel, spark, dir)
+    assert(model.w.count() > 0L)
+    val pr = store(prCold, spark, dir)
+    assert(pr.converged && pr.rounds > 0 && pr.scores.count() > 0L)
+  }
+
   // the size-derived shuffle width (default 4 MB per partition)
   private val MB = 1024 * 1024
   private def withDir(sizes: Int*)(body: java.nio.file.Path => Unit): Unit = {

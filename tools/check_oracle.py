@@ -1,13 +1,29 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL
 in DuckDB over the same parquet tables and compare to the Spark result
-parquet (columns sorted by name, rows sorted, values normalized)."""
+parquet (columns sorted by name, rows sorted, values normalized).
+
+With `--against OTHER_OUT_DIR` it compares Verify dumps instead: every
+dump dir of out_dir (the rows-only ones included) against the dump of
+the same name in OTHER_OUT_DIR, with the same normalization, plus the
+two oracle_sql.json dicts. It runs no oracle SQL.
+
+  check_oracle.py [--subset] [sf_dir] [out_dir]
+  check_oracle.py [sf_dir] out_dir --against other_out_dir"""
 import duckdb, json, math, sys, glob, os
 
-# flags first, positionals after — '--subset' anywhere must not shift
-# (or become) sf_dir/out_dir
-subset = "--subset" in sys.argv
-args = [a for a in sys.argv[1:] if a != "--subset"]
+# flags first, positionals after — '--subset' or '--against DIR'
+# anywhere must not shift (or become) sf_dir/out_dir
+argv = sys.argv[1:]
+against = None
+if "--against" in argv:
+    i = argv.index("--against")
+    if i + 1 >= len(argv):
+        sys.exit("--against needs the other Verify output dir")
+    against = argv[i + 1]
+    del argv[i:i + 2]
+subset = "--subset" in argv
+args = [a for a in argv if a != "--subset"]
 sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
 out_dir = args[1] if len(args) > 1 else "/tmp/verify_sf0001"
 
@@ -26,6 +42,50 @@ def norm(v):
         return f"{v:.6g}"
     if isinstance(v, bytes): return v.hex()
     return str(v)
+
+def dump_rows(d):
+    """(sorted column names, sorted normalized rows) of one dump dir"""
+    files = glob.glob(f"{d}/*.parquet")
+    if not files:
+        return [], []
+    df = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf()
+    cols = sorted(df.columns)
+    return cols, sorted(tuple(norm(v) for v in row)
+                        for row in df[cols].itertuples(index=False))
+
+def compare_dumps(other):
+    fails = []
+    dumps = lambda d: {n for n in os.listdir(d) if os.path.isdir(f"{d}/{n}")}
+    mine, theirs = dumps(out_dir), dumps(other)
+    for q in sorted(mine ^ theirs):
+        print(f"{q}: ONLY IN {out_dir if q in mine else other}")
+        fails.append(q)
+    for q in sorted(mine & theirs):
+        (gc, g), (ec, e) = dump_rows(f"{out_dir}/{q}"), dump_rows(f"{other}/{q}")
+        if gc != ec:
+            print(f"{q}: SCHEMA MISMATCH {gc} vs {ec}")
+        elif len(g) != len(e):
+            print(f"{q}: ROWCOUNT {len(g)} vs {len(e)}")
+        elif g != e:
+            bad = next(i for i, (a, b) in enumerate(zip(g, e)) if a != b)
+            print(f"{q}: VALUE MISMATCH at sorted row {bad}:\n  {g[bad]}\n  {e[bad]}")
+        else:
+            print(f"{q}: SAME ({len(g)} rows)")
+            continue
+        fails.append(q)
+    theirs_sql = json.load(open(f"{other}/oracle_sql.json"))
+    if oracle == theirs_sql:
+        print(f"oracle_sql.json: same dict ({len(oracle)} entries)")
+    else:
+        diff = sorted(k for k in set(oracle) | set(theirs_sql)
+                      if oracle.get(k) != theirs_sql.get(k))
+        print(f"oracle_sql.json: DIFFERS on {diff}")
+        fails.append("oracle_sql.json")
+    print(f"\n{len(fails)} differing: {fails}" if fails else f"\nALL SAME ({len(mine)} dumps)")
+    sys.exit(1 if fails else 0)
+
+if against is not None:
+    compare_dumps(against)
 
 fails = []
 # A query that threw inside Verify writes NO dump dir — without this check
